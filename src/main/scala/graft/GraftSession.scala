@@ -39,11 +39,4 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Apply graft defaults onto an externally created session (tests). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
 }

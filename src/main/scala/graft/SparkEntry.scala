@@ -64,6 +64,24 @@ object SparkEntry {
       Await.result(fc, Duration.Inf))
   }
 
+  /** Per-distinct-row multiplicities of two same-schema frames:
+    * (__ca, __cb), 0 where a row is absent from one side. One aggregation
+    * per side plus a full outer join on null-safe (<=>) keys, so rows with
+    * NULL fields pair up like any other — the q41/q53 multiset
+    * differences without exceptAll's row replication. */
+  private[graft] def multisetCounts(a: DataFrame, b: DataFrame): DataFrame = {
+    val keys = a.columns.toSeq
+    val bKeys = keys.indices.map(i => s"__k$i")
+    val ca = a.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__ca"))
+    val cb = b.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__cb"))
+      .toDF(bKeys :+ "__cb": _*)
+    val sameRow = keys.zip(bKeys).map { case (k, j) => col(k) <=> col(j) }.reduce(_ && _)
+    ca.join(cb, sameRow, "full_outer")
+      .select(
+        coalesce(col("__ca"), lit(0L)).as("__ca"),
+        coalesce(col("__cb"), lit(0L)).as("__cb"))
+  }
+
   /** (metric, value BIGINT) rows from one aggregate pass — the pin shape. */
   private def metricRows(df: DataFrame, aggs: (String, org.apache.spark.sql.Column)*): DataFrame = {
     val agged = df.agg(
@@ -581,16 +599,9 @@ object SparkEntry {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // one-pass multiset difference count (the q53 idiom, one-sided):
         // |canonV \ raw| over multisets is sum over distinct rows of
-        // max(0, countV - countRaw) — one aggregation per side + a join
-        // instead of exceptAll's union + aggregate + generate replication
-        val keyCols = canonV.columns.toSeq
-        val chV = canonV.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cv"))
-          .join(
-            raw.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cr")),
-            keyCols, "left")
-          .agg(coalesce(
-            sum(greatest(col("__cv") - coalesce(col("__cr"), lit(0L)), lit(0L))),
-            lit(0L)).as("d"))
+        // max(0, countV - countRaw)
+        val chV = multisetCounts(canonV, raw)
+          .agg(coalesce(sum(greatest(col("__ca") - col("__cb"), lit(0L))), lit(0L)).as("d"))
           .as[Long].head()
         val dgV = canonV
           .agg(contentDigest(col("subj"), col("pred"), col("obj"), col("url")).as("d"))
@@ -873,16 +884,9 @@ object SparkEntry {
       val nStream = streamed.count()
       // one-pass multiset symmetric difference: |A\B| + |B\A| over
       // multisets is sum over distinct rows of |countA - countB| — the
-      // same value the two exceptAll legs computed, with one aggregation
-      // per side instead of two generate+agg+join chains
-      val keyCols = streamed.columns.toSeq
-      val symDiff = streamed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__ca"))
-        .join(
-          batch.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cb")),
-          keyCols, "full_outer")
-        .agg(coalesce(
-          sum(abs(coalesce(col("__ca"), lit(0L)) - coalesce(col("__cb"), lit(0L)))),
-          lit(0L)).as("d"))
+      // same value the two exceptAll legs computed
+      val symDiff = multisetCounts(streamed, batch)
+        .agg(coalesce(sum(abs(col("__ca") - col("__cb"))), lit(0L)).as("d"))
         .as[Long].head()
       streamed.unpersist(); batch.unpersist()
       Seq(

@@ -98,9 +98,4 @@ object Corpus {
     import spark.implicits._
     spark.range(n).map(id => page(id))
   }
-
-  /** Stable document-order key for first-appearance id semantics: the page
-    * id encoded in the url (corpus line order stand-in). */
-  def docOrderFromUrl(url: String): Long =
-    url.substring(url.lastIndexOf('/') + 1).toLong
 }

@@ -29,18 +29,6 @@ object PairScoring {
       .select("pool_id", "rid_a", "rid_b", "score")
   }
 
-  /** Positive×negative scores: pairs across pool boundary for the same e1
-    * (the reference's negative sampling geometry). */
-  def posNegScores(embedded: DataFrame, negatives: DataFrame): DataFrame = {
-    val pos = embedded.select(
-      col("pool_id"), col("relation_id").as("rid_pos"), col("emb").as("emb_pos"))
-    val neg = negatives.select(
-      col("pool_id"), col("relation_id").as("rid_neg"), col("emb").as("emb_neg"))
-    pos.join(neg, Seq("pool_id"))
-      .withColumn("score", Similarity.cosineCol(col("emb_pos"), col("emb_neg")))
-      .select("pool_id", "rid_pos", "rid_neg", "score")
-  }
-
   /** Deterministic stub pair embedding from token ids (feature-hash bag) —
     * the embedding-producing stand-in for bert.py's fewrel head. */
   def stubEmbedding(tokenIds: Seq[Int], dim: Int = 64): Array[Float] = {

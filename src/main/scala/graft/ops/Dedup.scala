@@ -205,13 +205,6 @@ object Dedup {
       .select("doc_id", "cluster_id")
   }
 
-  /** Exact word-set Jaccard between two token arrays as a Column expr. */
-  def jaccardCol(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(uni === 0d, 1d).otherwise(inter / uni)
-  }
-
   /** Embedding-cosine near-dup clusters: (id, cluster_id), edges where
     * cosine >= threshold, components by min id.
     *

@@ -51,74 +51,87 @@ object DenseId {
 
   /** Dense ids via a BOUNDED DRIVER RANKING regime (the EntityLinker /
     * embedding-dedup probe idiom applied to id assignment): one
-    * column-pruned pass collects only the (k1, k2) key pairs — the fat
-    * payload (token arrays) never moves — and, when the key count is
-    * within maxDriverKeys, the global rank is computed on the driver and
-    * shipped back as a broadcast sorted-key table each executor
-    * binary-searches. That removes the range exchange, its
-    * RangePartitioner sample pass, the per-partition sort AND
-    * zipWithIndex's offsets job: the one slim pass is the whole id
-    * assignment. The default bound (32M keys = 256 MB packed) is a
-    * driver-memory/broadcast budget, same order as the engine's other
-    * bounded regimes (CC <= 5M edges, linker <= 100k rows); above it
-    * (true web-scale fact tables) it falls back to withDenseId, whose
-    * range exchange is the correct distributed shape at that size — the
-    * wasted probe is one pruned scan, a rounding error against the fat
+    * column-pruned pass collects only the key tuples — the fat payload
+    * (token arrays) never moves — and, when the key count is within
+    * maxDriverKeys, the global rank is computed on the driver and shipped
+    * back as a broadcast sorted-key table each executor binary-searches.
+    * That removes the range exchange, its RangePartitioner sample pass,
+    * the per-partition sort AND zipWithIndex's offsets job: the one slim
+    * pass is the whole id assignment. The default bound (32M keys = 256 MB
+    * packed) is a driver-memory/broadcast budget, same order as the
+    * engine's other bounded regimes (CC <= 5M edges, linker <= 100k rows);
+    * above it (true web-scale fact tables) it falls back to withDenseId,
+    * whose range exchange is the correct distributed shape at that size —
+    * the wasted probe is one pruned scan, a rounding error against the fat
     * exchange it would otherwise always pay.
     *
-    * The assigned ids equal the row's rank in the global (k1, k2) order —
-    * bit-identical to withDenseId (given unique key pairs, which every
+    * The keys pack order-preservingly into one non-negative long: the
+    * first key gets 31 bits and the others share the remaining 31, the
+    * last taking the extra bit — (31, 31) for (docOrd, pairOrd) orders,
+    * (31, 15, 16) for (docOrd, p1, p2) mention orders, where p1/p2 are
+    * token positions inside one document. A NULL or out-of-range key, a
+    * duplicate key tuple, or more than maxDriverKeys keys falls back to
+    * the classic range-exchange path.
+    *
+    * The assigned ids equal the row's rank in the global key order —
+    * bit-identical to withDenseId (given unique key tuples, which every
     * call site guarantees). Requires a DETERMINISTIC input lineage (ours
     * are; the fact path is persisted): the key pass and the attach pass
-    * must iterate partitions in the same row order. */
+    * must see the same key values. */
   def withDenseIdProbed(
       df: DataFrame,
       idName: String,
-      k1: String,
-      k2: String,
+      keys: Seq[String],
       maxDriverKeys: Long = 32000000L): DataFrame = {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     import org.apache.spark.sql.functions.col
 
+    require(keys.length >= 2 && keys.length <= 32, s"withDenseIdProbed needs 2 to 32 keys: $keys")
     val spark = df.sparkSession
-    // slim key pass: both keys packed into one long (each guarded to
-    // [0, 2^31) — true of every call site: docOrds are line ordinals or
-    // 31-bit hashes, pairOrds are small ints). Packing keeps the driver
-    // side primitive: sorting 2.6M boxed (Long, Long) tuples measured ~5 s
-    // single-threaded — a constant that lands on BOTH scaling legs —
-    // where Arrays.parallelSort of packed longs is ~0.1 s.
+    val n = keys.length
+    val rest = 31 / (n - 1)
+    val bits = Array.tabulate(n)(i =>
+      if (i == 0) 31 else if (i < n - 1) rest else 31 - rest * (n - 2))
+    def fallback = withDenseId(df, idName, keys.map(col): _*)
+
+    // slim key pass: the keys packed into one long. Packing keeps the
+    // driver side primitive: sorting 2.6M boxed (Long, Long) tuples
+    // measured ~5 s single-threaded — a constant that lands on BOTH
+    // scaling legs — where Arrays.parallelSort of packed longs is ~0.1 s.
     // A NULL key forces the classic-path fallback too (ok=false): reading
-    // it as 0 would silently pack a valid (0, y) key and assign a
+    // it as 0 would silently pack a valid key and assign a
     // wrong-but-plausible rank instead of withDenseId's NULLS-FIRST order.
-    val keyed = df.select(col(k1).cast(LongType), col(k2).cast(LongType))
-    val Lim = 1L << 31
-    def pack(a: Long, b: Long): Long = (a << 31) | b
+    val keyed = df.select(keys.map(k => col(k).cast(LongType)): _*)
     val perPart = keyed.queryExecution.toRdd
       .mapPartitions { it =>
         val a = new scala.collection.mutable.ArrayBuilder.ofLong
         var ok = true
         it.foreach { r =>
-          if (r.isNullAt(0) || r.isNullAt(1)) ok = false
-          else {
-            val x = r.getLong(0); val y = r.getLong(1)
-            if (x < 0 || x >= Lim || y < 0 || y >= Lim) ok = false
-            else a += pack(x, y)
+          var packed = 0L
+          var i = 0
+          while (ok && i < n) {
+            if (r.isNullAt(i)) ok = false
+            else {
+              val v = r.getLong(i)
+              if (v < 0 || v >= (1L << bits(i))) ok = false
+              else packed = (packed << bits(i)) | v
+            }
+            i += 1
           }
+          if (ok) a += packed
         }
         Iterator.single((ok, a.result()))
       }
       .collect()
     val total = perPart.iterator.map(_._2.length.toLong).sum
-    if (!perPart.forall(_._1) || total > maxDriverKeys)
-      return withDenseId(df, idName, col(k1), col(k2))
+    if (!perPart.forall(_._1) || total > maxDriverKeys) return fallback
 
-    // global rank = position in the sorted packed-key array (packing is
-    // order-preserving for non-negative 31-bit keys). The sorted array is
-    // broadcast and each executor binary-searches its own rows' ranks —
-    // no positional alignment between passes is needed, so the input
-    // lineage only has to be value-deterministic, not order-stable.
+    // global rank = position in the sorted packed-key array. The sorted
+    // array is broadcast and each executor binary-searches its own rows'
+    // ranks — no positional alignment between passes is needed, so the
+    // input lineage only has to be value-deterministic, not order-stable.
     val sortedKeys = new Array[Long](total.toInt)
     var off = 0
     perPart.foreach { case (_, a) =>
@@ -130,119 +143,37 @@ object DenseId {
     // ranks are only well-defined under a total order, so fall back
     var d = 1
     while (d < sortedKeys.length && sortedKeys(d - 1) != sortedKeys(d)) d += 1
-    if (d < sortedKeys.length) return withDenseId(df, idName, col(k1), col(k2))
+    if (d < sortedKeys.length) return fallback
 
     val bc = spark.sparkContext.broadcast(sortedKeys)
     val schema = df.schema.add(idName, LongType, nullable = false)
-    val i1 = df.schema.fieldIndex(k1)
-    val i2 = df.schema.fieldIndex(k2)
-    def longReader(idx: Int): InternalRow => Long =
-      df.schema(idx).dataType match {
-        case LongType                             => _.getLong(idx)
-        case org.apache.spark.sql.types.IntegerType => _.getInt(idx).toLong
-        case org.apache.spark.sql.types.ShortType => _.getShort(idx).toLong
+    val idx = keys.map(df.schema.fieldIndex).toArray
+    val readers: Array[InternalRow => Long] = idx.map { j =>
+      df.schema(j).dataType match {
+        case LongType                               => (r: InternalRow) => r.getLong(j)
+        case org.apache.spark.sql.types.IntegerType => (r: InternalRow) => r.getInt(j).toLong
+        case org.apache.spark.sql.types.ShortType   => (r: InternalRow) => r.getShort(j).toLong
         case other =>
           throw new IllegalArgumentException(s"non-integral key column $other")
       }
-    val r1 = longReader(i1)
-    val r2 = longReader(i2)
+    }
     val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-      val keys = bc.value
+      val sorted = bc.value
       val idRow = new GenericInternalRow(1)
       val joined = new JoinedRow
       it.map { row =>
-        // the key pass saw no NULLs (it would have fallen back) — a NULL
-        // here means the input lineage changed between passes
-        require(!row.isNullAt(i1) && !row.isNullAt(i2),
-          "NULL key in the attach pass after a null-free key pass — non-deterministic input lineage")
-        val rank = java.util.Arrays.binarySearch(keys, pack(r1(row), r2(row)))
-        require(rank >= 0, "key pair missing from the rank table — non-deterministic input lineage")
-        idRow.update(0, rank.toLong)
-        joined(row, idRow): InternalRow
-      }
-    }
-    GraftBridge.internalDF(spark, rdd, schema)
-  }
-
-  /** Three-key variant of [[withDenseIdProbed]] for (docOrd, p1, p2)-style
-    * orders: the keys pack order-preservingly into one long when
-    * k1 ∈ [0, 2^31), k2 ∈ [0, 2^15), k3 ∈ [0, 2^16) — true of the mention
-    * call sites, where k2/k3 are token positions inside one document.
-    * Any out-of-range or NULL key falls back to the classic
-    * range-exchange path, whose ids are identical by construction. */
-  def withDenseIdProbed3(
-      df: DataFrame,
-      idName: String,
-      k1: String,
-      k2: String,
-      k3: String,
-      maxDriverKeys: Long = 32000000L): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.functions.col
-
-    val spark = df.sparkSession
-    val keyed = df.select(
-      col(k1).cast(LongType), col(k2).cast(LongType), col(k3).cast(LongType))
-    val Lim1 = 1L << 31
-    val Lim2 = 1L << 15
-    val Lim3 = 1L << 16
-    def pack(a: Long, b: Long, c: Long): Long = (a << 31) | (b << 16) | c
-    val perPart = keyed.queryExecution.toRdd
-      .mapPartitions { it =>
-        val a = new scala.collection.mutable.ArrayBuilder.ofLong
-        var ok = true
-        it.foreach { r =>
-          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ok = false
-          else {
-            val x = r.getLong(0); val y = r.getLong(1); val z = r.getLong(2)
-            if (x < 0 || x >= Lim1 || y < 0 || y >= Lim2 || z < 0 || z >= Lim3) ok = false
-            else a += pack(x, y, z)
-          }
+        var packed = 0L
+        var i = 0
+        while (i < n) {
+          // the key pass saw no NULLs (it would have fallen back) — a NULL
+          // here means the input lineage changed between passes
+          require(!row.isNullAt(idx(i)),
+            "NULL key in the attach pass after a null-free key pass — non-deterministic input lineage")
+          packed = (packed << bits(i)) | readers(i)(row)
+          i += 1
         }
-        Iterator.single((ok, a.result()))
-      }
-      .collect()
-    val total = perPart.iterator.map(_._2.length.toLong).sum
-    if (!perPart.forall(_._1) || total > maxDriverKeys)
-      return withDenseId(df, idName, col(k1), col(k2), col(k3))
-
-    val sortedKeys = new Array[Long](total.toInt)
-    var off = 0
-    perPart.foreach { case (_, a) =>
-      System.arraycopy(a, 0, sortedKeys, off, a.length); off += a.length
-    }
-    java.util.Arrays.parallelSort(sortedKeys)
-    var d = 1
-    while (d < sortedKeys.length && sortedKeys(d - 1) != sortedKeys(d)) d += 1
-    if (d < sortedKeys.length) return withDenseId(df, idName, col(k1), col(k2), col(k3))
-
-    val bc = spark.sparkContext.broadcast(sortedKeys)
-    val schema = df.schema.add(idName, LongType, nullable = false)
-    val i1 = df.schema.fieldIndex(k1)
-    val i2 = df.schema.fieldIndex(k2)
-    val i3 = df.schema.fieldIndex(k3)
-    def longReader(idx: Int): InternalRow => Long =
-      df.schema(idx).dataType match {
-        case LongType                               => _.getLong(idx)
-        case org.apache.spark.sql.types.IntegerType => _.getInt(idx).toLong
-        case org.apache.spark.sql.types.ShortType   => _.getShort(idx).toLong
-        case other =>
-          throw new IllegalArgumentException(s"non-integral key column $other")
-      }
-    val r1 = longReader(i1)
-    val r2 = longReader(i2)
-    val r3 = longReader(i3)
-    val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-      val keys = bc.value
-      val idRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      it.map { row =>
-        require(!row.isNullAt(i1) && !row.isNullAt(i2) && !row.isNullAt(i3),
-          "NULL key in the attach pass after a null-free key pass — non-deterministic input lineage")
-        val rank = java.util.Arrays.binarySearch(keys, pack(r1(row), r2(row), r3(row)))
-        require(rank >= 0, "key triple missing from the rank table — non-deterministic input lineage")
+        val rank = java.util.Arrays.binarySearch(sorted, packed)
+        require(rank >= 0, "key tuple missing from the rank table — non-deterministic input lineage")
         idRow.update(0, rank.toLong)
         joined(row, idRow): InternalRow
       }

@@ -128,7 +128,7 @@ object KgOps {
         col("first_seen.pos").as("__p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     DenseId
-      .withDenseIdProbed(firstSeen, "e_id", "__d", "__p")
+      .withDenseIdProbed(firstSeen, "e_id", Seq("__d", "__p"))
       .select("mention", "e_id")
   }
 

@@ -176,22 +176,4 @@ object Multimodal {
       }
       .toDF("doc_id", "payload")
   }
-
-  /** Frame-sample stub: deterministic k offsets into a payload (the shape
-    * of video frame sampling: returns (id, frame_idx, offset)). */
-  def frameSample(
-      spark: SparkSession,
-      df: DataFrame,
-      idCol: String,
-      binCol: String,
-      frames: Int = 4): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        val n = math.max(payload.length, 1)
-        (0 until frames).map(f => (id, f, (n.toLong * f) / frames))
-      }
-      .toDF(idCol, "frame_idx", "offset")
-  }
 }

@@ -23,15 +23,6 @@ import graft.ops.DenseId
   */
 object Encode {
 
-  final case class Encoded(fact: DataFrame, xDim: DataFrame, eDim: DataFrame)
-
-  /** Input columns: docOrd, pairOrd, tokens, e1s, e1e, e2s, e2e, e1, e2. */
-  def dictEncode(st: DataFrame): Encoded = {
-    val x = xDict(st)
-    val e = eDict(st)
-    Encoded(encodeFact(st, e), x, e)
-  }
-
   /** x dictionary: window text -> dense id, first-appearance order. The
     * window-text dictionary is near-fact-cardinality (windows are mostly
     * unique), so the dense-id assignment must NOT be a global ranking
@@ -53,7 +44,7 @@ object Encode {
         col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     DenseId
-      .withDenseIdProbed(xFirst, "x_id", "__d", "__p")
+      .withDenseIdProbed(xFirst, "x_id", Seq("__d", "__p"))
       .select(col("x_text"), col("x_id"))
   }
 
@@ -76,7 +67,7 @@ object Encode {
         (col("fs.pairOrd").cast("long") * 2 + col("fs.slot")).as("__p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     DenseId
-      .withDenseIdProbed(eFirst, "e_id", "__d", "__p")
+      .withDenseIdProbed(eFirst, "e_id", Seq("__d", "__p"))
       .select(col("e_text"), col("e_id"))
   }
 
@@ -116,7 +107,7 @@ object Encode {
 
   /** Prune dimension tables to surviving fact keys (map cleanup,
     * `mtb_data_loader.py:541-559`) — semi joins. x pruning keys on the
-    * recomputed window text (facts no longer carry x_id, see dictEncode). */
+    * recomputed window text (facts carry no x_id, see encodeFact). */
   def pruneDims(fact: DataFrame, xDim: DataFrame, eDim: DataFrame): (DataFrame, DataFrame) = {
     val xKeep = xDim.join(
       fact.select(concat_ws(" ", col("tokens")).as("x_text")).distinct(),
@@ -136,7 +127,7 @@ object Encode {
     * otherwise DenseId's range exchange runs — ids are bit-identical
     * either way. */
   def withRelationIds(fact: DataFrame): DataFrame =
-    DenseId.withDenseIdProbed(fact, "relation_id", "docOrd", "pairOrd")
+    DenseId.withDenseIdProbed(fact, "relation_id", Seq("docOrd", "pairOrd"))
 
   /** Two-phase salted list collection: a Zipfian-hot key (one entity pair
     * dominating the corpus) otherwise concentrates its entire list in a

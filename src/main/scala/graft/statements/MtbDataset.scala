@@ -75,12 +75,14 @@ object MtbDataset {
     // without the persist the whole scan→annotate→window pass re-runs per
     // consumer
     val statements = stage("statements") {
+      // the default Config's mention filters are the identity: the MTB
+      // path takes every gazetteer hit
+      val cfg = TriplePipeline.Config(windowSize = windowSize)
       TriplePipeline
-        .normalizePages(pages, TriplePipeline.Config(windowSize = windowSize))
+        .normalizePages(pages, cfg)
         .as[(String, String)]
         .flatMap { case (url, textNorm) =>
-          val doc = graft.annotate.Annotator.annotate(url, textNorm, gaz.value)
-          Windowing.statements(doc, TriplePipeline.stableDocOrd(url), windowSize)
+          TriplePipeline.docStatements(url, textNorm, gaz.value, cfg)
         }
         .toDF()
         // url is identification-only in the MTB path (docOrd carries the

@@ -66,7 +66,7 @@ object MtbDocOps {
     // within a document (first-occurrence per distinct surface). Bounded
     // driver rank (positions are document-local, well under the packed
     // 2^15/2^16 bounds); the classic range exchange is the fallback.
-    DenseId.withDenseIdProbed3(filtered, "relation_id", "doc_id", "p1", "p2")
+    DenseId.withDenseIdProbed(filtered, "relation_id", Seq("doc_id", "p1", "p2"))
   }
 
   final case class DocMtb(

@@ -62,7 +62,6 @@ final class BertTokenizer(
   private val atomic: Array[String] = (AddedTokens ++ SpecialTokens).toArray
 
   def vocabSize: Int = vocab.size
-  def sizeWithAdded: Int = vocab.size + addedTokens.size
 
   def convertTokenToId(token: String): Int =
     addedTokens.getOrElse(token, vocab.getOrElse(token, unkId))

@@ -1,46 +1,19 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.statements.Encode
 
-/** Wide-op (shuffle-heavy MTB chain) scaling probe: efficiency vs corpus
-  * size, to separate per-job fixed overhead from genuine shuffle scaling.
-  * Usage: WideScaleProbe [pages ...] */
+/** Phase-timed wide (shuffle-heavy MTB chain) run for the Bench wide
+  * scaling legs. Per-phase CPU, shuffle and spill figures come from
+  * `python3 perfbench/run.py --trace 1` (the `mtb.<phase>.*` metrics). */
 object WideScaleProbe {
 
-  private def session(cores: Int): SparkSession = {
-    val b = graft.GraftSession.builder(cores, s"wide-probe-$cores")
-    // PROBE_PARTITIONS: fix shuffle partitions across legs so both core
-    // counts sort/aggregate identical partition sizes (otherwise the lo
-    // leg's 4 fat partitions pay more per-partition spill, inflating eff)
-    sys.env.get("PROBE_PARTITIONS").foreach(p => b.config("spark.sql.shuffle.partitions", p))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  def run(s: SparkSession, n: Long): Long = {
-    val sc = s.sparkContext
-    val ds = graft.statements.MtbDataset.build(
-      s, graft.fixtures.Corpus.generate(s, n),
-      sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
-      sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
-      minCount = 2, minPoolSize = 2)
-    val c = ds.pools.count()
-    s.catalog.clearCache()
-    c
-  }
-
-  /** Phase-timed single run through MtbDataset.build's probe hook — the
-    * SAME stage boundaries the production build has (statements persist,
-    * the two dict groupBys, the freq filter, tokenize+DenseId encode,
-    * the salted pools collect), each forced and timed in order. Returns
-    * the ordered (phase, sec) list and the pool count. */
-  def phasedRun(s: SparkSession, n: Long): (Seq[(String, Double)], Long) =
-    phasedRunOn(s, graft.fixtures.Corpus.generate(s, n))
-
-  /** Same, over a caller-supplied page set (Bench reads the shared
-    * parquet corpus so both scaling legs scan identical stored bytes). */
+  /** One phase-timed run through MtbDataset.build's probe hook over a
+    * caller-supplied page set (Bench reads the shared parquet corpus so
+    * both scaling legs scan identical stored bytes) — the SAME stage
+    * boundaries the production build has (statements persist, the two dict
+    * groupBys, the freq filter, tokenize+DenseId encode, the salted pools
+    * collect), each forced and timed in order. Returns the ordered
+    * (phase, sec) list and the pool count. */
   def phasedRunOn(
       s: SparkSession,
       pages: org.apache.spark.sql.Dataset[graft.schema.WebPage]): (Seq[(String, Double)], Long) = {
@@ -52,8 +25,6 @@ object WideScaleProbe {
     // Spark jobs — DenseId's zipWithIndex offsets job materializes the
     // whole upstream, including the freq-filter semi join and tokenize
     // mapPartitions) — so construct AND force inside the timed window.
-    // Before round 5 the probe timed only count() on a pre-built DataFrame
-    // and those construction jobs fell between the windows untimed.
     graft.statements.MtbDataset.build(
       s, pages,
       sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
@@ -73,98 +44,5 @@ object WideScaleProbe {
     buf += "residual" -> math.max(0.0, wall - buf.map(_._2).sum)
     s.catalog.clearCache()
     (buf.toSeq, pools)
-  }
-
-  /** Per-phase task-metric totals captured alongside the wall times:
-    * cpuSec = executorCpuTime (actual on-CPU nanoseconds, which on this
-    * kernel INCLUDES memory-stall cycles), runSec = executorRunTime.
-    * Attribution: phases run sequentially with a count() barrier, so each
-    * completed stage is credited to the phase active when it completes
-    * (listener-async slop of a few ms is noise at these phase lengths). */
-  final case class PhasedCpu(
-      wall: Seq[(String, Double)],
-      pools: Long,
-      cpuSec: Map[String, Double],
-      runSec: Map[String, Double])
-
-  /** [[phasedRunOn]] plus per-phase task CPU/run-time totals — the
-    * r5-requested evidence separating "the engine leaves cores idle" from
-    * "the host executes 16 threads at sub-4x of 4-thread throughput":
-    * if cpu_hi is roughly cpu_lo while wall efficiency reads well below 1,
-    * the same CPU work was done and the gap is host-level (scheduling or
-    * stall cycles inflating BOTH legs' cpu equally); if cpu_hi is inflated
-    * vs cpu_lo, the contention itself is the measured fact. Bench.scala is
-    * frozen and keeps calling [[phasedRunOn]]; only WideBench uses this. */
-  def phasedRunCpuOn(
-      s: SparkSession,
-      pages: org.apache.spark.sql.Dataset[graft.schema.WebPage]): PhasedCpu = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    @volatile var current = "residual"
-    val cpuNs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val runMs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.merge(current, m.executorCpuTime, (a, b) => a + b)
-          runMs.merge(current, m.executorRunTime, (a, b) => a + b)
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
-    val sc = s.sparkContext
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var pools = 0L
-    val w0 = System.nanoTime()
-    graft.statements.MtbDataset.build(
-      s, pages,
-      sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
-      sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
-      minCount = 2, minPoolSize = 2,
-      probe = (name, thunk) => {
-        current = name
-        val t0 = System.nanoTime()
-        val c = thunk().count()
-        buf += name -> (System.nanoTime() - t0) / 1e9
-        if (name == "pools") pools = c
-      })
-    current = "residual"
-    val wall = (System.nanoTime() - w0) / 1e9
-    buf += "residual" -> math.max(0.0, wall - buf.map(_._2).sum)
-    Thread.sleep(500) // drain listener-bus stage-completed events
-    s.sparkContext.removeSparkListener(listener)
-    s.catalog.clearCache()
-    import scala.jdk.CollectionConverters._
-    PhasedCpu(
-      buf.toSeq, pools,
-      cpuNs.asScala.map { case (k, v) => k -> v.toDouble / 1e9 }.toMap,
-      runMs.asScala.map { case (k, v) => k -> v.toDouble / 1e3 }.toMap)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val mode = sys.env.getOrElse("PROBE_MODE", "scale")
-    val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(200000L, 600000L)
-    if (mode == "phases") {
-      sizes.foreach { n =>
-        Seq(4, 16).foreach { c =>
-          val s = session(c)
-          run(s, 2000)
-          val (ph, _) = phasedRun(s, n)
-          s.stop()
-          println(f"pages=$n cores=$c total=${ph.map(_._2).sum}%.1f " +
-            ph.map { case (k, v) => f"$k=$v%.1f" }.mkString(" "))
-        }
-      }
-    } else sizes.foreach { n =>
-      val lo = session(4)
-      run(lo, 20000)
-      val t0 = System.nanoTime(); run(lo, n); val tLo = (System.nanoTime() - t0) / 1e9
-      lo.stop()
-      val hi = session(16)
-      run(hi, 20000)
-      val t1 = System.nanoTime(); run(hi, n); val tHi = (System.nanoTime() - t1) / 1e9
-      hi.stop()
-      println(f"pages=$n lo=$tLo%.1f hi=$tHi%.1f eff=${(tLo / tHi) / 4}%.3f")
-    }
   }
 }

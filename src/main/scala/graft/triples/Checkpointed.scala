@@ -1,20 +1,22 @@
 package graft.triples
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.annotate.Gazetteer
 import graft.io.CheckpointManager
-import graft.kernel.{Inference, ScoringKernel}
+import graft.kernel.ScoringKernel
 import graft.schema.{Triple, WebPage}
 import graft.tokenize.BertTokenizer
 
 /** Resumable variant of the flagship pipeline (north rule: "resumable from
-  * checkpoint with per-partition lineage + metrics"): each wide/expensive
-  * stage materializes through the CheckpointManager, so a killed run
-  * restarts at the first incomplete stage and reproduces identical triples
-  * (all stages are deterministic functions of their inputs). */
+  * checkpoint with per-partition lineage + metrics"): two stages through
+  * the CheckpointManager around the same code [[TriplePipeline.run]] runs.
+  * `text_norm` materializes the per-url byte-identity surface; `triples`
+  * runs the fused annotate → window → encode → score pass over it, one
+  * narrow stage with no exchange. A killed run restarts at the first
+  * incomplete stage and reproduces identical triples (both stages are
+  * deterministic functions of their inputs). */
 object Checkpointed {
 
   def run(
@@ -29,40 +31,11 @@ object Checkpointed {
       cfg: TriplePipeline.Config = TriplePipeline.Config()): Dataset[Triple] = {
     import spark.implicits._
     val mgr = new CheckpointManager(spark, ckptRoot, runId)
-
-    val statements = mgr.stage("statements") {
+    val textNorm = mgr.stage("text_norm") { TriplePipeline.normalizePages(pages, cfg) }
+    mgr.stage("triples") {
       TriplePipeline
-        .encodedStatements(spark, pages, gaz, tokenizer, cfg)
-        .withColumn("id", col("docOrd") * lit(1048576L) + col("pairOrd"))
+        .triplesFromNormalized(spark, textNorm, gaz, tokenizer, kernel, idx2rel, cfg)
         .toDF()
-    }
-
-    val scored = mgr.stage("scored") {
-      Inference
-        .classify(
-          spark,
-          statements
-            .select(col("id"), col("tokenIds"), col("e1Start"), col("e2Start"))
-            .as[Inference.ScoreInput],
-          kernel,
-          tokenizer.value.padId,
-          cfg.batchSize)
-        .toDF()
-    }
-
-    val entries = idx2rel.value.toSeq.sortBy(_._1)
-    val labels = array(entries.map(e => lit(e._2)): _*)
-    val triples = mgr.stage("triples") {
-      statements
-        .select(col("id"), col("e1"), col("e2"), col("url"))
-        .join(scored.withColumn("pred_label", element_at(labels, col("pred") + 1))
-          .select(col("id"), col("pred_label")), Seq("id"))
-        .select(
-          col("e1").as("subj"),
-          col("pred_label").as("pred"),
-          col("e2").as("obj"),
-          col("url"))
-    }
-    triples.as[Triple]
+    }.as[Triple]
   }
 }

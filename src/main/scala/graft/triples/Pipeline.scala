@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.annotate.{Annotator, Gazetteer}
-import graft.kernel.{Inference, ScoringKernel}
+import graft.kernel.ScoringKernel
 import graft.schema.{Span, Triple, WebPage}
 import graft.statements.{Markers, Windowing}
 import graft.tokenize.BertTokenizer
@@ -103,16 +103,6 @@ object TriplePipeline {
     doc.copy(mentions = (doc.mentions ++ extra).sortBy(_.start))
   }
 
-  final case class ScoredStatement(
-      url: String,
-      docOrd: Long,
-      pairOrd: Int,
-      e1: String,
-      e2: String,
-      tokenIds: Seq[Int],
-      e1Start: Int,
-      e2Start: Int)
-
   /** Normalized page text per url — the byte-identity surface. */
   def normalizePages(pages: Dataset[WebPage], cfg: Config = Config()): DataFrame = {
     import graft.textnorm.functions._
@@ -127,34 +117,6 @@ object TriplePipeline {
       .select(col("url"), col("text_norm"))
   }
 
-  /** pages → encoded, kernel-ready statements. One narrow flatMap chain. */
-  def encodedStatements(
-      spark: SparkSession,
-      pages: Dataset[WebPage],
-      gaz: Broadcast[Gazetteer],
-      tokenizer: Broadcast[BertTokenizer],
-      cfg: Config = Config()): Dataset[ScoredStatement] = {
-    import spark.implicits._
-    normalizePages(pages, cfg)
-      .as[(String, String)]
-      .flatMap { case (url, textNorm) =>
-        val doc = filterMentions(Annotator.annotate(url, textNorm, gaz.value), cfg)
-        val docOrd = stableDocOrd(url)
-        Windowing.statements(doc, docOrd, cfg.windowSize).iterator.flatMap { st =>
-          Markers
-            .encode(tokenizer.value)(
-              st.tokens,
-              Span(st.e1s, st.e1e),
-              Span(st.e2s, st.e2e))
-            .map { enc =>
-              ScoredStatement(
-                st.url, st.docOrd, st.pairOrd, st.e1, st.e2,
-                enc.tokenIds.toSeq, enc.e1Span.start, enc.e2Span.start)
-            }
-        }
-      }
-  }
-
   /** Stable per-document order key derived from the url — reproducible
     * under any partitioning (SURVEY.md §7.5 determinism note). */
   def stableDocOrd(url: String): Long = {
@@ -167,16 +129,25 @@ object TriplePipeline {
     }
   }
 
-  /** Full pipeline to (subj, pred, obj, url) triples — FUSED: scoring runs
-    * inside the same mapPartitions pass that carries the entity surfaces,
-    * so the whole pipeline is ONE narrow stage (scan → normalize → annotate
-    * → window → encode → batch-score → label). No join, no shuffle, no
-    * second evaluation of the narrow chain — this is the plan that holds at
-    * 100 TB: cost is exactly one pass over the pages.
-    *
-    * (The earlier staged formulation — Inference.classify + join back on a
-    * statement id — lives on in triples.Checkpointed where materialization
-    * between stages is the point.) */
+  /** One document's statement windows: annotate → the Config's mention
+    * filters → pair windows, ordered by [[stableDocOrd]]. The fused
+    * triple pass and the MTB dataset's statements stage both run this. */
+  def docStatements(
+      url: String,
+      textNorm: String,
+      gaz: Gazetteer,
+      cfg: Config): Seq[Windowing.StatementRow] =
+    Windowing.statements(
+      filterMentions(Annotator.annotate(url, textNorm, gaz), cfg),
+      stableDocOrd(url),
+      cfg.windowSize)
+
+  /** Full pipeline to (subj, pred, obj, url) triples: [[normalizePages]]
+    * then [[triplesFromNormalized]]. The whole pipeline is ONE narrow
+    * stage (scan → normalize → annotate → window → encode → batch-score →
+    * label). No join, no shuffle, no second evaluation of the narrow chain
+    * — this is the plan that holds at 100 TB: cost is exactly one pass
+    * over the pages. */
   def run(
       spark: SparkSession,
       pages: Dataset[WebPage],
@@ -184,11 +155,25 @@ object TriplePipeline {
       tokenizer: Broadcast[BertTokenizer],
       kernel: Broadcast[ScoringKernel],
       idx2rel: Broadcast[Map[Int, String]],
-      cfg: Config = Config()): Dataset[Triple] = {
+      cfg: Config = Config()): Dataset[Triple] =
+    triplesFromNormalized(
+      spark, normalizePages(pages, cfg), gaz, tokenizer, kernel, idx2rel, cfg)
+
+  /** The FUSED pass over (url, text_norm) rows: scoring runs inside the
+    * same mapPartitions pass that carries the entity surfaces, so token
+    * arrays never round-trip through a Dataset boundary.
+    * [[Checkpointed]] runs it over its materialized `text_norm` stage. */
+  def triplesFromNormalized(
+      spark: SparkSession,
+      textNorm: DataFrame,
+      gaz: Broadcast[Gazetteer],
+      tokenizer: Broadcast[BertTokenizer],
+      kernel: Broadcast[ScoringKernel],
+      idx2rel: Broadcast[Map[Int, String]],
+      cfg: Config): Dataset[Triple] = {
     import spark.implicits._
     val batchSize = cfg.batchSize
-    val windowSize = cfg.windowSize
-    normalizePages(pages, cfg)
+    textNorm
       .as[(String, String)]
       .mapPartitions { rows =>
         // one partition-local pass: annotate -> window -> encode -> batch
@@ -197,14 +182,14 @@ object TriplePipeline {
         val k = kernel.value
         val labels = idx2rel.value
         val tok = tokenizer.value
+        val g = gaz.value
         val padId = tok.padId
         // per-partition wordpiece memo: statement windows draw from a
         // near-closed token vocabulary, so each surface tokenizes (and
         // id-converts) once
         val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
         val statements = rows.flatMap { case (url, textNorm) =>
-          val doc = filterMentions(Annotator.annotate(url, textNorm, gaz.value), cfg)
-          Windowing.statements(doc, stableDocOrd(url), windowSize).iterator.flatMap { st =>
+          docStatements(url, textNorm, g, cfg).iterator.flatMap { st =>
             Markers
               .encodeCached(tok, cache)(st.tokens, Span(st.e1s, st.e1e), Span(st.e2s, st.e2e))
               .map(enc => (st.e1, st.e2, url, enc.tokenIds, enc.e1Span.start, enc.e2Span.start))

@@ -81,6 +81,41 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("Exchange"), s"flagship pipeline shuffles:\n${p.take(2000)}")
   }
 
+  test("checkpointed triples stage computes without an Exchange") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    // the stage's compute plan is only visible as the plan of its parquet
+    // write, so capture the write of <root>/triples
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
+          .foreach(stage => plans.put(stage, qe.executedPlan.toString))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    val (kernel, _, idx2rel) = SparkEntry.trainedKernel
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_ckpt").toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.triples.Checkpointed.run(
+        spark, graft.fixtures.Corpus.generate(spark, 32),
+        sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
+        sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
+        sc.broadcast(kernel: graft.kernel.ScoringKernel),
+        sc.broadcast(idx2rel),
+        root, "plan-audit")
+      // listener events arrive asynchronously on the listener bus
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!plans.containsKey("triples") && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val p = plans.get("triples")
+    assert(p != null, s"no write of the triples stage observed; saw ${plans.keySet}")
+    assert(!p.contains("Exchange"), s"checkpointed triples stage shuffles:\n${p.take(2000)}")
+  }
+
   test("relational aggregates keep partial (map-side) aggregation") {
     val p = plan("q01_pricing_summary")
     // partial + final HashAggregate pairs around one exchange

@@ -10,11 +10,11 @@ import graft.eval.SemEval
 import graft.fixtures.{Corpus, FixtureVocab, SemEvalFixture}
 import graft.kernel.ScoringKernel
 import graft.tokenize.Vocab
-import graft.triples.Checkpointed
+import graft.triples.{Checkpointed, TriplePipeline}
 
-/** North-rule resumability: kill-after-stage-k — a restarted run over the
-  * same checkpoint root must reuse completed stages and produce IDENTICAL
-  * triples. */
+/** North-rule resumability: kill-before-stage-k — a restarted run over
+  * the same checkpoint root must reuse completed stages and produce
+  * IDENTICAL triples, the same multiset the fused pipeline produces. */
 class ResumeSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -24,32 +24,50 @@ class ResumeSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("checkpointed pipeline resumes mid-pipeline with identical triples") {
+  private def broadcasts() = {
     val sc = spark.sparkContext
     val (kernel, _, idx2rel) = SparkEntry.trainedKernel
-    val root = Files.createTempDirectory("graft_resume").toString
-    def run(runId: String) = Checkpointed.run(
-      spark, Corpus.generate(spark, 48),
-      sc.broadcast(new Gazetteer(FixtureVocab.AllEntities)),
+    (sc.broadcast(new Gazetteer(FixtureVocab.AllEntities)),
       sc.broadcast(Vocab.fixtureTokenizer),
       sc.broadcast(kernel: ScoringKernel),
-      sc.broadcast(idx2rel),
-      root, runId)
+      sc.broadcast(idx2rel))
+  }
 
-    val first = run("run1").collect().toSet
+  private def sortedTriples(ds: org.apache.spark.sql.Dataset[graft.schema.Triple]) =
+    ds.collect().toSeq.sortBy(t => (t.url, t.subj, t.obj, t.pred))
+
+  test("checkpointed pipeline resumes mid-pipeline with identical triples") {
+    val (gaz, tok, kern, labels) = broadcasts()
+    val root = Files.createTempDirectory("graft_resume").toString
+    def run(runId: String) = sortedTriples(Checkpointed.run(
+      spark, Corpus.generate(spark, 48), gaz, tok, kern, labels, root, runId))
+
+    val first = run("run1")
     assert(first.nonEmpty)
 
-    // "crash" after stage 2: drop only the final stage, keep the others
+    // "crash" before each stage in turn, then before both: drop the
+    // invalidated stages' manifests, keep the others
     val mgr = new graft.io.CheckpointManager(spark, root, "x")
-    assert(mgr.isComplete("statements") && mgr.isComplete("scored"))
-    mgr.invalidate("triples")
-
-    val resumed = run("run2").collect().toSet
-    assert(resumed == first, "resume must reproduce identical triples")
+    for ((dropped, i) <- Seq(Seq("triples"), Seq("text_norm"), Seq("text_norm", "triples")).zipWithIndex) {
+      assert(mgr.isComplete("text_norm") && mgr.isComplete("triples"))
+      dropped.foreach(mgr.invalidate)
+      val resumed = run(s"run${i + 2}")
+      assert(resumed == first, s"resume after dropping $dropped must reproduce identical triples")
+    }
 
     // lineage metrics exist for every stage
     val stages = mgr.metrics.select("stage").distinct().collect().map(_.getString(0)).toSet
-    assert(stages == Set("statements", "scored", "triples"))
+    assert(stages == Set("text_norm", "triples"))
+  }
+
+  test("checkpointed triples equal the fused pipeline's, as a multiset") {
+    val (gaz, tok, kern, labels) = broadcasts()
+    val root = Files.createTempDirectory("graft_ckpt_eq").toString
+    val pages = Corpus.generate(spark, 48)
+    val fused = sortedTriples(TriplePipeline.run(spark, pages, gaz, tok, kern, labels))
+    val ckpt = sortedTriples(Checkpointed.run(spark, pages, gaz, tok, kern, labels, root, "eq"))
+    assert(fused.nonEmpty)
+    assert(ckpt == fused)
   }
 
   test("SemEval file source parses distributed (wholetext)") {

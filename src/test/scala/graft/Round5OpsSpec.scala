@@ -142,7 +142,7 @@ class Round5OpsSpec extends AnyFunSuite {
       .sortWithinPartitions(col("d"), col("p"))
       .persist()
     base.count()
-    val fast = graft.ops.DenseId.withDenseIdProbed(base, "id", "d", "p")
+    val fast = graft.ops.DenseId.withDenseIdProbed(base, "id", Seq("d", "p"))
       .collect().map(r => (r.getString(2), r.getLong(3))).sortBy(_._1).toSeq
     val classic = graft.ops.DenseId.withDenseId(base, "id", col("d"), col("p"))
       .collect().map(r => (r.getString(2), r.getLong(3))).sortBy(_._1).toSeq
@@ -157,7 +157,7 @@ class Round5OpsSpec extends AnyFunSuite {
     val base = (0 until 400).map(i => ((i * 137 % 400).toLong, (i % 3).toLong, i))
       .toDF("d", "p", "v").repartition(4).persist()
     base.count()
-    val got = graft.ops.DenseId.withDenseIdProbed(base, "id", "d", "p")
+    val got = graft.ops.DenseId.withDenseIdProbed(base, "id", Seq("d", "p"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
     base.unpersist()
     val expected = got.sortBy(r => (r._1, r._2)).zipWithIndex.map(_._2.toLong)
@@ -170,7 +170,7 @@ class Round5OpsSpec extends AnyFunSuite {
       .toDF("d", "p", "v").repartition(4).persist()
     base.count()
     val capped = graft.ops.DenseId
-      .withDenseIdProbed(base, "id", "d", "p", maxDriverKeys = 10L)
+      .withDenseIdProbed(base, "id", Seq("d", "p"), maxDriverKeys = 10L)
       .collect().map(r => (r.getLong(0), r.getLong(3)))
     base.unpersist()
     val expected = capped.sortBy(_._1).zipWithIndex.map(_._2.toLong)

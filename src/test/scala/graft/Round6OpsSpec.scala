@@ -70,7 +70,7 @@ class Round6OpsSpec extends AnyFunSuite {
       (rng.nextInt(1 << 20).toLong * 500 + i, rng.nextInt(1000), s"payload-$i")
     }
     val df = rows.toDF("d", "p", "payload")
-    def run(max: Long) = DenseId.withDenseIdProbed(df, "id", "d", "p", maxDriverKeys = max)
+    def run(max: Long) = DenseId.withDenseIdProbed(df, "id", Seq("d", "p"), maxDriverKeys = max)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3))).toSeq
     assert(run(0L) == run(32000000L)) // max=0 forces withDenseId's range exchange
   }
@@ -82,7 +82,7 @@ class Round6OpsSpec extends AnyFunSuite {
       (rng.nextInt(1 << 20).toLong * 400 + i, rng.nextInt(1 << 14), rng.nextInt(1 << 15))
     }.distinct
     val df = rows.toDF("d", "p1", "p2")
-    def run(max: Long) = DenseId.withDenseIdProbed3(df, "id", "d", "p1", "p2", maxDriverKeys = max)
+    def run(max: Long) = DenseId.withDenseIdProbed(df, "id", Seq("d", "p1", "p2"), maxDriverKeys = max)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
     assert(run(0L) == run(32000000L))
   }
@@ -92,11 +92,36 @@ class Round6OpsSpec extends AnyFunSuite {
     val df = Seq(
       (Some(5L), Some(1)), (None, Some(2)), (Some(1L), None), (Some(2L), Some(0)))
       .toDF("d", "p")
-    val probed = DenseId.withDenseIdProbed(df, "id", "d", "p")
+    val probed = DenseId.withDenseIdProbed(df, "id", Seq("d", "p"))
       .orderBy("id").collect().map(r => (r.isNullAt(0), r.isNullAt(1), r.getLong(2))).toSeq
     val classic = DenseId.withDenseId(df, "id", col("d"), col("p"))
       .orderBy("id").collect().map(r => (r.isNullAt(0), r.isNullAt(1), r.getLong(2))).toSeq
     assert(probed == classic) // a NULL key must trigger the fallback, never rank as 0
+  }
+
+  test("withDenseIdProbed (three keys): NULL and out-of-range keys fall back, edge keys rank on the driver") {
+    import spark.implicits._
+    // three keys pack as (31, 15, 16) bits
+    val ok = Seq((Some(4L), Some(3L), Some(7L)), (Some(1L), Some(2L), Some(9L)),
+      (Some(1L), Some(5L), Some(1L)))
+    val cases: Seq[(String, (Option[Long], Option[Long], Option[Long]), Boolean)] = Seq(
+      ("NULL k1", (None, Some(1L), Some(1L)), false),
+      ("NULL k2", (Some(2L), None, Some(1L)), false),
+      ("NULL k3", (Some(2L), Some(1L), None), false),
+      ("k2 = 2^15", (Some(2L), Some(1L << 15), Some(0L)), false),
+      ("k3 = 2^16", (Some(2L), Some(0L), Some(1L << 16)), false),
+      ("k2 = 2^15 - 1", (Some(2L), Some((1L << 15) - 1), Some((1L << 16) - 1)), true))
+    for ((name, extra, onDriver) <- cases) {
+      val df = (ok :+ extra).toDF("d", "p1", "p2")
+      val probed = DenseId.withDenseIdProbed(df, "id", Seq("d", "p1", "p2"))
+      val classic = DenseId.withDenseId(df, "id", col("d"), col("p1"), col("p2"))
+      def rows(o: org.apache.spark.sql.DataFrame) = o.orderBy("id").collect().map(_.toSeq).toSeq
+      assert(rows(probed) == rows(classic), name)
+      // the fallback is withDenseId's range exchange; the driver rank
+      // reads the input without a shuffle
+      val shuffled = probed.queryExecution.toRdd.toDebugString.contains("ShuffledRowRDD")
+      assert(shuffled != onDriver, s"$name: expected onDriver=$onDriver")
+    }
   }
 
   // ---- MtbDataset pair-frequency filter: broadcast vs distributed semi join ----
@@ -194,25 +219,31 @@ class Round6OpsSpec extends AnyFunSuite {
     }
   }
 
-  // ---- the q41/q53 multiset-count identity: agg-join count ==
-  //      exceptAll().count() on random multisets with duplicates ----
+  // ---- the q41/q53 multiset-count identity: SparkEntry.multisetCounts
+  //      sums == exceptAll().count() on random multisets with duplicates
+  //      and NULLs in every key column ----
 
   test("one-sided multiset difference count equals exceptAll().count()") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
+    def orNull[A](a: A): Option[A] = if (rnd.nextInt(5) == 0) None else Some(a)
+    def draw() =
+      Seq.fill(80)((orNull(rnd.nextInt(6).toString), orNull(rnd.nextInt(4)))).toDF("k", "v")
     for (trial <- 1 to 3) {
-      val a = Seq.fill(80)((rnd.nextInt(6).toString, rnd.nextInt(4))).toDF("k", "v")
-      val b = Seq.fill(80)((rnd.nextInt(6).toString, rnd.nextInt(4))).toDF("k", "v")
-      val expected = a.exceptAll(b).count()
-      val keyCols = a.columns.toSeq
-      val got = a.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__ca"))
-        .join(b.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cb")),
-          keyCols, "left")
-        .agg(coalesce(
-          sum(greatest(col("__ca") - coalesce(col("__cb"), lit(0L)), lit(0L))),
-          lit(0L)).as("d"))
+      val a = draw()
+      val b = draw()
+      def oneSided(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame) =
+        SparkEntry.multisetCounts(x, y)
+          .agg(coalesce(sum(greatest(col("__ca") - col("__cb"), lit(0L))), lit(0L)))
+          .as[Long].head()
+      val symmetric = SparkEntry.multisetCounts(a, b)
+        .agg(coalesce(sum(abs(col("__ca") - col("__cb"))), lit(0L)))
         .as[Long].head()
-      assert(got == expected, s"trial=$trial")
+      val aMinusB = a.exceptAll(b).count()
+      val bMinusA = b.exceptAll(a).count()
+      assert(oneSided(a, b) == aMinusB, s"trial=$trial a-b")
+      assert(oneSided(b, a) == bMinusA, s"trial=$trial b-a")
+      assert(symmetric == aMinusB + bMinusA, s"trial=$trial symmetric")
     }
   }
 }
