@@ -33,6 +33,7 @@ object CleanSent {
   private val punctRe = Pattern.compile(PunctClassPattern)
   private val repeatRe = Pattern.compile(RepeatedPuncPattern)
   private val capsRe = Pattern.compile(AllCapsPattern)
+  private val multiSpaceRe = Pattern.compile(" {2,}")
 
   /** Reference `_clean_sent`; None for the degenerate inputs it skips. */
   def cleanSent(sent: String): Option[String] = {
@@ -69,6 +70,6 @@ object CleanSent {
   def processTextlines(lines: Seq[String]): String = {
     val cleaned = lines.iterator.map(cleanSent).collect { case Some(s) => s }
     val joined = cleaned.mkString(" ")
-    joined.replaceAll(" {2,}", " ")
+    multiSpaceRe.matcher(joined).replaceAll(" ")
   }
 }

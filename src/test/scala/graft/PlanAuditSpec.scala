@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape audits: the properties that make these queries survive a
@@ -14,6 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    pruned ReadSchema)
   *  - small dimension joins broadcast instead of shuffling the fact side
   *  - the flagship pipeline stays a single narrow stage (no Exchange)
+  *  - the triple sink adds exactly one rebalance exchange
   */
 class PlanAuditSpec extends AnyFunSuite {
 
@@ -28,6 +34,41 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** Every node of a physical plan, through adaptive plans and their query
+    * stages. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      // inputPlan predates EnsureRequirements (no exchanges yet);
+      // executedPlan is the current physical plan with them inserted
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: kids.flatMap(allNodes)
+  }
+
+  /** The executed plan of the parquet write to a directory named `output`
+    * that `write` performs, captured through a QueryExecutionListener. */
+  private def writePlan(output: String)(write: => Unit): SparkPlan = {
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
+          .foreach(name => plans.put(name, qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      write
+      // listener events arrive asynchronously on the listener bus
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!plans.containsKey(output) && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val p = plans.get(output)
+    assert(p != null, s"no write of $output observed; saw ${plans.keySet}")
+    p
+  }
 
   test("no query plans a partition-less ranking window") {
     // every Window operator must declare a partitioning; an empty
@@ -82,24 +123,12 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("checkpointed triples stage computes without an Exchange") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
-
-    // the stage's compute plan is only visible as the plan of its parquet
-    // write, so capture the write of <root>/triples
-    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
-          .foreach(stage => plans.put(stage, qe.executedPlan.toString))
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val sc = spark.sparkContext
     val (kernel, _, idx2rel) = SparkEntry.trainedKernel
     val root = java.nio.file.Files.createTempDirectory("graft_plan_ckpt").toString
-    spark.listenerManager.register(listener)
-    try {
+    // the stage's compute plan is only visible as the plan of its parquet
+    // write, so capture the write of <root>/triples
+    val p = writePlan("triples") {
       graft.triples.Checkpointed.run(
         spark, graft.fixtures.Corpus.generate(spark, 32),
         sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
@@ -107,13 +136,26 @@ class PlanAuditSpec extends AnyFunSuite {
         sc.broadcast(kernel: graft.kernel.ScoringKernel),
         sc.broadcast(idx2rel),
         root, "plan-audit")
-      // listener events arrive asynchronously on the listener bus
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!plans.containsKey("triples") && System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    val p = plans.get("triples")
-    assert(p != null, s"no write of the triples stage observed; saw ${plans.keySet}")
+    }.toString
     assert(!p.contains("Exchange"), s"checkpointed triples stage shuffles:\n${p.take(2000)}")
+  }
+
+  test("triple sink write is one rebalance exchange and runs no regex") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeLike}
+    import spark.implicits._
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_sink").toString + "/sink"
+    val p = writePlan("sink") {
+      graft.triples.TripleSink.write(
+        SparkEntry.kgTriples(spark, 64, canonical = false).as[graft.schema.Triple], dir)
+    }
+    val nodes = allNodes(p)
+    val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.map(_.shuffleOrigin) == Seq(REBALANCE_PARTITIONS_BY_COL),
+      s"sink write shuffles other than one rebalance:\n$p")
+    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[RegExpReplace]))),
+      s"sink write runs a per-row regex:\n$p")
   }
 
   test("relational aggregates keep partial (map-side) aggregation") {
@@ -123,21 +165,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q26 LSH bucket exchanges never carry a vector column") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.types.ArrayType
 
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        // inputPlan predates EnsureRequirements (no exchanges yet);
-        // executedPlan is the current physical plan with them inserted
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case other => other.children
-      }
-      p +: kids.flatMap(allNodes)
-    }
     // the edge stage runs eagerly inside ConnectedComponents, so audit it
     // directly rather than the final (post-CC) join plan; disable broadcast
     // so the bucket join plans as the shuffle it would be at scale

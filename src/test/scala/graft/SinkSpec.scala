@@ -3,8 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, regexp_replace}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.fixtures.FixtureVocab
 import graft.ops.Salting
 import graft.schema.Triple
 import graft.triples.TripleSink
@@ -23,14 +25,54 @@ class SinkSpec extends AnyFunSuite {
     val triples = Seq(
       Triple("a", "Cause-Effect(e1,e2)", "b", "u1"),
       Triple("c", "Cause-Effect(e1,e2)", "d", "u2"),
+      Triple("c", "Cause-Effect(e1,e2)", "d", "u2"),
       Triple("e", "Other", "f", "u3")).toDS()
     val dir = Files.createTempDirectory("graft_sink").toString + "/triples"
-    TripleSink.write(triples, dir, filesPerPred = 2)
-    val back = TripleSink.read(spark, dir).collect().toSet
-    assert(back == triples.collect().toSet)
+    TripleSink.write(triples, dir)
+    def sorted(ts: Array[Triple]) = ts.toSeq.sortBy(t => (t.subj, t.pred, t.obj, t.url))
+    assert(sorted(TripleSink.read(spark, dir).collect()) == sorted(triples.collect()))
     // hive partitioning by predicate is physically present
     val parts = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("pred_part="))
     assert(parts.length == 2)
+  }
+
+  test("predPart equals the regex replacement of the partition label") {
+    import spark.implicits._
+    val preds: Seq[String] =
+      FixtureVocab.Labels ++ Seq("", "___", "--a--", "a_b", "\u00e9", "x\ud83d\ude00y", null)
+    val viaSpark = preds.toDF("pred")
+      .select(col("pred"), regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(viaSpark.size == preds.size)
+    preds.foreach { p =>
+      val viaJava = if (p == null) null else p.replaceAll("[^A-Za-z0-9]+", "_")
+      assert(TripleSink.predPart(p) == viaJava, s"java regex differs on '$p'")
+      assert(TripleSink.predPart(p) == viaSpark(p), s"spark regexp_replace differs on '$p'")
+    }
+  }
+
+  test("sink file count follows data size: a hot predicate splits, small ones stay one file") {
+    import org.apache.spark.sql.Dataset
+    val s = spark.newSession()
+    import s.implicits._
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    def filesPerPart(triples: Dataset[Triple]): Map[String, Int] = {
+      val dir = Files.createTempDirectory("graft_sink_files").toString + "/triples"
+      TripleSink.write(triples, dir)
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("pred_part=")).map { d =>
+        d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
+      }.toMap
+    }
+    val small = s.range(0, 400, 1, 8)
+      .map(i => Triple(s"s$i", FixtureVocab.Labels((i % 4).toInt), s"o$i", s"u$i"))
+    val oneEach = FixtureVocab.Labels.take(4).map(l => s"pred_part=${TripleSink.predPart(l)}" -> 1).toMap
+    assert(filesPerPart(small) == oneEach)
+
+    val hot = s.range(0, 20000, 1, 8).map(i => Triple(s"s$i", "Other", s"o$i", s"u$i"))
+      .union(small)
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    val files = filesPerPart(hot)
+    assert(files("pred_part=Other") > 1, s"hot predicate was not split: $files")
   }
 
   test("salted count equals plain count under hot-key skew") {
