@@ -102,49 +102,108 @@ object Markers {
       e2: Span): Option[Encoded] =
     encodeCached(tokenizer, null)(tokens, e1, e2)
 
-  /** encode with per-partition memoization: tokenize(" ".join(ts)) equals
-    * the concatenation of tokenize(t) per element (tokens contain no
-    * whitespace, and atomic markers cannot span a joined boundary), so each
-    * distinct surface tokenizes (and id-converts) once per partition
-    * instead of once per statement. Marker positions are found during the
-    * single append scan — first value-equal occurrence, exactly
-    * `buf.indexOf` semantics — instead of four post-hoc list scans. */
+  /** encode with per-partition memoization: the tokens are resolved
+    * through the memo, then [[encodeWindow]] encodes the whole range. */
   def encodeCached(
       tokenizer: BertTokenizer,
       cache: java.util.HashMap[String, TokPieces])(
       tokens: scala.collection.Seq[String],
       e1: Span,
       e2: Span): Option[Encoded] = {
-    val withMarkers = addSpecialTokens(tokens, e1, e2)
-    var e1s = -1; var e1e = -1; var e2s = -1; var e2e = -1
-    val ids = new scala.collection.mutable.ArrayBuilder.ofInt
-    ids.sizeHint(withMarkers.length + 8)
-    var n = 0
-    withMarkers.foreach { t =>
-      var tp = if (cache == null) null else cache.get(t)
-      if (tp == null) {
-        val pcs = tokenizer.tokenize(t).toArray
-        val idArr = new Array[Int](pcs.length)
-        var i = 0
-        while (i < pcs.length) { idArr(i) = tokenizer.convertTokenToId(pcs(i)); i += 1 }
-        tp = TokPieces(pcs, idArr)
-        if (cache != null) cache.put(t, tp)
-      }
-      val pcs = tp.pieces
+    val pieces = new Array[TokPieces](tokens.length)
+    var i = 0
+    tokens.foreach { t => pieces(i) = lookup(tokenizer, cache, t); i += 1 }
+    encodeWindow(tokenizer, cache, tokens, pieces, 0, pieces.length, e1, e2)
+  }
+
+  /** WordPieces + ids of one surface token, through the memo (`cache` may
+    * be null: no memo). */
+  private def lookup(
+      tokenizer: BertTokenizer,
+      cache: java.util.HashMap[String, TokPieces],
+      t: String): TokPieces = {
+    var tp = if (cache == null) null else cache.get(t)
+    if (tp == null) {
+      val pcs = tokenizer.tokenize(t).toArray
+      val idArr = new Array[Int](pcs.length)
       var i = 0
-      while (i < pcs.length) {
-        val p = pcs(i)
-        // the four marker strings are pairwise distinct, so at most one
-        // branch can match; "first occurrence wins" == indexOf semantics
-        if (e1s < 0 && p == BertVocab.E1) e1s = n
-        else if (e1e < 0 && p == BertVocab.E1End) e1e = n
-        else if (e2s < 0 && p == BertVocab.E2) e2s = n
-        else if (e2e < 0 && p == BertVocab.E2End) e2e = n
-        i += 1; n += 1
-      }
-      ids.addAll(tp.ids)
+      while (i < pcs.length) { idArr(i) = tokenizer.convertTokenToId(pcs(i)); i += 1 }
+      tp = TokPieces(pcs, idArr)
+      if (cache != null) cache.put(t, tp)
     }
+    tp
+  }
+
+  /** The one statement encoder: the ids of
+    * `tokenize(" ".join(addSpecialTokens(tokens[from, until), e1, e2)))`,
+    * with spans relocated inside the markers. `tokenize` of the joined
+    * string equals the concatenation of `tokenize(t)` per element (tokens
+    * contain no whitespace, and atomic markers cannot span a joined
+    * boundary), so each token's pieces come from `pieces`, a doc-sized
+    * array filled lazily through the memo: every window of a document
+    * shares one lookup per token. `e1`/`e2` are positions in `tokens`.
+    * Marker positions are the first piece equal to each marker string,
+    * exactly `buf.indexOf` semantics — a token may itself tokenize to a
+    * marker. One exact-size id array is written. */
+  def encodeWindow(
+      tokenizer: BertTokenizer,
+      cache: java.util.HashMap[String, TokPieces],
+      tokens: scala.collection.Seq[String],
+      pieces: Array[TokPieces],
+      from: Int,
+      until: Int,
+      e1: Span,
+      e2: Span): Option[Encoded] = {
+    var len = 2
+    var i = from
+    while (i < until) {
+      if (pieces(i) == null) pieces(i) = lookup(tokenizer, cache, tokens(i))
+      len += pieces(i).ids.length
+      if (i == e1.start) len += 1
+      if (i == e2.start) len += 1
+      if (i == e1.end) len += 1
+      if (i == e2.end) len += 1
+      i += 1
+    }
+    val e1Id = tokenizer.e1Id
+    val e1EndId = tokenizer.e1EndId
+    val e2Id = tokenizer.e2Id
+    val e2EndId = tokenizer.e2EndId
+    val ids = new Array[Int](len)
+    var e1s = -1; var e1e = -1; var e2s = -1; var e2e = -1
+    ids(0) = tokenizer.clsId
+    var n = 1
+    i = from
+    while (i < until) {
+      // an inserted marker's piece is the marker string itself
+      if (i == e1.start) { if (e1s < 0) e1s = n; ids(n) = e1Id; n += 1 }
+      if (i == e2.start) { if (e2s < 0) e2s = n; ids(n) = e2Id; n += 1 }
+      val tp = pieces(i)
+      val tIds = tp.ids
+      var k = 0
+      while (k < tIds.length) {
+        val id = tIds(k)
+        // the four marker ids are consecutive (AddedTokens order), and only
+        // a marker string converts to one; the string compare guards a
+        // vocab whose own ids reach into the added-token range
+        if (id >= e1Id && id <= e2EndId) {
+          val p = tp.pieces(k)
+          // the four marker strings are pairwise distinct, so at most one
+          // branch can match; "first occurrence wins" == indexOf semantics
+          if (e1s < 0 && p == BertVocab.E1) e1s = n
+          else if (e1e < 0 && p == BertVocab.E1End) e1e = n
+          else if (e2s < 0 && p == BertVocab.E2) e2s = n
+          else if (e2e < 0 && p == BertVocab.E2End) e2e = n
+        }
+        ids(n) = id
+        k += 1; n += 1
+      }
+      if (i == e1.end) { if (e1e < 0) e1e = n; ids(n) = e1EndId; n += 1 }
+      if (i == e2.end) { if (e2e < 0) e2e = n; ids(n) = e2EndId; n += 1 }
+      i += 1
+    }
+    ids(n) = tokenizer.sepId
     if (e1s < 0 || e1e < 0 || e2s < 0 || e2e < 0) None
-    else Some(Encoded(ids.result(), Span(e1s + 1, e1e - 1), Span(e2s + 1, e2e - 1)))
+    else Some(Encoded(ids, Span(e1s + 1, e1e - 1), Span(e2s + 1, e2e - 1)))
   }
 }

@@ -62,60 +62,90 @@ object Windowing {
     } else len
   }
 
+  /** Receives one kept window: tokens `[rStart, rEnd)` of the document,
+    * for the ordered mention pair `(i1, i2)`. A SAM trait rather than a
+    * `Function4`, so the four ints are never boxed. */
+  trait WindowVisitor {
+    def apply(rStart: Int, rEnd: Int, i1: Int, i2: Int): Unit
+  }
+
+  /** `_resolve_entities`' window for one ordered mention pair, packed as
+    * `rStart << 32 | rEnd`, or -1 when the reference drops the pair. */
+  private def window(doc: AnnotatedDoc, i1: Int, i2: Int, windowSize: Int): Long = {
+    if (i1 == i2) return -1L
+    val m1 = doc.mentions(i1)
+    val m2 = doc.mentions(i2)
+    if (hasDigitOrPlus(m1.text) || hasDigitOrPlus(m2.text)) return -1L
+    val e1end = m1.end // inclusive (merged mention => == start)
+    val gap = m2.start - e1end
+    if (gap < 1 || gap > windowSize) return -1L
+    val tokens = doc.tokens
+    val len = tokens.length
+    val rStart = findSentStart(doc.isPunct, m1.start)
+    val rEnd = findSentEnd(doc.isSentEnd, m2.end, len)
+    if (rEnd - rStart > windowSize) return -1L
+    // reference raises ValueError on empty entities/spans; our engine drops
+    // the row (counted upstream) — fixtures never trigger it
+    if (m1.text.isEmpty || m2.text.isEmpty) return -1L
+    var k = rStart
+    while (k < rEnd && tokens(k).isEmpty) k += 1
+    if (k == rEnd) -1L else (rStart.toLong << 32) | rEnd
+  }
+
+  /** The window geometry of one document: visits every kept ordered
+    * mention pair (the reference's product order, `i1` outer) with its
+    * window offsets. Nothing is sliced; [[resolve]], [[statements]] and
+    * the fused triple pass all run on it. */
+  def foreachWindow(doc: AnnotatedDoc, windowSize: Int)(visit: WindowVisitor): Unit = {
+    val n = doc.mentions.length
+    var i = 0
+    while (i < n) {
+      var j = 0
+      while (j < n) {
+        val w = window(doc, i, j, windowSize)
+        if (w >= 0) visit((w >>> 32).toInt, w.toInt, i, j)
+        j += 1
+      }
+      i += 1
+    }
+  }
+
   /** `_resolve_entities` for one ordered mention pair. Spans inclusive. */
   def resolve(
       doc: AnnotatedDoc,
       i1: Int,
       i2: Int,
       windowSize: Int): Option[(Seq[String], Span, Span, String, String)] = {
-    if (i1 == i2) return None
+    val w = window(doc, i1, i2, windowSize)
+    if (w < 0) None
+    else Some(slice(doc, (w >>> 32).toInt, w.toInt, i1, i2))
+  }
+
+  private def slice(
+      doc: AnnotatedDoc,
+      rStart: Int,
+      rEnd: Int,
+      i1: Int,
+      i2: Int): (Seq[String], Span, Span, String, String) = {
     val m1 = doc.mentions(i1)
     val m2 = doc.mentions(i2)
-    if (hasDigitOrPlus(m1.text) || hasDigitOrPlus(m2.text)) return None
-    val e1start = m1.start
-    val e1end = m1.end // inclusive (merged mention => == start)
-    val e2start = m2.start
-    val e2end = m2.end
-    val gap = e2start - e1end
-    if (gap < 1 || gap > windowSize) return None
-    val len = doc.tokens.length
-    val rStart = findSentStart(doc.isPunct, e1start)
-    val rEnd = findSentEnd(doc.isSentEnd, e2end, len)
-    if (rEnd - rStart > windowSize) return None
-    val x = doc.tokens.slice(rStart, rEnd)
-    // reference raises ValueError on empty entities/spans; our engine drops
-    // the row (counted upstream) — fixtures never trigger it
-    if (m1.text.isEmpty || m2.text.isEmpty || x.forall(_.isEmpty)) return None
-    Some(
-      (
-        x,
-        Span(e1start - rStart, e1end - rStart),
-        Span(e2start - rStart, e2end - rStart),
-        m1.text,
-        m2.text))
+    (
+      doc.tokens.slice(rStart, rEnd),
+      Span(m1.start - rStart, m1.end - rStart),
+      Span(m2.start - rStart, m2.end - rStart),
+      m1.text,
+      m2.text)
   }
 
   /** All relation statements of one document: ordered product of the
     * deduped mentions (directed edges of the mention graph). */
   def statements(doc: AnnotatedDoc, docOrd: Long, windowSize: Int = 40): Seq[StatementRow] = {
     val out = ArrayBuffer.empty[StatementRow]
-    val n = doc.mentions.length
-    var pairOrd = 0
-    var i = 0
-    while (i < n) {
-      var j = 0
-      while (j < n) {
-        resolve(doc, i, j, windowSize) match {
-          case Some((x, s1, s2, e1, e2)) =>
-            out += StatementRow(
-              doc.url, docOrd, pairOrd, x,
-              s1.start, s1.end, s2.start, s2.end, e1, e2)
-            pairOrd += 1
-          case None => ()
-        }
-        j += 1
-      }
-      i += 1
+    foreachWindow(doc, windowSize) { (rStart, rEnd, i1, i2) =>
+      val (x, s1, s2, e1, e2) = slice(doc, rStart, rEnd, i1, i2)
+      out += StatementRow(
+        doc.url, docOrd, out.length, x,
+        s1.start, s1.end, s2.start, s2.end, e1, e2)
     }
     out.toSeq
   }

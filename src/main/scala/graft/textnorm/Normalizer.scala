@@ -2,24 +2,21 @@ package graft.textnorm
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Text normalizer — byte-identical Scala re-expression of the reference's
   * `helpers.py:12-74` (Normalizer): ordered method list
   * (lowercase → strip html tags → strip URLs), then collapse multiple spaces
   * and strip. This is THE `text → text_norm` per-url byte-identity invariant
-  * from BASELINE.json.
+  * from BASELINE.json; the pipeline reaches it through the `text_norm`
+  * Catalyst expression ([[ExprFns.textNorm]]).
   *
-  * Two surfaces, same semantics:
-  *   - [[normalize]]: plain Scala function (golden tests, typed maps)
-  *   - [[normalizeCol]]: Catalyst Column expression chain (the pipeline path;
-  *     stays inside whole-stage codegen — regexp_replace is codegen'd)
+  * The tag and space steps are char loops; [[HtmlTagPattern]] is the regex
+  * the tag loop reproduces, kept as the tests' oracle. The URL step still
+  * runs [[UrlPattern]], but only on text that contains '/' or "www".
   *
   * Regex parity notes (SURVEY.md §7.5): Python `re` on str is Unicode-aware
   * for \s and \d; Java needs the inline (?U) flag (UNICODE_CHARACTER_CLASS)
-  * for the same meaning. Patterns below carry (?U) so the Column version and
-  * the Scala version agree with CPython on non-ASCII whitespace.
+  * for the same meaning, so the URL pattern carries it and agrees with
+  * CPython on non-ASCII whitespace.
   */
 object Normalizer {
 
@@ -35,9 +32,7 @@ object Normalizer {
       "(?:\\(([^\\s()<>]+|(\\([^\\s()<>]+\\)))*\\)|" +
       "[^\\s`!()\\[\\]{};:'\".,<>?«»“”‘’]))"
 
-  private val htmlRe = Pattern.compile(HtmlTagPattern)
   private val urlRe = Pattern.compile(UrlPattern)
-  private val multiSpaceRe = Pattern.compile(" +")
 
   final val DefaultMethods: Seq[String] = Seq("lowercase", "html", "urls")
 
@@ -46,31 +41,44 @@ object Normalizer {
     var t = text
     methods.foreach {
       case "lowercase" => t = PyText.pyLower(t)
-      case "html"      => t = htmlRe.matcher(t).replaceAll("")
-      case "urls"      => t = urlRe.matcher(t).replaceAll("")
-      case m           => throw new IllegalArgumentException(s"unknown method $m")
+      case "html"      => t = removeHtmlTags(t)
+      // every alternative of the pattern's leading group holds a '/' or
+      // "www", so text without either has no match
+      case "urls" =>
+        if (t.indexOf('/') >= 0 || t.contains("www")) t = urlRe.matcher(t).replaceAll("")
+      case m => throw new IllegalArgumentException(s"unknown method $m")
     }
-    t = multiSpaceRe.matcher(t).replaceAll(" ")
-    PyText.pyStrip(t)
+    PyText.pyStrip(PyText.collapseSpaces(t))
   }
 
-  /** Column form of [[normalize]] — identical output, Catalyst-native.
-    * lower() matches Locale.ROOT lowercasing; trim must strip the Python
-    * whitespace set, hence the regexp-based pyTrim. */
-  def normalizeCol(c: Column, methods: Seq[String] = DefaultMethods): Column = {
-    var col = c
-    methods.foreach {
-      case "lowercase" => col = lower(col)
-      case "html"      => col = regexp_replace(col, HtmlTagPattern, "")
-      case "urls"      => col = regexp_replace(col, UrlPattern, "")
-      case m           => throw new IllegalArgumentException(s"unknown method $m")
-    }
-    pyTrimCol(regexp_replace(col, " +", " "))
-  }
+  /** `.` outside DOTALL: any char but these line terminators. */
+  private def isLineTerminator(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
 
-  /** CPython str.strip() as a Column: strip the Python whitespace set. */
-  def pyTrimCol(c: Column): Column = {
-    val cls = "(?U)(?:^[\\s\\x1c-\\x1f]+|[\\s\\x1c-\\x1f]+$)"
-    regexp_replace(c, cls, "")
+  /** [[HtmlTagPattern]] removal: a '<' opens a tag that ends at the first
+    * '>' after it, unless a line terminator comes first. A failed scan
+    * stops at `noClose`, and no '<' before that point can close either,
+    * so the loop stays linear. */
+  private def removeHtmlTags(s: String): String = {
+    var i = s.indexOf('<')
+    if (i < 0) return s
+    val n = s.length
+    val sb = new java.lang.StringBuilder(n)
+    var last = 0
+    var noClose = -1
+    while (i >= 0) {
+      var next = i + 1
+      if (i >= noClose) {
+        var j = i + 1
+        while (j < n && s.charAt(j) != '>' && !isLineTerminator(s.charAt(j))) j += 1
+        if (j < n && s.charAt(j) == '>') {
+          sb.append(s, last, i)
+          last = j + 1
+          next = j + 1
+        } else noClose = j
+      }
+      i = s.indexOf('<', next)
+    }
+    if (last == 0) s else sb.append(s, last, n).toString
   }
 }

@@ -32,15 +32,6 @@ object PyText {
     s.substring(i, j)
   }
 
-  /** CPython str.strip(chars) for a fixed char set. */
-  def pyStrip(s: String, chars: Set[Char]): String = {
-    var i = 0
-    var j = s.length
-    while (i < j && chars(s.charAt(i))) i += 1
-    while (j > i && chars(s.charAt(j - 1))) j -= 1
-    s.substring(i, j)
-  }
-
   /** CPython str.split() with no args: split on whitespace runs, no empties. */
   def pySplit(s: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -53,6 +44,22 @@ object PyText {
       if (i > start) out += s.substring(start, i)
     }
     out.toArray
+  }
+
+  /** `re.sub(" +", " ", s)`: each run of spaces becomes one space. */
+  def collapseSpaces(s: String): String = {
+    var i = s.indexOf("  ")
+    if (i < 0) return s
+    val n = s.length
+    val sb = new java.lang.StringBuilder(n)
+    sb.append(s, 0, i + 1)
+    i += 1
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c != ' ' || s.charAt(i - 1) != ' ') sb.append(c)
+      i += 1
+    }
+    sb.toString
   }
 
   /** CPython str.lower(). Locale.ROOT matches CPython for the inputs the

@@ -3,7 +3,6 @@ package graft.textnorm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -12,14 +11,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * emit a direct invocation and the surrounding stage stays inside
   * whole-stage codegen (no CodegenFallback, no UDF boxing). */
 object ExprFns {
-  def capitalizeAllCaps(s: UTF8String): UTF8String =
-    UTF8String.fromString(CleanSent.capitalizeAllCaps(s.toString))
-
-  def cleanSent(s: UTF8String): UTF8String = {
-    val r = CleanSent.cleanSent(s.toString)
-    if (r.isEmpty) null else UTF8String.fromString(r.get)
-  }
-
   /** Per-document text_norm: the reference applies
     * `_process_textlines([doc])` then `Normalizer.normalize`
     * (`mtb_data_loader.py:185-188`); a dropped sentence yields "". */
@@ -27,9 +18,6 @@ object ExprFns {
     val cleaned = CleanSent.processTextlines(Seq(s.toString))
     UTF8String.fromString(Normalizer.normalize(cleaned))
   }
-
-  def pyStrip(s: UTF8String): UTF8String =
-    UTF8String.fromString(PyText.pyStrip(s.toString))
 
   def assembleArticle(s: UTF8String): UTF8String = {
     val lines = s.toString.split("\n", -1).toSeq
@@ -41,11 +29,8 @@ object ExprFns {
 abstract class StringKernelExpression extends UnaryExpression {
   /** Name of the ExprFns method to invoke. */
   def fn: String
-  /** Whether the kernel may return null for non-null input. */
-  def kernelNullable: Boolean = false
 
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable || kernelNullable
 
   override def nullSafeEval(input: Any): Any =
     invoke(input.asInstanceOf[UTF8String])
@@ -53,35 +38,7 @@ abstract class StringKernelExpression extends UnaryExpression {
   protected def invoke(s: UTF8String): UTF8String
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (kernelNullable) {
-      val childGen = child.genCode(ctx)
-      val code =
-        code"""
-          ${childGen.code}
-          boolean ${ev.isNull} = true;
-          org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-          if (!${childGen.isNull}) {
-            ${ev.value} = graft.textnorm.ExprFns.$fn(${childGen.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        """
-      ev.copy(code = code)
-    } else {
-      defineCodeGen(ctx, ev, c => s"graft.textnorm.ExprFns.$fn($c)")
-    }
-}
-
-case class CapitalizeAllCapsExpr(child: Expression) extends StringKernelExpression {
-  override def fn: String = "capitalizeAllCaps"
-  override protected def invoke(s: UTF8String): UTF8String = ExprFns.capitalizeAllCaps(s)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
-}
-
-case class CleanSentExpr(child: Expression) extends StringKernelExpression {
-  override def fn: String = "cleanSent"
-  override def kernelNullable: Boolean = true
-  override protected def invoke(s: UTF8String): UTF8String = ExprFns.cleanSent(s)
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
+    defineCodeGen(ctx, ev, c => s"graft.textnorm.ExprFns.$fn($c)")
 }
 
 case class TextNormExpr(child: Expression) extends StringKernelExpression {
@@ -102,12 +59,6 @@ object functions {
     org.apache.spark.sql.GraftBridge.column(e)
   private def expr(c: Column): Expression =
     org.apache.spark.sql.GraftBridge.expression(c)
-
-  /** ALLCAPS→Capitalize rewrite (reference `mtb_data_loader.py:410-412`). */
-  def capitalize_all_caps(c: Column): Column = col(CapitalizeAllCapsExpr(expr(c)))
-
-  /** Full _clean_sent (null for the reference's skipped sentinels). */
-  def clean_sent(c: Column): Column = col(CleanSentExpr(expr(c)))
 
   /** Per-document byte-identity text_norm (clean + normalize). */
   def text_norm(c: Column): Column = col(TextNormExpr(expr(c)))

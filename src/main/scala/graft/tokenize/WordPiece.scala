@@ -55,7 +55,9 @@ final class BertTokenizer(
   val sepId: Int = vocab(Sep)
   val maskId: Int = vocab(Mask)
   val e1Id: Int = addedTokens(E1)
+  val e1EndId: Int = addedTokens(E1End)
   val e2Id: Int = addedTokens(E2)
+  val e2EndId: Int = addedTokens(E2End)
   val blankId: Int = addedTokens(Blank)
 
   private val neverSplit: Set[String] = SpecialTokens.toSet

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.fixtures.Corpus
 
-/** Runtime smoke: drives the Catalyst expression path (text_norm /
-  * assemble_article / clean_sent) through a real SparkSession over the
+/** Runtime smoke: drives the Catalyst expression path (assemble_article
+  * then text_norm) through a real SparkSession over the
   * generated corpus and prints plan + sample rows. Run:
   *   sbt "runMain graft.tools.Smoke"
   */

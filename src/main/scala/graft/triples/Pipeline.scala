@@ -1,12 +1,14 @@
 package graft.triples
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.annotate.{Annotator, Gazetteer}
 import graft.kernel.ScoringKernel
-import graft.schema.{Span, Triple, WebPage}
+import graft.schema.{AnnotatedDoc, Span, Triple, WebPage}
 import graft.statements.{Markers, Windowing}
 import graft.tokenize.BertTokenizer
 
@@ -130,8 +132,8 @@ object TriplePipeline {
   }
 
   /** One document's statement windows: annotate → the Config's mention
-    * filters → pair windows, ordered by [[stableDocOrd]]. The fused
-    * triple pass and the MTB dataset's statements stage both run this. */
+    * filters → pair windows, ordered by [[stableDocOrd]]. The MTB
+    * dataset's statements stage runs this. */
   def docStatements(
       url: String,
       textNorm: String,
@@ -141,6 +143,30 @@ object TriplePipeline {
       filterMentions(Annotator.annotate(url, textNorm, gaz), cfg),
       stableDocOrd(url),
       cfg.windowSize)
+
+  /** The fused pass's per-document work: every kept window of `doc`,
+    * encoded over window offsets by [[Markers.encodeWindow]] — no token
+    * slices, and one doc-sized piece array, so each document token costs
+    * one memo lookup however many windows hold it. Yields (e1, e2,
+    * encoding) in [[docStatements]] order; windows whose markers vanish
+    * in tokenization are dropped. */
+  def encodeDoc(
+      doc: AnnotatedDoc,
+      tok: BertTokenizer,
+      cache: java.util.HashMap[String, Markers.TokPieces],
+      windowSize: Int): ArrayBuffer[(String, String, Markers.Encoded)] = {
+    val out = ArrayBuffer.empty[(String, String, Markers.Encoded)]
+    val pieces = new Array[Markers.TokPieces](doc.tokens.length)
+    Windowing.foreachWindow(doc, windowSize) { (rStart, rEnd, i1, i2) =>
+      val m1 = doc.mentions(i1)
+      val m2 = doc.mentions(i2)
+      Markers
+        .encodeWindow(tok, cache, doc.tokens, pieces, rStart, rEnd,
+          Span(m1.start, m1.end), Span(m2.start, m2.end))
+        .foreach(enc => out += ((m1.text, m2.text, enc)))
+    }
+    out
+  }
 
   /** Full pipeline to (subj, pred, obj, url) triples: [[normalizePages]]
     * then [[triplesFromNormalized]]. The whole pipeline is ONE narrow
@@ -176,9 +202,9 @@ object TriplePipeline {
     textNorm
       .as[(String, String)]
       .mapPartitions { rows =>
-        // one partition-local pass: annotate -> window -> encode -> batch
-        // score -> label. No intermediate Dataset boundary, so token arrays
-        // never round-trip through InternalRow encoding.
+        // one partition-local pass: annotate -> window offsets -> encode ->
+        // batch score -> label. No intermediate Dataset boundary, so token
+        // arrays never round-trip through InternalRow encoding.
         val k = kernel.value
         val labels = idx2rel.value
         val tok = tokenizer.value
@@ -189,10 +215,9 @@ object TriplePipeline {
         // id-converts) once
         val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
         val statements = rows.flatMap { case (url, textNorm) =>
-          docStatements(url, textNorm, g, cfg).iterator.flatMap { st =>
-            Markers
-              .encodeCached(tok, cache)(st.tokens, Span(st.e1s, st.e1e), Span(st.e2s, st.e2e))
-              .map(enc => (st.e1, st.e2, url, enc.tokenIds, enc.e1Span.start, enc.e2Span.start))
+          val doc = filterMentions(Annotator.annotate(url, textNorm, g), cfg)
+          encodeDoc(doc, tok, cache, cfg.windowSize).iterator.map { case (e1, e2, enc) =>
+            (e1, e2, url, enc.tokenIds, enc.e1Span.start, enc.e2Span.start)
           }
         }
         statements.grouped(batchSize).flatMap { group =>

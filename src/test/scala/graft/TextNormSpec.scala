@@ -1,5 +1,7 @@
 package graft
 
+import java.util.regex.{Matcher, Pattern}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.Corpus
@@ -11,6 +13,83 @@ import graft.textnorm.{ArticleAssembly, CleanSent, Normalizer, PyText}
 class TextNormSpec extends AnyFunSuite {
 
   private lazy val goldens = GoldenUtil.lines("text_norm.golden.jsonl")
+
+  /** The regex implementations that the char loops replaced, built from
+    * the kept pattern strings: the oracle of the differential fuzz. */
+  private object RegexOracle {
+    private val special = Pattern.compile(CleanSent.SpecialTokenPattern)
+    private val punct = Pattern.compile(CleanSent.PunctClassPattern)
+    private val repeat = Pattern.compile(CleanSent.RepeatedPuncPattern)
+    private val caps = Pattern.compile(CleanSent.AllCapsPattern)
+    private val twoSpaces = Pattern.compile(" {2,}")
+    private val html = Pattern.compile(Normalizer.HtmlTagPattern)
+    private val url = Pattern.compile(Normalizer.UrlPattern)
+    private val spaces = Pattern.compile(" +")
+
+    private def stripNewlines(s: String): String =
+      s.dropWhile(_ == '\n').reverse.dropWhile(_ == '\n').reverse
+
+    def cleanSent(sent: String): Option[String] = {
+      if (sent == " " || sent == "\n" || sent == "") return None
+      var s = stripNewlines(sent)
+      s = special.matcher(s).replaceAll("")
+      s = punct.matcher(s).replaceAll(" ")
+      s = PyText.pySplit(s).mkString(" ")
+      s = PyText.pyStrip(s)
+      s = repeat.matcher(s).replaceAll("$1")
+      s = caps.matcher(s).replaceAll(m => Matcher.quoteReplacement(PyText.pyCapitalize(m.group(1))))
+      Some(s)
+    }
+
+    def processTextlines(lines: Seq[String]): String =
+      twoSpaces.matcher(lines.flatMap(cleanSent).mkString(" ")).replaceAll(" ")
+
+    def normalize(text: String, methods: Seq[String]): String = {
+      var t = text
+      methods.foreach {
+        case "lowercase" => t = PyText.pyLower(t)
+        case "html"      => t = html.matcher(t).replaceAll("")
+        case "urls"      => t = url.matcher(t).replaceAll("")
+      }
+      PyText.pyStrip(spaces.matcher(t).replaceAll(" "))
+    }
+  }
+
+  /** Fuzz units: every punctuation-class char, every CPython whitespace
+    * char (all line terminators among them), tag and URL pieces, A-Z
+    * runs, the repeated-punctuation class and a surrogate pair. */
+  private val fuzzUnits: IndexedSeq[String] = {
+    val punctClass = "*\"\n\\…+-/=()‘•€[]|♫:;—”“~`#".map(_.toString)
+    val pySpace = (0 to 0xffff).map(_.toChar).filter(PyText.isPySpace).map(_.toString)
+    val other = Seq(
+      "<", ">", "/", ".", "?", ",", "!", "a", "b", "x", "7", "A", "B", "Z", "é", "İ",
+      "AB", "XYZ", "www", "WWW", "http://", "https://", "x.com/", "ab.cd/", "www1.",
+      "\r\n", "<S>", "<FIL/>", "<b>", "</b>", "😀", "\ud83d")
+    (punctClass ++ pySpace ++ other).toIndexedSeq
+  }
+
+  private def fuzzText(r: scala.util.Random): String = {
+    val sb = new StringBuilder
+    (0 until r.nextInt(13)).foreach(_ => sb ++= fuzzUnits(r.nextInt(fuzzUnits.length)))
+    sb.toString
+  }
+
+  test("char-loop text_norm == regex oracles on 100k fuzzed inputs per function") {
+    val r = new scala.util.Random(20261017L)
+    val methodLists = Seq(Normalizer.DefaultMethods, Seq("html", "urls"), Seq("urls", "html"))
+    def check[A](what: => String, input: => Any, got: A, want: A): Unit =
+      if (got != want) fail(s"$what on $input: got $got, oracle $want")
+    (0 until 100000).foreach { _ =>
+      val a = fuzzText(r)
+      check("cleanSent", a.map(_.toInt), CleanSent.cleanSent(a), RegexOracle.cleanSent(a))
+      val lines = Seq.fill(1 + r.nextInt(3))(fuzzText(r))
+      check("processTextlines", lines.map(_.map(_.toInt)),
+        CleanSent.processTextlines(lines), RegexOracle.processTextlines(lines))
+      val b = fuzzText(r)
+      val ms = methodLists(r.nextInt(methodLists.length))
+      check(s"normalize $ms", b.map(_.toInt), Normalizer.normalize(b, ms), RegexOracle.normalize(b, ms))
+    }
+  }
 
   test("article assembly matches reference get_art_abs byte-for-byte") {
     goldens.foreach { g =>
