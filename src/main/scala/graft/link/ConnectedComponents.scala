@@ -3,6 +3,8 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Regime
+
 /** Connected components over the mention/similarity graph — iterative
   * DataFrame min-label propagation (alternating join + min-aggregate until
   * fixpoint), the GraphFrames-free formulation from SURVEY.md §4. Each
@@ -19,32 +21,43 @@ object ConnectedComponents {
   /** @param edges (src: long, dst: long) undirected
     * @return (node: long, component: long) — component = min node id
     *
-    * Two regimes: below `collectThreshold` distinct edges the graph is
-    * dimension-sized (entity/cluster graphs always are — dims ≪ facts) and
-    * a driver union-find finishes in milliseconds instead of paying ~2s of
-    * job overhead per min-propagation round; above it, the iterative
-    * distributed algorithm runs. The threshold keeps driver memory bounded
-    * (5M edges ≈ 80 MB). */
-  def run(
-      spark: SparkSession,
-      edges: DataFrame,
-      maxIter: Int = 20,
-      collectThreshold: Long = 5000000L): DataFrame = {
+    * Two regimes (`Regime.collectUpTo` at `Regime.MaxDriverEdges`): a
+    * dimension-sized graph (entity/cluster graphs always are) finishes in
+    * a driver [[UnionFind]] instead of paying ~2s of job overhead per
+    * min-propagation round; above the budget the iterative distributed
+    * algorithm runs. The persisted symmetric edges are released before
+    * returning: neither the LocalRelation nor the eagerly
+    * localCheckpointed labels read them afterwards. */
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    import spark.implicits._
     val sym = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .unionAll(edges.select(col("dst").cast("long").as("src"), col("src").cast("long").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      Regime.collectUpTo(sym.as[(Long, Long)], Regime.MaxDriverEdges) match {
+        case Some(es) => smallGraph(spark, es)
+        case None => propagate(sym, maxIter)
+      }
+    } finally sym.unpersist()
+  }
 
-    // the probe IS the collect (q26/EntityLinker idiom): ONE bounded job —
-    // limit(T+1) rows — decides the regime AND, in the small-graph case,
-    // already holds the full edge set (a T+1st row proves the graph is
-    // fact-sized and the rows are discarded, ≤ ~80 MB paid only then)
-    import spark.implicits._
-    val probe = sym.as[(Long, Long)].limit((collectThreshold + 1).toInt).collect()
-    if (probe.length <= collectThreshold)
-      return smallGraph(spark, probe)
+  /** `nodes` with a `labelCol` column: the component of its `key` in the
+    * graph of `edges`, or the key itself for a node on no edge (the
+    * components left-joined on `key`, then coalesced to self). */
+  def labelNodes(
+      spark: SparkSession,
+      edges: DataFrame,
+      nodes: DataFrame,
+      key: String,
+      labelCol: String): DataFrame =
+    nodes
+      .join(run(spark, edges).withColumnRenamed("node", key), Seq(key), "left")
+      .withColumn(labelCol, coalesce(col("component"), col(key)))
 
+  /** The iterative distributed algorithm over the symmetric edge set. */
+  private def propagate(sym: DataFrame, maxIter: Int): DataFrame = {
     var labels = sym
       .select(col("src").as("node"))
       .distinct()
@@ -99,23 +112,32 @@ object ConnectedComponents {
       spark: SparkSession,
       es: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val out = parent.keys.toSeq.map(n => (n, find(n)))
-    if (out.isEmpty)
-      spark.emptyDataset[(Long, Long)].toDF("node", "component")
-    else out.toDF("node", "component")
+    val uf = new UnionFind
+    es.foreach { case (a, b) => uf.union(a, b) }
+    uf.ids.toSeq.map(n => (n, uf.find(n))).toDF("node", "component")
   }
+}
+
+/** Driver union-find over long ids. Every set's root is its minimum id, so
+  * `find` gives the same min-id label the distributed propagation
+  * computes; an id never passed to `union` is its own root. */
+final class UnionFind {
+  private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+
+  def find(x: Long): Long = {
+    var r = x
+    while (parent.getOrElse(r, r) != r) r = parent(r)
+    var c = x
+    while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+    r
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+    val (ra, rb) = (find(a), find(b))
+    if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+  }
+
+  /** Every id passed to `union`. */
+  def ids: Iterable[Long] = parent.keys
 }

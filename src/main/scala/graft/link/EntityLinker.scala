@@ -3,6 +3,8 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Regime
+
 /** Entity canonicalization: MinHash/LSH blocking → similarity edges →
   * connected components → canonical id/surface per cluster (north_star
   * "entity linking with MinHash/LSH candidate blocking plus
@@ -18,32 +20,22 @@ object EntityLinker {
     * Two regimes, same output: the distributed LSH+CC chain launches ~a
     * dozen jobs (signature/bucket/verify, CC probe, two link joins) whose
     * fixed overhead dwarfs the work when the entity dim is small — which
-    * it usually is, since dims ≪ facts even at web scale. Below
-    * `smallDimThreshold` surfaces the whole chain runs on the driver with
-    * the IDENTICAL hash/band/cap/verify constants (one bounded
-    * limit-collect, same regime trick as ConnectedComponents.run), and the
-    * result comes back as a LocalRelation that downstream joins broadcast
-    * for free. Above it, the distributed path runs unchanged. */
+    * it usually is, since dims ≪ facts even at web scale. Up to
+    * `Regime.MaxDriverRows` surfaces (one `Regime.collectUpTo` job) the
+    * whole chain runs on the driver with the IDENTICAL hash/band/cap/verify
+    * constants, and the result comes back as a LocalRelation that
+    * downstream joins broadcast for free. Above it, the distributed path
+    * runs unchanged. */
   def canonicalize(
       spark: SparkSession,
       eDimIn: DataFrame,
       threshold: Double = 0.7,
       numHashes: Int = 48,
-      bands: Int = 16,
-      smallDimThreshold: Int = 100000): DataFrame = {
-    // the probe IS the collect (q26 pattern): pull up to threshold+1 rows
-    // in ONE job — an overflow row proves the dim is big and the rows are
-    // discarded (≤ a few MB, paid only in the rare big-dim case), while
-    // the common small-dim case no longer evaluates its input twice (the
-    // old limit+count then collect re-ran the caller's union/distinct
-    // chain per probe)
-    val dimSlim = eDimIn.select(col("e_id").cast("long"), col("e_text"))
-    val probe = dimSlim.limit(smallDimThreshold + 1).collect()
-    if (probe.length <= smallDimThreshold) {
-      return localCanonicalize(
-        spark, probe.map(r => (r.getLong(0), r.getString(1))),
-        threshold, numHashes, bands)
-    }
+      bands: Int = 16): DataFrame = {
+    import spark.implicits._
+    val dimSlim = eDimIn.select(col("e_id").cast("long"), col("e_text")).as[(Long, String)]
+    val local = Regime.collectUpTo(dimSlim, Regime.MaxDriverRows)
+    if (local.isDefined) return localCanonicalize(spark, local.get, threshold, numHashes, bands)
 
     // five consumers (LSH sigs + two text joins + comp join + canon agg);
     // the dim is dimension-sized by construction, persist it
@@ -53,12 +45,8 @@ object EntityLinker {
         numHashes = numHashes, bands = bands, threshold = threshold)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
 
-    val comps = ConnectedComponents.run(spark, edges)
-
     // entities untouched by any edge are their own canonical form
-    val withComp = eDim
-      .join(comps.withColumnRenamed("node", "e_id"), Seq("e_id"), "left")
-      .withColumn("component", coalesce(col("component"), col("e_id")))
+    val withComp = ConnectedComponents.labelNodes(spark, edges, eDim, "e_id", "component")
 
     val canonSurface = withComp
       .groupBy(col("component"))
@@ -74,20 +62,19 @@ object EntityLinker {
   }
 
   /** Driver-side mirror of the distributed chain for dimension-sized
-    * entity tables: same shingles/signature/band hashes (MinHashLSH
-    * constants), same hot-bucket cap, same estJaccard pre-filter and exact
-    * shingle-Jaccard verify, same min-id components and canonical-surface
-    * choice — output is identical to the distributed path by construction. */
+    * entity tables: same shingles/signature/band hashes and hot-bucket cap
+    * (the MinHashLSH constants and `bandHash`), same estJaccard pre-filter
+    * and exact shingle-Jaccard verify, same min-id components and
+    * canonical-surface choice — output is identical to the distributed
+    * path by construction. */
   private def localCanonicalize(
       spark: SparkSession,
       dim: Array[(Long, String)],
       threshold: Double,
       numHashes: Int,
-      bands: Int,
-      shingleK: Int = 3,
-      maxBucket: Int = 1000,
-      estSlack: Double = 0.25): DataFrame = {
+      bands: Int): DataFrame = {
     import spark.implicits._
+    import MinHashLSH.{EstSlack, MaxBucket, ShingleK}
     val rowsPerBand = numHashes / bands
     require(rowsPerBand * bands == numHashes, "bands must divide numHashes")
 
@@ -96,17 +83,15 @@ object EntityLinker {
     val buckets =
       new java.util.HashMap[(Int, Long), scala.collection.mutable.ArrayBuffer[Long]]()
     dim.foreach { case (id, text) =>
-      val sh = MinHashLSH.shingles(text, shingleK)
+      val sh = MinHashLSH.shingles(text, ShingleK)
       val sig = MinHashLSH.signature(sh, numHashes)
       shinglesById.put(id, sh)
       sigById.put(id, sig)
       var b = 0
       while (b < bands) {
-        var h = 0x2545f4914f6cdd1dL ^ b
-        var r = 0
-        while (r < rowsPerBand) { h = h * 0x100000001b3L ^ sig(b * rowsPerBand + r); r += 1 }
         buckets
-          .computeIfAbsent((b, h), _ => scala.collection.mutable.ArrayBuffer.empty[Long])
+          .computeIfAbsent((b, MinHashLSH.bandHash(sig, b, rowsPerBand)),
+            _ => scala.collection.mutable.ArrayBuffer.empty[Long])
           .append(id)
         b += 1
       }
@@ -114,47 +99,23 @@ object EntityLinker {
 
     val cand = scala.collection.mutable.HashSet.empty[(Long, Long)]
     buckets.values.forEach { ids =>
-      if (ids.length <= maxBucket) { // same hot-bucket cap as the cluster path
-        var i = 0
-        while (i < ids.length) {
-          var j = i + 1
-          while (j < ids.length) {
-            val (a, b) = (math.min(ids(i), ids(j)), math.max(ids(i), ids(j)))
-            if (a != b) cand += ((a, b))
-            j += 1
-          }
-          i += 1
-        }
-      }
+      if (ids.length <= MaxBucket) // same hot-bucket cap as the cluster path
+        for (i <- ids.indices; j <- i + 1 until ids.length if ids(i) != ids(j))
+          cand += ((math.min(ids(i), ids(j)), math.max(ids(i), ids(j))))
     }
 
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    val uf = new UnionFind
     cand.foreach { case (a, b) =>
-      if (MinHashLSH.estJaccard(sigById.get(a), sigById.get(b)) >= threshold - estSlack &&
-        MinHashLSH.exactJaccard(shinglesById.get(a), shinglesById.get(b)) >= threshold) {
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      if (MinHashLSH.estJaccard(sigById.get(a), sigById.get(b)) >= threshold - EstSlack &&
+        MinHashLSH.exactJaccard(shinglesById.get(a), shinglesById.get(b)) >= threshold)
+        uf.union(a, b)
     }
 
     val textById = dim.toMap
-    val out = dim.toSeq.map { case (id, text) =>
-      val canon = find(id) // untouched nodes are their own canonical form
+    dim.toSeq.map { case (id, text) =>
+      val canon = uf.find(id) // untouched nodes are their own canonical form
       (id, text, canon, textById(canon))
-    }
-    if (out.isEmpty)
-      spark.emptyDataset[(Long, String, Long, String)]
-        .toDF("e_id", "e_text", "canon_id", "canon_text")
-    else out.toDF("e_id", "e_text", "canon_id", "canon_text")
+    }.toDF("e_id", "e_text", "canon_id", "canon_text")
   }
 
   /** Rewrite triples to canonical entity surfaces. */

@@ -15,6 +15,24 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLSH {
 
+  /** Shingle size, in characters or words. This, [[MaxBucket]] and
+    * [[EstSlack]] are [[similarPairs]]' constants, shared with the linker's
+    * driver mirror (`EntityLinker.canonicalize`), whose output must equal
+    * it. */
+  final val ShingleK = 3
+
+  /** Hot-bucket cap: buckets larger than this are dropped (a degenerate hot
+    * bucket otherwise goes quadratic in one task). Dropped-bucket counts
+    * are surfaced via the Spark `observe` metric "minhash_lsh"
+    * (dropped_buckets, max_bucket) — never a silent recall loss. */
+  final val MaxBucket = 1000
+
+  /** The signature pre-filter keeps pairs with estJaccard >= threshold -
+    * EstSlack; with 48 hashes the estimator's sigma at j=0.8 is ~0.06, so
+    * 0.25 is a >4-sigma guard against false negatives while still
+    * discarding the unrelated-pair bulk before any text join. */
+  final val EstSlack = 0.25
+
   /** Character k-gram shingles — right for SHORT strings (entity surfaces),
     * where edits move few grams. */
   def shingles(s: String, k: Int = 3): Set[Long] = {
@@ -81,6 +99,15 @@ object MinHashLSH {
     sig
   }
 
+  /** Bucket hash of band `b` of a MinHash signature: FNV-style over the
+    * band's `rowsPerBand` signature rows, seeded per band. */
+  def bandHash(sig: Array[Long], b: Int, rowsPerBand: Int): Long = {
+    var h = 0x2545f4914f6cdd1dL ^ b
+    var r = 0
+    while (r < rowsPerBand) { h = h * 0x100000001b3L ^ sig(b * rowsPerBand + r); r += 1 }
+    h
+  }
+
   def estJaccard(a: Array[Long], b: Array[Long]): Double = {
     var eq = 0
     var i = 0
@@ -104,18 +131,7 @@ object MinHashLSH {
     * 3-column (id_a, id_b, est) table; only the few survivors join the
     * corpus text back for the exact shingle-Jaccard verification.
     *
-    * @param df        input with (idCol: long, textCol: string)
-    * @param maxBucket hot-bucket cap: buckets larger than this are dropped
-    *                  (a degenerate hot bucket otherwise goes quadratic in
-    *                  one task). Dropped-bucket counts are surfaced via the
-    *                  Spark `observe` metric "minhash_lsh" (dropped_buckets,
-    *                  max_bucket) — never a silent recall loss.
-    * @param estSlack  signature pre-filter keeps pairs with estJaccard >=
-    *                  threshold - estSlack; with 48 hashes the estimator's
-    *                  sigma at j=0.8 is ~0.06, so the default 0.25 slack is
-    *                  a >4-sigma guard against false negatives while still
-    *                  discarding the unrelated-pair bulk before any text
-    *                  join.
+    * @param df input with (idCol: long, textCol: string)
     */
   def similarPairs(
       spark: SparkSession,
@@ -124,14 +140,11 @@ object MinHashLSH {
       textCol: String,
       numHashes: Int = 48,
       bands: Int = 16,
-      shingleK: Int = 3,
       threshold: Double = 0.7,
-      maxBucket: Int = 1000,
-      shingleMode: String = "char",
-      estSlack: Double = 0.25): DataFrame = {
+      shingleMode: String = "char"): DataFrame = {
     import spark.implicits._
-    val rowsPerBand = numHashes / bands
-    require(rowsPerBand * bands == numHashes, "bands must divide numHashes")
+    val rpb = numHashes / bands
+    require(rpb * bands == numHashes, "bands must divide numHashes")
 
     val docs = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
 
@@ -139,17 +152,8 @@ object MinHashLSH {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val sig = signature(shinglesOf(text, shingleK, shingleMode), numHashes)
-          val bandHashes = Array.tabulate(bands) { b =>
-            var h = 0x2545f4914f6cdd1dL ^ b
-            var r = 0
-            while (r < rowsPerBand) {
-              h = h * 0x100000001b3L ^ sig(b * rowsPerBand + r)
-              r += 1
-            }
-            h
-          }
-          (id, sig, bandHashes)
+          val sig = signature(shinglesOf(text, ShingleK, shingleMode), numHashes)
+          (id, sig, Array.tabulate(bands)(bandHash(sig, _, rpb)))
         }
       }
       .toDF("id", "sig", "band_hashes")
@@ -175,10 +179,10 @@ object MinHashLSH {
       .withColumn("__rn", row_number().over(w))
       .observe(
         "minhash_lsh",
-        sum(when(col("__cnt") > maxBucket && col("__rn") === 1, lit(1L)).otherwise(lit(0L)))
+        sum(when(col("__cnt") > MaxBucket && col("__rn") === 1, lit(1L)).otherwise(lit(0L)))
           .as("dropped_buckets"),
         coalesce(max(col("__cnt")), lit(0L)).as("max_bucket"))
-      .filter(col("__cnt") <= maxBucket)
+      .filter(col("__cnt") <= MaxBucket)
       .drop("__cnt", "__rn")
 
     val a = sized.select(col("band"), col("bh"), col("id").as("id_a"), col("sig").as("sig_a"))
@@ -192,12 +196,12 @@ object MinHashLSH {
       // estimate from the signatures already in hand — unrelated pairs die
       // here, before any dedup shuffle or text join
       .withColumn("est", est(col("sig_a"), col("sig_b")))
-      .filter(col("est") >= threshold - estSlack)
+      .filter(col("est") >= threshold - EstSlack)
       .groupBy("id_a", "id_b")
       .agg(first(col("est")).as("est"))
 
     val verify = udf { (ta: String, tb: String) =>
-      exactJaccard(shinglesOf(ta, shingleK, shingleMode), shinglesOf(tb, shingleK, shingleMode))
+      exactJaccard(shinglesOf(ta, ShingleK, shingleMode), shinglesOf(tb, ShingleK, shingleMode))
     }
     cand
       .join(docs.select(col("id").as("id_a"), col("text").as("text_a")), Seq("id_a"))

@@ -49,29 +49,26 @@ object DenseId {
     GraftBridge.internalDF(spark, rdd, schema)
   }
 
-  /** Dense ids via a BOUNDED DRIVER RANKING regime (the EntityLinker /
-    * embedding-dedup probe idiom applied to id assignment): one
-    * column-pruned pass collects only the key tuples — the fat payload
-    * (token arrays) never moves — and, when the key count is within
-    * maxDriverKeys, the global rank is computed on the driver and shipped
-    * back as a broadcast sorted-key table each executor binary-searches.
-    * That removes the range exchange, its RangePartitioner sample pass,
-    * the per-partition sort AND zipWithIndex's offsets job: the one slim
-    * pass is the whole id assignment. The default bound (32M keys = 256 MB
-    * packed) is a driver-memory/broadcast budget, same order as the
-    * engine's other bounded regimes (CC <= 5M edges, linker <= 100k rows);
-    * above it (true web-scale fact tables) it falls back to withDenseId,
-    * whose range exchange is the correct distributed shape at that size —
-    * the wasted probe is one pruned scan, a rounding error against the fat
-    * exchange it would otherwise always pay.
+  /** Dense ids via a BOUNDED DRIVER RANKING regime: one column-pruned
+    * pass collects only the key tuples — the fat payload (token arrays)
+    * never moves — and, when the key count is within
+    * `Regime.MaxDriverKeys` (the driver-memory/broadcast budget documented
+    * in [[graft.Regime]]), the global rank is computed on the driver and
+    * shipped back as a broadcast sorted-key table each executor
+    * binary-searches. That removes the range exchange, its
+    * RangePartitioner sample pass, the per-partition sort AND
+    * zipWithIndex's offsets job: the one slim pass is the whole id
+    * assignment. Above the budget (web-scale fact tables) it falls back
+    * to withDenseId's range exchange — the wasted key pass is one pruned
+    * scan, a rounding error against that fat exchange.
     *
     * The keys pack order-preservingly into one non-negative long: the
     * first key gets 31 bits and the others share the remaining 31, the
     * last taking the extra bit — (31, 31) for (docOrd, pairOrd) orders,
     * (31, 15, 16) for (docOrd, p1, p2) mention orders, where p1/p2 are
     * token positions inside one document. A NULL or out-of-range key, a
-    * duplicate key tuple, or more than maxDriverKeys keys falls back to
-    * the classic range-exchange path.
+    * duplicate key tuple, or more keys than the budget falls back to the
+    * classic range-exchange path.
     *
     * The assigned ids equal the row's rank in the global key order —
     * bit-identical to withDenseId (given unique key tuples, which every
@@ -81,8 +78,7 @@ object DenseId {
   def withDenseIdProbed(
       df: DataFrame,
       idName: String,
-      keys: Seq[String],
-      maxDriverKeys: Long = 32000000L): DataFrame = {
+      keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
@@ -126,7 +122,7 @@ object DenseId {
       }
       .collect()
     val total = perPart.iterator.map(_._2.length.toLong).sum
-    if (!perPart.forall(_._1) || total > maxDriverKeys) return fallback
+    if (!perPart.forall(_._1) || total > graft.Regime.bound(graft.Regime.MaxDriverKeys)) return fallback
 
     // global rank = position in the sorted packed-key array. The sorted
     // array is broadcast and each executor binary-searches its own rows'

@@ -155,10 +155,7 @@ object KgOps {
       .join(dict.withColumnRenamed("mention", "m1").withColumnRenamed("e_id", "src"), Seq("m1"))
       .join(dict.withColumnRenamed("mention", "m2").withColumnRenamed("e_id", "dst"), Seq("m2"))
       .select("src", "dst")
-    val comps = graft.link.ConnectedComponents.run(spark, edges)
-    dict
-      .join(comps.withColumnRenamed("node", "e_id"), Seq("e_id"), "left")
-      .withColumn("component", coalesce(col("component"), col("e_id")))
+    graft.link.ConnectedComponents.labelNodes(spark, edges, dict, "e_id", "component")
       .select("e_id", "component")
   }
 }

@@ -41,8 +41,8 @@ object MtbDataset {
     *   the timed windows). The probe MUST invoke the thunk exactly once;
     *   the default just constructs. NOTE: construction itself runs bounded
     *   probe/collect jobs eagerly (DenseId's key passes, the freq-filter
-    *   regime probe) — build() launches Spark jobs before any caller
-    *   action, it is not one lazy DAG.
+    *   `Regime.collectUpTo`) — build() launches Spark jobs before any
+    *   caller action, it is not one lazy DAG.
     * @param needDims when false, the window-text dictionary (Result.xDim)
     *   and the pruned dims are skipped entirely — callers that only
     *   consume tokenizedRelations/pools (the pair-scoring and loss paths)
@@ -58,7 +58,6 @@ object MtbDataset {
       minPoolSize: Int = 8,
       windowSize: Int = 40,
       splitSeed: Long = 42L,
-      broadcastPairsMax: Long = 1000000L,
       needDims: Boolean = true,
       probe: (String, () => DataFrame) => Unit = (_, f) => { f(); () }): Result = {
     import spark.implicits._
@@ -113,14 +112,13 @@ object MtbDataset {
     // (e1, e2) text keys — a bijection of the id keys, so the groups are
     // identical — which column-prunes the count-agg scan to two string
     // columns instead of recomputing the whole dictionary join a second
-    // time as the semi join's build side. Regime split (the EntityLinker /
-    // embedding-dedup idiom): one bounded collect probes the surviving-pair
-    // dictionary; at or below broadcastPairsMax the collected set IS the
-    // broadcast — the fact side then never exchanges, and the filter fuses
-    // into the tokenize mapPartitions stage as one narrow chain. Above the
-    // bound (web-scale corpora where the pair dictionary is itself huge)
-    // it falls back to the distributed semi join, whose shuffle is the
-    // correct shape at that size.
+    // time as the semi join's build side. Regime split: up to
+    // `Regime.MaxBroadcastPairs` surviving pairs the collected keep set IS
+    // the broadcast (a LocalRelation, not a re-run aggregation) — the fact
+    // side never exchanges, and the filter fuses into the tokenize
+    // mapPartitions stage as one narrow chain. Above the budget (a huge
+    // pair dictionary) the distributed semi join's shuffle is the right
+    // shape.
     val minKeep = math.max(minCount, minPoolSize)
     var afterPool: DataFrame = null
 
@@ -145,18 +143,13 @@ object MtbDataset {
             .groupBy(col("e1"), col("e2")).count()
             .filter(col("count") >= minKeep)
             .select(col("e1"), col("e2"))
-          // fused regime probe (the q26 pattern): ONE bounded collect —
-          // limit max+1 rows — decides the regime AND, in the broadcast
-          // regime, already holds the keep set, so the broadcast builds
-          // from a LocalRelation instead of re-running the aggregation as
-          // the join's build side
-          val cap = math.min(broadcastPairsMax + 1, Int.MaxValue.toLong).toInt
-          val local = keepPairs.limit(cap).collect()
-          if (local.length <= broadcastPairsMax) {
-            val localDf = spark.createDataFrame(
-              java.util.Arrays.asList(local: _*), keepPairs.schema)
-            fact.join(broadcast(localDf), Seq("e1", "e2"), "left_semi")
-          } else fact.join(keepPairs, Seq("e1", "e2"), "left_semi")
+          graft.Regime.collectUpTo(keepPairs, graft.Regime.MaxBroadcastPairs) match {
+            case Some(local) =>
+              val localDf = spark.createDataFrame(
+                java.util.Arrays.asList(local: _*), keepPairs.schema)
+              fact.join(broadcast(localDf), Seq("e1", "e2"), "left_semi")
+            case None => fact.join(keepPairs, Seq("e1", "e2"), "left_semi")
+          }
         }
       afterPool
         .mapPartitions { rows =>

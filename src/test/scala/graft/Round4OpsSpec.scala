@@ -36,13 +36,12 @@ class Round4OpsSpec extends AnyFunSuite {
     import spark.implicits._
     val vecs = clusteredVecs(120)
     val df = vecs.toDF("vec_id", "embedding")
-    def run(thr: Int) =
-      Dedup.embeddingClusters(spark, df, "vec_id", "embedding",
-        threshold = 0.95, smallTableThreshold = thr)
+    def run() =
+      Dedup.embeddingClusters(spark, df, "vec_id", "embedding", threshold = 0.95)
         .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // thr=0 forces the distributed LSH+CC chain; default takes the local
-    // mirror — the regime split must be invisible in the output
-    assert(run(0) == run(100000))
+    // the seam forces the distributed LSH+CC chain; default takes the
+    // local mirror — the regime split must be invisible in the output
+    assert(Regime.forcingDistributed(run()) == run())
   }
 
   test("trainCentroids is deterministic and bounded") {

@@ -97,20 +97,22 @@ class Round5OpsSpec extends AnyFunSuite {
     import spark.implicits._
     // 60 identical vectors (one hot bucket) + 3 distinct: predicted
     // candidate tuples ~ 60^2*(nBits+1) >> the tiny cap, so the local
-    // regime must refuse and the distributed chain must produce the
-    // exact same clustering the un-capped local mirror does
+    // regime must refuse, and the distributed chain it falls through to
+    // must produce the exact same clustering the un-capped local mirror
+    // does
     val hot = (0 until 60).map(i => (i.toLong, Array.fill(16)(1.0f)))
     val rest = Seq(
       (100L, Array.tabulate(16)(d => if (d < 8) 1.0f else -1.0f)),
       (101L, Array.tabulate(16)(d => if (d % 2 == 0) 1.0f else -1.0f)),
       (102L, Array.tabulate(16)(d => -1.0f)))
+    assert(Dedup.localEmbeddingClusters(spark, (hot ++ rest).toArray, 0.95,
+      nBits = 8, tables = 8, "vec_id", maxCandidatePairs = 100L).isEmpty)
     val df = (hot ++ rest).toDF("vec_id", "embedding")
-    def run(cap: Long) =
-      Dedup.embeddingClusters(spark, df, "vec_id", "embedding",
-        threshold = 0.95, maxLocalCandidatePairs = cap)
+    def run() =
+      Dedup.embeddingClusters(spark, df, "vec_id", "embedding", threshold = 0.95)
         .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val guarded = run(100L) // trips the guard -> distributed
-    val local = run(64L << 20) // default local mirror
+    val guarded = Regime.forcingDistributed(run()) // the fall-through path
+    val local = run() // default local mirror
     assert(guarded == local)
     // the 60 identical vectors all landed in one cluster
     assert(guarded.filter(_._1 < 60).map(_._2).distinct.size == 1)
@@ -169,9 +171,10 @@ class Round5OpsSpec extends AnyFunSuite {
     val base = (0 until 400).map(i => ((i * 211 % 400).toLong, 0L, i))
       .toDF("d", "p", "v").repartition(4).persist()
     base.count()
-    val capped = graft.ops.DenseId
-      .withDenseIdProbed(base, "id", Seq("d", "p"), maxDriverKeys = 10L)
-      .collect().map(r => (r.getLong(0), r.getLong(3)))
+    val forced = Regime.forcingDistributed(
+      graft.ops.DenseId.withDenseIdProbed(base, "id", Seq("d", "p")))
+    assert(forced.queryExecution.toRdd.toDebugString.contains("ShuffledRowRDD"))
+    val capped = forced.collect().map(r => (r.getLong(0), r.getLong(3)))
     base.unpersist()
     val expected = capped.sortBy(_._1).zipWithIndex.map(_._2.toLong)
     assert(capped.sortBy(_._1).map(_._2).toSeq == expected.toSeq)

@@ -9,9 +9,10 @@ import graft.ops.{Dedup, DenseId, IvfIndex}
 /** Round-6 forced-distributed-regime parity matrix (r5 VERDICT "Next
   * round" #2): every bounded local/broadcast regime in the engine has a
   * distributed fallback that IS the 100-TB code path, but fixtures never
-  * cross the thresholds. Each test here sets the threshold to 0 (forcing
-  * the fallback) and asserts output equality against the bounded regime on
-  * the same fixture. Plus the simhash hot-bucket fixture (#4) and the
+  * cross the budgets. Each test here runs the operator inside
+  * `Regime.forcingDistributed` (every budget reads 0, forcing the
+  * fallback) and asserts output equality against the bounded regime on the
+  * same fixture. Plus the simhash hot-bucket fixture (#4) and the
   * IvfIndex corrupt-manifest contract (#7). embeddingClusters parity lives
   * in Round4OpsSpec. */
 class Round6OpsSpec extends AnyFunSuite {
@@ -34,13 +35,12 @@ class Round6OpsSpec extends AnyFunSuite {
       "wayne enterprise", "stark industries", "stark industrie")
     val dim = surfaces.zipWithIndex.map { case (s, i) => (i.toLong + 10, s) }
       .toDF("e_id", "e_text")
-    def run(thr: Int) = EntityLinker.canonicalize(spark, dim, threshold = 0.6,
-        smallDimThreshold = thr)
+    def run() = EntityLinker.canonicalize(spark, dim, threshold = 0.6)
       .orderBy("e_id")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
       .toSeq
-    assert(run(0) == run(100000)) // thr=0 forces the distributed chain
+    assert(Regime.forcingDistributed(run()) == run())
   }
 
   // ---- ConnectedComponents: driver union-find vs iterative propagation ----
@@ -56,9 +56,9 @@ class Round6OpsSpec extends AnyFunSuite {
         Seq((100L, 101L)) ++
         (0 until 25).map(_ => { val a = rng.nextInt(20); (a.toLong, (a + 70).toLong) })
     ).toDF("src", "dst")
-    def run(thr: Long) = ConnectedComponents.run(spark, edges, collectThreshold = thr)
+    def run() = ConnectedComponents.run(spark, edges)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(run(0L) == run(5000000L))
+    assert(Regime.forcingDistributed(run()) == run())
   }
 
   // ---- DenseId: bounded-driver rank vs classic range exchange ----
@@ -70,9 +70,9 @@ class Round6OpsSpec extends AnyFunSuite {
       (rng.nextInt(1 << 20).toLong * 500 + i, rng.nextInt(1000), s"payload-$i")
     }
     val df = rows.toDF("d", "p", "payload")
-    def run(max: Long) = DenseId.withDenseIdProbed(df, "id", Seq("d", "p"), maxDriverKeys = max)
+    def run() = DenseId.withDenseIdProbed(df, "id", Seq("d", "p"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3))).toSeq
-    assert(run(0L) == run(32000000L)) // max=0 forces withDenseId's range exchange
+    assert(Regime.forcingDistributed(run()) == run()) // forced: withDenseId's range exchange
   }
 
   test("withDenseIdProbed3: forced range-exchange ids equal bounded-rank ids") {
@@ -82,9 +82,9 @@ class Round6OpsSpec extends AnyFunSuite {
       (rng.nextInt(1 << 20).toLong * 400 + i, rng.nextInt(1 << 14), rng.nextInt(1 << 15))
     }.distinct
     val df = rows.toDF("d", "p1", "p2")
-    def run(max: Long) = DenseId.withDenseIdProbed(df, "id", Seq("d", "p1", "p2"), maxDriverKeys = max)
+    def run() = DenseId.withDenseIdProbed(df, "id", Seq("d", "p1", "p2"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
-    assert(run(0L) == run(32000000L))
+    assert(Regime.forcingDistributed(run()) == run())
   }
 
   test("withDenseIdProbed: NULL keys fall back to the classic NULLS-FIRST order") {
@@ -129,11 +129,11 @@ class Round6OpsSpec extends AnyFunSuite {
   test("MtbDataset.build: forced-distributed freq filter equals broadcast regime") {
     import spark.implicits._
     val sc = spark.sparkContext
-    def build(bmax: Long) = graft.statements.MtbDataset.build(
+    def build() = graft.statements.MtbDataset.build(
       spark, graft.fixtures.Corpus.generate(spark, 96),
       sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
       sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
-      minCount = 2, minPoolSize = 2, broadcastPairsMax = bmax, needDims = false)
+      minCount = 2, minPoolSize = 2, needDims = false)
     def snap(r: graft.statements.MtbDataset.Result) = {
       val rel = r.tokenizedRelations
         .select(col("relation_id"), col("e1_id"), col("e2_id"),
@@ -146,7 +146,8 @@ class Round6OpsSpec extends AnyFunSuite {
       spark.catalog.clearCache()
       (rel, pools)
     }
-    assert(snap(build(0L)) == snap(build(1000000L))) // bmax=0 forces the semi-join path
+    // forced: the distributed semi join (and DenseId's range exchange)
+    assert(Regime.forcingDistributed(snap(build())) == snap(build()))
   }
 
   // ---- simhash hot-bucket fixture (r5 VERDICT "Next round" #4) ----
