@@ -4,7 +4,7 @@ import org.apache.spark.sql.Dataset
 
 /** The driver-local vs distributed regime split of every operator whose
   * input is usually dimension-sized (entity dims, cluster graphs, pair
-  * dictionaries — dims ≪ facts even at web scale). Below its budget an
+  * dictionaries, the documents of a dedup pass). Below its budget an
   * operator runs a driver mirror in milliseconds where the distributed
   * chain pays ~a dozen jobs of fixed overhead.
   *
@@ -13,8 +13,10 @@ import org.apache.spark.sql.Dataset
   * input once; a `cap + 1`st row proves the input big and is discarded.
   *
   * The budgets bound driver memory, not time:
-  *  - [[MaxDriverEdges]]: 5 M symmetric (long, long) edges, about 80 MB,
-  *    for the connected-components union-find;
+  *  - [[MaxDriverPairs]]: 5 M fixed-size (long, long) rows, about 80 MB,
+  *    for every such probe: the symmetric edges of connected components,
+  *    the (doc_id, shingle) rows of MinHash dedup and the (doc_id,
+  *    simhash) rows of SimHash dedup;
   *  - [[MaxDriverRows]]: 100 k rows, shared by the entity linker (surface
   *    strings, a few MB) and embedding dedup (vectors, tens of MB);
   *  - [[MaxBroadcastPairs]]: 1 M surviving (e1, e2) surface pairs, the
@@ -24,7 +26,7 @@ import org.apache.spark.sql.Dataset
   *    key pass is its probe. */
 object Regime {
 
-  final val MaxDriverEdges = 5000000
+  final val MaxDriverPairs = 5000000
   final val MaxDriverRows = 100000
   final val MaxBroadcastPairs = 1000000
   final val MaxDriverKeys = 32000000
@@ -33,11 +35,21 @@ object Regime {
 
   /** Runs `body` with every budget read as 0, so each regime split takes
     * the branch an input over its budget takes. Test seam, confined to
-    * this thread (a ThreadLocal, not inherited): work handed to other
-    * threads, such as SparkEntry's `inParallel` futures, is not forced. */
-  private[graft] def forcingDistributed[A](body: => A): A = {
+    * this thread (a ThreadLocal, not inherited, so a pool thread never
+    * keeps it); work handed to another thread carries it only through
+    * [[carry]]. */
+  private[graft] def forcingDistributed[A](body: => A): A = within(true)(body)
+
+  /** `body` as a thunk that runs under the calling thread's seam state on
+    * whichever thread calls it, e.g. inside a Future. */
+  private[graft] def carry[A](body: => A): () => A = {
+    val f = forced.get
+    () => within(f)(body)
+  }
+
+  private def within[A](f: Boolean)(body: => A): A = {
     val prev = forced.get
-    forced.set(true)
+    forced.set(f)
     try body finally forced.set(prev)
   }
 

@@ -44,25 +44,26 @@ object SparkEntry {
     * scheduler back-fills cores one job's straggler tail leaves idle with
     * the next job's tasks. Used by multi-leg evidence queries (q28, q41)
     * whose legs share only already-persisted inputs. */
-  private def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    val (fa, fb) = (fork(a), fork(b))
+    (join(fa), join(fb))
   }
 
-  private def inParallel3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    val fc = Future(c)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf))
+  private[graft] def inParallel3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
+    val (fa, fb, fc) = (fork(a), fork(b), fork(c))
+    (join(fa), join(fb), join(fc))
   }
+
+  /** `body` on the global pool, under the calling thread's
+    * `Regime.forcingDistributed` state (a ThreadLocal the pool thread
+    * would not otherwise see). */
+  private def fork[A](body: => A): scala.concurrent.Future[A] = {
+    val run = Regime.carry(body)
+    scala.concurrent.Future(run())(scala.concurrent.ExecutionContext.global)
+  }
+
+  private def join[A](f: scala.concurrent.Future[A]): A =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   /** Per-distinct-row multiplicities of two same-schema frames:
     * (__ca, __cb), 0 where a row is absent from one side. One aggregation

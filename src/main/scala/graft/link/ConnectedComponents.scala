@@ -21,7 +21,7 @@ object ConnectedComponents {
   /** @param edges (src: long, dst: long) undirected
     * @return (node: long, component: long) — component = min node id
     *
-    * Two regimes (`Regime.collectUpTo` at `Regime.MaxDriverEdges`): a
+    * Two regimes (`Regime.collectUpTo` at `Regime.MaxDriverPairs`): a
     * dimension-sized graph (entity/cluster graphs always are) finishes in
     * a driver [[UnionFind]] instead of paying ~2s of job overhead per
     * min-propagation round; above the budget the iterative distributed
@@ -36,7 +36,7 @@ object ConnectedComponents {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      Regime.collectUpTo(sym.as[(Long, Long)], Regime.MaxDriverEdges) match {
+      Regime.collectUpTo(sym.as[(Long, Long)], Regime.MaxDriverPairs) match {
         case Some(es) => smallGraph(spark, es)
         case None => propagate(sym, maxIter)
       }
@@ -64,9 +64,11 @@ object ConnectedComponents {
       .withColumn("component", col("node"))
       .localCheckpoint(true)
 
-    def labelSum(df: DataFrame): Long = {
-      val v = df.agg(coalesce(sum(col("component")), lit(0L))).collect()(0)
-      v.getLong(0)
+    // exact: labels are arbitrary longs (hash ids), whose long sum
+    // overflows; a decimal(30, 0) sum holds ~10^11 of them
+    def labelSum(df: DataFrame): BigDecimal = {
+      val v = df.agg(sum(col("component").cast("decimal(20,0)"))).collect()(0)
+      if (v.isNullAt(0)) BigDecimal(0) else BigDecimal(v.getDecimal(0))
     }
 
     var converged = labels.isEmpty

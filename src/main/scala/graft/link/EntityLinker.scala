@@ -62,11 +62,10 @@ object EntityLinker {
   }
 
   /** Driver-side mirror of the distributed chain for dimension-sized
-    * entity tables: same shingles/signature/band hashes and hot-bucket cap
-    * (the MinHashLSH constants and `bandHash`), same estJaccard pre-filter
-    * and exact shingle-Jaccard verify, same min-id components and
-    * canonical-surface choice — output is identical to the distributed
-    * path by construction. */
+    * entity tables: char shingles, [[MinHashLSH.localPairs]] (the
+    * distributed LSH's mirror) and min-id components, so the canonical
+    * surface choice and the output equal the distributed path's by
+    * construction. */
   private def localCanonicalize(
       spark: SparkSession,
       dim: Array[(Long, String)],
@@ -74,43 +73,11 @@ object EntityLinker {
       numHashes: Int,
       bands: Int): DataFrame = {
     import spark.implicits._
-    import MinHashLSH.{EstSlack, MaxBucket, ShingleK}
-    val rowsPerBand = numHashes / bands
-    require(rowsPerBand * bands == numHashes, "bands must divide numHashes")
-
-    val shinglesById = new java.util.HashMap[Long, Set[Long]](dim.length * 2)
-    val sigById = new java.util.HashMap[Long, Array[Long]](dim.length * 2)
-    val buckets =
-      new java.util.HashMap[(Int, Long), scala.collection.mutable.ArrayBuffer[Long]]()
-    dim.foreach { case (id, text) =>
-      val sh = MinHashLSH.shingles(text, ShingleK)
-      val sig = MinHashLSH.signature(sh, numHashes)
-      shinglesById.put(id, sh)
-      sigById.put(id, sig)
-      var b = 0
-      while (b < bands) {
-        buckets
-          .computeIfAbsent((b, MinHashLSH.bandHash(sig, b, rowsPerBand)),
-            _ => scala.collection.mutable.ArrayBuffer.empty[Long])
-          .append(id)
-        b += 1
-      }
-    }
-
-    val cand = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    buckets.values.forEach { ids =>
-      if (ids.length <= MaxBucket) // same hot-bucket cap as the cluster path
-        for (i <- ids.indices; j <- i + 1 until ids.length if ids(i) != ids(j))
-          cand += ((math.min(ids(i), ids(j)), math.max(ids(i), ids(j))))
-    }
-
+    val shinglesById = dim.map { case (id, text) =>
+      id -> MinHashLSH.shingles(text, MinHashLSH.ShingleK) }.toMap
     val uf = new UnionFind
-    cand.foreach { case (a, b) =>
-      if (MinHashLSH.estJaccard(sigById.get(a), sigById.get(b)) >= threshold - EstSlack &&
-        MinHashLSH.exactJaccard(shinglesById.get(a), shinglesById.get(b)) >= threshold)
-        uf.union(a, b)
-    }
-
+    MinHashLSH.localPairs(shinglesById, numHashes, bands, threshold)
+      .foreach { case (a, b) => uf.union(a, b) }
     val textById = dim.toMap
     dim.toSeq.map { case (id, text) =>
       val canon = uf.find(id) // untouched nodes are their own canonical form

@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
 object MinHashLSH {
 
   /** Shingle size, in characters or words. This, [[MaxBucket]] and
-    * [[EstSlack]] are [[similarPairs]]' constants, shared with the linker's
-    * driver mirror (`EntityLinker.canonicalize`), whose output must equal
-    * it. */
+    * [[EstSlack]] are the constants of [[similarPairs]] and of its driver
+    * mirror [[localPairs]], whose output must equal it. */
   final val ShingleK = 3
 
   /** Hot-bucket cap: buckets larger than this are dropped (a degenerate hot
@@ -119,6 +118,43 @@ object MinHashLSH {
     val inter = a.intersect(b).size.toDouble
     val union = a.size + b.size - inter
     if (union == 0) 1.0 else inter / union
+  }
+
+  /** Driver mirror of [[similarPairs]] for dimension-sized inputs, given
+    * each row's shingle set by id (ids are a key): the same signatures,
+    * `bandHash` buckets, [[MaxBucket]] cap, `estJaccard >= threshold -
+    * EstSlack` pre-filter and exact shingle-Jaccard verify, so it returns
+    * the same verified edges (idA < idB) by construction. Callers:
+    * `EntityLinker.canonicalize` and `Dedup.minhashClusters` below their
+    * `Regime` budgets. */
+  def localPairs(
+      shinglesById: scala.collection.Map[Long, Set[Long]],
+      numHashes: Int,
+      bands: Int,
+      threshold: Double): Seq[(Long, Long)] = {
+    val rpb = numHashes / bands
+    require(rpb * bands == numHashes, "bands must divide numHashes")
+    val sigById = shinglesById.map { case (id, sh) => id -> signature(sh, numHashes) }
+    val buckets = scala.collection.mutable.HashMap
+      .empty[(Int, Long), scala.collection.mutable.ArrayBuffer[Long]]
+    sigById.foreach { case (id, sig) =>
+      var b = 0
+      while (b < bands) {
+        buckets.getOrElseUpdate((b, bandHash(sig, b, rpb)),
+          scala.collection.mutable.ArrayBuffer.empty[Long]) += id
+        b += 1
+      }
+    }
+    val cand = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    buckets.valuesIterator.foreach { ids =>
+      if (ids.length <= MaxBucket)
+        for (i <- ids.indices; j <- i + 1 until ids.length)
+          cand += ((math.min(ids(i), ids(j)), math.max(ids(i), ids(j))))
+    }
+    cand.iterator.filter { case (a, b) =>
+      estJaccard(sigById(a), sigById(b)) >= threshold - EstSlack &&
+        exactJaccard(shinglesById(a), shinglesById(b)) >= threshold
+    }.toSeq
   }
 
   /** Candidate edges (idA < idB) between rows whose texts land in the same

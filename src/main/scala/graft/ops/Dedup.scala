@@ -43,7 +43,17 @@ object Dedup {
   }
 
   /** Near-dup clusters via MinHash/LSH + connected components:
-    * (doc_id, cluster_id). Singletons map to themselves. */
+    * (doc_id, cluster_id), one row per document. Singletons map to
+    * themselves.
+    *
+    * Two regimes, one probe: `Regime.collectUpTo` over the (doc_id, word
+    * shingle) rows of a narrow flatMap, bounded by
+    * `Regime.MaxDriverPairs` — fixed-size rows, so no document text
+    * reaches the driver, and every document yields at least one shingle.
+    * Below the budget [[MinHashLSH.localPairs]] and a [[UnionFind]] run on
+    * the driver and the result is a LocalRelation; nothing persists.
+    * Above it the distributed LSH + connected-components chain runs. Both
+    * regimes assume `idCol` is a key. */
   def minhashClusters(
       spark: SparkSession,
       docs: DataFrame,
@@ -52,22 +62,35 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 48,
       bands: Int = 16): DataFrame = {
-    // one-scan contract (r5 VERDICT "Next round" #6): the (id, text)
-    // projection persists, so the LSH signature pass, the candidate
-    // verify's two text join-backs and the final id list all read the
-    // cache instead of re-scanning the docs relation. Callers drop the
-    // cache via clearCache when done.
-    val base = docs.select(col(idCol), col(textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = MinHashLSH
-      .similarPairs(spark, base, idCol, textCol,
-        numHashes = numHashes, bands = bands, threshold = threshold,
-        shingleMode = "word")
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    ConnectedComponents
-      .labelNodes(spark, edges, base.select(col(idCol).cast("long").as("doc_id")),
-        "doc_id", "cluster_id")
-      .select("doc_id", "cluster_id")
+    import spark.implicits._
+    val shingleRows = docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        MinHashLSH.shinglesOf(text, MinHashLSH.ShingleK, "word").iterator.map(sh => (id, sh))
+      }
+    Regime.collectUpTo(shingleRows, Regime.MaxDriverPairs) match {
+      case Some(rows) =>
+        val shinglesById = rows.groupMap(_._1)(_._2).map { case (id, sh) => id -> sh.toSet }
+        val uf = new UnionFind
+        MinHashLSH.localPairs(shinglesById, numHashes, bands, threshold)
+          .foreach { case (a, b) => uf.union(a, b) }
+        shinglesById.keys.toSeq.map(id => (id, uf.find(id))).toDF("doc_id", "cluster_id")
+      case None =>
+        // one scan: the (id, text) projection persists, so the LSH
+        // signature pass, the verify's two text join-backs and the final
+        // id list read the cache; it stays registered after return, since
+        // the lazy result reads it
+        val base = docs.select(col(idCol), col(textCol))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val edges = MinHashLSH
+          .similarPairs(spark, base, idCol, textCol,
+            numHashes = numHashes, bands = bands, threshold = threshold,
+            shingleMode = "word")
+          .select(col("id_a").as("src"), col("id_b").as("dst"))
+        ConnectedComponents
+          .labelNodes(spark, edges, base.select(col(idCol).cast("long").as("doc_id")),
+            "doc_id", "cluster_id")
+          .select("doc_id", "cluster_id")
+    }
   }
 
   /** Engine-portable per-token 60-bit hash: two polynomial hashes with
@@ -125,57 +148,50 @@ object Dedup {
   /** SimHash near-dup clusters: pairs within hamming distance `maxDist` are
     * edges; clusters are connected components (cluster_id = min member).
     *
-    * Scale design — banded hamming join, not all-pairs: the 60-bit
-    * signature is sliced into (maxDist + 1) disjoint bit-bands; by
+    * Banded hamming join, not all-pairs: the 60-bit signature is sliced
+    * into (maxDist + 1) disjoint bit-bands ([[bandSlices]]); by
     * pigeonhole, any two signatures differing in <= maxDist bits agree
-    * EXACTLY on at least one band, so one shuffle on (band, band_bits)
-    * finds every qualifying pair (recall = 1.0 by construction — this is
-    * why the query is exact-oracle-checkable). Verification is a codegen'd
-    * bit_count(xor) on the two 64-bit signatures — no text ever shuffles. */
-  /** Hot-bucket proofing (r5 VERDICT "What's wrong" #3): identical
-    * signatures are collapsed to one representative BEFORE the band
-    * self-join — thousands of byte-identical boilerplate pages share all
-    * bands and would otherwise put an O(n²) bucket in one task. The band
-    * join runs over DISTINCT signatures only, components are computed on
-    * the reps, and each member takes its rep's component label.
+    * EXACTLY on at least one band, so bucketing on (band, band_bits) finds
+    * every qualifying pair (recall = 1.0 by construction — this is why the
+    * query is exact-oracle-checkable). Verification is bit_count(xor) on
+    * the two 64-bit signatures — no text ever moves.
     *
-    * Output equality with the all-members formulation: identical sigs are
-    * trivially same-cluster (hamming 0), the rep is the MIN id of its sig
-    * group, and any qualifying cross-group edge is still found between
-    * the two groups' reps by pigeonhole — so a component's min member
-    * equals the min rep in the rep-graph component, which is exactly the
-    * label CC assigns. Recall stays 1.0 by construction — the
-    * oracle-exact property holds.
+    * Hot-bucket proofing: identical signatures collapse to one
+    * representative (their min id) BEFORE the band buckets — thousands of
+    * byte-identical boilerplate pages share all bands and would otherwise
+    * make one O(n²) bucket. Components are computed on the reps and each
+    * member takes its rep's label. Identical sigs are trivially
+    * same-cluster (hamming 0), and any qualifying cross-group edge is
+    * still found between the two groups' reps by pigeonhole, so a
+    * component's min member is the min rep of its rep-graph component.
     *
-    * The one narrow signature pass persists; the final id list comes from
-    * it, so the docs relation is scanned exactly once per call (r5 VERDICT
-    * "Next round" #6). Callers drop the persisted sigs via clearCache. */
+    * Two regimes, one probe: `Regime.collectUpTo` over the (doc_id,
+    * simhash) rows, bounded by `Regime.MaxDriverPairs`. Below the budget
+    * the same collapse, band buckets, verify and min-id components run on
+    * the driver ([[localSimhashClusters]]) and nothing persists; above it
+    * the distributed band self-join + connected components run, reading
+    * one persisted signature pass (which, with the persisted reps, stays
+    * registered after return, since the lazy result reads them). */
   def simhashClusters(
       spark: SparkSession,
       docs: DataFrame,
       idCol: String,
       textCol: String,
       maxDist: Int = 3): DataFrame = {
-    val nBands = maxDist + 1
-    val sigs = simhashDF(spark, docs, idCol, textCol) // (idCol, simhash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import spark.implicits._
+    val sigRows = simhashDF(spark, docs, idCol, textCol) // (idCol, simhash)
+    val local = Regime.collectUpTo(sigRows.as[(Long, Long)], Regime.MaxDriverPairs)
+    if (local.isDefined) return localSimhashClusters(spark, local.get, maxDist)
 
+    val sigs = sigRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one representative per distinct signature (min id, deterministic)
     val rep = sigs.groupBy(col("simhash")).agg(min(col(idCol)).as("rep_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // disjoint bit slices: band b covers [lo, lo+width)
-    val width = SimhashBits / nBands
-    val extra = SimhashBits % nBands
-    val slices = (0 until nBands).map { b =>
-      val lo = b * width + math.min(b, extra)
-      val w = width + (if (b < extra) 1 else 0)
-      (b, lo, w)
-    }
     val banded = rep.select(
       col("rep_id").as("id"),
       col("simhash"),
-      explode(array(slices.map { case (b, lo, w) =>
+      explode(array(bandSlices(maxDist + 1).map { case (b, lo, w) =>
         struct(
           lit(b).as("band"),
           shiftrightunsigned(col("simhash"), lo)
@@ -199,6 +215,43 @@ object Dedup {
       .join(rep, Seq("simhash"))
     ConnectedComponents.labelNodes(spark, repEdges, members, "rep_id", "cluster_id")
       .select("doc_id", "cluster_id")
+  }
+
+  /** The disjoint bit slices (band, lo, width) of a [[SimhashBits]]-bit
+    * signature cut into `nBands` bands: band b covers [lo, lo + width). */
+  private def bandSlices(nBands: Int): Seq[(Int, Int, Int)] = {
+    val width = SimhashBits / nBands
+    val extra = SimhashBits % nBands
+    (0 until nBands).map { b =>
+      (b, b * width + math.min(b, extra), width + (if (b < extra) 1 else 0))
+    }
+  }
+
+  /** Driver mirror of [[simhashClusters]]' distributed chain over its
+    * (doc_id, simhash) rows: equal signatures collapse to a min-id rep,
+    * each band buckets the distinct signatures on the same bits, pairs
+    * within `maxDist` bits union their reps, and every row takes its rep's
+    * min-id root — one output row per input row. */
+  private def localSimhashClusters(
+      spark: SparkSession,
+      rows: Array[(Long, Long)],
+      maxDist: Int): DataFrame = {
+    import spark.implicits._
+    val repOf = scala.collection.mutable.HashMap.empty[Long, Long] // sig -> min id
+    rows.foreach { case (id, sig) =>
+      repOf.updateWith(sig)(r => Some(r.fold(id)(math.min(_, id)))) }
+    val reps = repOf.toArray // (sig, rep)
+    val uf = new UnionFind
+    bandSlices(maxDist + 1).foreach { case (_, lo, w) =>
+      reps.indices.groupBy(i => (reps(i)._1 >>> lo) & ((1L << w) - 1L)).valuesIterator
+        .foreach { ix =>
+          for (i <- ix.indices; j <- i + 1 until ix.length) {
+            val ((sa, ra), (sb, rb)) = (reps(ix(i)), reps(ix(j)))
+            if (java.lang.Long.bitCount(sa ^ sb) <= maxDist) uf.union(ra, rb)
+          }
+        }
+    }
+    rows.toSeq.map { case (id, sig) => (id, uf.find(repOf(sig))) }.toDF("doc_id", "cluster_id")
   }
 
   /** Embedding-cosine near-dup clusters: (id, cluster_id), edges where

@@ -28,7 +28,10 @@ object Salting {
   }
 
   /** Salted collect_list: per-key lists assembled in two phases so one hot
-    * key never concentrates its whole list in a single task's memory. */
+    * key never concentrates its whole list in a single task's memory. The
+    * final sort_array makes the `<valueCol>s` column identical to an
+    * unsalted groupBy's sorted list. `Encode.pools`/`entityPool` collect
+    * their `relation_ids` through it. */
   def saltedCollectList(
       df: DataFrame,
       keys: Seq[String],

@@ -3,7 +3,7 @@ package graft.statements
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.DenseId
+import graft.ops.{DenseId, Salting}
 
 /** Dictionary encoding (exact-surface-form canonicalization), pair-frequency
   * filtering and entity-pair pools — distributed re-expression of
@@ -129,26 +129,11 @@ object Encode {
   def withRelationIds(fact: DataFrame): DataFrame =
     DenseId.withDenseIdProbed(fact, "relation_id", Seq("docOrd", "pairOrd"))
 
-  /** Two-phase salted list collection: a Zipfian-hot key (one entity pair
-    * dominating the corpus) otherwise concentrates its entire list in a
-    * single task's memory. Phase 1 builds `salt` partial lists per key;
-    * phase 2 flattens and sorts — the final sort_array makes the output
-    * identical to the unsalted groupBy. */
-  private def saltedIdList(
-      df: DataFrame,
-      keys: Seq[String],
-      salt: Int): DataFrame =
-    df.withColumn("__salt", pmod(xxhash64(col("relation_id")), lit(salt)))
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(collect_list(col("relation_id")).as("__partial"))
-      .groupBy(keys.map(col): _*)
-      .agg(sort_array(flatten(collect_list(col("__partial")))).as("relation_ids"))
-
   /** Entity-pair pools + deterministic train/validation split
     * (`generate_entities_pools` + `transform_data`; the reference's
     * np.random>0.75 becomes a seeded key-derived hash — SURVEY.md §2.16). */
   def pools(factWithIds: DataFrame, seed: Long = 42L, salt: Int = 16): DataFrame =
-    saltedIdList(factWithIds, Seq("e1_id", "e2_id"), salt)
+    Salting.saltedCollectList(factWithIds, Seq("e1_id", "e2_id"), "relation_id", salt)
       .withColumn(
         "set",
         // PortableRng (not xxhash64) so the DuckDB oracle replays the split
@@ -160,7 +145,7 @@ object Encode {
   /** Per-entity pools (e1_pool / e2_pool re-groupings, §1.8) — per-entity
     * keys are even hotter than pair keys, same salted two-phase shape. */
   def entityPool(factWithIds: DataFrame, side: String, salt: Int = 16): DataFrame =
-    saltedIdList(factWithIds, Seq(s"${side}_id"), salt)
+    Salting.saltedCollectList(factWithIds, Seq(s"${side}_id"), "relation_id", salt)
 
   /** Per-entity pools derived from the PAIR pools instead of the fact
     * table: the pair pools partition the fact rows by (e1_id, e2_id), so
@@ -170,8 +155,8 @@ object Encode {
     * (one row per pair), orders of magnitude smaller than the statements
     * — at corpus scale this replaces a second full fact-table shuffle per
     * side with a dimension-sized aggregation. No salt phase: the inputs
-    * are pre-aggregated partial lists already, exactly what saltedIdList's
-    * second phase consumes. */
+    * are pre-aggregated partial lists already, exactly what the second
+    * phase of `Salting.saltedCollectList` consumes. */
   def entityPoolFromPools(pools: DataFrame, side: String): DataFrame =
     pools
       .groupBy(col(s"${side}_id"))

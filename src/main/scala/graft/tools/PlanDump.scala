@@ -20,7 +20,7 @@ object PlanDump {
     "q13_exact_dedup" ->
       "exact dedup: one hash agg over text + join back",
     "q18_minhash_clusters" ->
-      "LSH near-dup: id+signature bucket join, est pre-filter, late text join; no text in the wide stages",
+      "LSH near-dup, small regime: one (doc_id, shingle) probe job, then MinHashLSH.localPairs + union-find on the driver, so the plan is a sort over a LocalRelation (PlanDumpLsh dumps the distributed LSH stage)",
     "q25_ann_topk" ->
       "ANN exact: PushedFilters carries vec_id<32; broadcast query side, per-query window rank",
     "q32_mention_dict" ->

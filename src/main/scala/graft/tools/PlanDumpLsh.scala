@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 
 /** Dumps the formatted physical plan of the MinHash/LSH candidate-pair
   * stage ([[graft.link.MinHashLSH.similarPairs]]) to a file. The q18
-  * battery plan cannot show this subtree: connected components executes
-  * the edge lineage eagerly inside its regime probe, so the final query's
-  * explain contains only the label join. This tool is measurement surface
-  * only (guide §1) — it runs no query.
+  * plan cannot show this subtree: below its `Regime` budget q18 runs on
+  * the driver and plans as a LocalRelation, and above it connected
+  * components executes the edge lineage eagerly inside its own probe, so
+  * the final explain holds only the label join. This tool is measurement
+  * surface only (guide §1) — it runs no query.
   *
   * Usage: graft.tools.PlanDumpLsh <outFile> [sfDir]
   */

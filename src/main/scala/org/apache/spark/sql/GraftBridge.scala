@@ -17,16 +17,4 @@ object GraftBridge {
     * sources use). Caller guarantees rows match `schema`. */
   def internalDF(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
-
-  /** Unload every loaded state-store provider and stop the executor-side
-    * maintenance task. Shared-JVM (local-mode) hygiene: stopping a
-    * SparkSession does NOT stop the JVM-global state-store maintenance
-    * threads its streaming queries loaded, so they keep polling the dead
-    * session's StateStoreCoordinator RPC endpoint forever — one
-    * RpcEndpointNotFoundException stack trace per provider per
-    * maintenance interval, through everything else the JVM runs. On a
-    * cluster each executor JVM exits with its application; a process that
-    * outlives the session (bench, tests) must drop them explicitly. */
-  def stopStateStores(): Unit =
-    execution.streaming.state.StateStore.stop()
 }

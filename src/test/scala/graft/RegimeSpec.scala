@@ -49,14 +49,30 @@ class RegimeSpec extends AnyFunSuite {
     }
   }
 
-  // every SparkEntry query that reaches a regime split on its own thread
-  // (q41 splits inside inParallel futures, which the seam does not reach;
-  // its linker parity is Round6OpsSpec's)
+  test("the seam reaches SparkEntry's parallel legs") {
+    val b = Regime.MaxDriverRows
+    assert(Regime.forcingDistributed(SparkEntry.inParallel(Regime.bound(b), Regime.bound(b))) ==
+      ((0, 0)))
+    assert(Regime.forcingDistributed(
+      SparkEntry.inParallel3(Regime.bound(b), Regime.bound(b), Regime.bound(b))) == ((0, 0, 0)))
+    assert(SparkEntry.inParallel(Regime.bound(b), Regime.bound(b)) == ((b, b)))
+  }
+
+  test("q18 and q23 persist nothing in the default regime") {
+    for (q <- Seq("q18_minhash_clusters", "q23_simhash_clusters")) {
+      spark.catalog.clearCache()
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+      assert(CacheProbe.cachedEntries(spark) == 0, q)
+    }
+  }
+
+  // every SparkEntry query that reaches a regime split
   private val regimeQueries = Seq(
     "q18_minhash_clusters", "q23_simhash_clusters", "q26_embedding_dedup",
-    "q32_mention_dict", "q34_mention_components", "q42_mtb_pools",
-    "q43_pool_pair_scores", "q44_training_augment", "q45_negative_samples",
-    "q46_positive_samples", "q47_kg_graph_nodes", "q48_grad_accum",
+    "q28_ann_recall", "q32_mention_dict", "q34_mention_components",
+    "q41_kg_triples_canonical", "q42_mtb_pools", "q43_pool_pair_scores",
+    "q44_training_augment", "q45_negative_samples", "q46_positive_samples",
+    "q47_kg_graph_nodes", "q48_grad_accum", "q53_stream_triples",
     "q58_mtb_losses")
 
   test("every query reaching a regime split: forced-distributed output equals default") {

@@ -12,9 +12,9 @@ import graft.ops.{Dedup, DenseId, IvfIndex}
   * cross the budgets. Each test here runs the operator inside
   * `Regime.forcingDistributed` (every budget reads 0, forcing the
   * fallback) and asserts output equality against the bounded regime on the
-  * same fixture. Plus the simhash hot-bucket fixture (#4) and the
-  * IvfIndex corrupt-manifest contract (#7). embeddingClusters parity lives
-  * in Round4OpsSpec. */
+  * same fixture, the dedup mirrors included. Plus the simhash hot-bucket
+  * fixture (#4) and the IvfIndex corrupt-manifest contract (#7).
+  * embeddingClusters parity lives in Round4OpsSpec. */
 class Round6OpsSpec extends AnyFunSuite {
 
   private lazy val spark =
@@ -59,6 +59,20 @@ class Round6OpsSpec extends AnyFunSuite {
     def run() = ConnectedComponents.run(spark, edges)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(Regime.forcingDistributed(run()) == run())
+  }
+
+  test("ConnectedComponents.run: forced-distributed labels over 64-bit hash ids") {
+    import spark.implicits._
+    // ids near both ends of the long range, as xxhash64 surface ids are:
+    // their plain long sum overflows
+    val big = Long.MaxValue - 10
+    val edges = Seq((big, big - 1), (big - 1, big - 2), (Long.MinValue + 5, big),
+      (big - 5, big - 6)).toDF("src", "dst")
+    def run() = ConnectedComponents.run(spark, edges)
+      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val local = run()
+    assert(local.map(_._2).distinct.sorted == Seq(Long.MinValue + 5, big - 6))
+    assert(Regime.forcingDistributed(run()) == local)
   }
 
   // ---- DenseId: bounded-driver rank vs classic range exchange ----
@@ -157,15 +171,90 @@ class Round6OpsSpec extends AnyFunSuite {
     val docs = ((0 until 1000).map(i => (i.toLong, "the same boilerplate page text")) ++
       Seq((2000L, "a genuinely different document about spark streams")))
       .toDF("doc_id", "text")
-    val out = Dedup.simhashClusters(spark, docs, "doc_id", "text")
+    def run() = Dedup.simhashClusters(spark, docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val out = run()
     // identical docs: one signature, min-id cluster 0 for all 1000
     assert((0 until 1000).forall(i => out(i.toLong) == 0L))
+    // the distributed chain's rep collapse gives the same labels
+    assert(Regime.forcingDistributed(run()) == out)
     // the band self-join input is the DISTINCT signature set — 2 sigs
     // here, not 1001 rows — so the hottest band bucket is bounded by
     // distinct-signature multiplicity, not by boilerplate copies
     val sigs = Dedup.simhashDF(spark, docs, "doc_id", "text")
     assert(sigs.select("simhash").distinct().count() <= 2)
+    spark.catalog.clearCache()
+  }
+
+  // ---- dedup driver mirrors vs distributed chains ----
+
+  private def clusters(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("minhashClusters: a bucket over MaxBucket is dropped alike in both regimes") {
+    import spark.implicits._
+    val words = (0 until 20).map(i => s"w$i")
+    val boiler = "the same boilerplate page text repeated across a whole crawl of sites"
+    // 1,001 identical docs fill one bucket per band past MaxBucket (1,000)
+    val docs = ((0 until 1001).map(i => (i.toLong, boiler)) ++ Seq(
+      (5000L, words.mkString(" ")),
+      (5001L, (words.init :+ "tail").mkString(" ")), // Jaccard 17/19
+      (5002L, words.reverse.mkString(" ")),
+      (5003L, boiler + " and one more"))) // meets the boilerplate only in hot buckets
+      .toDF("doc_id", "text")
+    val run = () => Dedup.minhashClusters(spark, docs, "doc_id", "text", threshold = 0.8)
+    val local = run()
+    assert(isLocal(local))
+    val out = clusters(local)
+    assert(out.length == 1005)
+    // the dropped buckets leave every boilerplate copy a singleton
+    assert(out.forall { case (id, c) => if (id == 5001L) c == 5000L else c == id })
+    assert(Regime.forcingDistributed(clusters(run())) == out)
+    spark.catalog.clearCache()
+  }
+
+  test("simhashClusters: forced-distributed output equals the driver mirror") {
+    import spark.implicits._
+    val rng = new java.util.Random(23)
+    val vocab = (0 until 1000).map(i => s"t$i")
+    val bases = (0 until 12).map(_ => (0 until 400).map(_ => vocab(rng.nextInt(1000))))
+    // copies and one- or two-word edits of a dozen long bases: equal
+    // signatures, signatures a few bits apart and unrelated ones
+    val texts = (0 until 300).map { i =>
+      val ws = bases(i % 12).toArray
+      (0 until i % 3).foreach(_ => ws(rng.nextInt(ws.length)) = vocab(rng.nextInt(1000)))
+      (i.toLong * 7, ws.mkString(" "))
+    }
+    val docs = texts.toDF("doc_id", "text")
+    val run = () => Dedup.simhashClusters(spark, docs, "doc_id", "text", maxDist = 3)
+    val local = run()
+    assert(isLocal(local))
+    val out = clusters(local)
+    val nSigs = texts.map(t => Dedup.simhash(graft.textnorm.PyText.pySplit(t._2).toSeq)).distinct.size
+    assert(out.map(_._2).distinct.size < nSigs, "no edge between distinct signatures")
+    assert(Regime.forcingDistributed(clusters(run())) == out)
+    spark.catalog.clearCache()
+  }
+
+  test("dedup probes over their budget fall through to the distributed chains") {
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "x y z")).toDF("doc_id", "text")
+    val want = Seq((1L, 1L), (2L, 1L), (3L, 3L))
+    for (op <- Seq(
+        () => Dedup.minhashClusters(spark, docs, "doc_id", "text"),
+        () => Dedup.simhashClusters(spark, docs, "doc_id", "text"))) {
+      Regime.forcingDistributed {
+        val forced = op()
+        assert(!isLocal(forced))
+        assert(forced.queryExecution.executedPlan.toString.contains("Exchange"))
+        assert(clusters(forced) == want)
+      }
+      assert(clusters(op()) == want)
+    }
     spark.catalog.clearCache()
   }
 
