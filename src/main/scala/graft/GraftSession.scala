@@ -8,6 +8,16 @@ import org.apache.spark.sql.SparkSession
   * partitions track core count instead of the default 200, AQE is on so
   * skewed stages re-plan at runtime, and broadcast joins stay enabled for
   * the dimension tables (vocab, label maps, entity dictionaries).
+  *
+  * The `file:` scheme is bound to [[graft.io.LocalFs]] (and its
+  * `FileContext` twin): without libhadoop's NativeIO the stock local
+  * filesystem forks a `chmod` per created file and directory and a
+  * `readlink` per `FileContext` rename, which made those forks a large share
+  * of the triple sink and of every streaming checkpoint. The binding picks
+  * engine code, not a tuning value, and it is session-wide by necessity:
+  * Hadoop caches one `FileSystem` per scheme for the whole JVM, so it cannot
+  * be scoped to one write. Files, `.crc` siblings and permission bits are
+  * the stock filesystem's.
   */
 object GraftSession {
 
@@ -33,6 +43,7 @@ object GraftSession {
       // defaults; here a stall is survivable by construction.
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "20s")
+      .config(graft.io.LocalFs.HadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v })
 
   def get(cores: Int, app: String = "graft"): SparkSession = {
     val spark = builder(cores, app).getOrCreate()

@@ -25,9 +25,10 @@ object ExprFns {
   }
 }
 
-/** Base for the one-string-in/one-string-out kernels above. */
+/** Base for one-string-in/one-string-out kernels (the ones above and
+  * `graft.triples.PredPartExpr`). */
 abstract class StringKernelExpression extends UnaryExpression {
-  /** Name of the ExprFns method to invoke. */
+  /** Fully qualified name of the static-callable method to invoke. */
   def fn: String
 
   override def dataType: DataType = StringType
@@ -38,17 +39,17 @@ abstract class StringKernelExpression extends UnaryExpression {
   protected def invoke(s: UTF8String): UTF8String
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.textnorm.ExprFns.$fn($c)")
+    defineCodeGen(ctx, ev, c => s"$fn($c)")
 }
 
 case class TextNormExpr(child: Expression) extends StringKernelExpression {
-  override def fn: String = "textNorm"
+  override def fn: String = "graft.textnorm.ExprFns.textNorm"
   override protected def invoke(s: UTF8String): UTF8String = ExprFns.textNorm(s)
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
 }
 
 case class AssembleArticleExpr(child: Expression) extends StringKernelExpression {
-  override def fn: String = "assembleArticle"
+  override def fn: String = "graft.textnorm.ExprFns.assembleArticle"
   override protected def invoke(s: UTF8String): UTF8String = ExprFns.assembleArticle(s)
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(newChild)
 }

@@ -18,7 +18,7 @@ object PlanDump {
     "q11_token_counts" ->
       "scan pruning: ReadSchema carries only doc_id, text",
     "q13_exact_dedup" ->
-      "exact dedup: one hash agg over text + join back",
+      "exact dedup: one hash agg over the (xxhash64, length) text digest (__th, __tl), broadcast join back on it; no text crosses an exchange",
     "q18_minhash_clusters" ->
       "LSH near-dup, small regime: one (doc_id, shingle) probe job, then MinHashLSH.localPairs + union-find on the driver, so the plan is a sort over a LocalRelation (PlanDumpLsh dumps the distributed LSH stage)",
     "q25_ann_topk" ->

@@ -185,6 +185,14 @@ object TriplePipeline {
     triplesFromNormalized(
       spark, normalizePages(pages, cfg), gaz, tokenizer, kernel, idx2rel, cfg)
 
+  /** `idx2rel` as an array indexed by label id; its keys must be exactly
+    * `0 until idx2rel.size`. */
+  def labelArray(idx2rel: Map[Int, String]): Array[String] = {
+    require(idx2rel.keySet == (0 until idx2rel.size).toSet,
+      s"label ids are not 0 until ${idx2rel.size}: ${idx2rel.keys.toSeq.sorted.mkString(",")}")
+    Array.tabulate(idx2rel.size)(idx2rel)
+  }
+
   /** The FUSED pass over (url, text_norm) rows: scoring runs inside the
     * same mapPartitions pass that carries the entity surfaces, so token
     * arrays never round-trip through a Dataset boundary.
@@ -206,7 +214,9 @@ object TriplePipeline {
         // batch score -> label. No intermediate Dataset boundary, so token
         // arrays never round-trip through InternalRow encoding.
         val k = kernel.value
-        val labels = idx2rel.value
+        // argmax -> label through an array: a Map[Int, String] lookup boxes
+        // the index of every triple
+        val labels = labelArray(idx2rel.value)
         val tok = tokenizer.value
         val g = gaz.value
         val padId = tok.padId

@@ -135,4 +135,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows.map(_._1).toSeq == rows.indices.map(_.toLong))
     assert(rows.map(r => (r._2, r._3)).toSeq == rows.map(r => (r._2, r._3)).sortBy(identity).toSeq)
   }
+
+  test("labelArray indexes labels by id and rejects ids that are not 0 until n") {
+    val (_, idx2rel) = SemEval.labelEncode(FixtureVocab.Labels)
+    val labels = TriplePipeline.labelArray(idx2rel)
+    assert(labels.length == 19)
+    assert(labels.indices.forall(i => labels(i) == idx2rel(i)))
+    assertThrows[IllegalArgumentException](TriplePipeline.labelArray(Map(0 -> "a", 2 -> "b")))
+    assertThrows[IllegalArgumentException](TriplePipeline.labelArray(Map(1 -> "a")))
+  }
 }

@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    pruned ReadSchema)
   *  - small dimension joins broadcast instead of shuffling the fact side
   *  - the flagship pipeline stays a single narrow stage (no Exchange)
-  *  - the triple sink adds exactly one rebalance exchange
+  *  - the triple sink adds exactly one rebalance exchange, and computes
+  *    `pred_part` without a regex or a Scala UDF
   */
 class PlanAuditSpec extends AnyFunSuite {
 
@@ -141,7 +142,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("triple sink write is one rebalance exchange and runs no regex") {
-    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, ScalaUDF}
     import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeLike}
     import spark.implicits._
 
@@ -156,6 +157,8 @@ class PlanAuditSpec extends AnyFunSuite {
       s"sink write shuffles other than one rebalance:\n$p")
     assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[RegExpReplace]))),
       s"sink write runs a per-row regex:\n$p")
+    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+      s"sink write runs a Scala UDF:\n$p")
   }
 
   test("relational aggregates keep partial (map-side) aggregation") {

@@ -51,6 +51,40 @@ class SinkSpec extends AnyFunSuite {
     }
   }
 
+  test("the pred_part expression equals predPart on every label, null and a multi-byte fuzz") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.unsafe.types.UTF8String
+    import spark.implicits._
+    import graft.triples.PredPartExpr
+    assert(FixtureVocab.Labels.size == 19)
+    val alphabet = "aZ09_-( ),.\u00e9\u4e2d\ud83d\ude00"
+    val rng = new scala.util.Random(7)
+    val fuzz = Seq.fill(2000) {
+      val sb = new StringBuilder
+      (0 until rng.nextInt(12)).foreach { _ =>
+        // the emoji is one surrogate pair: append both halves or neither
+        val i = rng.nextInt(alphabet.length - 1)
+        sb.append(if (i == alphabet.length - 2) alphabet.substring(i) else alphabet.charAt(i).toString)
+      }
+      sb.toString
+    }
+    val preds: Seq[String] = FixtureVocab.Labels ++ fuzz :+ null
+    // generated code (an RDD scan, so the projection is not folded into a
+    // local relation and evaluated interpreted)
+    val viaCodegen = spark.sparkContext.parallelize(preds, 2).toDF("pred")
+      .select(col("pred"), GraftBridge.column(PredPartExpr(GraftBridge.expression(col("pred")))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(viaCodegen.size == preds.distinct.size)
+    preds.foreach { p =>
+      assert(viaCodegen(p) == TripleSink.predPart(p), s"codegen differs on '$p'")
+      val interpreted = PredPartExpr(Literal.create(p, org.apache.spark.sql.types.StringType)).eval()
+      assert(Option(interpreted).map(_.toString).orNull == TripleSink.predPart(p), s"eval differs on '$p'")
+      if (p != null)
+        assert(TripleSink.predPartUtf8(UTF8String.fromString(p)).toString == TripleSink.predPart(p))
+    }
+  }
+
   test("sink file count follows data size: a hot predicate splits, small ones stay one file") {
     import org.apache.spark.sql.Dataset
     val s = spark.newSession()

@@ -15,8 +15,10 @@ GRAFT_CP="$CLASSES:/opt/spark/jars/*"
 # Compile only when a main-source file is newer than the newest class.
 graft_ensure_compiled() {
   local newest_src newest_cls
-  newest_src=$(find "$REPO/src/main" -name '*.scala' -printf '%T@\n' 2>/dev/null | sort -rn | head -1)
-  newest_cls=$(find "$CLASSES" -name '*.class' -printf '%T@\n' 2>/dev/null | sort -rn | head -1)
+  # `|| true`: in a fresh clone $CLASSES does not exist, and a failing find
+  # would end a `set -euo pipefail` caller here instead of compiling below
+  newest_src=$(find "$REPO/src/main" -name '*.scala' -printf '%T@\n' 2>/dev/null | sort -rn | head -1 || true)
+  newest_cls=$(find "$CLASSES" -name '*.class' -printf '%T@\n' 2>/dev/null | sort -rn | head -1 || true)
   if [ -z "$newest_cls" ] || awk -v s="$newest_src" -v c="$newest_cls" 'BEGIN{exit !(s > c)}'; then
     echo "[graft] classes stale or missing — compiling via sbt once" >&2
     (cd "$REPO" && sbt -batch compile >&2)
