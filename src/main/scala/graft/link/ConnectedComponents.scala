@@ -3,7 +3,7 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Regime
+import graft.{Persist, Regime}
 
 /** Connected components over the mention/similarity graph — iterative
   * DataFrame min-label propagation (alternating join + min-aggregate until
@@ -25,22 +25,21 @@ object ConnectedComponents {
     * dimension-sized graph (entity/cluster graphs always are) finishes in
     * a driver [[UnionFind]] instead of paying ~2s of job overhead per
     * min-propagation round; above the budget the iterative distributed
-    * algorithm runs. The persisted symmetric edges are released before
-    * returning: neither the LocalRelation nor the eagerly
-    * localCheckpointed labels read them afterwards. */
+    * algorithm runs. The symmetric edges are cached for the probe and the
+    * rounds ([[Persist.within]]); neither the LocalRelation nor the
+    * eagerly localCheckpointed labels read them after release. */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     import spark.implicits._
     val sym = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .unionAll(edges.select(col("dst").cast("long").as("src"), col("src").cast("long").as("dst")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Persist.within(sym) {
       Regime.collectUpTo(sym.as[(Long, Long)], Regime.MaxDriverPairs) match {
         case Some(es) => smallGraph(spark, es)
         case None => propagate(sym, maxIter)
       }
-    } finally sym.unpersist()
+    }
   }
 
   /** `nodes` with a `labelCol` column: the component of its `key` in the

@@ -3,7 +3,7 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Regime
+import graft.{Persist, Regime}
 
 /** Entity canonicalization: MinHash/LSH blocking → similarity edges →
   * connected components → canonical id/surface per cluster (north_star
@@ -25,7 +25,8 @@ object EntityLinker {
     * whole chain runs on the driver with the IDENTICAL hash/band/cap/verify
     * constants, and the result comes back as a LocalRelation that
     * downstream joins broadcast for free. Above it, the distributed path
-    * runs unchanged. */
+    * runs over the cached dim and its result is materialized before the
+    * dim is released ([[Persist.within]]). */
   def canonicalize(
       spark: SparkSession,
       eDimIn: DataFrame,
@@ -38,27 +39,28 @@ object EntityLinker {
     if (local.isDefined) return localCanonicalize(spark, local.get, threshold, numHashes, bands)
 
     // five consumers (LSH sigs + two text joins + comp join + canon agg);
-    // the dim is dimension-sized by construction, persist it
-    val eDim = eDimIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = MinHashLSH
-      .similarPairs(spark, eDim, "e_id", "e_text",
-        numHashes = numHashes, bands = bands, threshold = threshold)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
+    // the dim is dimension-sized by construction, so it is cached
+    Persist.within(eDimIn) {
+      val edges = MinHashLSH
+        .similarPairs(spark, eDimIn, "e_id", "e_text",
+          numHashes = numHashes, bands = bands, threshold = threshold)
+        .select(col("id_a").as("src"), col("id_b").as("dst"))
 
-    // entities untouched by any edge are their own canonical form
-    val withComp = ConnectedComponents.labelNodes(spark, edges, eDim, "e_id", "component")
+      // entities untouched by any edge are their own canonical form
+      val withComp = ConnectedComponents.labelNodes(spark, edges, eDimIn, "e_id", "component")
 
-    val canonSurface = withComp
-      .groupBy(col("component"))
-      .agg(min(struct(col("e_id"), col("e_text"))).as("c"))
-      .select(
-        col("component"),
-        col("c.e_id").as("canon_id"),
-        col("c.e_text").as("canon_text"))
+      val canonSurface = withComp
+        .groupBy(col("component"))
+        .agg(min(struct(col("e_id"), col("e_text"))).as("c"))
+        .select(
+          col("component"),
+          col("c.e_id").as("canon_id"),
+          col("c.e_text").as("canon_text"))
 
-    withComp
-      .join(canonSurface, Seq("component"))
-      .select(col("e_id"), col("e_text"), col("canon_id"), col("canon_text"))
+      withComp
+        .join(canonSurface, Seq("component"))
+        .select(col("e_id"), col("e_text"), col("canon_id"), col("canon_text"))
+    }
   }
 
   /** Driver-side mirror of the distributed chain for dimension-sized

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Regime
+import graft.{Persist, Regime}
 import graft.link.{ConnectedComponents, MinHashLSH, UnionFind}
 
 /** Deduplication operators for training-data curation at corpus scale.
@@ -21,24 +21,26 @@ object Dedup {
   /** Exact dedup: (doc_id, canonical_id, dup_count). canonical = min id of
     * identical text.
     *
-    * Scale shape: group/join on a 64-bit text digest plus the text length
-    * (collision paranoia: a false merge needs an xxhash64 collision AND an
-    * equal length) — the document text itself never leaves the scan stage.
-    * The previous `groupBy(text)` + join-on-text exchanged the entire
-    * corpus text twice, the single largest avoidable shuffle in the repo
-    * at corpus scale; the exchanges now carry (hash, len, id) only. */
+    * Scale shape: group/join on a 128-bit text digest plus the text length:
+    * two independently seeded xxhash64 values (`__th` under Spark's seed 42,
+    * `__th2` = xxhash64(salt, text), i.e. under the seed xxhash64(salt)), so
+    * a false merge needs both 64-bit hashes to collide AND equal lengths —
+    * out of reach at crawl scale, where one 64-bit digest is not. The text
+    * never leaves the scan stage: exchanges carry (hash, hash, len, id). */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val key = Seq("__th", "__th2", "__tl")
     val keyed = docs.select(
       col(idCol),
       xxhash64(col(textCol)).as("__th"),
+      xxhash64(lit(0x5eed2L), col(textCol)).as("__th2"),
       length(col(textCol)).as("__tl"))
     val canon = keyed
-      .groupBy(col("__th"), col("__tl"))
+      .groupBy(key.map(col): _*)
       .agg(
         min(col(idCol)).as("canonical_id"),
         count(lit(1)).as("dup_count"))
     keyed
-      .join(canon, Seq("__th", "__tl"))
+      .join(canon, key)
       .select(col(idCol), col("canonical_id"), col("dup_count"))
   }
 
@@ -75,21 +77,22 @@ object Dedup {
           .foreach { case (a, b) => uf.union(a, b) }
         shinglesById.keys.toSeq.map(id => (id, uf.find(id))).toDF("doc_id", "cluster_id")
       case None =>
-        // one scan: the (id, text) projection persists, so the LSH
-        // signature pass, the verify's two text join-backs and the final
-        // id list read the cache; it stays registered after return, since
-        // the lazy result reads it
+        // one scan: the (id, text) projection is cached for the LSH
+        // signature pass and the verify's two text join-backs; the id list
+        // is materialized from it, so the returned label join reads no cache
         val base = docs.select(col(idCol), col(textCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val edges = MinHashLSH
-          .similarPairs(spark, base, idCol, textCol,
-            numHashes = numHashes, bands = bands, threshold = threshold,
-            shingleMode = "word")
-          .select(col("id_a").as("src"), col("id_b").as("dst"))
-        ConnectedComponents
-          .labelNodes(spark, edges, base.select(col(idCol).cast("long").as("doc_id")),
-            "doc_id", "cluster_id")
-          .select("doc_id", "cluster_id")
+        Persist.within(base) {
+          val edges = MinHashLSH
+            .similarPairs(spark, base, idCol, textCol,
+              numHashes = numHashes, bands = bands, threshold = threshold,
+              shingleMode = "word")
+            .select(col("id_a").as("src"), col("id_b").as("dst"))
+          ConnectedComponents
+            .labelNodes(spark, edges,
+              Persist.materialize(base.select(col(idCol).cast("long").as("doc_id"))),
+              "doc_id", "cluster_id")
+            .select("doc_id", "cluster_id")
+        }
     }
   }
 
@@ -169,9 +172,8 @@ object Dedup {
     * simhash) rows, bounded by `Regime.MaxDriverPairs`. Below the budget
     * the same collapse, band buckets, verify and min-id components run on
     * the driver ([[localSimhashClusters]]) and nothing persists; above it
-    * the distributed band self-join + connected components run, reading
-    * one persisted signature pass (which, with the persisted reps, stays
-    * registered after return, since the lazy result reads them). */
+    * the distributed band self-join + connected components run over one
+    * materialized signature pass and the materialized reps. */
   def simhashClusters(
       spark: SparkSession,
       docs: DataFrame,
@@ -179,15 +181,17 @@ object Dedup {
       textCol: String,
       maxDist: Int = 3): DataFrame = {
     import spark.implicits._
-    val sigRows = simhashDF(spark, docs, idCol, textCol) // (idCol, simhash)
-    val local = Regime.collectUpTo(sigRows.as[(Long, Long)], Regime.MaxDriverPairs)
+    val sigs = simhashDF(spark, docs, idCol, textCol) // (idCol, simhash)
+    val local = Regime.collectUpTo(sigs.as[(Long, Long)], Regime.MaxDriverPairs)
     if (local.isDefined) return localSimhashClusters(spark, local.get, maxDist)
 
-    val sigs = sigRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the signatures and reps are read by several consumers AND by the
+    // returned label join: materialized, not cached, they live as long as
+    // the result does
+    val sigRows = Persist.materialize(sigs)
     // one representative per distinct signature (min id, deterministic)
-    val rep = sigs.groupBy(col("simhash")).agg(min(col(idCol)).as("rep_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
+    val rep = Persist.materialize(
+      sigRows.groupBy(col("simhash")).agg(min(col(idCol)).as("rep_id")))
     val banded = rep.select(
       col("rep_id").as("id"),
       col("simhash"),
@@ -210,7 +214,7 @@ object Dedup {
       .distinct()
 
     // member label = its rep's component (rep itself when edge-free)
-    val members = sigs
+    val members = sigRows
       .select(col(idCol).cast("long").as("doc_id"), col("simhash"))
       .join(rep, Seq("simhash"))
     ConnectedComponents.labelNodes(spark, repEdges, members, "rep_id", "cluster_id")
@@ -284,13 +288,15 @@ object Dedup {
     val local = Regime.collectUpTo(base.as[(Long, Array[Float])], Regime.MaxDriverRows)
       .flatMap(localEmbeddingClusters(spark, _, threshold, nBits, tables, idCol))
     if (local.isDefined) return local.get
-    // distributed regime: persist the (id, vec) projection so the two
+    // distributed regime: the (id, vec) projection is cached so the two
     // signature flatMaps, the two vector join-backs and the final id list
-    // read one cached scan of the vectors (r5 VERDICT "Next round" #6)
-    val cached = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = embeddingEdges(spark, cached, threshold, nBits, tables)
-    ConnectedComponents.labelNodes(spark, edges, cached.select(col("id")), "id", "cluster_id")
-      .select(col("id").as(idCol), col("cluster_id"))
+    // read one scan of the vectors (the id list materialized from it)
+    Persist.within(base) {
+      val edges = embeddingEdges(spark, base, threshold, nBits, tables)
+      ConnectedComponents.labelNodes(spark, edges, Persist.materialize(base.select(col("id"))),
+        "id", "cluster_id")
+        .select(col("id").as(idCol), col("cluster_id"))
+    }
   }
 
   /** Driver-side mirror of [[embeddingEdges]] + min-id components for

@@ -115,10 +115,8 @@ object KgOps {
     * path runs with bit-identical ids. The struct min is lexicographic
     * (doc_id, pos), so ranking the flattened pair gives the same order. */
   def dictEncode(mentionsDf: DataFrame): DataFrame = {
-    // dimension-sized first-seen table persists (the xDict idiom): the
-    // rank probe's key pass populates it and the id-attach pass plus every
-    // downstream consumer read the cache instead of re-running the
-    // aggregation. Callers release it via clearCache.
+    // the dimension-sized first-seen table is cached (the xDict idiom): the
+    // rank probe's key pass populates it, the id attach reads it
     val firstSeen = mentionsDf
       .groupBy("mention")
       .agg(min(struct(col("doc_id"), col("pos"))).as("first_seen"))
@@ -126,10 +124,11 @@ object KgOps {
         col("mention"),
         col("first_seen.doc_id").as("__d"),
         col("first_seen.pos").as("__p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    DenseId
-      .withDenseIdProbed(firstSeen, "e_id", Seq("__d", "__p"))
-      .select("mention", "e_id")
+    graft.Persist.within(firstSeen) {
+      DenseId
+        .withDenseIdProbed(firstSeen, "e_id", Seq("__d", "__p"))
+        .select("mention", "e_id")
+    }
   }
 
   /** Pair frequencies with min-support filter (§2.10). */
@@ -146,16 +145,17 @@ object KgOps {
       mentionsDf: DataFrame,
       window: Int = 40,
       minCount: Long = 1): DataFrame = {
-    // three consumers (dict, pairs, and the final left join) — persist so
+    // three consumers (dict, pairs, and the final left join) — cached so
     // the upstream mention flatMap runs once, not three times
-    val m = mentionsDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dict = dictEncode(m)
-    val freq = pairFreq(bandPairs(m, window), minCount)
-    val edges = freq
-      .join(dict.withColumnRenamed("mention", "m1").withColumnRenamed("e_id", "src"), Seq("m1"))
-      .join(dict.withColumnRenamed("mention", "m2").withColumnRenamed("e_id", "dst"), Seq("m2"))
-      .select("src", "dst")
-    graft.link.ConnectedComponents.labelNodes(spark, edges, dict, "e_id", "component")
-      .select("e_id", "component")
+    graft.Persist.within(mentionsDf) {
+      val dict = dictEncode(mentionsDf)
+      val freq = pairFreq(bandPairs(mentionsDf, window), minCount)
+      val edges = freq
+        .join(dict.withColumnRenamed("mention", "m1").withColumnRenamed("e_id", "src"), Seq("m1"))
+        .join(dict.withColumnRenamed("mention", "m2").withColumnRenamed("e_id", "dst"), Seq("m2"))
+        .select("src", "dst")
+      graft.link.ConnectedComponents.labelNodes(spark, edges, dict, "e_id", "component")
+        .select("e_id", "component")
+    }
   }
 }

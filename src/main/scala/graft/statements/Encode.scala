@@ -26,14 +26,14 @@ object Encode {
   /** x dictionary: window text -> dense id, first-appearance order. The
     * window-text dictionary is near-fact-cardinality (windows are mostly
     * unique), so the dense-id assignment must NOT be a global ranking
-    * window. The aggregated first-seen table persists (it is scanned by
-    * both the rank probe and the id attach), and ids come from DenseId's
+    * window. The aggregated first-seen table is cached for the rank probe
+    * and the id attach ([[graft.Persist.within]]), and ids come from DenseId's
     * bounded-driver rank table — no range exchange of the window text;
     * above the driver bound the classic range-partitioned path runs.
     *
-    * NOTE: the rank probe (or DenseId's offset job on the fallback path)
-    * runs when this is CALLED — callers that time stages must construct
-    * inside the timed window (MtbDataset.build's thunk probe). */
+    * NOTE: the rank probe and the materialized id attach run when this is
+    * CALLED — callers that time stages must construct inside the timed
+    * window (MtbDataset.build's thunk probe). */
   def xDict(st: DataFrame): DataFrame = {
     val xFirst = st
       .withColumn("x_text", concat_ws(" ", col("tokens")))
@@ -42,18 +42,20 @@ object Encode {
       .select(
         col("x_text"),
         col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    DenseId
-      .withDenseIdProbed(xFirst, "x_id", Seq("__d", "__p"))
-      .select(col("x_text"), col("x_id"))
+    graft.Persist.within(xFirst) {
+      DenseId
+        .withDenseIdProbed(xFirst, "x_id", Seq("__d", "__p"))
+        .select(col("x_text"), col("x_id"))
+    }
   }
 
   /** Entity dictionary: e1 slot seen before e2 slot within a row. The
     * three-field first-seen order (docOrd, pairOrd, slot) packs losslessly
     * into (docOrd, pairOrd*2 + slot) — slot is 0/1 — so the bounded-rank
     * DenseId applies; its 31-bit guard falls back to the range exchange
-    * if pairOrd ever exceeds 2^30. Dimension-sized agg output persists
-    * across the probe and attach passes. */
+    * if pairOrd ever exceeds 2^30. The dimension-sized agg output is
+    * cached across the probe and attach passes, and the materialized
+    * dictionary is what the caller gets ([[graft.Persist.within]]). */
   def eDict(st: DataFrame): DataFrame = {
     val eOcc = st.select(col("e1").as("e_text"),
         struct(col("docOrd"), col("pairOrd"), lit(0).as("slot")).as("pos"))
@@ -65,10 +67,11 @@ object Encode {
         col("e_text"),
         col("fs.docOrd").as("__d"),
         (col("fs.pairOrd").cast("long") * 2 + col("fs.slot")).as("__p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    DenseId
-      .withDenseIdProbed(eFirst, "e_id", Seq("__d", "__p"))
-      .select(col("e_text"), col("e_id"))
+    graft.Persist.within(eFirst) {
+      DenseId
+        .withDenseIdProbed(eFirst, "e_id", Seq("__d", "__p"))
+        .select(col("e_text"), col("e_id"))
+    }
   }
 
   /** Facts with entity ids attached.

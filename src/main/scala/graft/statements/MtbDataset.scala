@@ -22,27 +22,28 @@ import graft.triples.TriplePipeline
   */
 object MtbDataset {
 
+  /** The built dataset. Its frames read two caches the Result owns (the
+    * statements and the tokenized relations); `close()` releases them, and
+    * the frames then still answer, by recomputation. */
   final case class Result(
       tokenizedRelations: DataFrame, // relation_id, token_ids, e1_span, e2_span, e1_id, e2_id
       pools: DataFrame,              // e1_id, e2_id, relation_ids, set
       e1Pool: DataFrame,
       e2Pool: DataFrame,
       xDim: DataFrame,               // null when built with needDims = false
-      eDim: DataFrame)               // null when built with needDims = false
+      eDim: DataFrame)(             // null when built with needDims = false
+      cached: Seq[DataFrame]) extends AutoCloseable {
+    def close(): Unit = graft.Persist.release(cached: _*)
+  }
 
   /** @param probe measurement hook: called once per pipeline stage with
     *   (stageName, constructThunk). The thunk CONSTRUCTS the stage's
-    *   DataFrame — construction itself can run Spark jobs (DenseId's
-    *   RDD.zipWithIndex materializes its range exchange eagerly), so a
-    *   benchmark that wants honest per-stage times must invoke the thunk
-    *   INSIDE its timed window and then force the result (Bench's
-    *   wide-scaling per-phase evidence; before round 5 the probe received
-    *   an already-built DataFrame and those construction jobs fell between
-    *   the timed windows). The probe MUST invoke the thunk exactly once;
-    *   the default just constructs. NOTE: construction itself runs bounded
-    *   probe/collect jobs eagerly (DenseId's key passes, the freq-filter
-    *   `Regime.collectUpTo`) — build() launches Spark jobs before any
-    *   caller action, it is not one lazy DAG.
+    *   DataFrame, and construction runs Spark jobs (DenseId's key passes,
+    *   the dictionaries' materialization, the freq-filter
+    *   `Regime.collectUpTo`), so a benchmark that wants honest per-stage
+    *   times must invoke the thunk INSIDE its timed window and then force
+    *   the result. The probe MUST invoke the thunk exactly once; the
+    *   default just constructs.
     * @param needDims when false, the window-text dictionary (Result.xDim)
     *   and the pruned dims are skipped entirely — callers that only
     *   consume tokenizedRelations/pools (the pair-scoring and loss paths)
@@ -69,10 +70,10 @@ object MtbDataset {
       out
     }
 
-    // statements as a DataFrame (url, docOrd, pairOrd, tokens, spans, e1, e2)
-    // — persisted: the dictionaries and the fact join scan it four times;
-    // without the persist the whole scan→annotate→window pass re-runs per
-    // consumer
+    // statements as a DataFrame (docOrd, pairOrd, tokens, spans, e1, e2)
+    // — cached (owned by the Result): the dictionaries and the fact join
+    // scan it four times; without the cache the whole
+    // scan→annotate→window pass re-runs per consumer
     val statements = stage("statements") {
       // the default Config's mention filters are the identity: the MTB
       // path takes every gazetteer hit
@@ -85,21 +86,18 @@ object MtbDataset {
         }
         .toDF()
         // url is identification-only in the MTB path (docOrd carries the
-        // deterministic order); dropping it before the persist trims every
+        // deterministic order); dropping it before the cache trims every
         // cached/shuffled row
         .drop("url")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Persist.hold)
     }
 
     val xDim0 = if (needDims) stage("dict_x") { Encode.xDict(statements) } else null
     // the entity dictionary is dimension-sized (distinct surface forms) and
     // is consumed three times (two broadcast builds in encodeFact + the
-    // prune semi join) — persisted so each broadcast reads the tiny cache
-    // instead of re-running the dictionary plan
-    val eDim0 = stage("dict_e") {
-      Encode.eDict(statements)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    // prune semi join) — eDict returns it materialized, so each broadcast
+    // reads the stored rows instead of re-running the dictionary plan
+    val eDim0 = stage("dict_e") { Encode.eDict(statements) }
     val fact = Encode.encodeFact(statements, eDim0)
 
     // min_count (build) then min_pool_size (preprocess) both filter on the
@@ -108,7 +106,7 @@ object MtbDataset {
     // exactly one filter at max(minCount, minPoolSize): one count-agg +
     // one semi join instead of two of each.
     //
-    // The keep set is computed from the persisted STATEMENTS on the surface
+    // The keep set is computed from the cached STATEMENTS on the surface
     // (e1, e2) text keys — a bijection of the id keys, so the groups are
     // identical — which column-prunes the count-agg scan to two string
     // columns instead of recomputing the whole dictionary join a second
@@ -128,13 +126,9 @@ object MtbDataset {
     // statement windows draw from a near-closed vocabulary, so each
     // distinct surface tokenizes once per partition, not once per row.
     //
-    // Persisted HERE (not after DenseId): the relation-id range exchange
-    // samples its input before partitioning it, and without a
-    // materialization boundary that sample pass recomputes the entire
-    // join+tokenize chain a second time (measured: the tokenize map was
-    // ~25% of the wide chain's CPU, paid twice). Caching the tokenized
-    // rows makes the first consumer the cache-population pass; the id
-    // assignment and every downstream consumer then read cached bytes.
+    // Cached HERE (not after DenseId): the relation-id key pass populates
+    // the cache, and the id attach and every downstream consumer read it
+    // instead of re-running the join+tokenize chain.
     val tokEnc = stage("filter_tokenize_encode") {
       afterPool =
         if (minKeep <= 1) fact
@@ -175,29 +169,25 @@ object MtbDataset {
         }
         .toDF("docOrd", "pairOrd", "e1_id", "e2_id", "token_ids", "e1_span", "e2_span")
         .filter(col("token_ids").isNotNull)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Persist.hold)
     }
     val (xDim, eDim) =
       if (needDims) Encode.pruneDims(afterPool, xDim0, eDim0) else (null, null)
 
-    // dense relation ids over the cached tokenized rows; NOT persisted —
-    // the heavy bytes live in the tokEnc cache, and each consumer's id
-    // attach is a cheap cache read (persisting here too would hold a
-    // near-duplicate of tokEnc in the storage pool for no second scan
-    // saved)
+    // dense relation ids over the cached tokenized rows; not cached again:
+    // each consumer's id attach is a cheap read of the tokEnc cache
     val withIds = stage("relation_ids") { Encode.withRelationIds(tokEnc) }
     val pools = stage("pools") { Encode.pools(withIds, splitSeed) }
     Result(
       tokenizedRelations = withIds,
       pools = pools,
-      // derived from the PAIR pools, not the fact table (identical
-      // per-entity multiset; the pool table is the aggregated dim) —
-      // consumers that never read them pay nothing either way, consumers
-      // that do aggregate pool rows instead of re-shuffling statements
+      // derived from the PAIR pools (the same per-entity multiset as the
+      // fact table), so they aggregate pool rows, not statements
       e1Pool = Encode.entityPoolFromPools(pools, "e1"),
       e2Pool = Encode.entityPoolFromPools(pools, "e2"),
       xDim = xDim,
-      eDim = eDim)
+      eDim = eDim)(
+      cached = Seq(statements, tokEnc))
   }
 
   /** Pool shuffling iterator (§2.17): the reference re-shuffles the pool

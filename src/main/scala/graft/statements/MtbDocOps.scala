@@ -29,76 +29,41 @@ object MtbDocOps {
   /** Statements over documents: (doc_id, p1, p2, e1_id, e2_id,
     * relation_id), pair-frequency-filtered (minCount) with dense relation
     * ids assigned in (doc_id, p1, p2) order — the reference's
-    * np.arange-after-filtering (`mtb_data_loader.py:249`). */
-  /** NOTE caller contract: the annotate flatMap and the filtered pair set
-    * are persisted internally (five consumers: the dictionary's key and
-    * attach passes, the pair self-join's two sides, and the relation-id
-    * probe + every downstream consumer). The bench clears the cache
-    * between queries; long-lived sessions should clearCache (or unpersist
-    * via the catalog) when done with the statement set. */
+    * np.arange-after-filtering (`mtb_data_loader.py:249`).
+    *
+    * The annotate flatMap and the filtered pair set are cached for the
+    * call only ([[graft.Persist.within]]): five consumers read them (the
+    * dictionary's key and attach passes, the pair self-join's two sides,
+    * the relation-id probe and attach), and the statements are
+    * materialized before both are released, so nothing stays cached. */
   def statements(
       spark: SparkSession,
       docs: DataFrame,
       window: Int = 40,
       minCount: Int = 2): DataFrame = {
-    // one annotate pass: m feeds the dictionary (key pass + per-broadcast
-    // attach) and both sides of the banded self-join — without the persist
-    // the flatMap re-runs ~5x per statements() call
+    // one annotate pass for the dictionary and both self-join sides
     val m = KgOps.mentions(spark, docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dict = KgOps.dictEncode(m)
-    val a = m.select(col("doc_id"), col("mention").as("m1"), col("pos").as("p1"))
-    val b = m.select(col("doc_id"), col("mention").as("m2"), col("pos").as("p2"))
-    val pairs = a.join(b, Seq("doc_id"))
-      .filter(col("p2") - col("p1") >= 1 && col("p2") - col("p1") <= window)
-    val enc = pairs
-      .join(broadcast(dict.withColumnRenamed("mention", "m1")
-        .withColumnRenamed("e_id", "e1_id")), Seq("m1"))
-      .join(broadcast(dict.withColumnRenamed("mention", "m2")
-        .withColumnRenamed("e_id", "e2_id")), Seq("m2"))
-      .select(col("doc_id"), col("p1"), col("p2"), col("e1_id"), col("e2_id"))
-    // persisted BEFORE the id probe: the probe's key pass is then the
-    // cache-population pass, and the attach + every downstream consumer
-    // read cached rows instead of re-running the join chain
-    val filtered = Encode.freqFilter(enc, minCount)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // (doc_id, p1, p2) is a total order: mention positions are unique
-    // within a document (first-occurrence per distinct surface). Bounded
-    // driver rank (positions are document-local, well under the packed
-    // 2^15/2^16 bounds); the classic range exchange is the fallback.
-    DenseId.withDenseIdProbed(filtered, "relation_id", Seq("doc_id", "p1", "p2"))
-  }
-
-  final case class DocMtb(
-      statements: DataFrame,
-      pools: DataFrame,
-      e1Pool: DataFrame,
-      e2Pool: DataFrame,
-      nRelations: Long)
-
-  /** Statements + pools + per-entity pools. statements() persists its
-    * filtered pair set internally, so each consumer here pays only the
-    * narrow id-attach map over cached rows — no second persist of the
-    * near-identical output. */
-  def build(
-      spark: SparkSession,
-      docs: DataFrame,
-      window: Int = 40,
-      minCount: Int = 2,
-      seed: Long = 42L): DocMtb = {
-    val st = statements(spark, docs, window, minCount)
-    // both per-entity pools are derived from the pair pools instead of
-    // re-aggregating the fact table (identical multiset per entity by
-    // partition-refinement; see Encode.entityPoolFromPools). No persist:
-    // the three pool references are identical subtrees in ONE consumer
-    // plan (the negative-sampling join), so the pools exchange is planned
-    // once and reused.
-    val pools = Encode.pools(st, seed)
-    DocMtb(
-      statements = st,
-      pools = pools,
-      e1Pool = Encode.entityPoolFromPools(pools, "e1"),
-      e2Pool = Encode.entityPoolFromPools(pools, "e2"),
-      nRelations = st.count())
+    graft.Persist.within(m) {
+      val dict = KgOps.dictEncode(m)
+      val a = m.select(col("doc_id"), col("mention").as("m1"), col("pos").as("p1"))
+      val b = m.select(col("doc_id"), col("mention").as("m2"), col("pos").as("p2"))
+      val pairs = a.join(b, Seq("doc_id"))
+        .filter(col("p2") - col("p1") >= 1 && col("p2") - col("p1") <= window)
+      val enc = pairs
+        .join(broadcast(dict.withColumnRenamed("mention", "m1")
+          .withColumnRenamed("e_id", "e1_id")), Seq("m1"))
+        .join(broadcast(dict.withColumnRenamed("mention", "m2")
+          .withColumnRenamed("e_id", "e2_id")), Seq("m2"))
+        .select(col("doc_id"), col("p1"), col("p2"), col("e1_id"), col("e2_id"))
+      // cached: the id probe's key pass populates it, the attach reads it
+      val filtered = Encode.freqFilter(enc, minCount)
+      // (doc_id, p1, p2) is a total order: mention positions are unique
+      // within a document (first-occurrence per distinct surface). Bounded
+      // driver rank (positions are document-local, well under the packed
+      // 2^15/2^16 bounds); the classic range exchange is the fallback.
+      graft.Persist.within(filtered) {
+        DenseId.withDenseIdProbed(filtered, "relation_id", Seq("doc_id", "p1", "p2"))
+      }
+    }
   }
 }

@@ -13,22 +13,8 @@ object EventStream {
   /** The shared hourly-agg streaming plan (watermark + windowed
     * count/decimal-sum). Both the sandbox memory sink and the production
     * file sink run exactly this DataFrame. */
-  private def hourlyPlan(spark: SparkSession, eventsParquet: String): DataFrame = {
-    val schema = spark.read.parquet(eventsParquet).schema
-    // the streaming file source needs a DIRECTORY; point it at the parent
-    // with a glob filter selecting just this table's file(s)
-    val f = new java.io.File(eventsParquet)
-    val (dir, glob) =
-      if (f.isDirectory) (eventsParquet, "*")
-      else (f.getParent, f.getName)
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-      // watermarks need an instant (LTZ) type; session TZ is UTC so the
-      // NTZ->LTZ cast is value-preserving and reversed on output
-      .withColumn("ts", col("ts").cast("timestamp"))
-    stream
+  private def hourlyPlan(spark: SparkSession, eventsParquet: String): DataFrame =
+    events(spark, eventsParquet)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       // decimal sum: exact + order-independent, so the streaming result is
@@ -41,24 +27,48 @@ object EventStream {
         col("event_type"),
         col("n"),
         col("total_value"))
+
+  /** The events table as a stream (a file path reads its parent DIRECTORY
+    * through a glob filter), `ts` cast to the instant type watermarks need
+    * — value-preserving with the session TZ at UTC, reversed on output. */
+  private def events(spark: SparkSession, eventsParquet: String): DataFrame = {
+    val f = new java.io.File(eventsParquet)
+    val (dir, glob) = if (f.isDirectory) (eventsParquet, "*") else (f.getParent, f.getName)
+    spark.readStream
+      .schema(spark.read.parquet(eventsParquet).schema)
+      .option("pathGlobFilter", glob)
+      .parquet(dir)
+      .withColumn("ts", col("ts").cast("timestamp"))
   }
 
   /** Hourly per-type counts/sums via a real streaming query. Returns the
     * final materialized result (hour, event_type, n, total_value).
     * Memory sink = sandbox-only synchronous oracle surface; production
     * deployments use [[hourlyAggToPath]] (same plan, file sink). */
-  def hourlyAgg(spark: SparkSession, eventsParquet: String): DataFrame = {
-    val agg = hourlyPlan(spark, eventsParquet)
-    val name = s"graft_stream_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("complete")
+  def hourlyAgg(spark: SparkSession, eventsParquet: String): DataFrame =
+    runToMemory(spark, hourlyPlan(spark, eventsParquet), "graft_stream", "complete")
+
+  /** Runs `plan` to completion into a memory sink and returns its rows as
+    * a LocalRelation. The sink's rows already sit on the driver; the
+    * sink's view is dropped before returning, so no call leaves a table
+    * (and its rows) registered in the session. */
+  private def runToMemory(
+      spark: SparkSession,
+      plan: org.apache.spark.sql.Dataset[_],
+      prefix: String,
+      outputMode: String): DataFrame = {
+    val name = s"${prefix}_${System.nanoTime()}"
+    val q = plan.writeStream
+      .outputMode(outputMode)
       .format("memory")
       .queryName(name)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    try {
+      try q.processAllAvailable() finally q.stop()
+      val sink = spark.table(name)
+      spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** Production sink: the same hourly plan written incrementally to a
@@ -144,19 +154,8 @@ object EventStream {
   def sessionize(
       spark: SparkSession,
       eventsParquet: String,
-      gapMin: Int = 30): DataFrame = {
-    val sessions = sessionPlan(spark, eventsParquet, gapMin)
-    val name = s"graft_sessions_${System.nanoTime()}"
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
+      gapMin: Int = 30): DataFrame =
+    runToMemory(spark, sessionPlan(spark, eventsParquet, gapMin), "graft_sessions", "append")
 
   /** The shared sessionization streaming plan (flatMapGroupsWithState with
     * event-time timeout) behind both sinks. */
@@ -167,17 +166,7 @@ object EventStream {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-    val schema = spark.read.parquet(eventsParquet).schema
-    val f = new java.io.File(eventsParquet)
-    val (dir, glob) =
-      if (f.isDirectory) (eventsParquet, "*") else (f.getParent, f.getName)
-    val gapMs = gapMin * 60000L
-
-    val events = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val rows = events(spark, eventsParquet)
       .withWatermark("ts", "2 hours")
       // keep the watermarked ts column itself — projecting it away would
       // detach the watermark the event-time timeout needs
@@ -188,8 +177,8 @@ object EventStream {
         round(col("value") * 10000).cast("long").as("value_e4"))
       .as[(Long, java.sql.Timestamp, Long, Long)]
 
-    val gapUs = gapMs * 1000L
-    events
+    val gapUs = gapMin * 60000000L
+    rows
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long)], state: GroupState[SessState]) => {

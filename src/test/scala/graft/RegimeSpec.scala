@@ -76,9 +76,11 @@ class RegimeSpec extends AnyFunSuite {
     "q58_mtb_losses")
 
   test("every query reaching a regime split: forced-distributed output equals default") {
+    // no clearCache between runs: each run, in either regime, must leave
+    // nothing cached behind
     def rows(name: String): Map[Seq[Any], Int] = {
-      spark.catalog.clearCache()
       val out = SparkEntry.queries(name)(spark, sf).collect().toSeq
+      assert(CacheProbe.cachedEntries(spark) == 0, s"$name left cached entries")
       out.map((r: Row) => r.toSeq).groupBy(identity).view.mapValues(_.size).toMap
     }
     for (q <- regimeQueries) {
@@ -86,6 +88,5 @@ class RegimeSpec extends AnyFunSuite {
       assert(default.nonEmpty, q)
       assert(Regime.forcingDistributed(rows(q)) == default, q)
     }
-    spark.catalog.clearCache()
   }
 }
