@@ -18,6 +18,20 @@ import org.apache.spark.sql.SparkSession
   * Hadoop caches one `FileSystem` per scheme for the whole JVM, so it cannot
   * be scoped to one write. Files, `.crc` siblings and permission bits are
   * the stock filesystem's.
+  *
+  * Per-session artifact isolation is off
+  * (`spark.sql.artifact.isolation.enabled=false`), also a binding and not a
+  * tuning value. With it on (the Spark 4.1 default), every job of a session
+  * carries that session's `JobArtifactState`, and the executor gives each
+  * session its own class loader. `CodeGenerator`'s cache is keyed by the
+  * context class loader and the code, and every streaming query runs on a
+  * clone of its session (`sparkSessionForStream`). So each run of a
+  * streaming query (q50, q51, q53) got a new loader, and its tasks
+  * recompiled every generated class while the other tasks waited on the
+  * compile lock: 19 classes per repeated q51 run. The engine adds no JARs,
+  * files or other artifacts to any session, so there is nothing to
+  * isolate. The conf is read when a session is created, and clones copy
+  * it.
   */
 object GraftSession {
 
@@ -43,6 +57,7 @@ object GraftSession {
       // defaults; here a stall is survivable by construction.
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "20s")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config(graft.io.LocalFs.HadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v })
 
   def get(cores: Int, app: String = "graft"): SparkSession = {

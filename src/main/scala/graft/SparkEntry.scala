@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.annotate.Gazetteer
 import graft.eval.SemEval
 import graft.fixtures.{Corpus, FixtureVocab, SemEvalFixture}
+import graft.io.Tables
 import graft.kernel.{ScoringKernel, StubKernel}
 import graft.ops.{Dedup, KgOps, Multimodal, Similarity, TextStats}
 import graft.tokenize.{BertTokenizer, BertVocab, Vocab}
@@ -15,10 +16,12 @@ import graft.triples.TriplePipeline
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the training-data ops battery), each with a DuckDB
   * oracle where the semantics are ANSI-SQL-expressible; non-SQL operators
-  * (LSH clustering, simhash, the full KG pipeline) are rows-only checks. */
+  * (LSH clustering, simhash, the full KG pipeline) are rows-only checks.
+  *
+  * Every query reads its input tables through [[graft.io.Tables.read]],
+  * with the declared schema, so building a query's DataFrame runs no
+  * schema-inference job. */
 object SparkEntry {
-
-  private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
   /** Order-independent content digest: sum over rows of
     * xxhash64(canonical row string) mod 1e9+7 — commutative, BIGINT-safe
@@ -173,7 +176,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational core (scan/filter/agg/join/window/semi/anti) ----
     "q01_pricing_summary" -> ((s, d) => {
-      val li = s.read.parquet(t(d, "lineitem"))
+      val li = Tables.read(s, d, "lineitem")
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           sum(col("l_quantity")).as("sum_qty"),
@@ -191,9 +194,9 @@ object SparkEntry {
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     }),
     "q02_revenue_by_nation" -> ((s, d) => {
-      val li = s.read.parquet(t(d, "lineitem"))
-      val su = s.read.parquet(t(d, "supplier"))
-      val na = s.read.parquet(t(d, "nation"))
+      val li = Tables.read(s, d, "lineitem")
+      val su = Tables.read(s, d, "supplier")
+      val na = Tables.read(s, d, "nation")
       li.join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(na), col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
@@ -204,7 +207,7 @@ object SparkEntry {
     }),
     "q03_top_orders_per_cust" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val o = s.read.parquet(t(d, "orders"))
+      val o = Tables.read(s, d, "orders")
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       o.withColumn("rn", row_number().over(w))
@@ -213,8 +216,8 @@ object SparkEntry {
         .orderBy(col("o_custkey"), col("rn"))
     }),
     "q04_priority_with_late_items" -> ((s, d) => {
-      val o = s.read.parquet(t(d, "orders"))
-      val li = s.read.parquet(t(d, "lineitem"))
+      val o = Tables.read(s, d, "orders")
+      val li = Tables.read(s, d, "lineitem")
       val late = li.filter(col("l_shipdate") > lit("1995-06-01").cast("timestamp"))
       o.join(late.select("l_orderkey").distinct(),
           col("o_orderkey") === col("l_orderkey"), "left_semi")
@@ -223,15 +226,15 @@ object SparkEntry {
         .orderBy(col("o_orderpriority"))
     }),
     "q05_customers_without_orders" -> ((s, d) => {
-      val c = s.read.parquet(t(d, "customer"))
-      val o = s.read.parquet(t(d, "orders"))
+      val c = Tables.read(s, d, "customer")
+      val o = Tables.read(s, d, "orders")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"))
         .orderBy(col("c_custkey"))
     }),
     "q07_parts_revenue" -> ((s, d) => {
-      val li = s.read.parquet(t(d, "lineitem"))
-      val p = s.read.parquet(t(d, "part"))
+      val li = Tables.read(s, d, "lineitem")
+      val p = Tables.read(s, d, "part")
       li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(
@@ -243,9 +246,9 @@ object SparkEntry {
         .orderBy(col("p_brand"))
     }),
     "q08_region_rollup" -> ((s, d) => {
-      val c = s.read.parquet(t(d, "customer"))
-      val n = s.read.parquet(t(d, "nation"))
-      val r = s.read.parquet(t(d, "region"))
+      val c = Tables.read(s, d, "customer")
+      val n = Tables.read(s, d, "nation")
+      val r = Tables.read(s, d, "region")
       c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"))
@@ -255,7 +258,7 @@ object SparkEntry {
         .orderBy(col("r_name"))
     }),
     "q06_events_hourly" -> ((s, d) => {
-      s.read.parquet(t(d, "events"))
+      Tables.read(s, d, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(
           count(lit(1)).as("n"),
@@ -266,17 +269,17 @@ object SparkEntry {
     // ---- text normalization + analysis over documents ----
     "q10_doc_normalize" -> ((s, d) => {
       import graft.textnorm.functions._
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), text_norm(col("text")).as("text_norm"))
         .orderBy(col("doc_id"))
     }),
     "q11_token_counts" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.tokenCount(col("text")).as("n_tokens"))
         .orderBy(col("doc_id"))
     }),
     "q12_lang_profile" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .groupBy(col("lang"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -285,53 +288,53 @@ object SparkEntry {
         .orderBy(col("lang"))
     }),
     "q13_exact_dedup" -> ((s, d) => {
-      Dedup.exact(s.read.parquet(t(d, "documents")), "doc_id", "text")
+      Dedup.exact(Tables.read(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     "q14_quality_scores" -> ((s, d) => {
-      TextStats.qualityScore(s.read.parquet(t(d, "documents")), "text")
+      TextStats.qualityScore(Tables.read(s, d, "documents"), "text")
         .select(col("doc_id"), col("word_count"), col("mean_word_len"),
           col("stopword_ratio"))
         .orderBy(col("doc_id"))
     }),
     "q15_fingerprints" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))
         .orderBy(col("doc_id"))
     }),
     "q16_distinct_trigrams" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"),
           size(TextStats.distinctNgrams(col("text"), 3)).as("n_trigrams"))
         .orderBy(col("doc_id"))
     }),
     "q17_langid" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.langIdExpr(col("text")).as("lang_guess"))
         .orderBy(col("doc_id"))
     }),
 
     // ---- dedup / similarity ----
     "q18_minhash_clusters" -> ((s, d) => {
-      Dedup.minhashClusters(s, s.read.parquet(t(d, "documents")), "doc_id", "text",
+      Dedup.minhashClusters(s, Tables.read(s, d, "documents"), "doc_id", "text",
         threshold = 0.8).orderBy(col("doc_id"))
     }),
     "q19_simhash" -> ((s, d) => {
-      Dedup.simhashDF(s, s.read.parquet(t(d, "documents")), "doc_id", "text")
+      Dedup.simhashDF(s, Tables.read(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
     "q26_embedding_dedup" -> ((s, d) => {
-      Dedup.embeddingClusters(s, s.read.parquet(t(d, "embeddings")),
+      Dedup.embeddingClusters(s, Tables.read(s, d, "embeddings"),
         "vec_id", "embedding", threshold = 0.95)
         .orderBy(col("vec_id"))
     }),
     "q27_bpe_token_count" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.bpeTokenCount(col("text")).as("n_bpeish"))
         .orderBy(col("doc_id"))
     }),
     "q25_ann_topk" -> ((s, d) => {
-      val e = s.read.parquet(t(d, "embeddings"))
+      val e = Tables.read(s, d, "embeddings")
       Similarity.bruteForceTopK(e.filter(col("vec_id") < 32), e, 5)
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -344,7 +347,7 @@ object SparkEntry {
     // assignment, probe-16, exact re-rank with id tie-break) is a pure
     // function of the fixed-seed embeddings table at any parallelism.
     "q24_ann_ivf" -> ((s, d) => {
-      val e = s.read.parquet(t(d, "embeddings"))
+      val e = Tables.read(s, d, "embeddings")
       val root = s"${sys.props("java.io.tmpdir")}/graft-ivf/${d.replaceAll("[^A-Za-z0-9._-]", "_")}"
       val idx = graft.ops.IvfIndex.buildOrLoad(s, e, root)
       metricRows(
@@ -353,17 +356,17 @@ object SparkEntry {
         "n_rows" -> count(lit(1)))
     }),
     "q23_simhash_clusters" -> ((s, d) => {
-      Dedup.simhashClusters(s, s.read.parquet(t(d, "documents")), "doc_id", "text",
+      Dedup.simhashClusters(s, Tables.read(s, d, "documents"), "doc_id", "text",
         maxDist = 3).orderBy(col("doc_id"))
     }),
     "q20_ann_top1" -> ((s, d) => {
-      val e = s.read.parquet(t(d, "embeddings"))
+      val e = Tables.read(s, d, "embeddings")
       Similarity.bruteForceTopK(e.filter(col("vec_id") < 32), e, 1)
         .select(col("query_id"), col("neighbor_id"))
         .orderBy(col("query_id"))
     }),
     "q21_embedding_sums" -> ((s, d) => {
-      s.read.parquet(t(d, "embeddings"))
+      Tables.read(s, d, "embeddings")
         .select(col("vec_id"),
           round(aggregate(col("embedding"), lit(0.0), (a, b) => a + b), 4).as("comp_sum"))
         .orderBy(col("vec_id"))
@@ -374,7 +377,7 @@ object SparkEntry {
     // the value is identical at any parallelism (verified 4 vs 32 cores).
     // Recall vs exact stays separately gated by q28.
     "q22_ann_lsh" -> ((s, d) => {
-      val e = s.read.parquet(t(d, "embeddings"))
+      val e = Tables.read(s, d, "embeddings")
       metricRows(
         Similarity.lshTopK(s, e.filter(col("vec_id") < 32), e, 5),
         "digest" -> contentDigest(col("query_id"), col("neighbor_id"), col("rank")),
@@ -397,7 +400,7 @@ object SparkEntry {
         approx.select(col("query_id"), col("neighbor_id"))
           .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
           .count() / nEx
-      val e = s.read.parquet(t(d, "embeddings"))
+      val e = Tables.read(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 32)
       val exact = Similarity.bruteForceTopK(q, e, 5)
         .select(col("query_id"), col("neighbor_id"))
@@ -434,28 +437,28 @@ object SparkEntry {
 
     // ---- KG operators over documents ----
     "q30_mentions" -> ((s, d) => {
-      KgOps.mentions(s, s.read.parquet(t(d, "documents")))
+      KgOps.mentions(s, Tables.read(s, d, "documents"))
         .orderBy(col("doc_id"), col("pos"))
     }),
     "q31_band_pair_counts" -> ((s, d) => {
-      KgOps.bandPairCounts(KgOps.mentions(s, s.read.parquet(t(d, "documents"))))
+      KgOps.bandPairCounts(KgOps.mentions(s, Tables.read(s, d, "documents")))
         .orderBy(col("doc_id"))
     }),
     "q32_mention_dict" -> ((s, d) => {
-      KgOps.dictEncode(KgOps.mentions(s, s.read.parquet(t(d, "documents"))))
+      KgOps.dictEncode(KgOps.mentions(s, Tables.read(s, d, "documents")))
         .orderBy(col("e_id"))
     }),
     "q33_pair_freq" -> ((s, d) => {
       KgOps.pairFreq(
-        KgOps.bandPairs(KgOps.mentions(s, s.read.parquet(t(d, "documents")))), 2L)
+        KgOps.bandPairs(KgOps.mentions(s, Tables.read(s, d, "documents"))), 2L)
         .orderBy(col("m1"), col("m2"))
     }),
     "q34_mention_components" -> ((s, d) => {
-      KgOps.mentionComponents(s, KgOps.mentions(s, s.read.parquet(t(d, "documents"))))
+      KgOps.mentionComponents(s, KgOps.mentions(s, Tables.read(s, d, "documents")))
         .orderBy(col("e_id"))
     }),
     "q35_svo_pairs" -> ((s, d) => {
-      graft.ops.SvoPairs.pairs(s, s.read.parquet(t(d, "documents")))
+      graft.ops.SvoPairs.pairs(s, Tables.read(s, d, "documents"))
         .orderBy(col("doc_id"), col("a_idx"), col("b_idx"))
     }),
     // the north-rule P/R>=0.95 quality gate, surfaced to the driver: the
@@ -491,14 +494,14 @@ object SparkEntry {
         .toDF("metric", "value").orderBy("metric")
     }),
     "q36_mentions_kind_filter" -> ((s, d) => {
-      KgOps.mentionsFiltered(s, s.read.parquet(t(d, "documents")), Set("SYS"))
+      KgOps.mentionsFiltered(s, Tables.read(s, d, "documents"), Set("SYS"))
         .orderBy(col("doc_id"), col("pos"))
     }),
     // open-web mention recall: rule-based noun phrases that are NOT
     // gazetteer hits (the reference's noun_chunks stand-in — a page with
     // out-of-gazetteer entities still yields mentions)
     "q38_np_mentions" -> ((s, d) => {
-      KgOps.npMentions(s, s.read.parquet(t(d, "documents")))
+      KgOps.npMentions(s, Tables.read(s, d, "documents"))
         .filter(!col("mention").isin(KgOps.DocGazetteer: _*))
         .orderBy(col("doc_id"), col("pos"), col("mention"))
     }),
@@ -533,7 +536,7 @@ object SparkEntry {
     // rank → micro-batch → optimizer-step assignment + reference loss
     // scale, exactly SQL-mirrorable
     "q48_grad_accum" -> ((s, d) => {
-      val st = graft.statements.MtbDocOps.statements(s, s.read.parquet(t(d, "documents")))
+      val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       graft.statements.GradAccum.assign(
         st.select(col("relation_id")), "relation_id",
         batchSize = 64, miniBatchSize = 4, epoch = 0)
@@ -545,7 +548,7 @@ object SparkEntry {
     // are xxhash64 and stay engine-side — the oracle checks the
     // aggregation semantics on the surface/degree columns)
     "q49_kg_graph_docs" -> ((s, d) => {
-      val pairs = KgOps.bandPairs(KgOps.mentions(s, s.read.parquet(t(d, "documents"))))
+      val pairs = KgOps.bandPairs(KgOps.mentions(s, Tables.read(s, d, "documents")))
       val triples = pairs.select(
         col("m1").as("subj"), lit("cooccur").as("pred"),
         col("m2").as("obj"), col("doc_id").cast("string").as("url"))
@@ -637,7 +640,7 @@ object SparkEntry {
     // Corpus path (Encode.pools et al., exercised by q43/q44), but every
     // stage is ANSI-expressible, so pools/split/sampling get EXACT oracles
     "q42_mtb_pools" -> ((s, d) => {
-      val st = graft.statements.MtbDocOps.statements(s, s.read.parquet(t(d, "documents")))
+      val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       graft.statements.Encode.pools(st)
         // array columns crash the driver's pandas sorter — surface as JSON
         .withColumn("relation_ids", to_json(col("relation_ids")))
@@ -764,7 +767,7 @@ object SparkEntry {
     // full Corpus/WordPiece composition as rows-only)
     "q55_masking" -> ((s, d) => {
       import s.implicits._
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
         .flatMap { case (id, text) =>
           val toks = graft.textnorm.PyText.pySplit(text)
@@ -821,7 +824,7 @@ object SparkEntry {
     }),
     "q45_negative_samples" -> ((s, d) => {
       import graft.statements.Encode
-      val st = graft.statements.MtbDocOps.statements(s, s.read.parquet(t(d, "documents")))
+      val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       // the per-entity pools re-group the pair pools (the same multiset per
       // entity as the statements give); the three pool references are one
       // subtree of the sampling join's plan, so its exchange runs once
@@ -833,7 +836,7 @@ object SparkEntry {
         .orderBy(col("e1_id"), col("e2_id"))
     }),
     "q46_positive_samples" -> ((s, d) => {
-      val st = graft.statements.MtbDocOps.statements(s, s.read.parquet(t(d, "documents")))
+      val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       graft.statements.MtbDataset.samplePositives(
         graft.statements.Encode.pools(st), maxSize = 4, epoch = 0)
         .select(col("e1_id"), col("e2_id"), col("set"), col("rid"))
@@ -842,7 +845,7 @@ object SparkEntry {
 
     // ---- streaming ----
     "q50_stream_hourly" -> ((s, d) => {
-      graft.streaming.EventStream.hourlyAgg(s, t(d, "events"))
+      graft.streaming.EventStream.hourlyAgg(s, Tables.path(d, "events"))
         // decimal internally (order-independent exact sums across
         // micro-batches); DOUBLE surfaced for the driver's pandas hasher
         .withColumn("total_value", col("total_value").cast("double"))
@@ -850,7 +853,7 @@ object SparkEntry {
     }),
 
     "q51_stream_sessions" -> ((s, d) => {
-      graft.streaming.EventStream.sessionize(s, t(d, "events"), gapMin = 30)
+      graft.streaming.EventStream.sessionize(s, Tables.path(d, "events"), gapMin = 30)
         .orderBy(col("user_id"), col("start_us"))
     }),
     // streaming KG ingest surfaced to the driver: the same fused pipeline
@@ -899,7 +902,7 @@ object SparkEntry {
     "q54_checkpoint_metrics" -> ((s, d) => {
       val root = java.nio.file.Files.createTempDirectory("graft_q54").toString
       val cm = new graft.io.CheckpointManager(s, root, "q54")
-      val docs = s.read.parquet(t(d, "documents"))
+      val docs = Tables.read(s, d, "documents")
       val mentions = cm.stage("mentions")(KgOps.mentions(s, docs))
       cm.stage("pairs")(KgOps.bandPairs(mentions))
       cm.metrics.groupBy(col("stage"))
@@ -944,13 +947,13 @@ object SparkEntry {
     // engine must actually PARSE the bytes (endianness, marker scan, chunk
     // layout) to reproduce them
     "q60_media_meta" -> ((s, d) => {
-      val media = Multimodal.mediaFixture(s.read.parquet(t(d, "documents")))
+      val media = Multimodal.mediaFixture(Tables.read(s, d, "documents"))
       Multimodal.decodeBatch(s, media, "doc_id", "payload")
         .select(col("doc_id"), col("kind"), col("width"), col("height"), col("byte_len"))
         .orderBy(col("doc_id"))
     }),
     "q61_media_bytes" -> ((s, d) => {
-      s.read.parquet(t(d, "documents"))
+      Tables.read(s, d, "documents")
         .select(col("doc_id"), octet_length(col("text")).as("byte_len"))
         .orderBy(col("doc_id"))
     })

@@ -115,7 +115,7 @@ object KgOps {
     * path runs with bit-identical ids. The struct min is lexicographic
     * (doc_id, pos), so ranking the flattened pair gives the same order. */
   def dictEncode(mentionsDf: DataFrame): DataFrame = {
-    // the dimension-sized first-seen table is cached (the xDict idiom): the
+    // the dimension-sized first-seen table is cached (the eDict idiom): the
     // rank probe's key pass populates it, the id attach reads it
     val firstSeen = mentionsDf
       .groupBy("mention")

@@ -23,31 +23,34 @@ import graft.ops.{DenseId, Salting}
   */
 object Encode {
 
-  /** x dictionary: window text -> dense id, first-appearance order. The
-    * window-text dictionary is near-fact-cardinality (windows are mostly
-    * unique), so the dense-id assignment must NOT be a global ranking
-    * window. The aggregated first-seen table is cached for the rank probe
-    * and the id attach ([[graft.Persist.within]]), and ids come from DenseId's
-    * bounded-driver rank table — no range exchange of the window text;
-    * above the driver bound the classic range-partitioned path runs.
-    *
-    * NOTE: the rank probe and the materialized id attach run when this is
-    * CALLED — callers that time stages must construct inside the timed
-    * window (MtbDataset.build's thunk probe). */
-  def xDict(st: DataFrame): DataFrame = {
-    val xFirst = st
+  /** First-seen order of each window text: (x_text, __d, __p), the input
+    * of [[xDict]]. */
+  def xFirstSeen(st: DataFrame): DataFrame =
+    st
       .withColumn("x_text", concat_ws(" ", col("tokens")))
       .groupBy(col("x_text"))
       .agg(min(struct(col("docOrd"), col("pairOrd"))).as("fs"))
       .select(
         col("x_text"),
         col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
-    graft.Persist.within(xFirst) {
-      DenseId
-        .withDenseIdProbed(xFirst, "x_id", Seq("__d", "__p"))
-        .select(col("x_text"), col("x_id"))
-    }
-  }
+
+  /** x dictionary: window text -> dense id, first-appearance order. The
+    * window-text dictionary is near-fact-cardinality (windows are mostly
+    * unique), so the dense-id assignment must NOT be a global ranking
+    * window: ids come from DenseId's bounded-driver rank table — no range
+    * exchange of the window text; above the driver bound the classic
+    * range-partitioned path runs.
+    *
+    * `xFirst` is the [[xFirstSeen]] table, held by the caller: the rank
+    * probe runs when this is CALLED (callers that time stages construct
+    * inside the timed window, MtbDataset.build's thunk probe) and
+    * populates it, and the returned id attach is lazy and reads it again.
+    * The dictionary is near-fact-sized and most callers never read it, so
+    * it is not materialized here. */
+  def xDict(xFirst: DataFrame): DataFrame =
+    DenseId
+      .withDenseIdProbed(xFirst, "x_id", Seq("__d", "__p"))
+      .select(col("x_text"), col("x_id"))
 
   /** Entity dictionary: e1 slot seen before e2 slot within a row. The
     * three-field first-seen order (docOrd, pairOrd, slot) packs losslessly

@@ -22,9 +22,10 @@ import graft.triples.TriplePipeline
   */
 object MtbDataset {
 
-  /** The built dataset. Its frames read two caches the Result owns (the
-    * statements and the tokenized relations); `close()` releases them, and
-    * the frames then still answer, by recomputation. */
+  /** The built dataset. Its frames read the caches the Result owns (the
+    * statements, the tokenized relations and, with `needDims`, the x
+    * dictionary's first-seen table); `close()` releases them, and the
+    * frames then still answer, by recomputation. */
   final case class Result(
       tokenizedRelations: DataFrame, // relation_id, token_ids, e1_span, e2_span, e1_id, e2_id
       pools: DataFrame,              // e1_id, e2_id, relation_ids, set
@@ -49,7 +50,10 @@ object MtbDataset {
     *   consume tokenizedRelations/pools (the pair-scoring and loss paths)
     *   otherwise pay the dictionary's groupBy + rank probe for output they
     *   discard. The "dict_x" probe stage is not emitted in that mode;
-    *   Result.xDim/eDim are null. */
+    *   Result.xDim/eDim are null.
+    *
+    * When a stage throws (or the probe does), the caches already held are
+    * released before the exception propagates. */
   def build(
       spark: SparkSession,
       pages: Dataset[WebPage],
@@ -63,10 +67,21 @@ object MtbDataset {
       probe: (String, () => DataFrame) => Unit = (_, f) => { f(); () }): Result = {
     import spark.implicits._
 
+    // every cache this build makes, in order: the Result owns them, or a
+    // stage that throws releases them
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += graft.Persist.hold(df); held.last }
+
     def stage(name: String)(f: => DataFrame): DataFrame = {
       var out: DataFrame = null
-      probe(name, () => { out = f; out })
-      require(out != null, s"probe for stage '$name' did not invoke the construction thunk")
+      try {
+        probe(name, () => { out = f; out })
+        require(out != null, s"probe for stage '$name' did not invoke the construction thunk")
+      } catch {
+        case e: Throwable =>
+          graft.Persist.release(held.toSeq: _*)
+          throw e
+      }
       out
     }
 
@@ -89,10 +104,14 @@ object MtbDataset {
         // deterministic order); dropping it before the cache trims every
         // cached/shuffled row
         .drop("url")
-        .transform(graft.Persist.hold)
+        .transform(hold)
     }
 
-    val xDim0 = if (needDims) stage("dict_x") { Encode.xDict(statements) } else null
+    // the x dictionary's first-seen table is held too: the rank probe
+    // populates it and the lazy id attach reads it, so a caller that never
+    // reads Result.xDim pays no attach pass
+    val xDim0 =
+      if (needDims) stage("dict_x") { Encode.xDict(hold(Encode.xFirstSeen(statements))) } else null
     // the entity dictionary is dimension-sized (distinct surface forms) and
     // is consumed three times (two broadcast builds in encodeFact + the
     // prune semi join) — eDict returns it materialized, so each broadcast
@@ -169,7 +188,7 @@ object MtbDataset {
         }
         .toDF("docOrd", "pairOrd", "e1_id", "e2_id", "token_ids", "e1_span", "e2_span")
         .filter(col("token_ids").isNotNull)
-        .transform(graft.Persist.hold)
+        .transform(hold)
     }
     val (xDim, eDim) =
       if (needDims) Encode.pruneDims(afterPool, xDim0, eDim0) else (null, null)
@@ -187,7 +206,7 @@ object MtbDataset {
       e2Pool = Encode.entityPoolFromPools(pools, "e2"),
       xDim = xDim,
       eDim = eDim)(
-      cached = Seq(statements, tokEnc))
+      cached = held.toSeq)
   }
 
   /** Pool shuffling iterator (§2.17): the reference re-shuffles the pool

@@ -30,12 +30,14 @@ object EventStream {
 
   /** The events table as a stream (a file path reads its parent DIRECTORY
     * through a glob filter), `ts` cast to the instant type watermarks need
-    * — value-preserving with the session TZ at UTC, reversed on output. */
+    * — value-preserving with the session TZ at UTC, reversed on output.
+    * The stream takes the declared events schema of [[graft.io.Tables]],
+    * so starting it reads no file footer and runs no inference job. */
   private def events(spark: SparkSession, eventsParquet: String): DataFrame = {
     val f = new java.io.File(eventsParquet)
     val (dir, glob) = if (f.isDirectory) (eventsParquet, "*") else (f.getParent, f.getName)
     spark.readStream
-      .schema(spark.read.parquet(eventsParquet).schema)
+      .schema(graft.io.Tables.Schemas("events"))
       .option("pathGlobFilter", glob)
       .parquet(dir)
       .withColumn("ts", col("ts").cast("timestamp"))

@@ -51,7 +51,7 @@ object PlanDump {
         of(graft.SparkEntry.canonicalizeKg(
           spark, graft.SparkEntry.kgTriples(spark, 512, canonical = false)))
       case "ivf_search" =>
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        val e = graft.io.Tables.read(spark, sfDir, "embeddings")
         val root = s"${sys.props("java.io.tmpdir")}/graft-ivf-plandump"
         val idx = graft.ops.IvfIndex.buildOrLoad(spark, e, root)
         of(idx.search(spark, e.filter(col("vec_id") < 32), 5))

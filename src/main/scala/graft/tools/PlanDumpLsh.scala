@@ -19,7 +19,7 @@ object PlanDumpLsh {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.builder(4, "graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.io.Tables.read(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val pairs = graft.link.MinHashLSH.similarPairs(
       spark, docs, "doc_id", "text", threshold = 0.8, shingleMode = "word")

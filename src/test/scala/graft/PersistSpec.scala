@@ -62,6 +62,36 @@ class PersistSpec extends AnyFunSuite {
     }
   }
 
+  test("MtbDataset.build: the Result owns its caches, and a throwing stage leaves none") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val pages = graft.fixtures.Corpus.generate(spark, 64)
+    val gaz = sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities))
+    val tok = sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer)
+    def build(probe: (String, () => org.apache.spark.sql.DataFrame) => Unit) =
+      statements.MtbDataset.build(spark, pages, gaz, tok, minCount = 2, minPoolSize = 2,
+        probe = probe)
+
+    // statements, the x dictionary's first-seen table and the tokenized
+    // relations
+    val ds = build((_, f) => { f(); () })
+    assert(cached == 3)
+    assert(ds.pools.count() > 0)
+    ds.close()
+    assert(cached == 0)
+
+    var atPools = -1
+    val e = intercept[IllegalStateException] {
+      build { (name, f) =>
+        f()
+        if (name == "pools") { atPools = cached; throw new IllegalStateException("pools failed") }
+      }
+    }
+    assert(e.getMessage == "pools failed")
+    assert(atPools == 3)
+    assert(cached == 0)
+  }
+
   test("streaming memory sinks leave no table behind and return equal rows") {
     def sinkTables = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_"))
     val events = s"$sf/events.parquet"
