@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted IVF-flat ANN index: build once, serve many (round-4 VERDICT
   * "What's missing" #2 — [[Similarity.ivfTopK]] retrained the quantizer on
@@ -35,6 +36,10 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
+  /** The schema of the `assigned/` layout, `list_id` from its directories. */
+  val AssignedSchema: StructType =
+    StructType.fromDDL("neighbor_id BIGINT, c_vec ARRAY<FLOAT>, list_id INT")
+
   final case class Index(
       root: String,
       version: Int,
@@ -43,9 +48,23 @@ object IvfIndex {
 
     private def dir = s"$root/v$version"
 
-    /** Top-k per query, probing `nProbe` lists. Only the probed
-      * partitions of the assigned layout are read (explicit partition
-      * pruning on list_id — the probed ids are at most nLists values,
+    /** The `lists` of the assigned layout: only their `list_id=`
+      * directories, read with the layout's declared schema, so building
+      * the read runs no job — nothing is inferred, and each read names at
+      * most Spark's parallel-discovery threshold of paths (more are listed
+      * by a job). No lists give an empty frame. */
+    def assigned(spark: SparkSession, lists: Seq[Int]): DataFrame = {
+      val base = s"$dir/assigned"
+      val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+      lists.grouped(perRead)
+        .map(ids => spark.read.schema(AssignedSchema).option("basePath", base)
+          .parquet(ids.map(i => s"$base/list_id=$i"): _*))
+        .reduceOption(_ unionAll _)
+        .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), AssignedSchema))
+    }
+
+    /** Top-k per query, probing `nProbe` lists. Only the probed lists are
+      * read ([[assigned]]; the probed ids are at most nLists values,
       * collected from the broadcastable query side). */
     def search(
         spark: SparkSession,
@@ -58,9 +77,8 @@ object IvfIndex {
       val q = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("q_vec"))
       val probes = Similarity.probeTable(spark, q, centroids, nProbe)
       val probedLists = probes.select("list_id").distinct().as[Int].collect().sorted
-      val assigned = spark.read.parquet(s"$dir/assigned")
-        .filter(col("list_id").isin(probedLists.map(Int.box): _*))
-      Similarity.rerankTopK(assigned.join(broadcast(probes), Seq("list_id")), k)
+      Similarity.rerankTopK(
+        assigned(spark, probedLists.toSeq).join(broadcast(probes), Seq("list_id")), k)
     }
   }
 

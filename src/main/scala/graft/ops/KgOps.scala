@@ -85,26 +85,23 @@ object KgOps {
     mentionsWithKinds(spark, docs, surfaces)
       .filter(col("kind").isin(allowed.toSeq: _*))
 
-  /** Banded pair counts: ordered mention pairs with 1 <= gap <= window —
-    * the row-local theta self-join (§2.8's band predicate) aggregated per
-    * doc: (doc_id, n_pairs). */
-  def bandPairCounts(mentionsDf: DataFrame, window: Int = 40): DataFrame = {
+  /** The banded self-join (§2.8's band predicate, row-local): ordered
+    * mention pairs of one document with 1 <= p2 - p1 <= 40, as
+    * (doc_id, m1, p1, m2, p2). */
+  private[graft] def bandJoin(mentionsDf: DataFrame): DataFrame = {
     val a = mentionsDf.select(col("doc_id"), col("mention").as("m1"), col("pos").as("p1"))
     val b = mentionsDf.select(col("doc_id"), col("mention").as("m2"), col("pos").as("p2"))
     a.join(b, Seq("doc_id"))
-      .filter(col("p2") - col("p1") >= 1 && col("p2") - col("p1") <= window)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_pairs"))
+      .filter(col("p2") - col("p1") >= 1 && col("p2") - col("p1") <= 40)
   }
 
+  /** Banded pair counts per doc: (doc_id, n_pairs). */
+  def bandPairCounts(mentionsDf: DataFrame): DataFrame =
+    bandJoin(mentionsDf).groupBy("doc_id").agg(count(lit(1)).as("n_pairs"))
+
   /** Banded mention pairs with surfaces (for frequency/graph stages). */
-  def bandPairs(mentionsDf: DataFrame, window: Int = 40): DataFrame = {
-    val a = mentionsDf.select(col("doc_id"), col("mention").as("m1"), col("pos").as("p1"))
-    val b = mentionsDf.select(col("doc_id"), col("mention").as("m2"), col("pos").as("p2"))
-    a.join(b, Seq("doc_id"))
-      .filter(col("p2") - col("p1") >= 1 && col("p2") - col("p1") <= window)
-      .select(col("doc_id"), col("m1"), col("m2"))
-  }
+  def bandPairs(mentionsDf: DataFrame): DataFrame =
+    bandJoin(mentionsDf).select(col("doc_id"), col("m1"), col("m2"))
 
   /** First-appearance dense ids for mention surfaces: (mention, e_id) —
     * the §2.9 dictionary-encode over an arbitrary mention table. The
@@ -140,16 +137,12 @@ object KgOps {
 
   /** Mention co-occurrence graph → connected components over mention ids:
     * (e_id, component). */
-  def mentionComponents(
-      spark: SparkSession,
-      mentionsDf: DataFrame,
-      window: Int = 40,
-      minCount: Long = 1): DataFrame = {
+  def mentionComponents(spark: SparkSession, mentionsDf: DataFrame): DataFrame = {
     // three consumers (dict, pairs, and the final left join) — cached so
     // the upstream mention flatMap runs once, not three times
     graft.Persist.within(mentionsDf) {
       val dict = dictEncode(mentionsDf)
-      val freq = pairFreq(bandPairs(mentionsDf, window), minCount)
+      val freq = pairFreq(bandPairs(mentionsDf), 1L)
       val edges = freq
         .join(dict.withColumnRenamed("mention", "m1").withColumnRenamed("e_id", "src"), Seq("m1"))
         .join(dict.withColumnRenamed("mention", "m2").withColumnRenamed("e_id", "dst"), Seq("m2"))

@@ -24,15 +24,18 @@ import graft.ops.{DenseId, Salting}
 object Encode {
 
   /** First-seen order of each window text: (x_text, __d, __p), the input
-    * of [[xDict]]. */
-  def xFirstSeen(st: DataFrame): DataFrame =
+    * of [[xDict]]. Statements built with dims carry every window's text,
+    * so the key is declared non-null, as the dictionary's schema has it. */
+  def xFirstSeen(st: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.expressions.KnownNotNull
     st
-      .withColumn("x_text", concat_ws(" ", col("tokens")))
-      .groupBy(col("x_text"))
+      .groupBy(GraftBridge.column(KnownNotNull(GraftBridge.expression(col("x_text")))).as("x_text"))
       .agg(min(struct(col("docOrd"), col("pairOrd"))).as("fs"))
       .select(
         col("x_text"),
         col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
+  }
 
   /** x dictionary: window text -> dense id, first-appearance order. The
     * window-text dictionary is near-fact-cardinality (windows are mostly
@@ -77,13 +80,14 @@ object Encode {
     }
   }
 
-  /** Facts with entity ids attached.
+  /** Facts with entity ids attached, carrying the statements' encoded
+    * columns.
     *
     * The x dictionary is NOT joined back onto the facts: no downstream
     * consumer reads a per-row x_id (the reference keeps D[x -> id] as a
     * side map too), and the join was a full-fact sort-merge on long
     * window-text keys — the single widest shuffle of the chain. Pruning
-    * semi-joins the dim on recomputed x_text instead (pruneDims).
+    * semi-joins the dim on the facts' x_text instead (pruneDims).
     * The ENTITY dictionary is dimension-sized (distinct surface forms),
     * so its two joins broadcast explicitly — DenseId output carries no
     * stats, and without the hint AQE plans fact-shuffling sort-merges. */
@@ -94,30 +98,37 @@ object Encode {
       .join(broadcast(
         eDim.withColumnRenamed("e_text", "e2").withColumnRenamed("e_id", "e2_id")), Seq("e2"))
       .select(
-        col("docOrd"), col("pairOrd"),
-        col("e1s"), col("e1e"), col("e2s"), col("e2e"),
-        col("e1_id"), col("e2_id"), col("e1"), col("e2"), col("tokens"))
+        col("docOrd"), col("pairOrd"), col("e1_id"), col("e2_id"), col("e1"), col("e2"),
+        col("x_text"), col("token_ids"), col("e1_span"), col("e2_span"))
 
   /** Pair-frequency filter (`_remove_low_freq_combs`, min_count>=2 at build;
-    * min_pool_size at preprocess): partial+final hash agg then a semi join
-    * back — no row-level data ever reaches the driver. */
-  def freqFilter(fact: DataFrame, minCount: Int): DataFrame = {
+    * min_pool_size at preprocess): the rows of `fact` whose `keys` occur at
+    * least `minCount` times in `counted` (the fact itself, or a cheaper
+    * frame with the same key groups). Regime split: up to
+    * `Regime.MaxBroadcastPairs` surviving keys, the collected keep set IS
+    * the broadcast (a LocalRelation, not a re-run aggregation) and the fact
+    * side never exchanges; above the budget the distributed semi join's
+    * shuffle is the right shape. */
+  def freqFilter(fact: DataFrame, counted: DataFrame, keys: Seq[String], minCount: Int): DataFrame = {
     if (minCount <= 1) return fact
-    val keep = fact
-      .groupBy(col("e1_id"), col("e2_id"))
+    val keep = counted
+      .groupBy(keys.map(col): _*)
       .count()
       .filter(col("count") >= minCount)
-      .select(col("e1_id"), col("e2_id"))
-    fact.join(keep, Seq("e1_id", "e2_id"), "left_semi")
+      .select(keys.map(col): _*)
+    graft.Regime.collectUpTo(keep, graft.Regime.MaxBroadcastPairs) match {
+      case Some(local) =>
+        val localDf = fact.sparkSession.createDataFrame(java.util.Arrays.asList(local: _*), keep.schema)
+        fact.join(broadcast(localDf), keys, "left_semi")
+      case None => fact.join(keep, keys, "left_semi")
+    }
   }
 
   /** Prune dimension tables to surviving fact keys (map cleanup,
     * `mtb_data_loader.py:541-559`) — semi joins. x pruning keys on the
-    * recomputed window text (facts carry no x_id, see encodeFact). */
+    * window text (facts carry no x_id, see encodeFact). */
   def pruneDims(fact: DataFrame, xDim: DataFrame, eDim: DataFrame): (DataFrame, DataFrame) = {
-    val xKeep = xDim.join(
-      fact.select(concat_ws(" ", col("tokens")).as("x_text")).distinct(),
-      Seq("x_text"), "left_semi")
+    val xKeep = xDim.join(fact.select(col("x_text")).distinct(), Seq("x_text"), "left_semi")
     val eKeys = fact.select(col("e1_id").as("e_id"))
       .unionAll(fact.select(col("e2_id").as("e_id"))).distinct()
     val eKeep = eDim.join(eKeys, Seq("e_id"), "left_semi")

@@ -88,8 +88,8 @@ object Markers {
   /** Memoized wordpieces + their vocab ids for one surface token — the
     * per-partition cache value. Caching the ID array too means the vocab
     * HashMap is consulted once per DISTINCT token, not once per emitted
-    * wordpiece per statement (the tokenize stage re-encodes a near-closed
-    * vocabulary; this is the hot allocation path of the wide chain). */
+    * wordpiece per statement (statement windows re-encode a near-closed
+    * vocabulary; this is the hot allocation path of both chains). */
   final case class TokPieces(pieces: Array[String], ids: Array[Int])
 
   /** Tokenize the marker-bearing string and relocate spans to wordpiece
@@ -100,7 +100,7 @@ object Markers {
       tokens: scala.collection.Seq[String],
       e1: Span,
       e2: Span): Option[Encoded] =
-    encodeCached(tokenizer, null)(tokens, e1, e2)
+    encodeWindow(tokenizer, null, tokens, new Array[TokPieces](tokens.length), 0, tokens.length, e1, e2)
 
   /** encode with per-partition memoization: the tokens are resolved
     * through the memo, then [[encodeWindow]] encodes the whole range. */

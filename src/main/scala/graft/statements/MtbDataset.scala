@@ -1,18 +1,20 @@
 package graft.statements
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.annotate.Gazetteer
+import graft.annotate.{Annotator, Gazetteer}
 import graft.schema.WebPage
 import graft.tokenize.BertTokenizer
 import graft.triples.TriplePipeline
 
 /** MTB pre-training dataset builder — the distributed equivalent of the
   * reference's `build_dataset` + `preprocess` chain (SURVEY.md §3.1):
-  * statements → dict-encode (§2.9) → min_count filter (§2.10) →
-  * min_pool_size filter → marker insert + tokenize + span fixup (§2.11-13)
+  * statements with marker insert + tokenize + span fixup (§2.11-13) →
+  * dict-encode (§2.9) → min_count filter (§2.10) → min_pool_size filter
   * → relation ids → entity-pair pools with train/validation split
   * (§1.8, §2.16).
   *
@@ -49,8 +51,8 @@ object MtbDataset {
     *   and the pruned dims are skipped entirely — callers that only
     *   consume tokenizedRelations/pools (the pair-scoring and loss paths)
     *   otherwise pay the dictionary's groupBy + rank probe for output they
-    *   discard. The "dict_x" probe stage is not emitted in that mode;
-    *   Result.xDim/eDim are null.
+    *   discard. The "dict_x" probe stage is not emitted in that mode, no
+    *   statement carries its window text, and Result.xDim/eDim are null.
     *
     * When a stage throws (or the probe does), the caches already held are
     * released before the exception propagates. */
@@ -61,8 +63,6 @@ object MtbDataset {
       tokenizer: Broadcast[BertTokenizer],
       minCount: Int = 2,
       minPoolSize: Int = 8,
-      windowSize: Int = 40,
-      splitSeed: Long = 42L,
       needDims: Boolean = true,
       probe: (String, () => DataFrame) => Unit = (_, f) => { f(); () }): Result = {
     import spark.implicits._
@@ -85,25 +85,44 @@ object MtbDataset {
       out
     }
 
-    // statements as a DataFrame (docOrd, pairOrd, tokens, spans, e1, e2)
-    // — cached (owned by the Result): the dictionaries and the fact join
-    // scan it four times; without the cache the whole
-    // scan→annotate→window pass re-runs per consumer
+    // one row per statement window, encoded where it is found:
+    // (docOrd, pairOrd, x_text, e1, e2, token_ids, e1_span, e2_span), with
+    // token_ids null where the markers vanish (the reference's ValueError
+    // path; those rows still count in the dictionaries and the pair
+    // filter, and are dropped after it). Each document is walked once by
+    // TriplePipeline.encodeDoc, with the fused pass's per-partition
+    // wordpiece memo. Cached (owned by the Result): the dictionaries, the
+    // keep-set count and the fact join scan it.
     val statements = stage("statements") {
       // the default Config's mention filters are the identity: the MTB
       // path takes every gazetteer hit
-      val cfg = TriplePipeline.Config(windowSize = windowSize)
+      val cfg = TriplePipeline.Config()
       TriplePipeline
         .normalizePages(pages, cfg)
         .as[(String, String)]
-        .flatMap { case (url, textNorm) =>
-          TriplePipeline.docStatements(url, textNorm, gaz.value, cfg)
+        .mapPartitions { rows =>
+          val tok = tokenizer.value
+          val g = gaz.value
+          val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
+          rows.flatMap { case (url, textNorm) =>
+            val doc = TriplePipeline.filterMentions(Annotator.annotate(url, textNorm, g), cfg)
+            val docOrd = TriplePipeline.stableDocOrd(url)
+            val out = ArrayBuffer.empty[
+              (Long, Int, String, String, String, Array[Int], Array[Int], Array[Int])]
+            TriplePipeline.encodeDoc(doc, tok, cache, cfg.windowSize) {
+              (pairOrd, rStart, rEnd, i1, i2, enc) =>
+                val x =
+                  if (!needDims) null
+                  else doc.tokens.view.slice(rStart, rEnd).mkString(" ")
+                out += ((docOrd, pairOrd, x, doc.mentions(i1).text, doc.mentions(i2).text,
+                  if (enc == null) null else enc.tokenIds,
+                  if (enc == null) null else Array(enc.e1Span.start, enc.e1Span.end),
+                  if (enc == null) null else Array(enc.e2Span.start, enc.e2Span.end)))
+            }
+            out.iterator
+          }
         }
-        .toDF()
-        // url is identification-only in the MTB path (docOrd carries the
-        // deterministic order); dropping it before the cache trims every
-        // cached/shuffled row
-        .drop("url")
+        .toDF("docOrd", "pairOrd", "x_text", "e1", "e2", "token_ids", "e1_span", "e2_span")
         .transform(hold)
     }
 
@@ -122,72 +141,22 @@ object MtbDataset {
     // min_count (build) then min_pool_size (preprocess) both filter on the
     // SAME key's count — and dropping whole (e1_id, e2_id) groups leaves
     // every surviving group's count unchanged, so the chained filters are
-    // exactly one filter at max(minCount, minPoolSize): one count-agg +
-    // one semi join instead of two of each.
-    //
-    // The keep set is computed from the cached STATEMENTS on the surface
-    // (e1, e2) text keys — a bijection of the id keys, so the groups are
-    // identical — which column-prunes the count-agg scan to two string
-    // columns instead of recomputing the whole dictionary join a second
-    // time as the semi join's build side. Regime split: up to
-    // `Regime.MaxBroadcastPairs` surviving pairs the collected keep set IS
-    // the broadcast (a LocalRelation, not a re-run aggregation) — the fact
-    // side never exchanges, and the filter fuses into the tokenize
-    // mapPartitions stage as one narrow chain. Above the budget (a huge
-    // pair dictionary) the distributed semi join's shuffle is the right
-    // shape.
-    val minKeep = math.max(minCount, minPoolSize)
-    var afterPool: DataFrame = null
-
-    // marker insertion + tokenize + span fixup; drop rows whose markers
-    // vanish (ValueError path) — counted by the caller via metrics.
-    // Per-partition wordpiece memo, same as the fused inference pipeline:
-    // statement windows draw from a near-closed vocabulary, so each
-    // distinct surface tokenizes once per partition, not once per row.
+    // exactly one filter at max(minCount, minPoolSize). The keep set is
+    // counted on the cached statements' surface (e1, e2) keys — a
+    // bijection of the id keys, so the groups are identical — which
+    // column-prunes the count to two string columns.
     //
     // Cached HERE (not after DenseId): the relation-id key pass populates
     // the cache, and the id attach and every downstream consumer read it
-    // instead of re-running the join+tokenize chain.
+    // instead of re-running the filter join.
+    var afterPool: DataFrame = null
     val tokEnc = stage("filter_tokenize_encode") {
-      afterPool =
-        if (minKeep <= 1) fact
-        else {
-          val keepPairs = statements
-            .groupBy(col("e1"), col("e2")).count()
-            .filter(col("count") >= minKeep)
-            .select(col("e1"), col("e2"))
-          graft.Regime.collectUpTo(keepPairs, graft.Regime.MaxBroadcastPairs) match {
-            case Some(local) =>
-              val localDf = spark.createDataFrame(
-                java.util.Arrays.asList(local: _*), keepPairs.schema)
-              fact.join(broadcast(localDf), Seq("e1", "e2"), "left_semi")
-            case None => fact.join(keepPairs, Seq("e1", "e2"), "left_semi")
-          }
-        }
+      afterPool = Encode.freqFilter(
+        fact, statements, Seq("e1", "e2"), math.max(minCount, minPoolSize))
       afterPool
-        .mapPartitions { rows =>
-          val tok = tokenizer.value
-          val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
-          rows.map { row =>
-            // no defensive .toSeq copy: encodeCached only reads the
-            // row-backed sequence inside this map call
-            val tokens: scala.collection.Seq[String] =
-              row.getAs[scala.collection.Seq[String]]("tokens")
-            val e1 = graft.schema.Span(row.getAs[Int]("e1s"), row.getAs[Int]("e1e"))
-            val e2 = graft.schema.Span(row.getAs[Int]("e2s"), row.getAs[Int]("e2e"))
-            val encOpt = Markers.encodeCached(tok, cache)(tokens, e1, e2)
-            (
-              row.getAs[Long]("docOrd"),
-              row.getAs[Int]("pairOrd"),
-              row.getAs[Long]("e1_id"),
-              row.getAs[Long]("e2_id"),
-              encOpt.map(_.tokenIds).orNull,
-              encOpt.map(e => Seq(e.e1Span.start, e.e1Span.end)).orNull,
-              encOpt.map(e => Seq(e.e2Span.start, e.e2Span.end)).orNull)
-          }
-        }
-        .toDF("docOrd", "pairOrd", "e1_id", "e2_id", "token_ids", "e1_span", "e2_span")
         .filter(col("token_ids").isNotNull)
+        .select(col("docOrd"), col("pairOrd"), col("e1_id"), col("e2_id"),
+          col("token_ids"), col("e1_span"), col("e2_span"))
         .transform(hold)
     }
     val (xDim, eDim) =
@@ -196,7 +165,7 @@ object MtbDataset {
     // dense relation ids over the cached tokenized rows; not cached again:
     // each consumer's id attach is a cheap read of the tokEnc cache
     val withIds = stage("relation_ids") { Encode.withRelationIds(tokEnc) }
-    val pools = stage("pools") { Encode.pools(withIds, splitSeed) }
+    val pools = stage("pools") { Encode.pools(withIds) }
     Result(
       tokenizedRelations = withIds,
       pools = pools,

@@ -95,7 +95,8 @@ object Windowing {
   /** The window geometry of one document: visits every kept ordered
     * mention pair (the reference's product order, `i1` outer) with its
     * window offsets. Nothing is sliced; [[resolve]], [[statements]] and
-    * the fused triple pass all run on it. */
+    * `TriplePipeline.encodeDoc` (the fused triple pass and the MTB
+    * statements stage) all run on it. */
   def foreachWindow(doc: AnnotatedDoc, windowSize: Int)(visit: WindowVisitor): Unit = {
     val n = doc.mentions.length
     var i = 0
@@ -137,8 +138,10 @@ object Windowing {
       m2.text)
   }
 
-  /** All relation statements of one document: ordered product of the
-    * deduped mentions (directed edges of the mention graph). */
+  /** All relation statements of one document, sliced: ordered product of
+    * the deduped mentions (directed edges of the mention graph). The
+    * engine encodes over offsets instead; tests check it against this
+    * sliced form, which perfbench's traced loop also runs. */
   def statements(doc: AnnotatedDoc, docOrd: Long, windowSize: Int = 40): Seq[StatementRow] = {
     val out = ArrayBuffer.empty[StatementRow]
     foreachWindow(doc, windowSize) { (rStart, rEnd, i1, i2) =>

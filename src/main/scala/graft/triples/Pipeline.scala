@@ -119,41 +119,35 @@ object TriplePipeline {
     }
   }
 
-  /** One document's statement windows: annotate → the Config's mention
-    * filters → pair windows, ordered by [[stableDocOrd]]. The MTB
-    * dataset's statements stage runs this. */
-  def docStatements(
-      url: String,
-      textNorm: String,
-      gaz: Gazetteer,
-      cfg: Config): Seq[Windowing.StatementRow] =
-    Windowing.statements(
-      filterMentions(Annotator.annotate(url, textNorm, gaz), cfg),
-      stableDocOrd(url),
-      cfg.windowSize)
+  /** Receives one kept window of [[encodeDoc]]: its index among the
+    * document's kept windows (pairOrd), its offsets `[rStart, rEnd)`, its
+    * ordered mention pair and its encoding, or null where the markers
+    * vanish in tokenization. A SAM trait, so nothing is boxed. */
+  trait EncodedWindowVisitor {
+    def apply(pairOrd: Int, rStart: Int, rEnd: Int, i1: Int, i2: Int, enc: Markers.Encoded): Unit
+  }
 
-  /** The fused pass's per-document work: every kept window of `doc`,
-    * encoded over window offsets by [[Markers.encodeWindow]] — no token
-    * slices, and one doc-sized piece array, so each document token costs
-    * one memo lookup however many windows hold it. Yields (e1, e2,
-    * encoding) in [[docStatements]] order; windows whose markers vanish
-    * in tokenization are dropped. */
+  /** The one per-document statement walk: every window
+    * [[Windowing.foreachWindow]] keeps, in its order, encoded over window
+    * offsets by [[Markers.encodeWindow]] — no token slices, and one
+    * doc-sized piece array, so each document token costs one memo lookup
+    * however many windows hold it. The fused triple pass and the MTB
+    * dataset's statements stage both run on it. */
   def encodeDoc(
       doc: AnnotatedDoc,
       tok: BertTokenizer,
       cache: java.util.HashMap[String, Markers.TokPieces],
-      windowSize: Int): ArrayBuffer[(String, String, Markers.Encoded)] = {
-    val out = ArrayBuffer.empty[(String, String, Markers.Encoded)]
+      windowSize: Int)(visit: EncodedWindowVisitor): Unit = {
     val pieces = new Array[Markers.TokPieces](doc.tokens.length)
+    var pairOrd = 0
     Windowing.foreachWindow(doc, windowSize) { (rStart, rEnd, i1, i2) =>
       val m1 = doc.mentions(i1)
       val m2 = doc.mentions(i2)
-      Markers
-        .encodeWindow(tok, cache, doc.tokens, pieces, rStart, rEnd,
-          Span(m1.start, m1.end), Span(m2.start, m2.end))
-        .foreach(enc => out += ((m1.text, m2.text, enc)))
+      val enc = Markers.encodeWindow(tok, cache, doc.tokens, pieces, rStart, rEnd,
+        Span(m1.start, m1.end), Span(m2.start, m2.end))
+      visit(pairOrd, rStart, rEnd, i1, i2, enc.orNull)
+      pairOrd += 1
     }
-    out
   }
 
   /** Full pipeline to (subj, pred, obj, url) triples: [[normalizePages]]
@@ -214,9 +208,13 @@ object TriplePipeline {
         val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
         val statements = rows.flatMap { case (url, textNorm) =>
           val doc = filterMentions(Annotator.annotate(url, textNorm, g), cfg)
-          encodeDoc(doc, tok, cache, cfg.windowSize).iterator.map { case (e1, e2, enc) =>
-            (e1, e2, url, enc.tokenIds, enc.e1Span.start, enc.e2Span.start)
+          // windows whose markers vanish are dropped
+          val out = ArrayBuffer.empty[(String, String, String, Array[Int], Int, Int)]
+          encodeDoc(doc, tok, cache, cfg.windowSize) { (_, _, _, i1, i2, enc) =>
+            if (enc != null) out += ((doc.mentions(i1).text, doc.mentions(i2).text, url,
+              enc.tokenIds, enc.e1Span.start, enc.e2Span.start))
           }
+          out.iterator
         }
         statements.grouped(batchSize).flatMap { group =>
           val batch = group.toArray

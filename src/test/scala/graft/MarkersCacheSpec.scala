@@ -19,13 +19,21 @@ class MarkersCacheSpec extends AnyFunSuite {
 
   private type Enc = (String, String, Seq[Int], Span, Span)
 
-  /** The fused pass's encodings of one annotated doc. */
+  /** The fused pass's encodings of one annotated doc: the walk's
+    * non-null encodings, whose window indexes count every kept window. */
   private def fused(
       doc: AnnotatedDoc,
-      cache: java.util.HashMap[String, Markers.TokPieces]): Seq[Enc] =
-    TriplePipeline.encodeDoc(doc, tok, cache, 40).toSeq.map { case (e1, e2, enc) =>
-      (e1, e2, enc.tokenIds.toSeq, enc.e1Span, enc.e2Span)
+      cache: java.util.HashMap[String, Markers.TokPieces]): Seq[Enc] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Enc]
+    var windows = 0
+    TriplePipeline.encodeDoc(doc, tok, cache, 40) { (pairOrd, _, _, i1, i2, enc) =>
+      assert(pairOrd == windows)
+      windows += 1
+      if (enc != null)
+        out += ((doc.mentions(i1).text, doc.mentions(i2).text, enc.tokenIds.toSeq, enc.e1Span, enc.e2Span))
     }
+    out.toSeq
+  }
 
   /** Reference-shaped encode: tokenize the joined marker-bearing string,
     * spans from the first index of each marker. */

@@ -40,15 +40,19 @@ class PipelineSpec extends AnyFunSuite {
     (k, rel2idx, idx2rel)
   }
 
+  /** One page's annotated document, by the per-row functions, no Spark. */
+  private def annotated(p: WebPage): graft.schema.AnnotatedDoc = {
+    val article = graft.textnorm.ArticleAssembly.assembleArticle(p.text.split("\n", -1).toSeq)
+    val norm = graft.textnorm.Normalizer.normalize(
+      graft.textnorm.CleanSent.processTextlines(Seq(article)))
+    Annotator.annotate(p.url, norm, gaz)
+  }
+
   /** Sequential oracle: same per-row functions, driver loop, no Spark. */
   private def sequentialTriples(pages: Seq[WebPage]): Seq[Triple] = {
     val (kernel, _, idx2rel) = trainedKernel
     pages.filter(_.lang == "en").flatMap { p =>
-      val article = graft.textnorm.ArticleAssembly
-        .assembleArticle(p.text.split("\n", -1).toSeq)
-      val norm = graft.textnorm.Normalizer.normalize(
-        graft.textnorm.CleanSent.processTextlines(Seq(article)))
-      val doc = Annotator.annotate(p.url, norm, gaz)
+      val doc = annotated(p)
       Windowing.statements(doc, TriplePipeline.stableDocOrd(p.url)).flatMap { st =>
         Markers.encode(tok)(st.tokens, Span(st.e1s, st.e1e), Span(st.e2s, st.e2e)).map {
           enc =>
@@ -134,6 +138,37 @@ class PipelineSpec extends AnyFunSuite {
       .sortBy(_._1)
     assert(rows.map(_._1).toSeq == rows.indices.map(_.toLong))
     assert(rows.map(r => (r._2, r._3)).toSeq == rows.map(r => (r._2, r._3)).sortBy(identity).toSeq)
+  }
+
+  test("MTB encodings == sliced statements + uncached encode per page, dropped windows absent") {
+    val sc = spark.sparkContext
+    val n = 48
+    val res = MtbDataset.build(
+      spark, Corpus.generate(spark, n), sc.broadcast(gaz), sc.broadcast(tok),
+      minCount = 1, minPoolSize = 1)
+    type Enc = (Long, Int, Seq[Int], Seq[Int], Seq[Int])
+    val got: Seq[Enc] =
+      try res.tokenizedRelations
+        .select("docOrd", "pairOrd", "token_ids", "e1_span", "e2_span").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2), r.getSeq[Int](3), r.getSeq[Int](4)))
+        .toSeq.sortBy(r => (r._1, r._2))
+      finally res.close()
+    var windows = 0
+    val want: Seq[Enc] = (0L until n.toLong).map(Corpus.page).filter(_.lang == "en").flatMap { p =>
+      val doc = annotated(p)
+      val sts = Windowing.statements(doc, TriplePipeline.stableDocOrd(p.url))
+      windows += sts.length
+      sts.flatMap { st =>
+        Markers.encode(tok)(st.tokens, Span(st.e1s, st.e1e), Span(st.e2s, st.e2e)).map { e =>
+          (st.docOrd, st.pairOrd, e.tokenIds.toSeq,
+            Seq(e.e1Span.start, e.e1Span.end), Seq(e.e2Span.start, e.e2Span.end))
+        }
+      }
+    }.sortBy(r => (r._1, r._2))
+    assert(want.length > 100, s"only ${want.length} encoded statements")
+    assert(got == want,
+      s"diff: extra=${got.diff(want).take(3)} missing=${want.diff(got).take(3)}")
+    info(s"$windows windows, ${windows - want.length} dropped")
   }
 
   test("labelArray indexes labels by id and rejects ids that are not 0 until n") {

@@ -1,15 +1,19 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SessionProbe
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Tables
+import graft.ops.{IvfIndex, Similarity}
 
-/** The input-table catalog: every declared schema is the schema Spark
-  * infers from the table's files, and a read with it runs no job. */
+/** The input-table catalog and the IVF index layout: every declared
+  * schema is the schema Spark infers from the files, and a read with it
+  * runs no job. */
 class TablesSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSpecSession.create("tables-spec")
@@ -38,32 +42,60 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
-  test("Tables.read runs no job; spark.read.parquet of the same path runs one") {
+  /** Jobs `body` starts on this thread, counted once the bus is drained. */
+  private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val dir = dirs.head
-    /** Jobs `body` starts on this thread, counted once the bus is drained. */
-    def jobsOf(body: => Unit): Int = {
-      val group = s"tables-spec-${System.nanoTime()}"
-      val n = new AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-            n.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "tables-spec", interruptOnCancel = false)
-        body
-        SessionProbe.drainBus(sc)
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-      n.get
+    val group = s"tables-spec-${System.nanoTime()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
     }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "tables-spec", interruptOnCancel = false)
+      body
+      SessionProbe.drainBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("Tables.read runs no job; spark.read.parquet of the same path runs one") {
+    val dir = dirs.head
     for (name <- Seq("documents", "events")) {
       assert(jobsOf(Tables.read(spark, dir, name)) == 0, name)
       assert(jobsOf(spark.read.parquet(Tables.path(dir, name))) == 1, name)
     }
+  }
+
+  test("IvfIndex reads only the probed lists, with no job to build the read") {
+    val e = Tables.read(spark, dirs.head, "embeddings")
+    val idx = IvfIndex.build(spark, e, Files.createTempDirectory("tables-spec-ivf").toString)
+    val base = s"${idx.root}/v${idx.version}/assigned"
+    assert(spark.read.parquet(base).schema == IvfIndex.AssignedSchema)
+    // every list: more directories than one read lists without a job
+    val all = 0 until idx.nLists
+    assert(all.length > 32)
+    assert(jobsOf(idx.assigned(spark, all)) == 0)
+    assert(jobsOf(idx.assigned(spark, Seq(3))) == 0)
+    assert(jobsOf(idx.assigned(spark, Seq.empty)) == 0)
+    assert(idx.assigned(spark, Seq.empty).collect().isEmpty)
+    assert(idx.assigned(spark, all).count() == e.count())
+    assert(idx.assigned(spark, Seq(3)).collect().forall(_.getInt(2) == 3))
+    // the search equals the rerank over the whole layout joined with the
+    // probes, and an empty query side gives an empty result
+    val q = e.filter(col("vec_id") < 32)
+    val probes = Similarity.probeTable(spark,
+      q.select(col("vec_id").as("query_id"), col("embedding").as("q_vec")), idx.centroids, 16)
+    val want = Similarity.rerankTopK(
+      spark.read.parquet(base).join(broadcast(probes), Seq("list_id")), 5)
+    val got = idx.search(spark, q, 5)
+    assert(got.collect().toSet == want.collect().toSet)
+    assert(got.count() == 32 * 5)
+    assert(idx.search(spark, q.limit(0), 5).collect().isEmpty)
   }
 }
