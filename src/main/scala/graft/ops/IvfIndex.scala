@@ -52,11 +52,13 @@ object IvfIndex {
       * directories, read with the layout's declared schema, so building
       * the read runs no job — nothing is inferred, and each read names at
       * most Spark's parallel-discovery threshold of paths (more are listed
-      * by a job). No lists give an empty frame. */
+      * by a job). A list no row was assigned to has no directory (a
+      * centroid can keep no members, [[Similarity.trainCentroids]]) and
+      * is skipped; no lists give an empty frame. */
     def assigned(spark: SparkSession, lists: Seq[Int]): DataFrame = {
       val base = s"$dir/assigned"
       val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
-      lists.grouped(perRead)
+      lists.filter(i => Files.isDirectory(Paths.get(base, s"list_id=$i"))).grouped(perRead)
         .map(ids => spark.read.schema(AssignedSchema).option("basePath", base)
           .parquet(ids.map(i => s"$base/list_id=$i"): _*))
         .reduceOption(_ unionAll _)

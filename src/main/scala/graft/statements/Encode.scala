@@ -24,18 +24,16 @@ import graft.ops.{DenseId, Salting}
 object Encode {
 
   /** First-seen order of each window text: (x_text, __d, __p), the input
-    * of [[xDict]]. Statements built with dims carry every window's text,
-    * so the key is declared non-null, as the dictionary's schema has it. */
-  def xFirstSeen(st: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+    * of [[xDict]]. Statements built with dims carry every window's text;
+    * the coalesce only types the key non-null, as the dictionary's schema
+    * has it. */
+  def xFirstSeen(st: DataFrame): DataFrame =
     st
-      .groupBy(GraftBridge.column(KnownNotNull(GraftBridge.expression(col("x_text")))).as("x_text"))
+      .groupBy(coalesce(col("x_text"), lit("")).as("x_text"))
       .agg(min(struct(col("docOrd"), col("pairOrd"))).as("fs"))
       .select(
         col("x_text"),
         col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
-  }
 
   /** x dictionary: window text -> dense id, first-appearance order. The
     * window-text dictionary is near-fact-cardinality (windows are mostly

@@ -98,4 +98,30 @@ class TablesSpec extends AnyFunSuite {
     assert(got.count() == 32 * 5)
     assert(idx.search(spark, q.limit(0), 5).collect().isEmpty)
   }
+
+  test("IvfIndex search skips probed lists that were assigned no rows") {
+    import spark.implicits._
+    // three distinct vectors repeated: the duplicate centroids tie, every
+    // row goes to the smallest list id, and all other lists stay empty
+    val base = Seq(Array(1f, 0f, 0f), Array(0f, 1f, 0f), Array(0f, 0f, 1f))
+    val e = (0 until 200).map(i => (i, base(i % 3))).toDF("vec_id", "embedding")
+    val idx = IvfIndex.build(spark, e, Files.createTempDirectory("tables-spec-ivf-empty").toString)
+    val layout = s"${idx.root}/v${idx.version}/assigned"
+    val filled = spark.read.parquet(layout).select("list_id").distinct().as[Int].collect().toSet
+    assert(filled.size == 3 && idx.nLists == 64)
+    val all = 0 until idx.nLists
+    assert(jobsOf(idx.assigned(spark, all)) == 0)
+    assert(idx.assigned(spark, all).count() == 200)
+    assert(idx.assigned(spark, all.filterNot(filled)).collect().isEmpty)
+    val q = e.filter(col("vec_id") < 6)
+    val probes = Similarity.probeTable(spark,
+      q.select(col("vec_id").cast("long").as("query_id"), col("embedding").as("q_vec")),
+      idx.centroids, 16)
+    assert(probes.select("list_id").as[Int].collect().exists(l => !filled(l)))
+    val want = Similarity.rerankTopK(
+      spark.read.parquet(layout).join(broadcast(probes), Seq("list_id")), 5)
+    val got = idx.search(spark, q, 5)
+    assert(got.collect().toSet == want.collect().toSet)
+    assert(got.count() == 6 * 5)
+  }
 }
