@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.functions.min
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Dense contiguous ids 0..n-1 in a global sort order WITHOUT a
   * partition-less ranking window (which funnels every row through one task
@@ -13,13 +14,29 @@ import org.apache.spark.sql.types.LongType
   * the main job). The assigned id equals the row's rank in the global sort
   * order, so the result is deterministic regardless of the sampled range
   * boundaries — provided `orderCols` is a total order (unique keys), which
-  * every call site guarantees (first-seen structs / (docOrd, pairOrd)).
+  * every call site guarantees (first-seen (d, p) / (docOrd, pairOrd)).
   *
   * At 100 TB this is the standard dense-id idiom: the widest shuffle is a
   * range exchange of the input itself; no stage sees more than one
   * partition's rows at a time.
   */
 object DenseId {
+
+  /** First appearance per key: over occurrence rows, (key, `__d`, `__p`),
+    * the least (d, p) of the key's occurrences — the dictionaries'
+    * first-seen order, which [[withDenseIdProbed]] then ranks. (d, p)
+    * packs order-preservingly into one decimal(38,0), d·2^32 + p, exact
+    * for every long d and every p in [0, 2^32), where all the callers' p
+    * lie (pairOrd, pairOrd*2 + slot, token pos). `min` of it runs in a
+    * hash aggregate; `min(struct(d, p))` plans a sort aggregate, which
+    * sorts the keys on both sides of the exchange. NULL d or p never
+    * occurs in the callers' rows (`min` would skip it). */
+  def firstSeen(occ: DataFrame, key: Column, d: Column, p: Column): DataFrame = {
+    val shift = 1L << 32
+    val fs = occ.groupBy(key).agg(min(d.cast(DecimalType(38, 0)) * shift + p).as("__fs"))
+    fs.selectExpr(s"`${fs.columns.head}`", s"(__fs - pmod(__fs, $shift)) div $shift AS __d",
+      s"CAST(pmod(__fs, $shift) AS BIGINT) AS __p")
+  }
 
   def withDenseId(df: DataFrame, idName: String, orderCols: Column*): DataFrame = {
     import org.apache.spark.sql.GraftBridge

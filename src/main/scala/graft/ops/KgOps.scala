@@ -104,23 +104,17 @@ object KgOps {
     bandJoin(mentionsDf).select(col("doc_id"), col("m1"), col("m2"))
 
   /** First-appearance dense ids for mention surfaces: (mention, e_id) —
-    * the §2.9 dictionary-encode over an arbitrary mention table. The
+    * the §2.9 dictionary-encode over an arbitrary mention table, in the
+    * least (doc_id, pos) order of [[DenseId.firstSeen]]. The
     * bounded-driver rank probe (withDenseIdProbed) assigns ids from ONE
     * column-pruned key pass when the dictionary fits the driver bound —
     * no range exchange, no RangePartitioner sample pass, no zipWithIndex
     * offsets job; above the bound the classic range-partitioned DenseId
-    * path runs with bit-identical ids. The struct min is lexicographic
-    * (doc_id, pos), so ranking the flattened pair gives the same order. */
+    * path runs with bit-identical ids. */
   def dictEncode(mentionsDf: DataFrame): DataFrame = {
     // the dimension-sized first-seen table is cached (the eDict idiom): the
     // rank probe's key pass populates it, the id attach reads it
-    val firstSeen = mentionsDf
-      .groupBy("mention")
-      .agg(min(struct(col("doc_id"), col("pos"))).as("first_seen"))
-      .select(
-        col("mention"),
-        col("first_seen.doc_id").as("__d"),
-        col("first_seen.pos").as("__p"))
+    val firstSeen = DenseId.firstSeen(mentionsDf, col("mention"), col("doc_id"), col("pos"))
     graft.Persist.within(firstSeen) {
       DenseId
         .withDenseIdProbed(firstSeen, "e_id", Seq("__d", "__p"))

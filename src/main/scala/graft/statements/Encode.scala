@@ -10,9 +10,10 @@ import graft.ops.{DenseId, Salting}
   * `mtb_data_loader.py:427-561` (§2.9/2.10) and `:337-389` (§1.8/2.16).
   *
   * Determinism: the reference assigns dense ids in single-threaded
-  * first-appearance order. Distributed first-appearance = min(docOrd,
-  * pairOrd[,slot]) per key — stable under any partitioning (SURVEY.md §7.5;
-  * never monotonically_increasing_id). The ranking window runs over the
+  * first-appearance order. Distributed first-appearance = the least
+  * (docOrd, pairOrd[*2 + slot]) per key, one hash aggregate of the packed
+  * pair ([[DenseId.firstSeen]]) — stable under any partitioning (SURVEY.md
+  * §7.5; never monotonically_increasing_id). The ranking runs over the
   * DISTINCT keys only (dimension table, orders of magnitude smaller than
   * the fact table), which is the standard dense-id idiom; at 100 TB the
   * same plan holds because dims stay ≪ facts.
@@ -23,18 +24,6 @@ import graft.ops.{DenseId, Salting}
   */
 object Encode {
 
-  /** First-seen order of each window text: (x_text, __d, __p), the input
-    * of [[xDict]]. Statements built with dims carry every window's text;
-    * the coalesce only types the key non-null, as the dictionary's schema
-    * has it. */
-  def xFirstSeen(st: DataFrame): DataFrame =
-    st
-      .groupBy(coalesce(col("x_text"), lit("")).as("x_text"))
-      .agg(min(struct(col("docOrd"), col("pairOrd"))).as("fs"))
-      .select(
-        col("x_text"),
-        col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
-
   /** x dictionary: window text -> dense id, first-appearance order. The
     * window-text dictionary is near-fact-cardinality (windows are mostly
     * unique), so the dense-id assignment must NOT be a global ranking
@@ -42,12 +31,13 @@ object Encode {
     * exchange of the window text; above the driver bound the classic
     * range-partitioned path runs.
     *
-    * `xFirst` is the [[xFirstSeen]] table, held by the caller: the rank
-    * probe runs when this is CALLED (callers that time stages construct
-    * inside the timed window, MtbDataset.build's thunk probe) and
-    * populates it, and the returned id attach is lazy and reads it again.
-    * The dictionary is near-fact-sized and most callers never read it, so
-    * it is not materialized here. */
+    * `xFirst` is the [[DenseId.firstSeen]] table of the statements' window
+    * texts over (docOrd, pairOrd), held by the caller: the rank probe runs
+    * when this is CALLED (callers that time stages construct inside the
+    * timed window, MtbDataset.build's thunk probe) and populates it, and
+    * the returned id attach is lazy and reads it again. The dictionary is
+    * near-fact-sized and most callers never read it, so it is not
+    * materialized here. */
   def xDict(xFirst: DataFrame): DataFrame =
     DenseId
       .withDenseIdProbed(xFirst, "x_id", Seq("__d", "__p"))
@@ -55,22 +45,15 @@ object Encode {
 
   /** Entity dictionary: e1 slot seen before e2 slot within a row. The
     * three-field first-seen order (docOrd, pairOrd, slot) packs losslessly
-    * into (docOrd, pairOrd*2 + slot) — slot is 0/1 — so the bounded-rank
-    * DenseId applies; its 31-bit guard falls back to the range exchange
-    * if pairOrd ever exceeds 2^30. The dimension-sized agg output is
+    * into the [[DenseId.firstSeen]] (d, p) = (docOrd, pairOrd*2 + slot);
+    * the rank probe's 31-bit guard falls back to the range exchange if
+    * pairOrd ever exceeds 2^30. The dimension-sized first-seen table is
     * cached across the probe and attach passes, and the materialized
     * dictionary is what the caller gets ([[graft.Persist.within]]). */
   def eDict(st: DataFrame): DataFrame = {
-    val eOcc = st.select(col("e1").as("e_text"),
-        struct(col("docOrd"), col("pairOrd"), lit(0).as("slot")).as("pos"))
-      .unionAll(st.select(col("e2").as("e_text"),
-        struct(col("docOrd"), col("pairOrd"), lit(1).as("slot")).as("pos")))
-    val eFirst = eOcc
-      .groupBy(col("e_text")).agg(min(col("pos")).as("fs"))
-      .select(
-        col("e_text"),
-        col("fs.docOrd").as("__d"),
-        (col("fs.pairOrd").cast("long") * 2 + col("fs.slot")).as("__p"))
+    val eOcc = st.select(col("e1").as("e_text"), col("docOrd"), (col("pairOrd").cast("long") * 2).as("p"))
+      .unionAll(st.select(col("e2").as("e_text"), col("docOrd"), (col("pairOrd").cast("long") * 2 + 1).as("p")))
+    val eFirst = DenseId.firstSeen(eOcc, col("e_text"), col("docOrd"), col("p"))
     graft.Persist.within(eFirst) {
       DenseId
         .withDenseIdProbed(eFirst, "e_id", Seq("__d", "__p"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.annotate.{Annotator, Gazetteer}
+import graft.ops.DenseId
 import graft.schema.WebPage
 import graft.tokenize.BertTokenizer
 import graft.triples.TriplePipeline
@@ -128,9 +129,12 @@ object MtbDataset {
 
     // the x dictionary's first-seen table is held too: the rank probe
     // populates it and the lazy id attach reads it, so a caller that never
-    // reads Result.xDim pays no attach pass
-    val xDim0 =
-      if (needDims) stage("dict_x") { Encode.xDict(hold(Encode.xFirstSeen(statements))) } else null
+    // reads Result.xDim pays no attach pass. Every window carries its text
+    // here; the coalesce only types the key non-null, as the dictionary has it
+    val xDim0 = if (needDims) stage("dict_x") {
+      Encode.xDict(hold(DenseId.firstSeen(
+        statements, coalesce(col("x_text"), lit("")).as("x_text"), col("docOrd"), col("pairOrd"))))
+    } else null
     // the entity dictionary is dimension-sized (distinct surface forms) and
     // is consumed three times (two broadcast builds in encodeFact + the
     // prune semi join) — eDict returns it materialized, so each broadcast

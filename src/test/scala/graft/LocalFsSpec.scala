@@ -80,15 +80,24 @@ class LocalFsSpec extends AnyFunSuite {
       .parquet(s"$root/pq")
   }
 
-  /** Commands of the processes `body` starts, from JFR `jdk.ProcessStart`. */
-  private def processesStartedBy(body: => Unit): Seq[String] = {
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Processes started while `body` runs by the threads that do its work,
+    * from JFR `jdk.ProcessStart`: as (started by an executor task, command).
+    * The work's threads are this thread and the executor's task threads;
+    * other threads of the JVM are not counted. Spark's Cleaner, for one,
+    * forks `rm -rf` for the artifact directory of any session an earlier
+    * suite left behind, whenever a GC collects it. */
+  private def processesStartedBy(body: => Unit): Seq[(Boolean, String)] = {
+    val self = Thread.currentThread().getId
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, String)]()
     val barrier = new CountDownLatch(1)
     val rs = new RecordingStream()
     try {
       rs.enable("jdk.ProcessStart")
       rs.enable(classOf[LocalFsSpecBarrier])
-      rs.onEvent("jdk.ProcessStart", e => started.add(e.getString("command")))
+      rs.onEvent("jdk.ProcessStart", e => Option(e.getThread).foreach { t =>
+        val task = Option(t.getJavaName).exists(_.startsWith("Executor task launch worker"))
+        if (task || t.getJavaThreadId == self) started.add((task, e.getString("command")))
+      })
       rs.onEvent("graft.LocalFsSpec.Barrier", _ => barrier.countDown())
       rs.startAsync()
       body
@@ -121,9 +130,14 @@ class LocalFsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_localfs")
     val started = processesStartedBy(writeAll(graftBinding, root))
     assert(started.isEmpty, s"processes started:\n${started.mkString("\n")}")
-    // the recording does see the stock filesystem's forks
+    // the recording does see the stock filesystem's forks, on this thread
+    // and in the parquet write's tasks
     val stock = processesStartedBy(writeAll(stockBinding, Files.createTempDirectory("graft_localfs_stock")))
-    assert(stock.exists(_.startsWith("chmod")) && stock.exists(_.startsWith("readlink")), stock)
+    assert(stock.exists(_._2.startsWith("chmod")) && stock.exists(_._2.startsWith("readlink")), stock)
+    assert(stock.exists { case (task, cmd) => task && cmd.startsWith("chmod") }, stock)
+    // a process another thread starts meanwhile is not the writes' own
+    val other = new Thread(() => new ProcessBuilder("true").start().waitFor())
+    assert(processesStartedBy { other.start(); other.join() }.isEmpty)
     assert(Files.list(root.resolve("pq")).iterator.asScala.count(_.getFileName.toString.startsWith("p=")) == 3)
   }
 

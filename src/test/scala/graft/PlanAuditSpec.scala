@@ -21,6 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the flagship pipeline stays a single narrow stage (no Exchange)
   *  - the triple sink adds exactly one rebalance exchange, and computes
   *    `pred_part` without a regex or a Scala UDF
+  *  - the first-appearance dictionaries aggregate in hash aggregates: no
+  *    stage they run holds a SortAggregate
   */
 class PlanAuditSpec extends AnyFunSuite {
 
@@ -69,6 +71,55 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plans.get(output)
     assert(p != null, s"no write of $output observed; saw ${plans.keySet}")
     p
+  }
+
+  /** Names of the physical operators in the stages `body` runs on this
+    * thread: each operator's `execute` builds its RDDs under a scope named
+    * after the node, and every stage reports the scopes of its RDDs. This
+    * sees the plans `DenseId` runs through `queryExecution.toRdd`, which
+    * no query execution listener reports. */
+  private def operatorsRun(body: => Unit): Set[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val group = s"plan-audit-${System.nanoTime()}"
+    val names = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          e.stageInfo.rddInfos.flatMap(_.scope).foreach(s => names.add(s.name))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "plan-audit", interruptOnCancel = false)
+      body
+      org.apache.spark.sql.SessionProbe.drainBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    names.toArray(Array.empty[String]).toSet
+  }
+
+  test("the x, entity and mention dictionaries run no SortAggregate") {
+    val sc = spark.sparkContext
+    val ops = scala.collection.mutable.Map.empty[String, Set[String]]
+    val r = graft.statements.MtbDataset.build(
+      spark, graft.fixtures.Corpus.generate(spark, 96),
+      sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
+      sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
+      minPoolSize = 2,
+      probe = (name, f) =>
+        // the x dictionary's id attach is lazy: run it inside its stage
+        if (name.startsWith("dict_")) ops(name) = operatorsRun(f().collect())
+        else f())
+    try assert(r.xDim.count() > 0 && r.eDim.count() > 0) finally r.close()
+    ops("q32") = operatorsRun(SparkEntry.queries("q32_mention_dict")(spark, sf).collect())
+    assert(ops.keySet == Set("dict_x", "dict_e", "q32"))
+    ops.foreach { case (name, run) =>
+      // each dictionary exchanges its first-seen aggregate's partial rows
+      assert(run.contains("Exchange"), s"$name ran no shuffle: $run")
+      assert(!run.contains("SortAggregate"), s"$name runs a SortAggregate: $run")
+    }
   }
 
   test("no query plans a partition-less ranking window") {
