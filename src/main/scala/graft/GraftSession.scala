@@ -32,8 +32,33 @@ import org.apache.spark.sql.SparkSession
   * files or other artifacts to any session, so there is nothing to
   * isolate. The conf is read when a session is created, and clones copy
   * it.
+  *
+  * Spark's codegen cache holds [[CodegenCacheEntries]] generated classes
+  * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). This is
+  * the capacity of an existing cache, not a parallelism knob. The cache is
+  * keyed by class loader and code, so a class compiled on the driver and
+  * again in the tasks is two entries. Measured in one JVM at sf0.01,
+  * collecting all 58 `SparkEntry` queries by default and then under
+  * `Regime.forcingDistributed` compiles 996 distinct classes (693 + 303),
+  * and 1,024 after a second sweep in each regime; a `Verify` sweep
+  * compiles 771 and the perfbench battery's JVM 134. Under the default cap
+  * Spark evicted classes it was about to reuse, so a `Verify` sweep
+  * compiled 1,320 classes and every timed battery pass about 48. The cap is
+  * the next power of two at or above twice the measured count (2 × 1,024),
+  * because Guava splits the cache into 4 segments that each evict at a
+  * quarter of the cap, and a working set spread unevenly over them would
+  * evict from the fullest one well before the total reaches the cap. A
+  * held class costs about 26 KB of heap (26 MB for the 1,004 classes of
+  * both sweeps, freed when the cache is emptied). Spark reads the value
+  * once per JVM, when `CodeGenerator` first generates code, from the
+  * session active then, so a JVM whose first codegen runs under another
+  * session keeps that session's cap; the forked test JVM gets the same
+  * value as a system property (build.sbt).
   */
 object GraftSession {
+
+  /** Capacity of Spark's codegen cache: see the class doc for the rule. */
+  val CodegenCacheEntries = 2048
 
   def builder(cores: Int, app: String = "graft"): SparkSession.Builder =
     SparkSession
@@ -58,6 +83,7 @@ object GraftSession {
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "20s")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config(graft.io.LocalFs.HadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v })
 
   def get(cores: Int, app: String = "graft"): SparkSession = {

@@ -1,13 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** Iteration-speed benchmark: times ONLY the query battery, with exactly
   * Bench's per-query methodology (same session config, `.count()` action,
   * best-of-N reps) but none of the scaling
   * legs — so an optimization round can re-measure a change in ~1 min
-  * instead of ~25. Bench.scala itself is the frozen driver contract; this
-  * main only ADDS measurement surface (guide §1.4/§1.5).
+  * instead of ~25. Beside each query's best time (`queries`) it reports
+  * the generated classes compiled during its timed reps (`compiles`).
+  * Bench.scala itself is the frozen driver contract; this main only ADDS
+  * measurement surface (guide §1.4/§1.5).
   *
   * Usage:
   *   tools/benchx.sh [queryName...]        time a subset (default: all)
@@ -65,16 +67,20 @@ object BenchExtra {
           java.nio.file.Files.writeString(p.resolve(s"$name.txt"), plan)
         } catch { case e: Throwable => System.err.println(s"explain $name: $e") }
       }
+      val compiled0 = GraftBridge.compiledClasses
       val runs = (1 to reps).map { _ =>
         try once(name, fn) catch { case e: Throwable => System.err.println(s"$name: $e"); -1.0 }
       }
-      name -> (if (runs.exists(_ >= 0)) runs.filter(_ >= 0).min else -1.0)
+      (name, if (runs.exists(_ >= 0)) runs.filter(_ >= 0).min else -1.0,
+        GraftBridge.compiledClasses - compiled0)
     }
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def obj(kv: Seq[(String, String)]) = kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v, _) => k -> f"$v%.3f" })
+    val compiles = obj(results.map { case (k, _, c) => k -> c.toString })
     val total = results.map(_._2).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"battery","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","noop":$noop}"""
+      s"""{"metric":"battery","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","noop":$noop,"compiles":$compiles}"""
     println(json)
     try {
       val out = java.nio.file.Paths.get(

@@ -27,6 +27,8 @@ object PlanDump {
       "ANN exact: PushedFilters carries vec_id<32; broadcast query side, per-query window rank",
     "q32_mention_dict" ->
       "dictionary encode: bounded-driver rank ids (no range exchange, no global window), materialized before the first-seen cache is released, so the plan scans the stored (mention, e_id) rows",
+    "q32_first_seen" ->
+      "dictionary first-seen step (DenseId.firstSeen over q32's mention occurrences, dumped directly: every dictionary returns ranked or materialized rows, so no headliner above shows it): min of (doc_id, pos) packed into one decimal(38,0), a partial and a final HashAggregate around one exchange on the mention, no SortAggregate",
     "q38_np_mentions" ->
       "noun-phrase mentions: one narrow flatMap over the documents scan",
     "q42_mtb_pools" ->
@@ -56,6 +58,10 @@ object PlanDump {
         of(graft.link.MinHashLSH.similarPairs(
           spark, graft.io.Tables.read(spark, sfDir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text", threshold = 0.8, shingleMode = "word"))
+      case "q32_first_seen" =>
+        of(graft.ops.DenseId.firstSeen(
+          graft.ops.KgOps.mentions(spark, graft.io.Tables.read(spark, sfDir, "documents")),
+          col("mention"), col("doc_id"), col("pos")))
       case "ivf_search" =>
         val e = graft.io.Tables.read(spark, sfDir, "embeddings")
         val root = s"${sys.props("java.io.tmpdir")}/graft-ivf-plandump"

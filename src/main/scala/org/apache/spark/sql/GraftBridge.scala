@@ -18,6 +18,11 @@ object GraftBridge {
   def internalDF(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** Generated classes `CodeGenerator` has compiled in this JVM so far,
+    * on the driver and, in local mode, in the executor's tasks. */
+  def compiledClasses: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def cacheManager(ds: Dataset[_]) =
     ds.sparkSession.asInstanceOf[classic.SparkSession].sharedState.cacheManager
 
