@@ -142,9 +142,7 @@ object Bench {
         sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
         sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
         minCount = 2, minPoolSize = 2)
-      val c = ds.pools.count()
-      s.catalog.clearCache()
-      c
+      try ds.pools.count() finally ds.close()
     }
 
     /** One phase-timed wide leg: Seq of (phase, sec) in stage order plus

@@ -14,9 +14,12 @@ import graft.tokenize.{BertTokenizer, BertVocab, Vocab}
 import graft.triples.TriplePipeline
 
 /** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the training-data ops battery), each with a DuckDB
-  * oracle where the semantics are ANSI-SQL-expressible; non-SQL operators
-  * (LSH clustering, simhash, the full KG pipeline) are rows-only checks.
+  * SURVEY.md §2 (+ the training-data ops battery), each defined next to
+  * its DuckDB oracle. Where the semantics are ANSI-SQL-expressible the
+  * oracle recomputes the rows; for the non-SQL operators (the full KG
+  * pipeline, MTB pair scores and losses, ANN indexes, checkpoints, FewRel
+  * episodes) the query emits (metric, value) rows, typically a count and
+  * a [[contentDigest]], and the oracle pins them.
   *
   * Every query reads its input tables through [[graft.io.Tables.read]],
   * with the declared schema, so building a query's DataFrame runs no
@@ -173,9 +176,21 @@ object SparkEntry {
     graft.link.EntityLinker.canonicalizeTriples(triples, linked)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One battery query: `body` builds its result from a session and the
+    * input-table directory; `oracle` is the DuckDB SQL that result is
+    * checked against (tools/check_oracle.py). */
+  private final case class Query(body: (SparkSession, String) => DataFrame, oracle: String)
+
+  /** The battery, one entry per query name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry.map { case (n, q) => n -> q.body }
+
+  /** Each query's DuckDB oracle, keyed like [[queries]]. */
+  def oracleSql: Map[String, String] = registry.map { case (n, q) => n -> q.oracle }
+
+  /** Lazy: its oracles interpolate the SQL fragments defined below it. */
+  private lazy val registry: Map[String, Query] = Map(
     // ---- relational core (scan/filter/agg/join/window/semi/anti) ----
-    "q01_pricing_summary" -> ((s, d) => {
+    "q01_pricing_summary" -> Query((s, d) => {
       val li = Tables.read(s, d, "lineitem")
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -192,8 +207,14 @@ object SparkEntry {
             (lit(BigDecimal(1)).cast("decimal(18,4)") - col("l_discount").cast("decimal(18,4)"))))
             .cast("double").as("sum_disc_price"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-    "q02_revenue_by_nation" -> ((s, d) => {
+    }, oracle =
+      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
+         count(*) AS count_order,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price
+         FROM lineitem GROUP BY 1,2 ORDER BY 1,2"""),
+    "q02_revenue_by_nation" -> Query((s, d) => {
       val li = Tables.read(s, d, "lineitem")
       val su = Tables.read(s, d, "supplier")
       val na = Tables.read(s, d, "nation")
@@ -204,8 +225,13 @@ object SparkEntry {
           (lit(BigDecimal(1)).cast("decimal(18,4)") - col("l_discount").cast("decimal(18,4)")))
           .cast("double").as("revenue"))
         .orderBy(col("n_name"))
-    }),
-    "q03_top_orders_per_cust" -> ((s, d) => {
+    }, oracle =
+      """SELECT n_name, CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
+         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation ON s_nationkey = n_nationkey
+         GROUP BY 1 ORDER BY 1"""),
+    "q03_top_orders_per_cust" -> Query((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val o = Tables.read(s, d, "orders")
       val w = Window.partitionBy(col("o_custkey"))
@@ -214,8 +240,12 @@ object SparkEntry {
         .filter(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
         .orderBy(col("o_custkey"), col("rn"))
-    }),
-    "q04_priority_with_late_items" -> ((s, d) => {
+    }, oracle =
+      """SELECT o_custkey, o_orderkey, rn FROM (
+           SELECT o_custkey, o_orderkey,
+             row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+           FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn"""),
+    "q04_priority_with_late_items" -> Query((s, d) => {
       val o = Tables.read(s, d, "orders")
       val li = Tables.read(s, d, "lineitem")
       val late = li.filter(col("l_shipdate") > lit("1995-06-01").cast("timestamp"))
@@ -224,15 +254,22 @@ object SparkEntry {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
         .orderBy(col("o_orderpriority"))
-    }),
-    "q05_customers_without_orders" -> ((s, d) => {
+    }, oracle =
+      """SELECT o_orderpriority, count(*) AS n_orders FROM orders
+         WHERE EXISTS (SELECT 1 FROM lineitem
+                       WHERE l_orderkey = o_orderkey AND l_shipdate > TIMESTAMP '1995-06-01')
+         GROUP BY 1 ORDER BY 1"""),
+    "q05_customers_without_orders" -> Query((s, d) => {
       val c = Tables.read(s, d, "customer")
       val o = Tables.read(s, d, "orders")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"))
         .orderBy(col("c_custkey"))
-    }),
-    "q07_parts_revenue" -> ((s, d) => {
+    }, oracle =
+      """SELECT c_custkey FROM customer
+         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+         ORDER BY 1"""),
+    "q07_parts_revenue" -> Query((s, d) => {
       val li = Tables.read(s, d, "lineitem")
       val p = Tables.read(s, d, "part")
       li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
@@ -244,8 +281,13 @@ object SparkEntry {
             (lit(BigDecimal(1)).cast("decimal(18,4)") - col("l_discount").cast("decimal(18,4)")))
             .cast("double").as("revenue"))
         .orderBy(col("p_brand"))
-    }),
-    "q08_region_rollup" -> ((s, d) => {
+    }, oracle =
+      """SELECT p_brand, count(*) AS n_items, sum(l_quantity) AS sum_qty,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         GROUP BY 1 ORDER BY 1"""),
+    "q08_region_rollup" -> Query((s, d) => {
       val c = Tables.read(s, d, "customer")
       val n = Tables.read(s, d, "nation")
       val r = Tables.read(s, d, "region")
@@ -256,29 +298,41 @@ object SparkEntry {
           count(lit(1)).as("n_customers"),
           sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("sum_acctbal"))
         .orderBy(col("r_name"))
-    }),
-    "q06_events_hourly" -> ((s, d) => {
+    }, oracle =
+      """SELECT r_name, count(*) AS n_customers,
+         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
+         FROM customer JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY 1 ORDER BY 1"""),
+    "q06_events_hourly" -> Query((s, d) => {
       Tables.read(s, d, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(
           count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
         .orderBy(col("hour"), col("event_type"))
-    }),
+    }, oracle =
+      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+         FROM events GROUP BY 1,2 ORDER BY 1,2"""),
 
     // ---- text normalization + analysis over documents ----
-    "q10_doc_normalize" -> ((s, d) => {
+    "q10_doc_normalize" -> Query((s, d) => {
       import graft.textnorm.functions._
       Tables.read(s, d, "documents")
         .select(col("doc_id"), text_norm(col("text")).as("text_norm"))
         .orderBy(col("doc_id"))
-    }),
-    "q11_token_counts" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id, trim(regexp_replace(lower(text), ' +', ' ', 'g')) AS text_norm
+         FROM documents ORDER BY doc_id"""),
+    "q11_token_counts" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.tokenCount(col("text")).as("n_tokens"))
         .orderBy(col("doc_id"))
-    }),
-    "q12_lang_profile" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id, len(regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ')) AS n_tokens
+         FROM documents ORDER BY doc_id"""),
+    "q12_lang_profile" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .groupBy(col("lang"))
         .agg(
@@ -286,58 +340,130 @@ object SparkEntry {
           sum(col("n_chars")).cast("long").as("sum_chars"),
           countDistinct(col("source")).as("n_sources"))
         .orderBy(col("lang"))
-    }),
-    "q13_exact_dedup" -> ((s, d) => {
+    }, oracle =
+      """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+         count(DISTINCT source) AS n_sources
+         FROM documents GROUP BY 1 ORDER BY 1"""),
+    "q13_exact_dedup" -> Query((s, d) => {
       Dedup.exact(Tables.read(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
-    }),
-    "q14_quality_scores" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS canonical_id,
+         count(*) OVER (PARTITION BY text) AS dup_count
+         FROM documents ORDER BY doc_id"""),
+    "q14_quality_scores" -> Query((s, d) => {
       TextStats.qualityScore(Tables.read(s, d, "documents"), "text")
         .select(col("doc_id"), col("word_count"), col("mean_word_len"),
           col("stopword_ratio"))
         .orderBy(col("doc_id"))
-    }),
-    "q15_fingerprints" -> ((s, d) => {
+    }, oracle =
+      s"""SELECT doc_id,
+          len(toks) AS word_count,
+          round(CAST(len(replace(text, ' ', '')) AS DOUBLE) / len(toks), 6) AS mean_word_len,
+          round(CAST(len(list_filter(toks, t -> list_contains($stopList, t))) AS DOUBLE) / len(toks), 6) AS stopword_ratio
+          FROM (SELECT doc_id, text, regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ') AS toks
+                FROM documents) ORDER BY doc_id"""),
+    "q15_fingerprints" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))
         .orderBy(col("doc_id"))
-    }),
-    "q16_distinct_trigrams" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id, CAST(list_reduce(
+           list_prepend(CAST(0 AS HUGEINT),
+             list_transform(string_split(text, ''), c -> CAST(ascii(c) AS HUGEINT))),
+           (acc, c) -> (acc * 31 + c) % 1000000007) AS BIGINT) AS fp
+         FROM documents ORDER BY doc_id"""),
+    "q16_distinct_trigrams" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .select(col("doc_id"),
           size(TextStats.distinctNgrams(col("text"), 3)).as("n_trigrams"))
         .orderBy(col("doc_id"))
-    }),
-    "q17_langid" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id, len(list_distinct(list_transform(
+           generate_series(1, len(toks) - 2),
+           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS n_trigrams
+         FROM (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ') AS toks
+               FROM documents) ORDER BY doc_id"""),
+    "q17_langid" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.langIdExpr(col("text")).as("lang_guess"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle =
+      s"""SELECT doc_id, list_sort($langStructs)[-1].lang AS lang_guess
+         FROM ($toksCte) ORDER BY doc_id"""),
 
     // ---- dedup / similarity ----
-    "q18_minhash_clusters" -> ((s, d) => {
+    // Exact-oracle for the MinHash/LSH clusters: all-pairs word-3-shingle
+    // Jaccard >= 0.8 + connected components. Valid because the engine's
+    // final verification is exact Jaccard on candidates and the banded-LSH
+    // miss probability at j >= 0.8 is < 1e-4 per pair (16 bands x 3 rows)
+    // — the clusters coincide with the exhaustive ground truth.
+    "q18_minhash_clusters" -> Query((s, d) => {
       Dedup.minhashClusters(s, Tables.read(s, d, "documents"), "doc_id", "text",
         threshold = 0.8).orderBy(col("doc_id"))
-    }),
-    "q19_simhash" -> ((s, d) => {
+    }, oracle =
+      s"""WITH RECURSIVE sh AS (
+           SELECT doc_id,
+             CASE WHEN len(toks) >= 3 THEN
+               list_distinct(list_transform(generate_series(1, len(toks)-2),
+                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
+             ELSE [array_to_string(toks, ' ')] END AS s
+           FROM ($toksCte)),
+         edges AS (
+           SELECT a.doc_id AS src, b.doc_id AS dst
+           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+           WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+                 (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8),
+         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+         walk(node, reach) AS (
+           SELECT doc_id, doc_id FROM sh
+           UNION
+           SELECT w.node, s2.dst FROM walk w JOIN sym s2 ON s2.src = w.reach)
+         SELECT node AS doc_id, CAST(min(reach) AS BIGINT) AS cluster_id
+         FROM walk GROUP BY node ORDER BY doc_id"""),
+    "q19_simhash" -> Query((s, d) => {
       Dedup.simhashDF(s, Tables.read(s, d, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
-    }),
-    "q26_embedding_dedup" -> ((s, d) => {
+    }, oracle =
+      s"""$simhashSigSql ORDER BY doc_id"""),
+    // exact-oracle for embedding near-dup: exhaustive all-pairs cosine +
+    // connected components (valid per the probe-1 LSH recall argument in
+    // Dedup.embeddingClusters)
+    "q26_embedding_dedup" -> Query((s, d) => {
       Dedup.embeddingClusters(s, Tables.read(s, d, "embeddings"),
         "vec_id", "embedding", threshold = 0.95)
         .orderBy(col("vec_id"))
-    }),
-    "q27_bpe_token_count" -> ((s, d) => {
+    }, oracle =
+      """WITH RECURSIVE edges AS (
+           SELECT a.vec_id AS src, b.vec_id AS dst
+           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+           WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.95),
+         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+         walk(node, reach) AS (
+           SELECT vec_id, vec_id FROM embeddings
+           UNION
+           SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach)
+         SELECT node AS vec_id, CAST(min(reach) AS BIGINT) AS cluster_id
+         FROM walk GROUP BY node ORDER BY vec_id"""),
+    "q27_bpe_token_count" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .select(col("doc_id"), TextStats.bpeTokenCount(col("text")).as("n_bpeish"))
         .orderBy(col("doc_id"))
-    }),
-    "q25_ann_topk" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id, len(regexp_extract_all(lower(text), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+')) AS n_bpeish
+         FROM documents ORDER BY doc_id"""),
+    "q25_ann_topk" -> Query((s, d) => {
       val e = Tables.read(s, d, "embeddings")
       Similarity.bruteForceTopK(e.filter(col("vec_id") < 32), e, 5)
         .orderBy(col("query_id"), col("rank"))
-    }),
+    }, oracle =
+      """SELECT query_id, neighbor_id, rank FROM (
+           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             row_number() OVER (PARTITION BY q.vec_id
+               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) AS rank
+           FROM embeddings q, embeddings c
+           WHERE q.vec_id < 32 AND q.vec_id <> c.vec_id)
+         WHERE rank <= 5 ORDER BY query_id, rank"""),
     // IVF ANN through the build-once/serve-many index artifact
     // ([[graft.ops.IvfIndex]]): the quantizer + list assignment persist
     // as a versioned fingerprint-validated on-disk index and the query
@@ -345,8 +471,9 @@ object SparkEntry {
     // retraining. Pinned (count + digest) at the deterministic sf0.01
     // top-k: the whole chain (seeded bounded-sample k-means, cosine
     // assignment, probe-16, exact re-rank with id tie-break) is a pure
-    // function of the fixed-seed embeddings table at any parallelism.
-    "q24_ann_ivf" -> ((s, d) => {
+    // function of the fixed-seed embeddings table at any parallelism
+    // (verified identical at 4 and 32 cores, fresh build each).
+    "q24_ann_ivf" -> Query((s, d) => {
       val e = Tables.read(s, d, "embeddings")
       val root = s"${sys.props("java.io.tmpdir")}/graft-ivf/${d.replaceAll("[^A-Za-z0-9._-]", "_")}"
       val idx = graft.ops.IvfIndex.buildOrLoad(s, e, root)
@@ -354,35 +481,69 @@ object SparkEntry {
         idx.search(s, e.filter(col("vec_id") < 32), 5),
         "digest" -> contentDigest(col("query_id"), col("neighbor_id"), col("rank")),
         "n_rows" -> count(lit(1)))
-    }),
-    "q23_simhash_clusters" -> ((s, d) => {
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(76867213721 AS BIGINT) AS value
+           UNION ALL SELECT 'n_rows',
+             (SELECT count(*) * 5 FROM embeddings WHERE vec_id < 32))
+         ORDER BY metric"""),
+    "q23_simhash_clusters" -> Query((s, d) => {
       Dedup.simhashClusters(s, Tables.read(s, d, "documents"), "doc_id", "text",
         maxDist = 3).orderBy(col("doc_id"))
-    }),
-    "q20_ann_top1" -> ((s, d) => {
+    }, oracle =
+      s"""WITH RECURSIVE sig AS ($simhashSigSql),
+         edges AS (SELECT a.doc_id AS src, b.doc_id AS dst
+                   FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+                   WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+         walk(node, reach) AS (
+           SELECT doc_id, doc_id FROM sig
+           UNION
+           SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach)
+         SELECT node AS doc_id, CAST(min(reach) AS BIGINT) AS cluster_id
+         FROM walk GROUP BY node ORDER BY doc_id"""),
+    "q20_ann_top1" -> Query((s, d) => {
       val e = Tables.read(s, d, "embeddings")
       Similarity.bruteForceTopK(e.filter(col("vec_id") < 32), e, 1)
         .select(col("query_id"), col("neighbor_id"))
         .orderBy(col("query_id"))
-    }),
-    "q21_embedding_sums" -> ((s, d) => {
+    }, oracle =
+      """SELECT query_id, neighbor_id FROM (
+           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             row_number() OVER (PARTITION BY q.vec_id
+               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) AS rn
+           FROM embeddings q, embeddings c
+           WHERE q.vec_id < 32 AND q.vec_id <> c.vec_id)
+         WHERE rn = 1 ORDER BY query_id"""),
+    "q21_embedding_sums" -> Query((s, d) => {
       Tables.read(s, d, "embeddings")
         .select(col("vec_id"),
           round(aggregate(col("embedding"), lit(0.0), (a, b) => a + b), 4).as("comp_sum"))
         .orderBy(col("vec_id"))
-    }),
+    }, oracle =
+      """SELECT vec_id, round(list_reduce(
+           list_prepend(CAST(0 AS DOUBLE),
+             list_transform(embedding, x -> CAST(x AS DOUBLE))),
+           (a, b) -> a + b), 4) AS comp_sum
+         FROM embeddings ORDER BY vec_id"""),
     // pinned (count + digest) at the deterministic sf0.01 LSH top-k —
     // hyperplane sigs are a pure function of (vector, seed), the re-rank
     // tie-breaks by neighbor_id, and the digest is order-independent, so
     // the value is identical at any parallelism (verified 4 vs 32 cores).
+    // The oracle re-derives n_rows as 5 neighbors per query vector.
     // Recall vs exact stays separately gated by q28.
-    "q22_ann_lsh" -> ((s, d) => {
+    "q22_ann_lsh" -> Query((s, d) => {
       val e = Tables.read(s, d, "embeddings")
       metricRows(
         Similarity.lshTopK(s, e.filter(col("vec_id") < 32), e, 5),
         "digest" -> contentDigest(col("query_id"), col("neighbor_id"), col("rank")),
         "n_rows" -> count(lit(1)))
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(75452503907 AS BIGINT) AS value
+           UNION ALL SELECT 'n_rows',
+             (SELECT count(*) * 5 FROM embeddings WHERE vec_id < 32))
+         ORDER BY metric"""),
     // driver-visible ANN recall gates: the engine computes recall@5 of the
     // approximate paths against its exact top-k (oracle-verified in q25)
     // and surfaces pass/fail against the documented floors — LSH >= 0.9
@@ -394,7 +555,7 @@ object SparkEntry {
     // >= 0.9 on the in-query clustered fixture,
     // the regime ANN exists for. n_exact_pairs grounds the check in a
     // value DuckDB derives independently.
-    "q28_ann_recall" -> ((s, d) => {
+    "q28_ann_recall" -> Query((s, d) => {
       import s.implicits._
       def rec(exact: DataFrame, approx: DataFrame, nEx: Double): Double =
         approx.select(col("query_id"), col("neighbor_id"))
@@ -433,40 +594,114 @@ object SparkEntry {
           ("n_exact_pairs", nEx.toLong))
           .toDF("metric", "value").orderBy("metric")
       }
-    }),
+    }, oracle =
+      """WITH ex AS (
+           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             row_number() OVER (PARTITION BY q.vec_id
+               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) AS rn
+           FROM embeddings q, embeddings c
+           WHERE q.vec_id < 32 AND q.vec_id <> c.vec_id)
+         SELECT * FROM (
+           SELECT 'ivf_clustered_recall_ge_090' AS metric, CAST(1 AS BIGINT) AS value
+           UNION ALL SELECT 'ivf_recall_ge_070', 1
+           UNION ALL SELECT 'lsh_recall_ge_090', 1
+           UNION ALL SELECT 'n_clustered_pairs', 160
+           UNION ALL SELECT 'n_exact_pairs', (SELECT count(*) FROM ex WHERE rn <= 5))
+         ORDER BY metric"""),
 
     // ---- KG operators over documents ----
-    "q30_mentions" -> ((s, d) => {
+    "q30_mentions" -> Query((s, d) => {
       KgOps.mentions(s, Tables.read(s, d, "documents"))
         .orderBy(col("doc_id"), col("pos"))
-    }),
-    "q31_band_pair_counts" -> ((s, d) => {
+    }, oracle =
+      s"""WITH m AS ($mentionCte)
+         SELECT doc_id, mention, pos FROM m WHERE pos >= 0
+         ORDER BY doc_id, pos"""),
+    "q31_band_pair_counts" -> Query((s, d) => {
       KgOps.bandPairCounts(KgOps.mentions(s, Tables.read(s, d, "documents")))
         .orderBy(col("doc_id"))
-    }),
-    "q32_mention_dict" -> ((s, d) => {
+    }, oracle =
+      s"""WITH m AS ($mentionCte)
+         SELECT a.doc_id, count(*) AS n_pairs
+         FROM m a JOIN m b ON a.doc_id = b.doc_id
+         WHERE a.pos >= 0 AND b.pos >= 0 AND b.pos - a.pos BETWEEN 1 AND 40
+         GROUP BY 1 ORDER BY 1"""),
+    "q32_mention_dict" -> Query((s, d) => {
       KgOps.dictEncode(KgOps.mentions(s, Tables.read(s, d, "documents")))
         .orderBy(col("e_id"))
-    }),
-    "q33_pair_freq" -> ((s, d) => {
+    }, oracle =
+      s"""WITH m AS ($mentionCte)
+         SELECT mention,
+           row_number() OVER (ORDER BY min(doc_id * 1000000 + pos)) - 1 AS e_id
+         FROM m WHERE pos >= 0 GROUP BY mention
+         ORDER BY e_id"""),
+    "q33_pair_freq" -> Query((s, d) => {
       KgOps.pairFreq(
         KgOps.bandPairs(KgOps.mentions(s, Tables.read(s, d, "documents"))), 2L)
         .orderBy(col("m1"), col("m2"))
-    }),
-    "q34_mention_components" -> ((s, d) => {
+    }, oracle =
+      s"""WITH m AS ($mentionCte)
+         SELECT a.mention AS m1, b.mention AS m2, count(*) AS cnt
+         FROM m a JOIN m b ON a.doc_id = b.doc_id
+         WHERE a.pos >= 0 AND b.pos >= 0 AND b.pos - a.pos BETWEEN 1 AND 40
+         GROUP BY 1,2 HAVING count(*) >= 2 ORDER BY 1,2"""),
+    "q34_mention_components" -> Query((s, d) => {
       KgOps.mentionComponents(s, KgOps.mentions(s, Tables.read(s, d, "documents")))
         .orderBy(col("e_id"))
-    }),
-    "q35_svo_pairs" -> ((s, d) => {
+    }, oracle =
+      s"""WITH RECURSIVE m AS (SELECT * FROM ($mentionCte) WHERE pos >= 0),
+         dict AS (SELECT mention,
+                    row_number() OVER (ORDER BY min(doc_id * 1000000 + pos)) - 1 AS e_id
+                  FROM m GROUP BY mention),
+         pairs AS (SELECT a.mention AS m1, b.mention AS m2
+                   FROM m a JOIN m b ON a.doc_id = b.doc_id
+                   WHERE b.pos - a.pos BETWEEN 1 AND 40),
+         edges AS (SELECT DISTINCT d1.e_id AS src, d2.e_id AS dst
+                   FROM pairs JOIN dict d1 ON pairs.m1 = d1.mention
+                   JOIN dict d2 ON pairs.m2 = d2.mention),
+         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+         walk(node, reach) AS (
+           SELECT e_id, e_id FROM dict
+           UNION
+           SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach)
+         SELECT node AS e_id, CAST(min(reach) AS BIGINT) AS component
+         FROM walk GROUP BY node ORDER BY e_id"""),
+    "q35_svo_pairs" -> Query((s, d) => {
       graft.ops.SvoPairs.pairs(s, Tables.read(s, d, "documents"))
         .orderBy(col("doc_id"), col("a_idx"), col("b_idx"))
-    }),
+    }, oracle =
+      s"""WITH base AS ($toksCte),
+         parsed AS (
+           SELECT doc_id, toks,
+             list_position(list_transform(toks, t ->
+               CASE WHEN list_contains($svoVerbs, t) THEN 1 ELSE 0 END), 1) AS vi
+           FROM base),
+         parsed2 AS (
+           SELECT doc_id, toks, vi,
+             list_filter(generate_series(1, vi - 1), i ->
+               NOT list_contains($stopList, toks[i]) AND regexp_matches(toks[i], '[a-z]'))[-1] AS subj,
+             list_filter(generate_series(vi + 1, len(toks)), i ->
+               NOT list_contains($stopList, toks[i]) AND NOT list_contains($svoVerbs, toks[i]))[1:3] AS objs
+           FROM parsed WHERE vi IS NOT NULL AND vi > 0),
+         noded AS (
+           SELECT doc_id, toks, list_prepend(subj, objs) AS nodes
+           FROM parsed2 WHERE subj IS NOT NULL),
+         exploded AS (
+           SELECT doc_id, toks, nodes,
+             unnest(list_filter(flatten(list_transform(generate_series(1, len(nodes)), x ->
+               list_transform(generate_series(1, len(nodes)), y -> {'ai': x, 'bi': y}))),
+               q -> q.ai <> q.bi)) AS p
+           FROM noded)
+         SELECT doc_id, CAST(p.ai - 1 AS INTEGER) AS a_idx, CAST(p.bi - 1 AS INTEGER) AS b_idx,
+                toks[nodes[p.ai]] AS a_tok, toks[nodes[p.bi]] AS b_tok
+         FROM exploded ORDER BY doc_id, a_idx, b_idx"""),
     // the north-rule P/R>=0.95 quality gate, surfaced to the driver: the
     // SemEval test fixture is classified by the DISTRIBUTED inference path
     // (broadcast kernel, length-bucketed batches) and micro-P/R/F1 are
     // emitted as rows; the oracle pins the achieved values, so any kernel
-    // or pipeline regression flips this row to a hash FAIL
-    "q37_semeval_prf" -> ((s, _) => {
+    // or pipeline regression flips this row to a hash FAIL (73/76 correct
+    // on the fixture test split)
+    "q37_semeval_prf" -> Query((s, _) => {
       import s.implicits._
       val (kernel, rel2idx, _) = trainedKernel
       val tokB = s.sparkContext.broadcast(Vocab.fixtureTokenizer)
@@ -492,30 +727,79 @@ object SparkEntry {
         ("n_test", test.length.toDouble),
         ("pass_ge_095", if (prf.precision >= 0.95 && prf.recall >= 0.95) 1.0 else 0.0))
         .toDF("metric", "value").orderBy("metric")
-    }),
-    "q36_mentions_kind_filter" -> ((s, d) => {
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'micro_f1' AS metric, CAST(0.960526 AS DOUBLE) AS value
+           UNION ALL SELECT 'micro_p', 0.960526
+           UNION ALL SELECT 'micro_r', 0.960526
+           UNION ALL SELECT 'n_test', 76
+           UNION ALL SELECT 'pass_ge_095', 1)
+         ORDER BY metric"""),
+    "q36_mentions_kind_filter" -> Query((s, d) => {
       KgOps.mentionsFiltered(s, Tables.read(s, d, "documents"), Set("SYS"))
         .orderBy(col("doc_id"), col("pos"))
-    }),
+    }, oracle =
+      s"""WITH m AS ($mentionCte)
+         SELECT doc_id, mention, pos, 'SYS' AS kind
+         FROM m WHERE pos >= 0 AND list_contains($sysKinds, mention)
+         ORDER BY doc_id, pos"""),
     // open-web mention recall: rule-based noun phrases that are NOT
     // gazetteer hits (the reference's noun_chunks stand-in — a page with
     // out-of-gazetteer entities still yields mentions)
-    "q38_np_mentions" -> ((s, d) => {
+    "q38_np_mentions" -> Query((s, d) => {
       KgOps.npMentions(s, Tables.read(s, d, "documents"))
         .filter(!col("mention").isin(KgOps.DocGazetteer: _*))
         .orderBy(col("doc_id"), col("pos"), col("mention"))
-    }),
+    }, oracle =
+      s"""WITH base AS ($toksCte),
+         np AS (SELECT doc_id, toks,
+                  list_transform(toks, t -> regexp_matches(t, '^[A-Z][A-Za-z0-9]*$$')) AS cf
+                FROM base),
+         caps AS (SELECT doc_id, unnest(list_transform(
+             list_filter(generate_series(1, len(toks)), i -> cf[i] AND (i = 1 OR NOT cf[i-1])),
+             s -> {'p': s, 'm': array_to_string(list_slice(toks, s,
+                     coalesce(list_filter(generate_series(s, len(toks)), j -> NOT cf[j])[1],
+                              len(toks) + 1) - 1), ' '),
+                   'r': 'cap'})) AS c
+           FROM np),
+         dets AS (SELECT doc_id, unnest(list_transform(
+             list_filter(generate_series(1, len(toks)), p -> list_contains(['the','a','an'], toks[p])),
+             p -> {'p': p + 1, 'm': array_to_string(list_slice(toks, p + 1,
+                     LEAST(p + 3,
+                       coalesce(list_filter(generate_series(p + 1, len(toks)), j ->
+                         NOT (regexp_matches(toks[j], '^[a-z0-9]+$$')
+                              AND NOT list_contains($stopList, toks[j])
+                              AND NOT list_contains(['the','a','an'], toks[j])))[1],
+                         len(toks) + 1) - 1,
+                       len(toks))), ' '),
+                   'r': 'det'})) AS c
+           FROM np),
+         allc AS (SELECT doc_id, c.p AS pos1, c.m AS mention, c.r AS rule FROM caps WHERE c.m <> ''
+                  UNION ALL
+                  SELECT doc_id, c.p, c.m, c.r FROM dets WHERE c.m <> ''),
+         ranked AS (SELECT doc_id, mention, pos1 - 1 AS pos, rule,
+                      row_number() OVER (PARTITION BY doc_id, mention ORDER BY pos1, rule) AS rn
+                    FROM allc)
+         SELECT doc_id, mention, CAST(pos AS INTEGER) AS pos, rule
+         FROM ranked WHERE rn = 1 AND NOT list_contains($gazArr, mention)
+         ORDER BY doc_id, pos, mention"""),
 
     // ---- full KG pipeline, pinned (q53 pattern): the 512-page fixed-seed
     // corpus yields a deterministic triple set; the oracle pins its count
     // and an order-independent content digest, so any regression in the
     // scan→normalize→annotate→window→score→emit chain flips the hash ----
-    "q40_kg_triples" -> ((s, _) => {
+    // flagship pipeline: 11,254 triples, digest = sum of
+    // xxhash64(subj|pred|obj|url) mod 1e9+7
+    "q40_kg_triples" -> Query((s, _) => {
       metricRows(
         kgTriples(s, 512, canonical = false),
         "digest" -> contentDigest(col("subj"), col("pred"), col("obj"), col("url")),
         "n_triples" -> count(lit(1)))
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(5655273200262 AS BIGINT) AS value
+           UNION ALL SELECT 'n_triples', 11254)
+         ORDER BY metric"""),
     // the COMPOSED open-web mention config (reference infer.py:212-223:
     // NER pairs UNION dep-parse subject/object pairs; noun-chunk third
     // source per mtb_data_loader.py:514-522): same fixed-seed 512-page
@@ -524,30 +808,46 @@ object SparkEntry {
     // statements. Discriminates against q40 by construction: its pinned
     // n_triples differs from q40's pinned 11,254 exactly because the two
     // extra mention sources contribute; the pipeline runs ONCE (no
-    // gazetteer-only comparison leg — q40 already pins that).
-    "q57_kg_triples_composed" -> ((s, _) => {
+    // gazetteer-only comparison leg — q40 already pins that). Pinned:
+    // 18,263 triples, and the digest of the composed output end to end.
+    "q57_kg_triples_composed" -> Query((s, _) => {
       metricRows(
         kgTriples(s, 512, canonical = false,
           cfg = graft.triples.TriplePipeline.Config(svoMentions = true, npMentions = true)),
         "digest" -> contentDigest(col("subj"), col("pred"), col("obj"), col("url")),
         "n_triples" -> count(lit(1)))
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(9173879667976 AS BIGINT) AS value
+           UNION ALL SELECT 'n_triples', 18263)
+         ORDER BY metric"""),
     // gradient-accumulation batching (§2.32): deterministic epoch-shuffle
     // rank → micro-batch → optimizer-step assignment + reference loss
     // scale, exactly SQL-mirrorable
-    "q48_grad_accum" -> ((s, d) => {
+    "q48_grad_accum" -> Query((s, d) => {
       val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       graft.statements.GradAccum.assign(
         st.select(col("relation_id")), "relation_id",
         batchSize = 64, miniBatchSize = 4, epoch = 0)
         .orderBy(col("relation_id"))
+    }, oracle = {
+      import graft.statements.PortableRng.{sqlDraw, sqlMix}
+      s"""WITH $poolsCte,
+         ranked AS (SELECT rid,
+             row_number() OVER (ORDER BY ${sqlDraw(sqlMix("42", "0"), "5", "rid")}, rid) - 1 AS rank
+           FROM rel)
+         SELECT rid AS relation_id, CAST(rank AS BIGINT) AS rank,
+           CAST(rank // 4 AS BIGINT) AS micro_batch,
+           CAST((rank // 4) // 16 AS BIGINT) AS accum_step,
+           CAST(1.0 / 64 AS DOUBLE) AS loss_scale
+         FROM ranked ORDER BY relation_id"""
     }),
     // graph materialization with an EXACT oracle: the same KgGraph
     // operator over documents-grounded co-occurrence triples (the
     // Corpus-based q47 stays as pipeline integration evidence; surface ids
     // are xxhash64 and stay engine-side — the oracle checks the
     // aggregation semantics on the surface/degree columns)
-    "q49_kg_graph_docs" -> ((s, d) => {
+    "q49_kg_graph_docs" -> Query((s, d) => {
       val pairs = KgOps.bandPairs(KgOps.mentions(s, Tables.read(s, d, "documents")))
       val triples = pairs.select(
         col("m1").as("subj"), lit("cooccur").as("pred"),
@@ -557,14 +857,30 @@ object SparkEntry {
           col("in_degree").cast("long").as("in_degree"),
           col("degree").cast("long").as("degree"))
         .orderBy(col("surface"))
-    }),
-    "q47_kg_graph_nodes" -> ((s, _) => {
+    }, oracle =
+      s"""WITH m AS (SELECT * FROM ($mentionCte) WHERE pos >= 0),
+         p AS (SELECT a.mention AS m1, b.mention AS m2
+               FROM m a JOIN m b ON a.doc_id = b.doc_id
+                 AND b.pos - a.pos BETWEEN 1 AND 40),
+         outd AS (SELECT m1 AS surface, count(*) AS out_degree FROM p GROUP BY 1),
+         ind AS (SELECT m2 AS surface, count(*) AS in_degree FROM p GROUP BY 1)
+         SELECT coalesce(o.surface, i.surface) AS surface,
+           CAST(coalesce(out_degree, 0) AS BIGINT) AS out_degree,
+           CAST(coalesce(in_degree, 0) AS BIGINT) AS in_degree,
+           CAST(coalesce(out_degree, 0) + coalesce(in_degree, 0) AS BIGINT) AS degree
+         FROM outd o FULL OUTER JOIN ind i ON o.surface = i.surface
+         ORDER BY surface"""),
+    "q47_kg_graph_nodes" -> Query((s, _) => {
       metricRows(
         graft.triples.KgGraph.materialize(kgTriples(s, 256, canonical = true)).nodes,
         "digest" -> contentDigest(
           col("surface"), col("out_degree"), col("in_degree"), col("degree")),
         "n_nodes" -> count(lit(1)))
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(19155044400 AS BIGINT) AS value
+           UNION ALL SELECT 'n_nodes', 40)
+         ORDER BY metric"""),
     // pinned count + digest, PLUS the canonicalize invariants the judge
     // asked for: row count equal to the raw q40 pipeline's, and every
     // canonical surface occurring among the raw surfaces (the linker may
@@ -575,8 +891,8 @@ object SparkEntry {
     // the variant_* rows close that: the same raw triples are relabeled
     // against an adversarial dim (every surface plus a deterministic
     // " co" near-dup variant), where MinHash DOES merge, and the rewritten
-    // triple set's digest + changed-row count are pinned.
-    "q41_kg_triples_canonical" -> ((s, _) => {
+    // triple set's digest + changed-row count (5,792) are pinned.
+    "q41_kg_triples_canonical" -> Query((s, _) => {
       import s.implicits._
       // ONE pipeline pass: raw runs the narrow chain once into the cache;
       // the canonical leg is derived from the CACHED raw triples by the
@@ -635,19 +951,35 @@ object SparkEntry {
           ("variant_n_changed", changedV))
           .toDF("metric", "value").orderBy("metric")
       }
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(5655273200262 AS BIGINT) AS value
+           UNION ALL SELECT 'n_canon_surfaces_not_in_raw', 0
+           UNION ALL SELECT 'n_triples', 11254
+           UNION ALL SELECT 'n_triples_minus_q40', 0
+           UNION ALL SELECT 'variant_digest', 5640726223426
+           UNION ALL SELECT 'variant_n_changed', 5792)
+         ORDER BY metric"""),
     // MTB pools over the documents table — same operator code as the
     // Corpus path (Encode.pools et al., exercised by q43/q44), but every
     // stage is ANSI-expressible, so pools/split/sampling get EXACT oracles
-    "q42_mtb_pools" -> ((s, d) => {
+    "q42_mtb_pools" -> Query((s, d) => {
       val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       graft.statements.Encode.pools(st)
         // array columns crash the driver's pandas sorter — surface as JSON
         .withColumn("relation_ids", to_json(col("relation_ids")))
         .orderBy(col("e1_id"), col("e2_id"))
-    }),
+    }, oracle =
+      s"""WITH $poolsCte
+         SELECT e1_id, e2_id,
+                '[' || array_to_string(relation_ids, ',') || ']' AS relation_ids,
+                "set"
+         FROM pools ORDER BY e1_id, e2_id"""),
 
-    "q43_pool_pair_scores" -> ((s, _) => {
+    // within-pool pair scoring (§2.25): 16,915 cosine scores over the
+    // fixed-seed 256-page MTB pools, digest over (pool, rid_a, rid_b,
+    // score@6dp) pinned — was the last rows-only §2 row
+    "q43_pool_pair_scores" -> Query((s, _) => {
       // pinned evidence: every pair score is computed for real, then
       // count + an order-independent digest over the canonical (pool,
       // rid_a, rid_b, score@6dp) rows is pinned by the oracle —
@@ -662,7 +994,11 @@ object SparkEntry {
             col("pool_id"), col("rid_a"), col("rid_b"), col("score")),
           "n_pairs" -> count(lit(1)))
       }
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(8469790563540 AS BIGINT) AS value
+           UNION ALL SELECT 'n_pairs', 16915)
+         ORDER BY metric"""),
     // §2.27 driver row: the full MTBLoss composition — CrossEntropyLoss(
     // ignore_index, sum) + blank BCE-with-logits in the reference's
     // pos-pos-then-pos-neg enumeration order (`model/mtb_loss.py:15-82`) —
@@ -671,8 +1007,9 @@ object SparkEntry {
     // rows sort by relation id, the first ceil(n/2) act as positives, LM
     // logits are the first min(4, n) embedding rows with labels rid mod dim
     // (odd rows hit the ignore-index path). Every per-pool loss is computed
-    // for real; the digest over (pool_id, loss@6dp) is pinned.
-    "q58_mtb_losses" -> ((s, _) => {
+    // for real; the digest over (pool_id, loss@6dp) and the 1,234 pool
+    // count are pinned (verified identical at 4 and 32 cores).
+    "q58_mtb_losses" -> Query((s, _) => {
       import s.implicits._
       overFixtureMtb(s) { (ds, _) =>
         val losses = embeddedPools(s, ds)
@@ -697,7 +1034,11 @@ object SparkEntry {
           "digest" -> contentDigest(col("pool_id"), col("loss")),
           "n_pools" -> count(lit(1)))
       }
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(603680517876 AS BIGINT) AS value
+           UNION ALL SELECT 'n_pools', 1234)
+         ORDER BY metric"""),
     // §2.33 driver row (the last §2 row without driver-visible evidence):
     // the model-checkpoint sink exercised end to end on the REAL artifact
     // path — three distinct epochs fitted deterministically and saved
@@ -706,8 +1047,10 @@ object SparkEntry {
     // logits bit-for-bit on the SemEval test encodings, and a manifest
     // naming a missing artifact reads as "no checkpoint" instead of
     // throwing. ArtifactKernel.fit is a pure function of the fixture, so
-    // the committed artifact's size and byte digest are pinned.
-    "q59_kernel_checkpoint" -> ((s, _) => {
+    // the committed artifact's size and byte digest are pinned;
+    // latest-wins and corruption tolerance are 0/1 metrics the engine
+    // computes for real.
+    "q59_kernel_checkpoint" -> Query((s, _) => {
       import s.implicits._
       val tok = Vocab.fixtureTokenizer
       val train = SemEval.parseLines(SemEvalFixture.trainLines.toIndexedSeq)
@@ -760,12 +1103,20 @@ object SparkEntry {
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
         finally st.close()
       }
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'artifact_bytes' AS metric, CAST(45420 AS BIGINT) AS value
+           UNION ALL SELECT 'artifact_digest', 580238325
+           UNION ALL SELECT 'corrupt_reads_none', 1
+           UNION ALL SELECT 'latest_epoch', 3
+           UNION ALL SELECT 'n_artifacts', 3
+           UNION ALL SELECT 'roundtrip_exact', 1)
+         ORDER BY metric"""),
     // blank-substitution + MLM masking with an EXACT oracle: the same
     // Masking operators over portable per-token polynomial ids from the
     // documents table (fixed single-token spans; q44 keeps exercising the
     // full Corpus/WordPiece composition as rows-only)
-    "q55_masking" -> ((s, d) => {
+    "q55_masking" -> Query((s, d) => {
       import s.implicits._
       Tables.read(s, d, "documents")
         .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -792,8 +1143,44 @@ object SparkEntry {
         .withColumn("masked_pos", to_json(col("masked_pos")))
         .withColumn("labels", to_json(col("labels")))
         .orderBy(col("doc_id"))
+    }, oracle = {
+      import graft.statements.PortableRng.{sqlDraw, sqlMix}
+      val thr = (0.7 * graft.statements.PortableRng.M).toLong
+      s"""WITH d AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ') AS toks
+                     FROM documents),
+         f AS (SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) >= 6),
+         ids0 AS (SELECT doc_id, n,
+             list_transform(toks, t -> CAST(list_reduce(
+               list_prepend(CAST(0 AS BIGINT),
+                 list_transform(string_split(t, ''), c -> CAST(ascii(c) AS BIGINT))),
+               (a, c) -> (a * 31 + c) % 1000000007) AS BIGINT)) AS ids,
+             ${sqlMix("doc_id", "0")} AS kk
+           FROM f),
+         sel AS (SELECT *,
+             GREATEST(1, CAST(round(0.15 * (n - 5)) AS INTEGER)) AS n_mask,
+             ${sqlDraw("kk", "6", "1")} < $thr AS b1,
+             ${sqlDraw("kk", "6", "2")} < $thr AS b2
+           FROM ids0),
+         pick AS (SELECT *, list_sort(list_transform(
+             list_slice(list_sort(list_transform(generate_series(6, n),
+               i -> {'h': ${sqlDraw("kk", "7", "i - 1")}, 'i': i})), 1, n_mask),
+             s -> s.i)) AS picked
+           FROM sel)
+         SELECT doc_id,
+           CAST(list_transform(generate_series(1, n), j ->
+             CASE WHEN list_contains(picked, j) THEN -2
+                  WHEN j = 2 AND b1 THEN -1
+                  WHEN j = 4 AND b2 THEN -1
+                  ELSE ids[j] END) AS JSON) AS masked_ids,
+           CAST(list_transform(picked, j -> j - 1) AS JSON) AS masked_pos,
+           CAST(list_transform(picked, j -> ids[j]) AS JSON) AS labels,
+           CAST(0 AS INTEGER) AS e1_start, CAST(2 AS INTEGER) AS e2_start
+         FROM pick ORDER BY doc_id"""
     }),
-    "q44_training_augment" -> ((s, _) => {
+    // blank-substitution + MLM masking over REAL WordPiece output
+    // (§2.20/2.21 full composition; q55 keeps the SQL-replayed oracle on
+    // portable ids)
+    "q44_training_augment" -> Query((s, _) => {
       import s.implicits._
       overFixtureMtb(s) { (ds, tokB) =>
         ds.tokenizedRelations
@@ -821,8 +1208,12 @@ object SparkEntry {
               col("labels"), col("e1_start"), col("e2_start")),
             "n_rows" -> count(lit(1))))
       }
-    }),
-    "q45_negative_samples" -> ((s, d) => {
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'digest' AS metric, CAST(2624109546760 AS BIGINT) AS value
+           UNION ALL SELECT 'n_rows', 5267)
+         ORDER BY metric"""),
+    "q45_negative_samples" -> Query((s, d) => {
       import graft.statements.Encode
       val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       // the per-entity pools re-group the pair pools (the same multiset per
@@ -834,33 +1225,122 @@ object SparkEntry {
         st.count(), maxSize = 4, epoch = 0)
         .withColumn("negative_ids", to_json(col("negative_ids")))
         .orderBy(col("e1_id"), col("e2_id"))
+    }, oracle = {
+      import graft.statements.PortableRng.{sqlDraw, sqlKey, M}
+      s"""WITH $poolsCte,
+         e1p AS (SELECT e1_id, list_sort(list(rid)) AS e1_rids FROM rel GROUP BY 1),
+         e2p AS (SELECT e2_id, list_sort(list(rid)) AS e2_rids FROM rel GROUP BY 1),
+         nrel AS (SELECT count(*) AS n_rel FROM rel),
+         base AS (SELECT p.e1_id, p.e2_id, p."set", p.relation_ids,
+             list_filter(a.e1_rids, r -> NOT list_contains(b.e2_rids, r)) AS neg_e1,
+             list_filter(b.e2_rids, r -> NOT list_contains(a.e1_rids, r)) AS neg_e2,
+             ${sqlKey("42", "p.e1_id", "p.e2_id", "0")} AS kk, n.n_rel AS n_rel
+           FROM pools p JOIN e1p a ON p.e1_id = a.e1_id
+           JOIN e2p b ON p.e2_id = b.e2_id, nrel n),
+         wp AS (SELECT *, list_transform(
+             list_slice(list_sort(list_transform(relation_ids,
+               r -> {'h': ${sqlDraw("kk", "3", "r")}, 'r': r})),
+               1, LEAST(4, len(relation_ids))),
+             s -> s.r) AS pos_sample
+           FROM base),
+         br AS (SELECT *,
+             CASE WHEN ${sqlDraw("kk", "0", "0")} > 1073741823 THEN
+               CASE WHEN ${sqlDraw("kk", "0", "1")} > 1073741823
+                    THEN neg_e1 ELSE neg_e2 END
+             ELSE CAST([] AS BIGINT[]) END AS side
+           FROM wp),
+         bn AS (SELECT *, list_transform(
+             list_slice(list_sort(list_transform(side,
+               r -> {'h': ${sqlDraw("kk", "1", "r")}, 'r': r})),
+               1, LEAST(4, len(side))),
+             s -> s.r) AS bnegs,
+             LEAST(4, n_rel) AS nn
+           FROM br),
+         fb AS (SELECT *, CASE WHEN len(bnegs) > 0 THEN bnegs ELSE
+             coalesce(
+               (list_filter(list_transform(generate_series(0, 99), a ->
+                  list_transform(generate_series(0, nn - 1), i ->
+                    (n_rel * ${sqlDraw("kk", "2", "a * nn + i")}) // $M)),
+                 d -> len(list_intersect(d, pos_sample)) = 0))[1],
+               list_filter(list_transform(generate_series(0, nn - 1), i ->
+                   (n_rel * ${sqlDraw("kk", "2", "99 * nn + i")}) // $M),
+                 x -> NOT list_contains(pos_sample, x)))
+           END AS negs
+           FROM bn)
+         SELECT e1_id, e2_id, "set",
+                '[' || array_to_string(negs, ',') || ']' AS negative_ids
+         FROM fb ORDER BY e1_id, e2_id"""
     }),
-    "q46_positive_samples" -> ((s, d) => {
+    "q46_positive_samples" -> Query((s, d) => {
       val st = graft.statements.MtbDocOps.statements(s, Tables.read(s, d, "documents"))
       graft.statements.MtbDataset.samplePositives(
         graft.statements.Encode.pools(st), maxSize = 4, epoch = 0)
         .select(col("e1_id"), col("e2_id"), col("set"), col("rid"))
         .orderBy(col("e1_id"), col("e2_id"), col("rid"))
+    }, oracle = {
+      import graft.statements.PortableRng.{sqlDraw, sqlKey}
+      s"""WITH $poolsCte,
+         ex AS (SELECT e1_id, e2_id, "set", unnest(relation_ids) AS rid FROM pools),
+         kx AS (SELECT *, ${sqlKey("42", "e1_id", "e2_id", "0")} AS kk FROM ex),
+         rk AS (SELECT *, row_number() OVER (PARTITION BY e1_id, e2_id
+                  ORDER BY ${sqlDraw("kk", "3", "rid")}, rid) AS rn FROM kx)
+         SELECT e1_id, e2_id, "set", rid FROM rk WHERE rn <= 4
+         ORDER BY e1_id, e2_id, rid"""
     }),
 
     // ---- streaming ----
-    "q50_stream_hourly" -> ((s, d) => {
+    "q50_stream_hourly" -> Query((s, d) => {
       graft.streaming.EventStream.hourlyAgg(s, Tables.path(d, "events"))
         // decimal internally (order-independent exact sums across
         // micro-batches); DOUBLE surfaced for the driver's pandas hasher
         .withColumn("total_value", col("total_value").cast("double"))
         .orderBy(col("hour"), col("event_type"))
-    }),
+    }, oracle =
+      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+         FROM events GROUP BY 1,2 ORDER BY 1,2"""),
 
-    "q51_stream_sessions" -> ((s, d) => {
+    "q51_stream_sessions" -> Query((s, d) => {
       graft.streaming.EventStream.sessionize(s, Tables.path(d, "events"), gapMin = 30)
         .orderBy(col("user_id"), col("start_us"))
-    }),
+    }, oracle =
+      """WITH e AS (
+           SELECT user_id, epoch_us(ts) AS ts_us,
+                  CAST(round(value*10000) AS BIGINT) AS v
+           FROM events
+         ), marked AS (
+           SELECT user_id, ts_us, v,
+             CASE WHEN ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) > 1800000000
+                       OR lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) IS NULL
+                  THEN 1 ELSE 0 END AS new_sess
+           FROM e
+         ), sess AS (
+           SELECT user_id, ts_us, v,
+             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us ROWS UNBOUNDED PRECEDING) AS sid
+           FROM marked
+         ), agg AS (
+           SELECT user_id, sid, min(ts_us) AS start_us, max(ts_us) AS end_us,
+                  count(*) AS n_events, sum(v) AS total_e4
+           FROM sess GROUP BY user_id, sid
+         ), lastsid AS (
+           SELECT user_id, max(sid) AS msid FROM agg GROUP BY user_id
+         )
+         -- emitted iff closed by a later event (not the user's last session)
+         -- OR the event-time timeout fired: Spark compares the watermark
+         -- (ms) strictly against the ms-truncated (end + gap) timestamp
+         SELECT a.user_id, a.start_us, a.end_us, a.n_events,
+                CAST(a.total_e4 AS BIGINT) AS total_e4
+         FROM agg a JOIN lastsid l ON a.user_id = l.user_id
+         WHERE a.sid < l.msid
+            OR (a.end_us + 1800000000) // 1000 <
+               (SELECT max(ts_us) // 1000 - 7200000 FROM e)
+         ORDER BY a.user_id, a.start_us"""),
     // streaming KG ingest surfaced to the driver: the same fused pipeline
     // lifted onto readStream (AvailableNow) must emit EXACTLY the batch
     // pipeline's triples — the oracle pins the deterministic triple count
-    // and a zero symmetric difference
-    "q53_stream_triples" -> ((s, _) => {
+    // (2756 from the fixed-seed 128-page corpus) and a zero symmetric
+    // difference, so any incremental-ingest divergence flips this
+    "q53_stream_triples" -> Query((s, _) => {
       import s.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("graft_q53")
       val pagesDir = s"$tmp/pages"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
@@ -895,11 +1375,15 @@ object SparkEntry {
             .toDF("metric", "value").orderBy("metric")
         }
       }
-    }),
+    }, oracle =
+      """SELECT * FROM (
+           SELECT 'n_stream_triples' AS metric, CAST(2756 AS BIGINT) AS value
+           UNION ALL SELECT 'n_sym_diff_vs_batch', 0)
+         ORDER BY metric"""),
     // checkpoint lineage/metrics surfaced to the driver: a two-stage
     // checkpointed run over documents; per-stage row totals from the
     // metrics table have exact SQL mirrors
-    "q54_checkpoint_metrics" -> ((s, d) => {
+    "q54_checkpoint_metrics" -> Query((s, d) => {
       val root = java.nio.file.Files.createTempDirectory("graft_q54").toString
       val cm = new graft.io.CheckpointManager(s, root, "q54")
       val docs = Tables.read(s, d, "documents")
@@ -908,8 +1392,19 @@ object SparkEntry {
       cm.metrics.groupBy(col("stage"))
         .agg(sum(col("rows_out")).cast("long").as("rows_out"))
         .orderBy(col("stage"))
-    }),
-    "q52_fewrel_source" -> ((s, _) => {
+    }, oracle =
+      s"""WITH m AS (SELECT * FROM ($mentionCte) WHERE pos >= 0),
+         p AS (SELECT a.mention FROM m a JOIN m b ON a.doc_id = b.doc_id
+               AND b.pos - a.pos BETWEEN 1 AND 40)
+         SELECT * FROM (
+           SELECT 'mentions' AS stage, CAST((SELECT count(*) FROM m) AS BIGINT) AS rows_out
+           UNION ALL SELECT 'pairs', (SELECT count(*) FROM p))
+         ORDER BY stage"""),
+    // reads the fixture JSON back with DuckDB's JSON reader and re-derives
+    // the reference's validation (one-to-many drop, contiguity asserts,
+    // exclusive-end overlap test), lowercasing, and span arithmetic
+    // independently of the engine
+    "q52_fewrel_source" -> Query((s, _) => {
       // FIXED path (not a per-run temp dir): the DuckDB oracle re-reads
       // the same JSON and re-derives validation + spans independently
       val dir = java.nio.file.Paths.get("/tmp/graft_fewrel_fixture")
@@ -918,14 +1413,21 @@ object SparkEntry {
       graft.fewrel.FewRel.read(s, dir.toString + "/train_wiki.json").toDF()
         .withColumn("tokens", to_json(col("tokens")))
         .orderBy(col("relation"), col("hStart"))
-    }),
+    }, oracle =
+      s"""$fewrelValidCte
+         SELECT relation,
+           CAST(list_transform(toks, x -> lower(x)) AS JSON) AS tokens,
+           CAST(h[1] AS INTEGER) AS hStart, CAST(h[-1] + 1 AS INTEGER) AS hEnd,
+           CAST(t[1] AS INTEGER) AS tStart, CAST(t[-1] + 1 AS INTEGER) AS tEnd
+         FROM valid ORDER BY relation, hStart"""),
     // FewRel N-way K-shot episode nearest-neighbor (§2.26, infer.py:399-412)
     // surfaced to the driver: one episode per valid example, supports drawn
     // deterministically, query embedded with the stub pair head and matched
     // by max dot product. The oracle pins the achieved episode accuracy
     // (scaled 1e6) and independently re-derives the episode count from the
-    // same fixture JSON that q52 reads.
-    "q56_fewrel_episodes" -> ((s, _) => {
+    // same fixture JSON that q52 reads (44/48 episodes correct with seed
+    // 42 and canonical example order — identical at any parallelism).
+    "q56_fewrel_episodes" -> Query((s, _) => {
       import s.implicits._
       val dir = java.nio.file.Paths.get("/tmp/graft_fewrel_fixture")
       java.nio.file.Files.createDirectories(dir)
@@ -939,26 +1441,43 @@ object SparkEntry {
         ("episode_accuracy_e6", math.rint(acc * 1e6).toLong),
         ("n_episodes", n))
         .toDF("metric", "value").orderBy("metric")
-    }),
+    }, oracle =
+      s"""$fewrelValidCte
+         SELECT * FROM (
+           SELECT 'episode_accuracy_e6' AS metric, CAST(916667 AS BIGINT) AS value
+           UNION ALL SELECT 'n_episodes', (SELECT count(*) FROM valid))
+         ORDER BY metric"""),
 
     // ---- multimodal: REAL container-header decode ----
     // payloads carry genuine PNG/JPEG/GIF/WAV headers whose dimensions the
     // oracle derives independently from the generator parameters — the
     // engine must actually PARSE the bytes (endianness, marker scan, chunk
     // layout) to reproduce them
-    "q60_media_meta" -> ((s, d) => {
+    "q60_media_meta" -> Query((s, d) => {
       val media = Multimodal.mediaFixture(Tables.read(s, d, "documents"))
       Multimodal.decodeBatch(s, media, "doc_id", "payload")
         .select(col("doc_id"), col("kind"), col("width"), col("height"), col("byte_len"))
         .orderBy(col("doc_id"))
-    }),
-    "q61_media_bytes" -> ((s, d) => {
+    }, oracle =
+      """SELECT doc_id,
+         CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
+              WHEN 2 THEN 'gif' ELSE 'wav' END AS kind,
+         CAST(CASE WHEN doc_id % 4 = 3 THEN 8000 + (doc_id % 8) * 4000
+              ELSE 16 + (doc_id * 7) % 1024 END AS INTEGER) AS width,
+         CAST(CASE WHEN doc_id % 4 = 3 THEN 1 + doc_id % 2
+              ELSE 16 + (doc_id * 13) % 768 END AS INTEGER) AS height,
+         CAST(CASE doc_id % 4 WHEN 0 THEN 33 WHEN 1 THEN 15
+              WHEN 2 THEN 13 ELSE 36 END + strlen(text) AS BIGINT) AS byte_len
+         FROM documents ORDER BY doc_id"""),
+    "q61_media_bytes" -> Query((s, d) => {
       Tables.read(s, d, "documents")
         .select(col("doc_id"), octet_length(col("text")).as("byte_len"))
         .orderBy(col("doc_id"))
-    })
+    }, oracle =
+      """SELECT doc_id, strlen(text) AS byte_len FROM documents ORDER BY doc_id""")
   )
 
+  // ---- SQL fragments the oracles share ----
   private val gazArr = KgOps.DocGazetteer.map(w => s"'$w'").mkString("[", ", ", "]")
   private val stopList =
     TextStats.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
@@ -1048,601 +1567,4 @@ object SparkEntry {
       val arr = markers.map(w => s"'$w'").mkString("[", ", ", "]")
       s"{'score': len(list_filter(toks, x -> list_contains($arr, x))), 'lang': '$lang'}"
   }.mkString("[", ", ", "]")
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-         count(*) AS count_order,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price
-         FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
-    "q02_revenue_by_nation" ->
-      """SELECT n_name, CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY 1 ORDER BY 1""",
-    "q07_parts_revenue" ->
-      """SELECT p_brand, count(*) AS n_items, sum(l_quantity) AS sum_qty,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY 1 ORDER BY 1""",
-    "q08_region_rollup" ->
-      """SELECT r_name, count(*) AS n_customers,
-         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY 1 ORDER BY 1""",
-    "q03_top_orders_per_cust" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-           SELECT o_custkey, o_orderkey,
-             row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-           FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "q04_priority_with_late_items" ->
-      """SELECT o_orderpriority, count(*) AS n_orders FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey AND l_shipdate > TIMESTAMP '1995-06-01')
-         GROUP BY 1 ORDER BY 1""",
-    "q05_customers_without_orders" ->
-      """SELECT c_custkey FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY 1""",
-    "q06_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1,2 ORDER BY 1,2""",
-    "q10_doc_normalize" ->
-      """SELECT doc_id, trim(regexp_replace(lower(text), ' +', ' ', 'g')) AS text_norm
-         FROM documents ORDER BY doc_id""",
-    "q11_token_counts" ->
-      """SELECT doc_id, len(regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ')) AS n_tokens
-         FROM documents ORDER BY doc_id""",
-    "q12_lang_profile" ->
-      """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-         count(DISTINCT source) AS n_sources
-         FROM documents GROUP BY 1 ORDER BY 1""",
-    "q13_exact_dedup" ->
-      """SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS canonical_id,
-         count(*) OVER (PARTITION BY text) AS dup_count
-         FROM documents ORDER BY doc_id""",
-    "q14_quality_scores" ->
-      s"""SELECT doc_id,
-          len(toks) AS word_count,
-          round(CAST(len(replace(text, ' ', '')) AS DOUBLE) / len(toks), 6) AS mean_word_len,
-          round(CAST(len(list_filter(toks, t -> list_contains($stopList, t))) AS DOUBLE) / len(toks), 6) AS stopword_ratio
-          FROM (SELECT doc_id, text, regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ') AS toks
-                FROM documents) ORDER BY doc_id""",
-    "q15_fingerprints" ->
-      """SELECT doc_id, CAST(list_reduce(
-           list_prepend(CAST(0 AS HUGEINT),
-             list_transform(string_split(text, ''), c -> CAST(ascii(c) AS HUGEINT))),
-           (acc, c) -> (acc * 31 + c) % 1000000007) AS BIGINT) AS fp
-         FROM documents ORDER BY doc_id""",
-    "q16_distinct_trigrams" ->
-      """SELECT doc_id, len(list_distinct(list_transform(
-           generate_series(1, len(toks) - 2),
-           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS n_trigrams
-         FROM (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ') AS toks
-               FROM documents) ORDER BY doc_id""",
-    "q17_langid" ->
-      s"""SELECT doc_id, list_sort($langStructs)[-1].lang AS lang_guess
-         FROM ($toksCte) ORDER BY doc_id""",
-    // Exact-oracle for the MinHash/LSH clusters: all-pairs word-3-shingle
-    // Jaccard >= 0.8 + connected components. Valid because the engine's
-    // final verification is exact Jaccard on candidates and the banded-LSH
-    // miss probability at j >= 0.8 is < 1e-4 per pair (16 bands x 3 rows)
-    // — the clusters coincide with the exhaustive ground truth.
-    "q18_minhash_clusters" ->
-      s"""WITH RECURSIVE sh AS (
-           SELECT doc_id,
-             CASE WHEN len(toks) >= 3 THEN
-               list_distinct(list_transform(generate_series(1, len(toks)-2),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-             ELSE [array_to_string(toks, ' ')] END AS s
-           FROM ($toksCte)),
-         edges AS (
-           SELECT a.doc_id AS src, b.doc_id AS dst
-           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-                 (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8),
-         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-         walk(node, reach) AS (
-           SELECT doc_id, doc_id FROM sh
-           UNION
-           SELECT w.node, s2.dst FROM walk w JOIN sym s2 ON s2.src = w.reach)
-         SELECT node AS doc_id, CAST(min(reach) AS BIGINT) AS cluster_id
-         FROM walk GROUP BY node ORDER BY doc_id""",
-    "q19_simhash" ->
-      s"""$simhashSigSql ORDER BY doc_id""",
-    "q23_simhash_clusters" ->
-      s"""WITH RECURSIVE sig AS ($simhashSigSql),
-         edges AS (SELECT a.doc_id AS src, b.doc_id AS dst
-                   FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-                   WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-         walk(node, reach) AS (
-           SELECT doc_id, doc_id FROM sig
-           UNION
-           SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach)
-         SELECT node AS doc_id, CAST(min(reach) AS BIGINT) AS cluster_id
-         FROM walk GROUP BY node ORDER BY doc_id""",
-    "q35_svo_pairs" ->
-      s"""WITH base AS ($toksCte),
-         parsed AS (
-           SELECT doc_id, toks,
-             list_position(list_transform(toks, t ->
-               CASE WHEN list_contains($svoVerbs, t) THEN 1 ELSE 0 END), 1) AS vi
-           FROM base),
-         parsed2 AS (
-           SELECT doc_id, toks, vi,
-             list_filter(generate_series(1, vi - 1), i ->
-               NOT list_contains($stopList, toks[i]) AND regexp_matches(toks[i], '[a-z]'))[-1] AS subj,
-             list_filter(generate_series(vi + 1, len(toks)), i ->
-               NOT list_contains($stopList, toks[i]) AND NOT list_contains($svoVerbs, toks[i]))[1:3] AS objs
-           FROM parsed WHERE vi IS NOT NULL AND vi > 0),
-         noded AS (
-           SELECT doc_id, toks, list_prepend(subj, objs) AS nodes
-           FROM parsed2 WHERE subj IS NOT NULL),
-         exploded AS (
-           SELECT doc_id, toks, nodes,
-             unnest(list_filter(flatten(list_transform(generate_series(1, len(nodes)), x ->
-               list_transform(generate_series(1, len(nodes)), y -> {'ai': x, 'bi': y}))),
-               q -> q.ai <> q.bi)) AS p
-           FROM noded)
-         SELECT doc_id, CAST(p.ai - 1 AS INTEGER) AS a_idx, CAST(p.bi - 1 AS INTEGER) AS b_idx,
-                toks[nodes[p.ai]] AS a_tok, toks[nodes[p.bi]] AS b_tok
-         FROM exploded ORDER BY doc_id, a_idx, b_idx""",
-    "q36_mentions_kind_filter" ->
-      s"""WITH m AS ($mentionCte)
-         SELECT doc_id, mention, pos, 'SYS' AS kind
-         FROM m WHERE pos >= 0 AND list_contains($sysKinds, mention)
-         ORDER BY doc_id, pos""",
-    "q34_mention_components" ->
-      s"""WITH RECURSIVE m AS (SELECT * FROM ($mentionCte) WHERE pos >= 0),
-         dict AS (SELECT mention,
-                    row_number() OVER (ORDER BY min(doc_id * 1000000 + pos)) - 1 AS e_id
-                  FROM m GROUP BY mention),
-         pairs AS (SELECT a.mention AS m1, b.mention AS m2
-                   FROM m a JOIN m b ON a.doc_id = b.doc_id
-                   WHERE b.pos - a.pos BETWEEN 1 AND 40),
-         edges AS (SELECT DISTINCT d1.e_id AS src, d2.e_id AS dst
-                   FROM pairs JOIN dict d1 ON pairs.m1 = d1.mention
-                   JOIN dict d2 ON pairs.m2 = d2.mention),
-         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-         walk(node, reach) AS (
-           SELECT e_id, e_id FROM dict
-           UNION
-           SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach)
-         SELECT node AS e_id, CAST(min(reach) AS BIGINT) AS component
-         FROM walk GROUP BY node ORDER BY e_id""",
-    "q60_media_meta" ->
-      """SELECT doc_id,
-         CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-              WHEN 2 THEN 'gif' ELSE 'wav' END AS kind,
-         CAST(CASE WHEN doc_id % 4 = 3 THEN 8000 + (doc_id % 8) * 4000
-              ELSE 16 + (doc_id * 7) % 1024 END AS INTEGER) AS width,
-         CAST(CASE WHEN doc_id % 4 = 3 THEN 1 + doc_id % 2
-              ELSE 16 + (doc_id * 13) % 768 END AS INTEGER) AS height,
-         CAST(CASE doc_id % 4 WHEN 0 THEN 33 WHEN 1 THEN 15
-              WHEN 2 THEN 13 ELSE 36 END + strlen(text) AS BIGINT) AS byte_len
-         FROM documents ORDER BY doc_id""",
-    "q20_ann_top1" ->
-      """SELECT query_id, neighbor_id FROM (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) AS rn
-           FROM embeddings q, embeddings c
-           WHERE q.vec_id < 32 AND q.vec_id <> c.vec_id)
-         WHERE rn = 1 ORDER BY query_id""",
-    // exact-oracle for embedding near-dup: exhaustive all-pairs cosine +
-    // connected components (valid per the probe-1 LSH recall argument in
-    // Dedup.embeddingClusters)
-    "q26_embedding_dedup" ->
-      """WITH RECURSIVE edges AS (
-           SELECT a.vec_id AS src, b.vec_id AS dst
-           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-           WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.95),
-         sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-         walk(node, reach) AS (
-           SELECT vec_id, vec_id FROM embeddings
-           UNION
-           SELECT w.node, s.dst FROM walk w JOIN sym s ON s.src = w.reach)
-         SELECT node AS vec_id, CAST(min(reach) AS BIGINT) AS cluster_id
-         FROM walk GROUP BY node ORDER BY vec_id""",
-    "q27_bpe_token_count" ->
-      """SELECT doc_id, len(regexp_extract_all(lower(text), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+')) AS n_bpeish
-         FROM documents ORDER BY doc_id""",
-    // pinned at the deterministic sf0.01 LSH top-k (verified identical at
-    // 4 and 32 cores: sigs are pure functions of (vector, seed), re-rank
-    // tie-breaks by id, digest is order-independent); n_rows is
-    // re-derived by DuckDB as 5 neighbors per query vector. Recall vs the
-    // exact top-k stays gated by q28.
-    "q22_ann_lsh" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(75452503907 AS BIGINT) AS value
-           UNION ALL SELECT 'n_rows',
-             (SELECT count(*) * 5 FROM embeddings WHERE vec_id < 32))
-         ORDER BY metric""",
-    // IVF ANN through the persisted build-once/serve-many index artifact
-    // (IvfIndex): pinned at the deterministic sf0.01 top-k — seeded
-    // bounded-sample k-means + cosine assignment + probe-16 + exact
-    // re-rank is a pure function of the embeddings table (verified
-    // identical at 4 and 32 cores, fresh build each).
-    "q24_ann_ivf" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(76867213721 AS BIGINT) AS value
-           UNION ALL SELECT 'n_rows',
-             (SELECT count(*) * 5 FROM embeddings WHERE vec_id < 32))
-         ORDER BY metric""",
-    "q25_ann_topk" ->
-      """SELECT query_id, neighbor_id, rank FROM (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) AS rank
-           FROM embeddings q, embeddings c
-           WHERE q.vec_id < 32 AND q.vec_id <> c.vec_id)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-    "q55_masking" -> {
-      import graft.statements.PortableRng.{sqlDraw, sqlMix}
-      val thr = (0.7 * graft.statements.PortableRng.M).toLong
-      s"""WITH d AS (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(text, ' +', ' ', 'g')), ' ') AS toks
-                     FROM documents),
-         f AS (SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) >= 6),
-         ids0 AS (SELECT doc_id, n,
-             list_transform(toks, t -> CAST(list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(string_split(t, ''), c -> CAST(ascii(c) AS BIGINT))),
-               (a, c) -> (a * 31 + c) % 1000000007) AS BIGINT)) AS ids,
-             ${sqlMix("doc_id", "0")} AS kk
-           FROM f),
-         sel AS (SELECT *,
-             GREATEST(1, CAST(round(0.15 * (n - 5)) AS INTEGER)) AS n_mask,
-             ${sqlDraw("kk", "6", "1")} < $thr AS b1,
-             ${sqlDraw("kk", "6", "2")} < $thr AS b2
-           FROM ids0),
-         pick AS (SELECT *, list_sort(list_transform(
-             list_slice(list_sort(list_transform(generate_series(6, n),
-               i -> {'h': ${sqlDraw("kk", "7", "i - 1")}, 'i': i})), 1, n_mask),
-             s -> s.i)) AS picked
-           FROM sel)
-         SELECT doc_id,
-           CAST(list_transform(generate_series(1, n), j ->
-             CASE WHEN list_contains(picked, j) THEN -2
-                  WHEN j = 2 AND b1 THEN -1
-                  WHEN j = 4 AND b2 THEN -1
-                  ELSE ids[j] END) AS JSON) AS masked_ids,
-           CAST(list_transform(picked, j -> j - 1) AS JSON) AS masked_pos,
-           CAST(list_transform(picked, j -> ids[j]) AS JSON) AS labels,
-           CAST(0 AS INTEGER) AS e1_start, CAST(2 AS INTEGER) AS e2_start
-         FROM pick ORDER BY doc_id"""
-    },
-    // flagship pipeline pinned at its deterministic values: 11,254 triples
-    // from the fixed-seed 512-page corpus plus an order-independent
-    // content digest (sum of xxhash64(subj|pred|obj|url) mod 1e9+7) — any
-    // regression anywhere in scan→normalize→annotate→window→score→emit
-    // flips one of these
-    "q40_kg_triples" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(5655273200262 AS BIGINT) AS value
-           UNION ALL SELECT 'n_triples', 11254)
-         ORDER BY metric""",
-    // the composed three-source mention union (NER gazetteer + dep-parse
-    // SVO + noun-chunk phrases, reference infer.py:212-223 +
-    // mtb_data_loader.py:514-522) over the same fixed-seed 512-page
-    // corpus: 18,263 triples vs q40's gazetteer-only 11,254 — the pinned
-    // count differing from q40's proves the extra sources contribute;
-    // the digest pins the composed output end to end
-    "q57_kg_triples_composed" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(9173879667976 AS BIGINT) AS value
-           UNION ALL SELECT 'n_triples', 18263)
-         ORDER BY metric""",
-    // §2.27 MTBLoss driver row: per-pool CE(ignore_index, sum) + blank
-    // BCE over the fixed-seed embedded pools (deterministic batch
-    // harness, see the query comment); 1,234 pool losses computed for
-    // real, digest over (pool_id, loss@6dp) pinned — verified identical
-    // at 4 and 32 cores
-    "q58_mtb_losses" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(603680517876 AS BIGINT) AS value
-           UNION ALL SELECT 'n_pools', 1234)
-         ORDER BY metric""",
-    // §2.33 checkpoint sink: save x3 -> loadLatest round-trip on the real
-    // artifact path; bytes/digest are pure functions of the fixture
-    // (deterministic fit), latest-wins and corruption-tolerance asserted
-    // as 0/1 metrics computed for real by the engine
-    "q59_kernel_checkpoint" ->
-      """SELECT * FROM (
-           SELECT 'artifact_bytes' AS metric, CAST(45420 AS BIGINT) AS value
-           UNION ALL SELECT 'artifact_digest', 580238325
-           UNION ALL SELECT 'corrupt_reads_none', 1
-           UNION ALL SELECT 'latest_epoch', 3
-           UNION ALL SELECT 'n_artifacts', 3
-           UNION ALL SELECT 'roundtrip_exact', 1)
-         ORDER BY metric""",
-    // canonical pipeline: same count as q40 (relabel-only, delta pinned 0),
-    // zero invented surfaces, digest pinned; the variant_* rows pin the
-    // relabel path against the adversarial " co" near-dup dim where the
-    // linker provably merges (5,792 triples rewritten)
-    "q41_kg_triples_canonical" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(5655273200262 AS BIGINT) AS value
-           UNION ALL SELECT 'n_canon_surfaces_not_in_raw', 0
-           UNION ALL SELECT 'n_triples', 11254
-           UNION ALL SELECT 'n_triples_minus_q40', 0
-           UNION ALL SELECT 'variant_digest', 5640726223426
-           UNION ALL SELECT 'variant_n_changed', 5792)
-         ORDER BY metric""",
-    // within-pool pair scoring (§2.25): 16,915 cosine scores over the
-    // fixed-seed 256-page MTB pools, digest over (pool, rid_a, rid_b,
-    // score@6dp) pinned — was the last rows-only §2 row
-    "q43_pool_pair_scores" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(8469790563540 AS BIGINT) AS value
-           UNION ALL SELECT 'n_pairs', 16915)
-         ORDER BY metric""",
-    // blank-substitution + MLM masking over REAL WordPiece output
-    // (§2.20/2.21 full composition; q55 keeps the SQL-replayed oracle on
-    // portable ids)
-    "q44_training_augment" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(2624109546760 AS BIGINT) AS value
-           UNION ALL SELECT 'n_rows', 5267)
-         ORDER BY metric""",
-    "q47_kg_graph_nodes" ->
-      """SELECT * FROM (
-           SELECT 'digest' AS metric, CAST(19155044400 AS BIGINT) AS value
-           UNION ALL SELECT 'n_nodes', 40)
-         ORDER BY metric""",
-    // pinned at the deterministic values: 2756 triples from the fixed-seed
-    // 128-page corpus, and ZERO symmetric difference between the streaming
-    // and batch pipelines — any incremental-ingest divergence flips this
-    "q53_stream_triples" ->
-      """SELECT * FROM (
-           SELECT 'n_stream_triples' AS metric, CAST(2756 AS BIGINT) AS value
-           UNION ALL SELECT 'n_sym_diff_vs_batch', 0)
-         ORDER BY metric""",
-    "q54_checkpoint_metrics" ->
-      s"""WITH m AS (SELECT * FROM ($mentionCte) WHERE pos >= 0),
-         p AS (SELECT a.mention FROM m a JOIN m b ON a.doc_id = b.doc_id
-               AND b.pos - a.pos BETWEEN 1 AND 40)
-         SELECT * FROM (
-           SELECT 'mentions' AS stage, CAST((SELECT count(*) FROM m) AS BIGINT) AS rows_out
-           UNION ALL SELECT 'pairs', (SELECT count(*) FROM p))
-         ORDER BY stage""",
-    "q49_kg_graph_docs" ->
-      s"""WITH m AS (SELECT * FROM ($mentionCte) WHERE pos >= 0),
-         p AS (SELECT a.mention AS m1, b.mention AS m2
-               FROM m a JOIN m b ON a.doc_id = b.doc_id
-                 AND b.pos - a.pos BETWEEN 1 AND 40),
-         outd AS (SELECT m1 AS surface, count(*) AS out_degree FROM p GROUP BY 1),
-         ind AS (SELECT m2 AS surface, count(*) AS in_degree FROM p GROUP BY 1)
-         SELECT coalesce(o.surface, i.surface) AS surface,
-           CAST(coalesce(out_degree, 0) AS BIGINT) AS out_degree,
-           CAST(coalesce(in_degree, 0) AS BIGINT) AS in_degree,
-           CAST(coalesce(out_degree, 0) + coalesce(in_degree, 0) AS BIGINT) AS degree
-         FROM outd o FULL OUTER JOIN ind i ON o.surface = i.surface
-         ORDER BY surface""",
-    // reads the fixture JSON back with DuckDB's JSON reader and re-derives
-    // the reference's validation (one-to-many drop, contiguity asserts,
-    // exclusive-end overlap test), lowercasing, and span arithmetic
-    // independently of the engine
-    "q52_fewrel_source" ->
-      s"""$fewrelValidCte
-         SELECT relation,
-           CAST(list_transform(toks, x -> lower(x)) AS JSON) AS tokens,
-           CAST(h[1] AS INTEGER) AS hStart, CAST(h[-1] + 1 AS INTEGER) AS hEnd,
-           CAST(t[1] AS INTEGER) AS tStart, CAST(t[-1] + 1 AS INTEGER) AS tEnd
-         FROM valid ORDER BY relation, hStart""",
-    // episode accuracy pinned at the achieved deterministic value (44/48
-    // episodes correct with the stub pair head, seed 42, canonical example
-    // order — identical at any parallelism); n_episodes is
-    // re-derived independently from the same fixture JSON (one episode
-    // per valid example)
-    "q56_fewrel_episodes" ->
-      s"""$fewrelValidCte
-         SELECT * FROM (
-           SELECT 'episode_accuracy_e6' AS metric, CAST(916667 AS BIGINT) AS value
-           UNION ALL SELECT 'n_episodes', (SELECT count(*) FROM valid))
-         ORDER BY metric""",
-    "q48_grad_accum" -> {
-      import graft.statements.PortableRng.{sqlDraw, sqlMix}
-      s"""WITH $poolsCte,
-         ranked AS (SELECT rid,
-             row_number() OVER (ORDER BY ${sqlDraw(sqlMix("42", "0"), "5", "rid")}, rid) - 1 AS rank
-           FROM rel)
-         SELECT rid AS relation_id, CAST(rank AS BIGINT) AS rank,
-           CAST(rank // 4 AS BIGINT) AS micro_batch,
-           CAST((rank // 4) // 16 AS BIGINT) AS accum_step,
-           CAST(1.0 / 64 AS DOUBLE) AS loss_scale
-         FROM ranked ORDER BY relation_id"""
-    },
-    "q38_np_mentions" ->
-      s"""WITH base AS ($toksCte),
-         np AS (SELECT doc_id, toks,
-                  list_transform(toks, t -> regexp_matches(t, '^[A-Z][A-Za-z0-9]*$$')) AS cf
-                FROM base),
-         caps AS (SELECT doc_id, unnest(list_transform(
-             list_filter(generate_series(1, len(toks)), i -> cf[i] AND (i = 1 OR NOT cf[i-1])),
-             s -> {'p': s, 'm': array_to_string(list_slice(toks, s,
-                     coalesce(list_filter(generate_series(s, len(toks)), j -> NOT cf[j])[1],
-                              len(toks) + 1) - 1), ' '),
-                   'r': 'cap'})) AS c
-           FROM np),
-         dets AS (SELECT doc_id, unnest(list_transform(
-             list_filter(generate_series(1, len(toks)), p -> list_contains(['the','a','an'], toks[p])),
-             p -> {'p': p + 1, 'm': array_to_string(list_slice(toks, p + 1,
-                     LEAST(p + 3,
-                       coalesce(list_filter(generate_series(p + 1, len(toks)), j ->
-                         NOT (regexp_matches(toks[j], '^[a-z0-9]+$$')
-                              AND NOT list_contains($stopList, toks[j])
-                              AND NOT list_contains(['the','a','an'], toks[j])))[1],
-                         len(toks) + 1) - 1,
-                       len(toks))), ' '),
-                   'r': 'det'})) AS c
-           FROM np),
-         allc AS (SELECT doc_id, c.p AS pos1, c.m AS mention, c.r AS rule FROM caps WHERE c.m <> ''
-                  UNION ALL
-                  SELECT doc_id, c.p, c.m, c.r FROM dets WHERE c.m <> ''),
-         ranked AS (SELECT doc_id, mention, pos1 - 1 AS pos, rule,
-                      row_number() OVER (PARTITION BY doc_id, mention ORDER BY pos1, rule) AS rn
-                    FROM allc)
-         SELECT doc_id, mention, CAST(pos AS INTEGER) AS pos, rule
-         FROM ranked WHERE rn = 1 AND NOT list_contains($gazArr, mention)
-         ORDER BY doc_id, pos, mention""",
-    // pinned at the achieved values (73/76 correct on the fixture test
-    // split): any kernel/inference/tokenizer regression flips the hash
-    "q37_semeval_prf" ->
-      """SELECT * FROM (
-           SELECT 'micro_f1' AS metric, CAST(0.960526 AS DOUBLE) AS value
-           UNION ALL SELECT 'micro_p', 0.960526
-           UNION ALL SELECT 'micro_r', 0.960526
-           UNION ALL SELECT 'n_test', 76
-           UNION ALL SELECT 'pass_ge_095', 1)
-         ORDER BY metric""",
-    "q28_ann_recall" ->
-      """WITH ex AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) AS rn
-           FROM embeddings q, embeddings c
-           WHERE q.vec_id < 32 AND q.vec_id <> c.vec_id)
-         SELECT * FROM (
-           SELECT 'ivf_clustered_recall_ge_090' AS metric, CAST(1 AS BIGINT) AS value
-           UNION ALL SELECT 'ivf_recall_ge_070', 1
-           UNION ALL SELECT 'lsh_recall_ge_090', 1
-           UNION ALL SELECT 'n_clustered_pairs', 160
-           UNION ALL SELECT 'n_exact_pairs', (SELECT count(*) FROM ex WHERE rn <= 5))
-         ORDER BY metric""",
-    "q21_embedding_sums" ->
-      """SELECT vec_id, round(list_reduce(
-           list_prepend(CAST(0 AS DOUBLE),
-             list_transform(embedding, x -> CAST(x AS DOUBLE))),
-           (a, b) -> a + b), 4) AS comp_sum
-         FROM embeddings ORDER BY vec_id""",
-    "q30_mentions" ->
-      s"""WITH m AS ($mentionCte)
-         SELECT doc_id, mention, pos FROM m WHERE pos >= 0
-         ORDER BY doc_id, pos""",
-    "q31_band_pair_counts" ->
-      s"""WITH m AS ($mentionCte)
-         SELECT a.doc_id, count(*) AS n_pairs
-         FROM m a JOIN m b ON a.doc_id = b.doc_id
-         WHERE a.pos >= 0 AND b.pos >= 0 AND b.pos - a.pos BETWEEN 1 AND 40
-         GROUP BY 1 ORDER BY 1""",
-    "q32_mention_dict" ->
-      s"""WITH m AS ($mentionCte)
-         SELECT mention,
-           row_number() OVER (ORDER BY min(doc_id * 1000000 + pos)) - 1 AS e_id
-         FROM m WHERE pos >= 0 GROUP BY mention
-         ORDER BY e_id""",
-    "q33_pair_freq" ->
-      s"""WITH m AS ($mentionCte)
-         SELECT a.mention AS m1, b.mention AS m2, count(*) AS cnt
-         FROM m a JOIN m b ON a.doc_id = b.doc_id
-         WHERE a.pos >= 0 AND b.pos >= 0 AND b.pos - a.pos BETWEEN 1 AND 40
-         GROUP BY 1,2 HAVING count(*) >= 2 ORDER BY 1,2""",
-    "q50_stream_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1,2 ORDER BY 1,2""",
-    "q51_stream_sessions" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS ts_us,
-                  CAST(round(value*10000) AS BIGINT) AS v
-           FROM events
-         ), marked AS (
-           SELECT user_id, ts_us, v,
-             CASE WHEN ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) > 1800000000
-                       OR lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) IS NULL
-                  THEN 1 ELSE 0 END AS new_sess
-           FROM e
-         ), sess AS (
-           SELECT user_id, ts_us, v,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us ROWS UNBOUNDED PRECEDING) AS sid
-           FROM marked
-         ), agg AS (
-           SELECT user_id, sid, min(ts_us) AS start_us, max(ts_us) AS end_us,
-                  count(*) AS n_events, sum(v) AS total_e4
-           FROM sess GROUP BY user_id, sid
-         ), lastsid AS (
-           SELECT user_id, max(sid) AS msid FROM agg GROUP BY user_id
-         )
-         -- emitted iff closed by a later event (not the user's last session)
-         -- OR the event-time timeout fired: Spark compares the watermark
-         -- (ms) strictly against the ms-truncated (end + gap) timestamp
-         SELECT a.user_id, a.start_us, a.end_us, a.n_events,
-                CAST(a.total_e4 AS BIGINT) AS total_e4
-         FROM agg a JOIN lastsid l ON a.user_id = l.user_id
-         WHERE a.sid < l.msid
-            OR (a.end_us + 1800000000) // 1000 <
-               (SELECT max(ts_us) // 1000 - 7200000 FROM e)
-         ORDER BY a.user_id, a.start_us""",
-    "q61_media_bytes" ->
-      """SELECT doc_id, strlen(text) AS byte_len FROM documents ORDER BY doc_id""",
-    "q42_mtb_pools" ->
-      s"""WITH $poolsCte
-         SELECT e1_id, e2_id,
-                '[' || array_to_string(relation_ids, ',') || ']' AS relation_ids,
-                "set"
-         FROM pools ORDER BY e1_id, e2_id""",
-    "q46_positive_samples" -> {
-      import graft.statements.PortableRng.{sqlDraw, sqlKey}
-      s"""WITH $poolsCte,
-         ex AS (SELECT e1_id, e2_id, "set", unnest(relation_ids) AS rid FROM pools),
-         kx AS (SELECT *, ${sqlKey("42", "e1_id", "e2_id", "0")} AS kk FROM ex),
-         rk AS (SELECT *, row_number() OVER (PARTITION BY e1_id, e2_id
-                  ORDER BY ${sqlDraw("kk", "3", "rid")}, rid) AS rn FROM kx)
-         SELECT e1_id, e2_id, "set", rid FROM rk WHERE rn <= 4
-         ORDER BY e1_id, e2_id, rid"""
-    },
-    "q45_negative_samples" -> {
-      import graft.statements.PortableRng.{sqlDraw, sqlKey, M}
-      s"""WITH $poolsCte,
-         e1p AS (SELECT e1_id, list_sort(list(rid)) AS e1_rids FROM rel GROUP BY 1),
-         e2p AS (SELECT e2_id, list_sort(list(rid)) AS e2_rids FROM rel GROUP BY 1),
-         nrel AS (SELECT count(*) AS n_rel FROM rel),
-         base AS (SELECT p.e1_id, p.e2_id, p."set", p.relation_ids,
-             list_filter(a.e1_rids, r -> NOT list_contains(b.e2_rids, r)) AS neg_e1,
-             list_filter(b.e2_rids, r -> NOT list_contains(a.e1_rids, r)) AS neg_e2,
-             ${sqlKey("42", "p.e1_id", "p.e2_id", "0")} AS kk, n.n_rel AS n_rel
-           FROM pools p JOIN e1p a ON p.e1_id = a.e1_id
-           JOIN e2p b ON p.e2_id = b.e2_id, nrel n),
-         wp AS (SELECT *, list_transform(
-             list_slice(list_sort(list_transform(relation_ids,
-               r -> {'h': ${sqlDraw("kk", "3", "r")}, 'r': r})),
-               1, LEAST(4, len(relation_ids))),
-             s -> s.r) AS pos_sample
-           FROM base),
-         br AS (SELECT *,
-             CASE WHEN ${sqlDraw("kk", "0", "0")} > 1073741823 THEN
-               CASE WHEN ${sqlDraw("kk", "0", "1")} > 1073741823
-                    THEN neg_e1 ELSE neg_e2 END
-             ELSE CAST([] AS BIGINT[]) END AS side
-           FROM wp),
-         bn AS (SELECT *, list_transform(
-             list_slice(list_sort(list_transform(side,
-               r -> {'h': ${sqlDraw("kk", "1", "r")}, 'r': r})),
-               1, LEAST(4, len(side))),
-             s -> s.r) AS bnegs,
-             LEAST(4, n_rel) AS nn
-           FROM br),
-         fb AS (SELECT *, CASE WHEN len(bnegs) > 0 THEN bnegs ELSE
-             coalesce(
-               (list_filter(list_transform(generate_series(0, 99), a ->
-                  list_transform(generate_series(0, nn - 1), i ->
-                    (n_rel * ${sqlDraw("kk", "2", "a * nn + i")}) // $M)),
-                 d -> len(list_intersect(d, pos_sample)) = 0))[1],
-               list_filter(list_transform(generate_series(0, nn - 1), i ->
-                   (n_rel * ${sqlDraw("kk", "2", "99 * nn + i")}) // $M),
-                 x -> NOT list_contains(pos_sample, x)))
-           END AS negs
-           FROM bn)
-         SELECT e1_id, e2_id, "set",
-                '[' || array_to_string(negs, ',') || ']' AS negative_ids
-         FROM fb ORDER BY e1_id, e2_id"""
-    }
-  )
 }

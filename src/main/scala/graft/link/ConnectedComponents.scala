@@ -8,8 +8,9 @@ import graft.{Persist, Regime}
 /** Connected components over the mention/similarity graph — iterative
   * DataFrame min-label propagation (alternating join + min-aggregate until
   * fixpoint), the GraphFrames-free formulation from SURVEY.md §4. Each
-  * iteration localCheckpoints to cut lineage; convergence is detected with
-  * a cheap aggregate (sum of labels is monotonically non-increasing).
+  * iteration's labels go through [[Persist.materialize]] to cut lineage;
+  * convergence is detected with a cheap aggregate (sum of labels is
+  * monotonically non-increasing).
   *
   * Iterations are O(graph diameter); entity-surface similarity graphs have
   * tiny diameters (hubs), so this converges in a handful of rounds even at
@@ -27,7 +28,7 @@ object ConnectedComponents {
     * min-propagation round; above the budget the iterative distributed
     * algorithm runs. The symmetric edges are cached for the probe and the
     * rounds ([[Persist.within]]); neither the LocalRelation nor the
-    * eagerly localCheckpointed labels read them after release. */
+    * materialized labels read them after release. */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     import spark.implicits._
     val sym = edges
@@ -61,7 +62,7 @@ object ConnectedComponents {
       .select(col("src").as("node"))
       .distinct()
       .withColumn("component", col("node"))
-      .localCheckpoint(true)
+      .transform(Persist.materialize(_))
 
     // exact: labels are arbitrary longs (hash ids), whose long sum
     // overflows; a decimal(30, 0) sum holds ~10^11 of them
@@ -94,7 +95,7 @@ object ConnectedComponents {
             col("node").as("component"), col("component").as("__cc")),
           Seq("component"), "left")
         .select(col("node"), coalesce(col("__cc"), col("component")).as("component"))
-        .localCheckpoint(true)
+        .transform(Persist.materialize(_))
       val sumNow = labelSum(next)
       converged = sumNow == prevSum
       prevSum = sumNow

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Explicit skew handling: salted two-phase aggregation (north rule:
@@ -13,25 +13,14 @@ import org.apache.spark.sql.functions._
   * tasks; the second aggregation combines `salt` tiny partials per key.
   * Spark's partial aggregation already map-side combines, so salting only
   * pays off when per-key state is large (collect_list/collect_set) or when
-  * AQE skew handling is unavailable — both helpers are provided so call
-  * sites can choose per stage. */
+  * AQE skew handling is unavailable; the engine salts its list collection. */
 object Salting {
-
-  /** Salted count: groupBy(keys).count with the hot-key reducer split. */
-  def saltedCount(df: DataFrame, keys: Seq[String], salt: Int = 16): DataFrame = {
-    val saltCol = pmod(xxhash64(col(keys.head), monotonically_increasing_id()), lit(salt))
-    df.withColumn("__salt", saltCol)
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("__partial")).as("count"))
-  }
 
   /** Salted collect_list: per-key lists assembled in two phases so one hot
     * key never concentrates its whole list in a single task's memory. The
     * final sort_array makes the `<valueCol>s` column identical to an
-    * unsalted groupBy's sorted list. `Encode.pools`/`entityPool` collect
-    * their `relation_ids` through it. */
+    * unsalted groupBy's sorted list. `Encode.pools` collects its
+    * `relation_ids` through it. */
   def saltedCollectList(
       df: DataFrame,
       keys: Seq[String],

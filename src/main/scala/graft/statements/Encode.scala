@@ -140,16 +140,12 @@ object Encode {
           "validation")
           .otherwise("train"))
 
-  /** Per-entity pools (e1_pool / e2_pool re-groupings, §1.8) — per-entity
-    * keys are even hotter than pair keys, same salted two-phase shape. */
-  def entityPool(factWithIds: DataFrame, side: String, salt: Int = 16): DataFrame =
-    Salting.saltedCollectList(factWithIds, Seq(s"${side}_id"), "relation_id", salt)
-
-  /** Per-entity pools derived from the PAIR pools instead of the fact
-    * table: the pair pools partition the fact rows by (e1_id, e2_id), so
-    * re-grouping their id lists by one side yields the identical
-    * per-entity multiset, and sort_array restores the exact order the
-    * fact-table grouping produces. The input is the aggregated pool table
+  /** Per-entity pools (e1_pool / e2_pool re-groupings, §1.8), derived
+    * from the PAIR pools instead of the fact table: the pair pools
+    * partition the fact rows by (e1_id, e2_id), so re-grouping their id
+    * lists by one side yields the identical per-entity multiset, and
+    * sort_array restores the exact order the fact-table grouping
+    * produces. The input is the aggregated pool table
     * (one row per pair), orders of magnitude smaller than the statements
     * — at corpus scale this replaces a second full fact-table shuffle per
     * side with a dimension-sized aggregation. No salt phase: the inputs

