@@ -1042,7 +1042,7 @@ object SparkEntry {
     // §2.33 driver row (the last §2 row without driver-visible evidence):
     // the model-checkpoint sink exercised end to end on the REAL artifact
     // path — three distinct epochs fitted deterministically and saved
-    // through the staged + ATOMIC_MOVE writer, loadLatest returns the
+    // through the graft.io.Commit writer, loadLatest returns the
     // newest epoch, the loaded kernel reproduces the saved kernel's
     // logits bit-for-bit on the SemEval test encodings, and a manifest
     // naming a missing artifact reads as "no checkpoint" instead of

@@ -56,21 +56,9 @@ object FewRelFixture {
   /** Expected number of valid examples after the reference's filters. */
   def expectedValid: Int = Relations.length * ExamplesPerRelation
 
-  /** Atomic publish: the fixture lives at a FIXED path (both the engine
-    * query and the DuckDB oracle read it), so concurrent verify runs must
-    * never observe a partially-written file — stage to a temp name in the
-    * same directory and ATOMIC_MOVE into place. */
-  def writeTo(dir: java.nio.file.Path): java.nio.file.Path = {
-    val f = dir.resolve("train_wiki.json")
-    val tmp = java.nio.file.Files.createTempFile(dir, "train_wiki", ".tmp")
-    try {
-      java.nio.file.Files.write(tmp, jsonText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally
-      // randomly-named temps would otherwise accumulate across failed runs
-      java.nio.file.Files.deleteIfExists(tmp)
-    f
-  }
+  /** Publishes the fixture through [[graft.io.Commit]]: it lives at a
+    * FIXED path (both the engine query and the DuckDB oracle read it), so
+    * concurrent verify runs must never observe a partially-written file. */
+  def writeTo(dir: java.nio.file.Path): java.nio.file.Path =
+    graft.io.Commit.writeString(dir.resolve("train_wiki.json"), jsonText)
 }

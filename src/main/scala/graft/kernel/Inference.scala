@@ -31,18 +31,20 @@ object Inference {
         val k = kernel.value
         rows.grouped(batchSize).flatMap { group =>
           val batch = group.toArray
-          val maxLen = math.min(
-            maxSeqLen,
-            if (batch.isEmpty) 0 else batch.map(_.tokenIds.length).max)
-          val padded = batch.map { r =>
-            val ids = r.tokenIds.take(maxLen).toArray
-            val out = if (ids.length == maxLen) ids
-            else ids ++ Array.fill(maxLen - ids.length)(padId)
-            (out, r.e1Start, r.e2Start)
-          }
-          val logits = k.scoreBatch(padded)
-          batch.indices.map(i => Scored(batch(i).id, StubKernel.argmax(logits(i))))
+          val preds = padAndScore(
+            k, batch.map(r => (r.tokenIds.take(maxSeqLen).toArray, r.e1Start, r.e2Start)), padId)
+          batch.indices.map(i => Scored(batch(i).id, preds(i)))
         }
       }
+  }
+
+  /** One batch through the kernel: pads every row to the batch's longest
+    * with `padId`, scores them in one `scoreBatch` call and returns each
+    * row's argmax label id. Rows are not truncated. */
+  def padAndScore(k: ScoringKernel, batch: Array[(Array[Int], Int, Int)], padId: Int): Array[Int] = {
+    val maxLen = if (batch.isEmpty) 0 else batch.map(_._1.length).max
+    k.scoreBatch(batch.map { case r @ (ids, e1, e2) =>
+      if (ids.length == maxLen) r else (ids ++ Array.fill(maxLen - ids.length)(padId), e1, e2)
+    }).map(StubKernel.argmax)
   }
 }

@@ -3,36 +3,25 @@ package graft.kernel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import graft.io.Commit
+
 /** Model checkpoint sink (SURVEY.md §2.33) — the engine-side counterpart
   * of the reference's per-epoch `torch.save` + best/resume bookkeeping
   * (`sem_eval_model.py` checkpoint_dir handling): one artifact file per
   * epoch in [[ArtifactKernel]]'s versioned binary format, plus a
-  * `MANIFEST` naming the latest epoch, written atomically LAST so a crash
-  * between files never yields a manifest that points at a missing or
-  * half-written artifact (the same commit-ordering discipline as the
-  * engine's stage checkpoints, `io.Checkpoint`). */
+  * `MANIFEST` naming the latest epoch. Both are published through
+  * [[Commit]], the manifest LAST, so a crash between files never yields a
+  * manifest that points at a missing or half-written artifact, and
+  * re-saving an epoch the manifest already names (retrain/resume) never
+  * truncates the committed artifact in place. */
 object KernelCheckpoint {
 
   private def artifactName(epoch: Int) = f"kernel_epoch_$epoch%05d.bin"
 
-  /** Write the epoch's artifact, then commit it in the manifest. The
-    * artifact itself is staged to a temp name and ATOMIC_MOVEd into place:
-    * re-saving an epoch the manifest already points at (retrain/resume)
-    * must never truncate the committed file in place — a crash mid-write
-    * would leave a valid manifest naming a half-written artifact. */
+  /** Write the epoch's artifact, then commit it in the manifest. */
   def save(k: ArtifactKernel, dir: Path, epoch: Int): Path = {
-    Files.createDirectories(dir)
-    val art = dir.resolve(artifactName(epoch))
-    val artTmp = dir.resolve(artifactName(epoch) + ".tmp")
-    ArtifactKernel.write(k, artTmp)
-    Files.move(artTmp, art,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val tmp = dir.resolve("MANIFEST.tmp")
-    Files.writeString(tmp, s"$epoch\n${artifactName(epoch)}\n", StandardCharsets.UTF_8)
-    Files.move(tmp, dir.resolve("MANIFEST"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val art = Commit.write(dir.resolve(artifactName(epoch)))(ArtifactKernel.write(k, _))
+    Commit.writeString(dir.resolve("MANIFEST"), s"$epoch\n${artifactName(epoch)}\n")
     art
   }
 

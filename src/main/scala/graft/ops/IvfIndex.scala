@@ -1,22 +1,22 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.io.Commit
 
 /** Persisted IVF-flat ANN index: build once, serve many (round-4 VERDICT
   * "What's missing" #2 — [[Similarity.ivfTopK]] retrained the quantizer on
   * every call; at 100 TB the quantizer + assignment is an index you write
   * ONCE and queries only probe).
   *
-  * Layout under `root/` (KernelCheckpoint-style versioned commit —
-  * manifest written atomically LAST, so a crash mid-build never yields a
-  * manifest naming a half-written index):
+  * Layout under `root/` (KernelCheckpoint-style versioned commit — both
+  * files published through [[Commit]], the manifest LAST, so a crash
+  * mid-build never yields a manifest naming a half-written index):
   *
   * {{{
   *   MANIFEST            "v<N>" — the committed version
@@ -28,11 +28,12 @@ import org.apache.spark.sql.types.StructType
   *                       a search touches nProbe/nLists of the data
   * }}}
   *
-  * The manifest-committed fingerprint (row count + order-independent
-  * xxhash64 content sum over (id, vector)) is validated against the live
-  * corpus by [[buildOrLoad]] with one column-pruned aggregate — far
-  * cheaper than retraining, and a stale index (corpus changed under the
-  * fixed root) rebuilds instead of silently serving wrong neighbors.
+  * The committed fingerprint (row count + order-independent xxhash64
+  * content sum over (id, vector), kept in [[Index]] by [[load]]) is
+  * validated against the live corpus by [[buildOrLoad]] with one
+  * column-pruned aggregate — far cheaper than retraining, and a stale
+  * index (corpus changed under the fixed root) rebuilds instead of
+  * silently serving wrong neighbors.
   */
 object IvfIndex {
 
@@ -44,7 +45,8 @@ object IvfIndex {
       root: String,
       version: Int,
       nLists: Int,
-      centroids: Array[(Int, Array[Float])]) {
+      centroids: Array[(Int, Array[Float])],
+      fingerprint: (Long, Long)) {
 
     private def dir = s"$root/v$version"
 
@@ -123,10 +125,10 @@ object IvfIndex {
     centroids.foreach { case (i, v) =>
       sb.append(i).append(' ').append(v.map(_.toString).mkString(" ")).append('\n')
     }
-    atomicWrite(dir.resolve("CENTROIDS"), sb.toString)
+    Commit.writeString(dir.resolve("CENTROIDS"), sb.toString)
     // commit LAST: load only trusts versions the manifest names
-    atomicWrite(rootP.resolve("MANIFEST"), s"v$version\n")
-    Index(root, version, nLists, centroids)
+    Commit.writeString(rootP.resolve("MANIFEST"), s"v$version\n")
+    Index(root, version, nLists, centroids, (nRows, fp))
   }
 
   /** Latest committed index, or None when absent/corrupt (a manifest
@@ -135,9 +137,7 @@ object IvfIndex {
   def load(spark: SparkSession, root: String): Option[Index] =
     try {
       val rootP = Paths.get(root)
-      val manifest = rootP.resolve("MANIFEST")
-      if (!Files.exists(manifest)) return None
-      val v = Files.readString(manifest, StandardCharsets.UTF_8).trim
+      val v = Files.readString(rootP.resolve("MANIFEST"), StandardCharsets.UTF_8).trim
       if (!v.matches("v\\d+")) return None
       val version = v.drop(1).toInt
       val lines = Files.readString(rootP.resolve(s"$v/CENTROIDS"), StandardCharsets.UTF_8)
@@ -146,7 +146,8 @@ object IvfIndex {
         val parts = ln.split(' ')
         (parts.head.toInt, parts.tail.map(_.toFloat))
       }.toArray
-      Some(Index(root, version, lines.head.split(' ')(0).toInt, cents))
+      val header = lines.head.split(' ')
+      Some(Index(root, version, header(0).toInt, cents, (header(2).toLong, header(3).toLong)))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Serve path: load the committed index if its fingerprint still
@@ -160,33 +161,10 @@ object IvfIndex {
       vecCol: String = "embedding",
       trainIters: Int = 8): Index =
     load(spark, root).filter { idx =>
-      try {
-        val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("c_vec"))
-        val header = Files.readString(
-          Paths.get(root).resolve(s"v${idx.version}/CENTROIDS"), StandardCharsets.UTF_8)
-          .linesIterator.next().split(' ')
-        (header(2).toLong, header(3).toLong) == fingerprint(c)
-      } catch { case scala.util.control.NonFatal(_) => false }
+      idx.fingerprint ==
+        fingerprint(corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("c_vec")))
     }.getOrElse(build(spark, corpus, root, nLists, idCol, vecCol, trainIters))
 
-  private def nextVersion(rootP: Path): Int = {
-    val existing =
-      if (!Files.isDirectory(rootP)) Seq.empty
-      else {
-        val s = Files.list(rootP)
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.matches("v\\d+")).map(_.drop(1).toInt).toSeq
-        finally s.close()
-      }
-    if (existing.isEmpty) 1 else existing.max + 1
-  }
-
-  private def atomicWrite(p: Path, content: String): Unit = {
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    try {
-      Files.writeString(tmp, content, StandardCharsets.UTF_8)
-      Files.move(tmp, p,
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    } finally Files.deleteIfExists(tmp)
-  }
+  private def nextVersion(rootP: Path): Int =
+    (0 +: Option(rootP.toFile.list()).toSeq.flatten.filter(_.matches("v\\d+")).map(_.drop(1).toInt)).max + 1
 }

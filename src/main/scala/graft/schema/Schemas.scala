@@ -29,27 +29,6 @@ case class AnnotatedDoc(
     isSentEnd: Seq[Boolean],
     mentions: Seq[Mention])
 
-/** 1.5 — relation statement: token window + inclusive spans + entity texts
-  * (`mtb_data_loader.py:595-602`). */
-case class RelationStatement(
-    url: String,
-    tokens: Seq[String],
-    e1Span: Span,
-    e2Span: Span,
-    e1: String,
-    e2: String)
-
-/** 1.7 — tokenized relation with spans pointing INSIDE the [E1]../[E2]..
-  * marker pairs (`mtb_data_loader.py:222-236`). */
-case class EncodedStatement(
-    relationId: Long,
-    url: String,
-    tokenIds: Seq[Int],
-    e1Span: Span,
-    e2Span: Span,
-    e1Id: Long,
-    e2Id: Long)
-
 /** Output triple — subj = e1 surface, pred = classified relation label,
   * obj = e2 surface (`infer.py:258-263`). */
 case class Triple(subj: String, pred: String, obj: String, url: String)
@@ -57,14 +36,3 @@ case class Triple(subj: String, pred: String, obj: String, url: String)
 /** 1.11 — one SemEval-2010 Task 8 record (4 physical lines). */
 case class SemEvalExample(exampleId: Int, sentence: String, relation: String)
 
-/** F5 — per-stage × per-partition lineage row (resumability gate). */
-case class MetricsRow(
-    stage: String,
-    runId: String,
-    partitionId: Int,
-    rowsIn: Long,
-    rowsOut: Long,
-    dropped: Long,
-    checksum: String,
-    wallMs: Long,
-    snapshot: String)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.annotate.{Annotator, Gazetteer}
-import graft.kernel.ScoringKernel
+import graft.kernel.{Inference, ScoringKernel}
 import graft.schema.{AnnotatedDoc, Span, Triple, WebPage}
 import graft.statements.{Markers, Windowing}
 import graft.tokenize.BertTokenizer
@@ -218,18 +218,10 @@ object TriplePipeline {
         }
         statements.grouped(batchSize).flatMap { group =>
           val batch = group.toArray
-          val maxLen = if (batch.isEmpty) 0 else batch.map(_._4.length).max
-          val padded = batch.map { r =>
-            val ids = r._4
-            val out =
-              if (ids.length == maxLen) ids
-              else ids ++ Array.fill(maxLen - ids.length)(padId)
-            (out, r._5, r._6)
-          }
-          val logits = k.scoreBatch(padded)
+          val preds = Inference.padAndScore(k, batch.map(r => (r._4, r._5, r._6)), padId)
           batch.indices.map { i =>
             val r = batch(i)
-            Triple(r._1, labels(graft.kernel.StubKernel.argmax(logits(i))), r._2, r._3)
+            Triple(r._1, labels(preds(i)), r._2, r._3)
           }
         }
       }
